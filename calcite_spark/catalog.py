@@ -54,7 +54,6 @@ class TableEntry:
     # discovered by analyze_deep (exec.profile_deep) ≈ what Statistic.java
     # exposes via getKeys() / RelMdColumnUniqueness
     unique_keys: list[tuple] = field(default_factory=list)
-    fds: list[tuple] = field(default_factory=list)  # (determinant, dependent)
     # declared referential constraints ≈ Statistic.java
     # getReferentialConstraints(): (column, ref_table, ref_column)
     foreign_keys: list[tuple] = field(default_factory=list)
@@ -663,10 +662,6 @@ class Catalog:
             verified = [k for i, k in enumerate(cands) if row[i + 1] == row[0]]
         stats["unique_keys"] = verified
         entry.unique_keys = verified
-        entry.fds = [
-            (d["determinant"], d["dependent"])
-            for d in stats["functional_dependencies"]
-        ]
         return stats
 
     def register_hilbert_constraint(
@@ -777,10 +772,6 @@ class Catalog:
             if frozenset(zip(c, rc)) == want:
                 return True
         return False
-
-    def functional_deps(self, name: str) -> list[tuple]:
-        entry = self.tables.get(name)
-        return list(entry.fds) if entry is not None else []
 
     def column_ndv(self, name: str, col: str) -> int | None:
         entry = self.tables.get(name)

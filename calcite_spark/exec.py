@@ -232,12 +232,3 @@ def profile_deep(
             ):
                 out["unique_keys"].append((x, y))
     return out
-
-
-def cancel_all(spark, group: str | None = None) -> None:
-    """≈ DataContext cancel flag / VolcanoTimeoutException."""
-    sc = spark.sparkContext
-    if group:
-        sc.cancelJobGroup(group)
-    else:
-        sc.cancelAllJobs()

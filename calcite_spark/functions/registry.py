@@ -1344,21 +1344,9 @@ def translate(name: str, *args: str, library: str | None = None) -> str:
             # found in any field → TRUE; not found with a NULL field →
             # NULL; else FALSE. The tuple literal arrives as the ROW
             # constructor's named_struct lowering.
-            els, cur, depth, in_q = [], [], 0, False
-            for ch in sm.group(2):
-                if ch == "'":
-                    in_q = not in_q
-                elif not in_q:
-                    if ch == "(":
-                        depth += 1
-                    elif ch == ")":
-                        depth -= 1
-                if ch == "," and depth == 0 and not in_q:
-                    els.append("".join(cur).strip())
-                    cur = []
-                else:
-                    cur.append(ch)
-            els.append("".join(cur).strip())
+            from calcite_spark.sql import lexer
+
+            els = lexer.split_top_level(sm.group(2))
             fields = (
                 els[1::2] if sm.group(1).lower() == "named_struct" else els
             )

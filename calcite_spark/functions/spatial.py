@@ -1311,23 +1311,6 @@ register_spatial_functions()
 _ST_CALL_RE = _re.compile(r"\bST_[A-Za-z_]\w*\s*\(", _re.I)
 
 
-def _split_top_commas(text: str) -> list[str]:
-    parts, depth, in_str, start = [], 0, False, 0
-    for i, ch in enumerate(text):
-        if ch == "'":
-            in_str = not in_str
-        elif not in_str:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                parts.append(text[start:i].strip())
-                start = i + 1
-    parts.append(text[start:].strip())
-    return parts
-
-
 def expand_spatial_sql(text: str) -> str:
     """Expand compact ST_*(...) macro calls in SQL expression text into
     their registered struct-geometry lowerings (registry.translate) —
@@ -1338,29 +1321,15 @@ def expand_spatial_sql(text: str) -> str:
     unknown ST_ names raise rather than passing through to a Spark
     parse error far from the source."""
     from calcite_spark.functions import registry
+    from calcite_spark.sql import lexer
 
     while True:
-        m = _ST_CALL_RE.search(text)
+        m = lexer.search(_ST_CALL_RE, text)
         if m is None:
             return text
         name = text[m.start() : text.index("(", m.start())].strip()
-        depth, i, in_str = 1, m.end(), False
-        while i < len(text) and depth:
-            ch = text[i]
-            if ch == "'":
-                in_str = not in_str
-            elif not in_str:
-                depth += ch == "("
-                depth -= ch == ")"
-            if depth == 0:
-                break
-            i += 1
-        if depth != 0:
-            raise ValueError(f"unbalanced parens in spatial call: {text!r}")
-        args = [
-            expand_spatial_sql(a)
-            for a in _split_top_commas(text[m.end() : i])
-        ]
+        inner, i = lexer.balanced_span(text, m.end())
+        args = [expand_spatial_sql(a) for a in lexer.split_top_level(inner)]
         try:
             lowered = registry.translate(name, *args, library="SPATIAL")
         except KeyError:

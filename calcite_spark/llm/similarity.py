@@ -160,8 +160,8 @@ def _centroid_argmax_expr(vec: str, centroids: list, vec_norm: str | None = None
     assignment costs ZERO shuffle at any scale. Ties break to the lowest
     cluster index (strict > keeps the first maximum).
 
-    r15 shape (scripts/ivf_argmax_ab.py, assignments asserted identical
-    per row): each centroid's sim is computed ONCE (the old fold
+    r15 shape (verdict recorded in OPTIMIZATION_r15.md and VERDICT.md;
+    assignments asserted identical per row): each centroid's sim is computed ONCE (the old fold
     evaluated the full cosine twice per centroid — IF condition + result),
     each centroid's norm is a Python-computed literal (bit-identical:
     the same left-fold over the same doubles + IEEE sqrt — the same

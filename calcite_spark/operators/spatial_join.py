@@ -30,16 +30,6 @@ from pyspark.sql import DataFrame, functions as F
 from calcite_spark.functions import spatial as S
 
 
-def envelope_cells(g: str, cell: float, expand: float = 0.0) -> str:
-    """SQL expr: array<struct<ix,iy>> of grid cells covered by the
-    envelope of `g` (grown by `expand` — the ST_DWithin radius)."""
-    return _cells_from_bounds(
-        S._xacc(g, "min", "x"), S._xacc(g, "max", "x"),
-        S._xacc(g, "min", "y"), S._xacc(g, "max", "y"),
-        cell, expand,
-    )
-
-
 def _cells_from_bounds(
     minx: str, maxx: str, miny: str, maxy: str, cell: float, expand: float
 ) -> str:
@@ -52,15 +42,6 @@ def _cells_from_bounds(
         f"transform(sequence({lo_y}, {hi_y}), iy -> "
         "named_struct('ix', ix, 'iy', iy))))"
     )
-
-
-def _canonical_cell_filter(lg: str, rg: str, cell: float, expand: float) -> str:
-    """Reference-point dedup: TRUE only in the cell holding the
-    min-corner of the envelope intersection (left envelope grown by
-    `expand`, mirroring candidate generation)."""
-    lx = f"greatest({S._xacc(lg, 'min', 'x')} - {expand!r}, {S._xacc(rg, 'min', 'x')})"
-    ly = f"greatest({S._xacc(lg, 'min', 'y')} - {expand!r}, {S._xacc(rg, 'min', 'y')})"
-    return f"(__cell.ix = floor({lx} / {cell!r}) AND __cell.iy = floor({ly} / {cell!r}))"
 
 
 def spatial_join(

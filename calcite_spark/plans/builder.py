@@ -131,10 +131,6 @@ class RelBuilder:
         (child,) = self._pop()
         return self._push(ir.Snapshot(as_of, key, version_col, tiebreaker, inputs=(child,)))
 
-    def spool(self) -> "RelBuilder":
-        (child,) = self._pop()
-        return self._push(ir.Spool(inputs=(child,)))
-
     # -- binary / n-ary ----------------------------------------------
     def join(self, condition, join_type="INNER", broadcast_right=False, broadcast_left=False) -> "RelBuilder":
         right, = self._pop()
@@ -148,9 +144,6 @@ class RelBuilder:
 
     def anti_join(self, condition, **kw) -> "RelBuilder":
         return self.join(condition, "ANTI", **kw)
-
-    def cross_join(self) -> "RelBuilder":
-        return self.join(None, "CROSS")
 
     def asof_join(self, equi_keys, match_condition, join_type="ASOF") -> "RelBuilder":
         from calcite_spark.operators.asof import AsofJoin

@@ -253,7 +253,7 @@ class Aggregate(RelNode):
         i-th copy (0-based) aggregates the distinct sets occurring more
         than i times and emits literal i. With no duplicates this is a
         single branch with GROUP_ID() = 0."""
-        import re as _re
+        from calcite_spark.sql import lexer
 
         counts: dict[tuple, int] = {}
         for s in self.grouping_sets:
@@ -261,23 +261,14 @@ class Aggregate(RelNode):
         df.createOrReplaceTempView("__gs_input__")
         keys = ", ".join(self.group_keys)
 
-        gid_re = _re.compile(r"(?i)GROUP_ID\s*\(\s*\)")
-        lit_re = _re.compile(r"('(?:[^']|'')*')")  # '' = escaped quote
-
-        def sub_outside_literals(text: str, repl: str) -> str:
-            # token-aware: never rewrite a GROUP_ID() that sits inside a
-            # string literal (r2 review note — textual sub would mangle it)
-            parts = lit_re.split(text)
-            return "".join(
-                p if i % 2 else gid_re.sub(repl, p) for i, p in enumerate(parts)
-            )
-
         branches = []
         for i in range(max(counts.values())):
             sets_i = [s for s, n in counts.items() if n > i]
             sets_sql = ", ".join("(" + ", ".join(s) + ")" for s in sets_i)
+            # a GROUP_ID() inside a string literal is data
             calls = ", ".join(
-                sub_outside_literals(c, str(i)) for c in self.agg_calls
+                lexer.sub(r"(?i)GROUP_ID\s*\(\s*\)", lambda m: str(i), c)
+                for c in self.agg_calls
             )
             branches.append(
                 f"SELECT {keys}{', ' if keys else ''}{calls} FROM __gs_input__ "

@@ -28,8 +28,9 @@ import re
 from dataclasses import dataclass
 
 from calcite_spark.plans import ir
+from calcite_spark.sql import lexer
 
-_IDENT_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+_IDENT_RE = re.compile(r"`[^`]*`|[A-Za-z_][A-Za-z0-9_]*")
 
 # tokens that look like identifiers inside expressions but never name a
 # column (mirrors rel2sql's keyword guard)
@@ -62,40 +63,27 @@ def _split_alias(expr: str) -> tuple[str, str | None]:
     """(body, alias) for 'body AS alias' at top level, else (expr, None).
     The alias is the token after the LAST top-level AS — same scan as
     rel2sql's cast-target detection."""
-    last = None
-    for m in re.finditer(r"(?i)\bAS\b", expr):
-        before = expr[: m.start()]
-        depth, in_str = 0, False
-        for ch in before:
-            if ch == "'":
-                in_str = not in_str
-            elif not in_str:
-                depth += ch == "("
-                depth -= ch == ")"
-        if depth == 0 and not in_str:
-            last = m
-    if last is None:
+    last = max(lexer.iter_top_level(expr, "AS"), default=-1)
+    if last < 0:
         return expr.strip(), None
-    alias = expr[last.end() :].strip().strip("`")
+    alias = expr[last + 2 :].strip().strip("`")
     if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", alias):
         return expr.strip(), None  # "CAST(x AS int)" tail — not an alias
-    return expr[: last.start()].strip(), alias
+    return expr[:last].strip(), alias
 
 
 def _referenced_columns(expr: str) -> list[str]:
     """Identifier tokens that can name columns: not function calls
     (followed by '('), not keywords, not inside string literals."""
     out = []
-    for m in _IDENT_RE.finditer(expr):
-        if expr.count("'", 0, m.start()) % 2:
-            continue
+    for m in lexer.finditer(_IDENT_RE, expr):
         tail = expr[m.end() :].lstrip()
         if tail.startswith("("):
             continue  # function call
-        tok = m.group(0).lower()
-        if tok in _NON_COLUMN_TOKENS:
+        name = m.group(0).strip("`")
+        if name.lower() in _NON_COLUMN_TOKENS:
             continue
-        out.append(m.group(0))
+        out.append(name)
     return out
 
 

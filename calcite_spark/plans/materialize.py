@@ -27,6 +27,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import functions as _F
 
 from calcite_spark.plans import ir
+from calcite_spark.sql import lexer
 
 _AGG_RE = re.compile(
     r"^\s*(SUM|COUNT|MIN|MAX|APPROX_COUNT_DISTINCT|APPROX_PERCENTILE)"
@@ -55,24 +56,6 @@ _REAGG = {
 }
 
 
-def _split_top_commas(text: str) -> list:
-    """Split on commas outside parens/quotes (an argument-list split)."""
-    parts, depth, in_str, last = [], 0, False, 0
-    for i, ch in enumerate(text):
-        if ch == "'":
-            in_str = not in_str
-        elif not in_str:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                parts.append(text[last:i])
-                last = i + 1
-    parts.append(text[last:])
-    return parts
-
-
 def _percentile_parts(arg: str):
     """APPROX_PERCENTILE argument list → (value_expr, percentile_text)
     or None. Exactly two arguments, the percentile a plain literal in
@@ -82,12 +65,12 @@ def _percentile_parts(arg: str):
     optional third (accuracy) argument refuses: the KLL tile has its
     own fixed accuracy and silently honoring a requested one would be
     a lie."""
-    parts = [p.strip() for p in _split_top_commas(arg)]
+    parts = lexer.split_top_level(arg)
     if len(parts) != 2 or parts[0].upper().startswith("DISTINCT"):
         return None
     m = re.fullmatch(r"(?is)array\s*\((.*)\)", parts[1])
-    lits = _split_top_commas(m.group(1)) if m else [parts[1]]
-    for lit in lits:
+    lits = lexer.split_top_level(m.group(1)) if m else [parts[1]]
+    for lit in lits or [""]:
         try:
             p = float(lit)
         except ValueError:
@@ -200,16 +183,12 @@ def _paren_balanced(text: str) -> bool:
     "parses" as fn=MAX, arg="a) - MIN(a"): review r9 — the mis-parse
     let define() accept a compound call and the simple tier later
     emitted MAX(rng) over coarser keys, max-of-ranges instead of the
-    range)."""
-    depth = 0
-    for ch in text:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth < 0:
-                return False
-    return depth == 0
+    range). Wrapped in one more pair, the text is balanced iff that
+    pair closes at its end."""
+    try:
+        return lexer.balanced_span(f"({text})", 1)[1] == len(text) + 1
+    except ValueError:
+        return False
 
 
 def _square_arg(arg: str) -> str:
@@ -413,33 +392,20 @@ def _parse_region(cond: str):
     # reached the tile tiers on pass 2; conservative refusal, but a
     # missed serve for THE canonical BI filter)
     cond = cond.strip()
-    while cond.startswith("(") and cond.endswith(")"):
-        depth, in_str = 0, False
-        full = True
-        for i, ch in enumerate(cond):
-            if ch == "'":
-                in_str = not in_str
-            elif not in_str and ch == "(":
-                depth += 1
-            elif not in_str and ch == ")":
-                depth -= 1
-                if depth == 0 and i != len(cond) - 1:
-                    full = False
-                    break
-        if not full or depth != 0:
-            break
+    while (
+        cond.startswith("(")
+        and cond.endswith(")")
+        and _paren_balanced(cond[1:-1])
+    ):
         cond = cond[1:-1].strip()
 
     if re.search(r"(?i)\bNOT\s+BETWEEN\b", cond):
         return None
-    _orig = cond
-
-    def _between_repl(m):
-        if _orig.count("'", 0, m.start()) % 2 == 1:
-            return m.group(0)
-        return f"{m.group(1)} >= {m.group(2)} AND {m.group(1)} <= {m.group(3)}"
-
-    cond = _BETWEEN_SUB_RE.sub(_between_repl, cond)
+    cond = lexer.sub(
+        _BETWEEN_SUB_RE,
+        lambda m: f"{m.group(1)} >= {m.group(2)} AND {m.group(1)} <= {m.group(3)}",
+        cond,
+    )
     out: dict = {}
     for c in _split_conjuncts(cond):
         m = _CMP_RE.match(c)
@@ -1718,11 +1684,9 @@ class MaterializationRegistry:
             return None
         body, alias = m.group(1).strip(), m.group(2)
         out, last, found = [], 0, 0
-        for mt in _AGG_IN_EXPR_RE.finditer(body):
-            if body.count("'", 0, mt.start()) % 2 == 1:
-                continue  # aggregate-SHAPED text inside a string
-                # literal is data, not a call (review r9: splicing it
-                # rewrote the literal)
+        # aggregate-SHAPED text inside a string literal is data, not
+        # a call (review r9: splicing it rewrote the literal)
+        for mt in lexer.finditer(_AGG_IN_EXPR_RE, body):
             fn = mt.group(1).upper()
             arg = re.sub(r"\s+", " ", mt.group(2)[1:-1].strip())
             if fn in _REAGG:

@@ -17,6 +17,7 @@ from dataclasses import dataclass
 from typing import Callable, Optional
 
 from calcite_spark.plans import ir
+from calcite_spark.sql import lexer
 
 
 @dataclass
@@ -535,58 +536,13 @@ def _split_conjuncts(cond: str) -> list[str]:
     conjuncts; splitting across a disjunction would let transitive
     predicate inference push a filter that drops valid rows."""
 
-    def _is_word(ch: str) -> bool:
-        return ch.isalnum() or ch == "_"
-
-    # pre-scan: top-level OR → single conjunct
-    depth, in_str, i, n = 0, False, 0, len(cond)
-    while i < n:
-        ch = cond[i]
-        if ch == "'":
-            in_str = not in_str
-        elif not in_str and ch == "(":
-            depth += 1
-        elif not in_str and ch == ")":
-            depth -= 1
-        elif (
-            not in_str
-            and depth == 0
-            and cond[i : i + 2].upper() == "OR"
-            and (i == 0 or not _is_word(cond[i - 1]))
-            and (i + 2 >= n or not _is_word(cond[i + 2]))
-        ):
-            return [cond.strip()]
-        i += 1
-
-    parts, cur = [], []
-    depth, in_str, i, n = 0, False, 0, len(cond)
-    while i < n:
-        ch = cond[i]
-        if ch == "'":
-            in_str = not in_str
-            cur.append(ch)
-        elif not in_str and ch == "(":
-            depth += 1
-            cur.append(ch)
-        elif not in_str and ch == ")":
-            depth -= 1
-            cur.append(ch)
-        elif (
-            not in_str
-            and depth == 0
-            and cond[i : i + 3].upper() == "AND"
-            and (i == 0 or not _is_word(cond[i - 1]))
-            and (i + 3 >= n or not _is_word(cond[i + 3]))
-        ):
-            parts.append("".join(cur).strip())
-            cur = []
-            i += 3
-            continue
-        else:
-            cur.append(ch)
-        i += 1
-    if "".join(cur).strip():
-        parts.append("".join(cur).strip())
+    if lexer.find_top_level(cond, "OR") >= 0:
+        return [cond.strip()]
+    parts, last = [], 0
+    for i in lexer.iter_top_level(cond, "AND"):
+        parts.append(cond[last:i].strip())
+        last = i + 3
+    parts.append(cond[last:].strip())
     return [p for p in parts if p]
 
 

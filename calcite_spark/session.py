@@ -44,6 +44,21 @@ _DEFAULTS = {
 }
 
 
+def _host_heap() -> str:
+    """Half of the memory this process can have: the smaller of physical
+    RAM and the cgroup v2 limit (`memory.max`, "max" when unlimited). A
+    fixed heap larger than the host lets the kernel OOM-kill the JVM."""
+    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            cg = f.read().strip()
+        if cg.isdigit():
+            limit = min(limit, int(cg))
+    except OSError:
+        pass
+    return f"{max(limit // 2 >> 20, 512)}m"
+
+
 def get_spark(app_name: str = "calcite_spark", extra_conf: dict | None = None) -> SparkSession:
     """Create or reuse the process-wide SparkSession.
 
@@ -54,7 +69,10 @@ def get_spark(app_name: str = "calcite_spark", extra_conf: dict | None = None) -
     builder = SparkSession.builder.appName(app_name)
     if not os.environ.get("SPARK_MASTER_SET"):
         builder = builder.master(f"local[{cpus}]")
-        builder = builder.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        builder = builder.config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_heap(),
+        )
     for k, v in _DEFAULTS.items():
         builder = builder.config(k, v)
     builder = builder.config("spark.ui.enabled", "false")

@@ -13,6 +13,7 @@ import os
 import re
 
 from calcite_spark.plans.materialize import MaterializationRegistry
+from calcite_spark.sql import lexer
 
 _CREATE_VIEW = re.compile(r"^\s*CREATE\s+(OR\s+REPLACE\s+)?VIEW\s+(\w+)\s+AS\s+(.*)$", re.I | re.S)
 _CREATE_TABLE_AS = re.compile(
@@ -627,8 +628,6 @@ class DdlExecutor:
         'i is big' must not have its i rewritten)."""
 
         def repl(m):
-            if expr.count("'", 0, m.start()) % 2 == 1:
-                return m.group(0)  # inside a string literal
             w = m.group(0)
             if w in values:
                 return f"({values[w]})"
@@ -636,7 +635,7 @@ class DdlExecutor:
                 return f"CAST(NULL AS {types[w]})"
             return w
 
-        return re.sub(r"[A-Za-z_]\w*", repl, expr)
+        return lexer.sub(r"[A-Za-z_]\w*", repl, expr)
 
     def _insert_into(self, name: str, cols_text, body: str):
         """INSERT INTO t [(cols)] VALUES ... | SELECT ... ≈ the server
@@ -980,22 +979,17 @@ class DdlExecutor:
         src = src.toDF(*[f"{salias}__{c}" for c in src.columns])
 
         def _requalify(text: str) -> str:
-            # quote-parity guard: alias-qualified text inside a string
-            # literal is data — rewriting it corrupts stored values
-            # (review r8; same class as _subst_cols)
-            def _sub(pat, repl, s):
-                return re.sub(
-                    pat,
-                    lambda m: m.group(0)
-                    if s.count("'", 0, m.start()) % 2 == 1
-                    else m.expand(repl),
-                    s,
-                )
-
-            text = _sub(
-                rf"\b{re.escape(salias)}\.(\w+)", rf"{salias}__\g<1>", text
+            # alias-qualified text inside a string literal is data —
+            # rewriting it corrupts stored values (review r8; same
+            # class as _subst_cols)
+            text = lexer.sub(
+                rf"\b{re.escape(salias)}\.(\w+)",
+                lambda m: f"{salias}__{m.group(1)}",
+                text,
             )
-            return _sub(rf"\b{re.escape(talias)}\.(\w+)", r"\g<1>", text)
+            return lexer.sub(
+                rf"\b{re.escape(talias)}\.(\w+)", lambda m: m.group(1), text
+            )
 
         on = _requalify(on.strip())
         update_map, insert_map = None, None
@@ -1119,36 +1113,17 @@ class DdlExecutor:
         """VALUES (a, b), (c, d) → [["a","b"], ["c","d"]] — depth- and
         quote-aware so literals containing commas/parens survive."""
         text = re.sub(r"(?is)^VALUES\s*", "", body.strip())
-        rows, depth, in_str, cur, cells = [], 0, False, [], None
-        for ch in text:
-            if ch == "'":
-                in_str = not in_str
-            if in_str:
-                cur.append(ch)
-                continue
-            if ch == "(":
-                depth += 1
-                if depth == 1:
-                    cells = []
-                    continue
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    cells.append("".join(cur).strip())
-                    cur = []
-                    rows.append(cells)
-                    cells = None
-                    continue
-            elif ch == "," and depth == 1:
-                cells.append("".join(cur).strip())
-                cur = []
-                continue
-            elif ch == "," and depth == 0:
-                continue
-            if depth >= 1:
-                cur.append(ch)
-        if depth != 0 or in_str or (cur and "".join(cur).strip()):
-            raise ValueError("malformed VALUES list")
+        rows = []
+        for row in lexer.split_top_level(text):
+            if not (row.startswith("(") and row.endswith(")")):
+                raise ValueError("malformed VALUES list")
+            try:
+                inner, close = lexer.balanced_span(row, 1)
+            except ValueError:
+                raise ValueError("malformed VALUES list") from None
+            if close != len(row) - 1:
+                raise ValueError("malformed VALUES list")
+            rows.append(lexer.split_top_level(inner))
         return rows
 
     def _create_foreign_schema(self, name: str, engine_type: str, options: str):
@@ -1458,28 +1433,10 @@ def _split_where(text: str):
     """Split `<set list> WHERE <cond>` at the first TOP-LEVEL WHERE —
     quote- and paren-aware, so a 'where' inside a string literal or a
     parenthesized subquery never splits (review r8)."""
-    depth, in_str, i, n = 0, False, 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch == "'":
-            in_str = not in_str
-        elif not in_str:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif (
-                depth == 0
-                and text[i : i + 5].upper() == "WHERE"
-                and (i == 0 or not (text[i - 1].isalnum() or text[i - 1] == "_"))
-                and (
-                    i + 5 >= n
-                    or not (text[i + 5].isalnum() or text[i + 5] == "_")
-                )
-            ):
-                return text[:i].rstrip(), text[i + 5 :].strip()
-        i += 1
-    return text.strip(), None
+    w = lexer.find_top_level(text, "WHERE")
+    if w < 0:
+        return text.strip(), None
+    return text[:w].rstrip(), text[w + 5 :].strip()
 
 
 def _split_top_level(text: str) -> list[str]:
@@ -1489,27 +1446,23 @@ def _split_top_level(text: str) -> list[str]:
     list (`MAP<VARCHAR, INT>` — r14; `<` counts only right after a
     word character, so `x < 2` comparisons stay flat; an unmatched
     type-style `<` would suppress later splits — parenthesize
-    comparison-bearing DEFAULT expressions)."""
-    out, depth, adepth, in_str, cur, prev = [], 0, 0, False, [], ""
-    for ch in text:
-        if ch == "'":
-            in_str = not in_str
-        elif not in_str:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "<" and depth == 0 and re.match(r"\w", prev or " "):
-                adepth += 1
-            elif ch == ">" and adepth > 0:
-                adepth -= 1  # also nets out a `<>` operator pair
-        if ch == "," and depth == 0 and adepth == 0 and not in_str:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
+    comparison-bearing DEFAULT expressions). Depths are counted on the
+    lexer mask."""
+    out, depth, adepth, last, prev = [], 0, 0, 0, ""
+    for i, ch in enumerate(lexer.mask(text)):
+        if ch == "(":
+            depth += 1
+        elif ch == ")":
+            depth -= 1
+        elif ch == "<" and depth == 0 and re.match(r"\w", prev or " "):
+            adepth += 1
+        elif ch == ">" and adepth > 0:
+            adepth -= 1  # also nets out a `<>` operator pair
+        elif ch == "," and depth == 0 and adepth == 0:
+            out.append(text[last:i])
+            last = i + 1
         if not ch.isspace():
             prev = ch
-    if cur:
-        out.append("".join(cur))
+    if last < len(text):
+        out.append(text[last:])
     return out

@@ -19,7 +19,9 @@ Handled constructs (each cites the reference grammar feature):
                                     (runtime/SqlFunctions.similar)
   * Library function names       → functions/registry translation is
                                     available to callers via translate()
-Everything else passes through verbatim to Spark SQL.
+Everything else passes through verbatim to Spark SQL. Every macro scans
+the mask of sql/lexer.py, so string literals, quoted names, comments and
+hints are opaque to it.
 """
 
 from __future__ import annotations
@@ -27,6 +29,8 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame, SparkSession
+
+from calcite_spark.sql import lexer
 
 
 # ---------------------------------------------------------------------
@@ -170,14 +174,7 @@ class SqlFrontend:
 
     def _expand_quantified(self, text: str) -> str:
         while True:
-            m = None
-            for cand in self._QUANT_RE.finditer(text):
-                # string literals are opaque (quote parity at the
-                # OPERATOR position — the operand itself may be a
-                # complete quoted literal)
-                if text.count("'", 0, cand.start(2)) % 2 == 0:
-                    m = cand
-                    break
+            m = lexer.search(self._QUANT_RE, text)
             if m is None:
                 return text
             x, op, quant = m.group(1), m.group(2), m.group(3).upper()
@@ -198,7 +195,7 @@ class SqlFrontend:
                 )
             if op == "!=":
                 op = "<>"
-            sub, close = self._balanced_span(text, m.end())
+            sub, close = lexer.balanced_span(text, m.end())
             if quant == "ANY":
                 quant = "SOME"  # ANY is the SQL-standard synonym
             if not re.match(r"\s*SELECT\b", sub, re.I):
@@ -387,11 +384,7 @@ class SqlFrontend:
 
     def _expand_pg_casts(self, text: str) -> str:
         while True:
-            m = None
-            for cand in self._PG_CAST_RE.finditer(text):
-                if text.count("'", 0, cand.start(2)) % 2 == 0:
-                    m = cand
-                    break
+            m = lexer.search(self._PG_CAST_RE, text)
             if m is None:
                 return text
             operand = m.group(1)
@@ -454,15 +447,7 @@ class SqlFrontend:
                 pat = f"(?i){pat}"
             return f"{neg}({lhs} RLIKE '{pat}')"
 
-        out, i = [], 0
-        for m in self._PG_REGEX_RE.finditer(text):
-            if text.count("'", 0, m.start()) % 2:
-                continue
-            out.append(text[i : m.start()])
-            out.append(sub(m))
-            i = m.end()
-        out.append(text[i:])
-        return "".join(out)
+        return lexer.sub(self._PG_REGEX_RE, sub, text)
 
     # -- babel batch 2 (r7): DISTINCT ON, ARRAY[...], @>/<@, ISNULL ---
 
@@ -481,32 +466,21 @@ class SqlFrontend:
         text = text.strip().rstrip(";")
         m = self._DISTINCT_ON_RE.match(text)
         if not m:
-            # quote-aware: the phrase inside a string literal is data,
+            # the phrase inside a string literal is data,
             # not syntax (review r7)
-            inner = next(
-                (
-                    c
-                    for c in re.finditer(r"(?i)\bDISTINCT\s+ON\s*\(", text)
-                    if text.count("'", 0, c.start()) % 2 == 0
-                ),
-                None,
-            )
-            if inner is not None:
+            if lexer.search(r"(?i)\bDISTINCT\s+ON\s*\(", text):
                 raise ValueError(
                     "DISTINCT ON is supported at the outermost SELECT "
                     "only (rewrite inner uses as window subqueries)"
                 )
             return text
-        on_list, close = self._balanced_span(text, m.end())
-        on_exprs = [e.strip() for e in self._split_top_commas(on_list)]
-        frm = self._top_level_kw(text, "FROM", close)
+        on_list, close = lexer.balanced_span(text, m.end())
+        on_exprs = lexer.split_top_level(on_list)
+        frm = lexer.find_top_level(text, "FROM", close)
         if frm < 0:
             raise ValueError("DISTINCT ON requires a FROM clause")
-        sel_items = [
-            s.strip()
-            for s in self._split_top_commas(text[close + 1 : frm])
-        ]
-        ob = self._top_level_kw(text, "ORDER", frm)
+        sel_items = lexer.split_top_level(text[close + 1 : frm])
+        ob = lexer.find_top_level(text, "ORDER", frm)
         if ob < 0:
             raise ValueError(
                 "DISTINCT ON requires ORDER BY (PostgreSQL returns an "
@@ -532,23 +506,14 @@ class SqlFrontend:
         # otherwise fall into the window's ORDER BY text and die with
         # the misleading "must match the initial ORDER BY" error
         # (ADVICE r8) — refuse it by name instead
-        stray = next(
-            (
-                c
-                for c in re.finditer(r"(?i)\b(LIMIT|OFFSET|FETCH)\b", order_txt)
-                if order_txt.count("'", 0, c.start()) % 2 == 0
-            ),
-            None,
-        )
+        stray = lexer.search(r"(?i)\b(LIMIT|OFFSET|FETCH)\b", order_txt)
         if stray is not None:
             raise ValueError(
                 f"DISTINCT ON: unsupported {stray.group(1).upper()} form "
                 "after ORDER BY — only literal-integer LIMIT n [OFFSET n] "
                 "is supported"
             )
-        order_keys = [
-            k.strip() for k in self._split_top_commas(order_txt)
-        ]
+        order_keys = lexer.split_top_level(order_txt)
 
         def _norm(e):
             return re.sub(r"\s+", " ", e).strip().lower()
@@ -624,15 +589,14 @@ class SqlFrontend:
     _STAR_EXCLUDE_RE = re.compile(r"(?is)(\*\s*)EXCLUDE(\s*\()")
 
     def _expand_star_exclude(self, text: str) -> str:
-        out = self._STAR_EXCLUDE_RE.sub(
-            lambda m: m.group(0)
-            if text.count("'", 0, m.start()) % 2 == 1
-            else f"{m.group(1)}EXCEPT{m.group(2)}",
+        out = lexer.sub(
+            self._STAR_EXCLUDE_RE,
+            lambda m: f"{m.group(1)}EXCEPT{m.group(2)}",
             text,
         )
         # dedup each EXCEPT list that the rewrite produced
         def _dedup(m):
-            items = [i.strip() for i in self._split_top_commas(m.group(2))]
+            items = lexer.split_top_level(m.group(2))
             seen, keep = set(), []
             for i in items:
                 k = re.sub(r"\s+", " ", i).lower()
@@ -641,13 +605,7 @@ class SqlFrontend:
                     keep.append(i)
             return f"{m.group(1)}EXCEPT ({', '.join(keep)})"
 
-        return re.sub(
-            r"(?is)(\*\s*)EXCEPT\s*\(([^()]*)\)",
-            lambda m: m.group(0)
-            if out.count("'", 0, m.start()) % 2 == 1
-            else _dedup(m),
-            out,
-        )
+        return lexer.sub(r"(?is)(\*\s*)EXCEPT\s*\(([^()]*)\)", _dedup, out)
 
     # SELECT * REPLACE(expr AS col, ...) — Snowflake star-REPLACE, in
     # the reference's babel select.iq sweep. Spark has no native form;
@@ -688,7 +646,7 @@ class SqlFrontend:
                 "a join would expand * to the first table's columns only"
             )
         repl = {}
-        for item in self._split_top_commas(m.group(2)):
+        for item in lexer.split_top_level(m.group(2)):
             im = re.match(r"(?is)^(.*?)\s+AS\s+([A-Za-z_]\w*)\s*$", item.strip())
             if im is None:
                 raise ValueError(
@@ -723,29 +681,14 @@ class SqlFrontend:
 
     def _expand_array_literal(self, text: str) -> str:
         while True:
-            m = None
-            for cand in self._ARRAY_KW_RE.finditer(text):
-                if text.count("'", 0, cand.start()) % 2 == 0:
-                    m = cand
-                    break
+            m = lexer.search(self._ARRAY_KW_RE, text)
             if m is None:
                 return text
-            depth, i, in_str = 1, m.end(), False
-            while i < len(text):
-                ch = text[i]
-                if ch == "'":
-                    in_str = not in_str
-                elif not in_str:
-                    if ch == "[":
-                        depth += 1
-                    elif ch == "]":
-                        depth -= 1
-                        if depth == 0:
-                            break
-                i += 1
-            if depth != 0:
-                raise ValueError("unterminated ARRAY[ constructor")
-            inner = self._expand_array_literal(text[m.end() : i])
+            try:
+                inner, i = lexer.balanced_span(text, m.end(), "]")
+            except ValueError:
+                raise ValueError("unterminated ARRAY[ constructor") from None
+            inner = self._expand_array_literal(inner)
             text = text[: m.start()] + f"array({inner})" + text[i + 1 :]
 
     # PG array containment `a @> b` / `a <@ b` (babel tier; DuckDB runs
@@ -767,11 +710,7 @@ class SqlFrontend:
 
     def _expand_containment(self, text: str) -> str:
         while True:
-            m = None
-            for cand in self._CONTAIN_RE.finditer(text):
-                if text.count("'", 0, cand.start(2)) % 2 == 0:
-                    m = cand
-                    break
+            m = lexer.search(self._CONTAIN_RE, text)
             if m is None:
                 return text
             a, op, b = m.group(1), m.group(2), m.group(3)
@@ -815,17 +754,17 @@ class SqlFrontend:
     # INTERVAL SECOND) already parses), and anything else still
     # refuses loudly in Spark's parser.
     _PG_IVL_CAST_RE = re.compile(
-        r"(?i)\bCAST\s*\(\s*'([+-]?\d+)'\s+AS\s+INTERVAL"
+        r"(?i)\bCAST\s*\(\s*'([^']*)'\s+AS\s+INTERVAL"
         r"(\s+\w+\s+TO\s+SECOND)?\s*\)"
     )
 
     def _expand_pg_interval_cast(self, text: str) -> str:
         def _sub(m):
-            if text.count("'", 0, m.start()) % 2 == 1:
+            if not re.fullmatch(r"[+-]?\d+", m.group(1)):
                 return m.group(0)
             return f"CAST('{m.group(1)}' AS INTERVAL SECOND)"
 
-        return self._PG_IVL_CAST_RE.sub(_sub, text)
+        return lexer.sub(self._PG_IVL_CAST_RE, _sub, text)
 
     # PG coerces a '{...}' string literal to an array when compared
     # against one (babel postgresql.iq:43-58: array[0,1,2] = '{0,1,2}')
@@ -835,10 +774,10 @@ class SqlFrontend:
     # textual elements become string literals, {} is the empty array.
     _PG_ARRTXT_L = re.compile(
         r"(?is)(array\s*\((?:[^()]|\([^()]*\))*\))\s*(=|<>|!=)\s*"
-        r"'(\{[^']*\})'"
+        r"'([^']*)'"
     )
     _PG_ARRTXT_R = re.compile(
-        r"(?is)'(\{[^']*\})'\s*(=|<>|!=)\s*"
+        r"(?is)'([^']*)'\s*(=|<>|!=)\s*"
         r"(array\s*\((?:[^()]|\([^()]*\))*\))"
     )
 
@@ -952,31 +891,26 @@ class SqlFrontend:
     def _expand_pg_array_text_cmp(self, text: str) -> str:
         op = {"!=": "<>"}
 
-        def _pass1(cur):
-            def _left(m):
-                # quote-parity guard, like every other frontend text
-                # rewrite (ADVICE r13): never rewrite inside a literal
-                if cur.count("'", 0, m.start()) % 2 == 1:
-                    return m.group(0)
-                arr = self._pg_array_text_to_sql(m.group(3), m.group(1))
-                if arr is None:
-                    return m.group(0)
-                return f"{m.group(1)} {op.get(m.group(2), m.group(2))} {arr}"
+        def arr(txt, other):
+            # the literal's text must be '{...}' array text
+            if re.fullmatch(r"\{[^']*\}", txt):
+                return self._pg_array_text_to_sql(txt, other)
+            return None
 
-            return self._PG_ARRTXT_L.sub(_left, cur)
+        def _left(m):
+            a = arr(m.group(3), m.group(1))
+            if a is None:
+                return m.group(0)
+            return f"{m.group(1)} {op.get(m.group(2), m.group(2))} {a}"
 
-        def _pass2(cur):
-            def _right(m):
-                if cur.count("'", 0, m.start()) % 2 == 1:
-                    return m.group(0)
-                arr = self._pg_array_text_to_sql(m.group(1), m.group(3))
-                if arr is None:
-                    return m.group(0)
-                return f"{arr} {op.get(m.group(2), m.group(2))} {m.group(3)}"
+        def _right(m):
+            a = arr(m.group(1), m.group(3))
+            if a is None:
+                return m.group(0)
+            return f"{a} {op.get(m.group(2), m.group(2))} {m.group(3)}"
 
-            return self._PG_ARRTXT_R.sub(_right, cur)
-
-        return _pass2(_pass1(text))
+        text = lexer.sub(self._PG_ARRTXT_L, _left, text)
+        return lexer.sub(self._PG_ARRTXT_R, _right, text)
 
     # 4-arg REGEXP_REPLACE whose 4th operand is a string LITERAL is the
     # PG flags form (REGEXP_REPLACE_PG_4, SqlLibraryOperators.java:690-
@@ -994,11 +928,11 @@ class SqlFrontend:
         from calcite_spark.functions.pg_regex import pg_regexp_replace
 
         res, i = [], 0
-        for m in self._PG_RR_RE.finditer(text):
-            if m.start() < i or text.count("'", 0, m.start()) % 2:
+        for m in lexer.finditer(self._PG_RR_RE, text):
+            if m.start() < i:
                 continue
-            args_txt, close = self._balanced_span(text, m.end())
-            args = [a.strip() for a in self._split_top_commas(args_txt)]
+            args_txt, close = lexer.balanced_span(text, m.end())
+            args = lexer.split_top_level(args_txt)
             if len(args) == 2:
                 # Redshift's 2-arg form deletes EVERY match
                 # (redshift.iq:2233 — 'abcabc','b' → 'acac'); Spark's
@@ -1029,11 +963,11 @@ class SqlFrontend:
         from calcite_spark.functions import registry as freg
 
         res, i = [], 0
-        for m in self._STA_RE.finditer(text):
-            if m.start() < i or text.count("'", 0, m.start()) % 2:
+        for m in lexer.finditer(self._STA_RE, text):
+            if m.start() < i:
                 continue
-            args_txt, close = self._balanced_span(text, m.end())
-            args = [a.strip() for a in self._split_top_commas(args_txt)]
+            args_txt, close = lexer.balanced_span(text, m.end())
+            args = lexer.split_top_level(args_txt)
             if len(args) not in (2, 3):
                 continue
             res.append(text[i : m.start()])
@@ -1090,11 +1024,11 @@ class SqlFrontend:
         from calcite_spark.functions import registry as freg
 
         res, i = [], 0
-        for m in self._TO_PARSE_RE.finditer(text):
-            if m.start() < i or text.count("'", 0, m.start()) % 2:
+        for m in lexer.finditer(self._TO_PARSE_RE, text):
+            if m.start() < i:
                 continue
-            args_txt, close = self._balanced_span(text, m.end())
-            args = [a.strip() for a in self._split_top_commas(args_txt)]
+            args_txt, close = lexer.balanced_span(text, m.end())
+            args = lexer.split_top_level(args_txt)
             if len(args) != 2:
                 continue
             tm = re.match(r"^'((?:[^']|'')*)'$", args[1])
@@ -1123,11 +1057,11 @@ class SqlFrontend:
         from calcite_spark.functions import registry as freg
 
         res, i = [], 0
-        for m in self._TO_CHAR_RE.finditer(text):
-            if m.start() < i or text.count("'", 0, m.start()) % 2:
+        for m in lexer.finditer(self._TO_CHAR_RE, text):
+            if m.start() < i:
                 continue
-            args_txt, close = self._balanced_span(text, m.end())
-            args = [a.strip() for a in self._split_top_commas(args_txt)]
+            args_txt, close = lexer.balanced_span(text, m.end())
+            args = lexer.split_top_level(args_txt)
             if len(args) != 2:
                 continue
             tm = re.match(r"^'((?:[^']|'')*)'$", args[1])
@@ -1224,11 +1158,11 @@ class SqlFrontend:
         from calcite_spark.functions.registry import _RS_UNITS
 
         res, i = [], 0
-        for m in self._DATEADD_RE.finditer(text):
-            if m.start() < i or text.count("'", 0, m.start()) % 2:
+        for m in lexer.finditer(self._DATEADD_RE, text):
+            if m.start() < i:
                 continue
-            args_txt, close = self._balanced_span(text, m.end())
-            args = [a.strip() for a in self._split_top_commas(args_txt)]
+            args_txt, close = lexer.balanced_span(text, m.end())
+            args = lexer.split_top_level(args_txt)
             if len(args) != 3 or not re.fullmatch(r"\w+", args[0]):
                 continue
             unit = args[0].lower()
@@ -1271,12 +1205,12 @@ class SqlFrontend:
         from calcite_spark.functions.bq_regex import count_capturing_groups
 
         res, i = [], 0
-        for m in self._REGEXP_EXT_RE.finditer(text):
-            if m.start() < i or text.count("'", 0, m.start()) % 2:
+        for m in lexer.finditer(self._REGEXP_EXT_RE, text):
+            if m.start() < i:
                 continue
             name = m.group(1).upper()
-            args_txt, close = self._balanced_span(text, m.end())
-            args = [a.strip() for a in self._split_top_commas(args_txt)]
+            args_txt, close = lexer.balanced_span(text, m.end())
+            args = lexer.split_top_level(args_txt)
             if len(args) < 2:
                 continue
             # BQ spells string literals double-quoted; normalize the
@@ -1313,11 +1247,11 @@ class SqlFrontend:
 
     def _expand_date_part_once(self, text: str) -> str:
         res, i = [], 0
-        for m in self._DP_RE.finditer(text):
-            if m.start() < i or text.count("'", 0, m.start()) % 2:
+        for m in lexer.finditer(self._DP_RE, text):
+            if m.start() < i:
                 continue
-            args_txt, close = self._balanced_span(text, m.end())
-            args = [a.strip() for a in self._split_top_commas(args_txt)]
+            args_txt, close = lexer.balanced_span(text, m.end())
+            args = lexer.split_top_level(args_txt)
             if len(args) != 2:
                 continue
             qm = re.match(r"^'(\w+)'$", args[0])
@@ -1352,10 +1286,10 @@ class SqlFrontend:
         res.append(text[i:])
         text = "".join(res)
         res, i = [], 0
-        for m in self._EXTRACT_DP_RE.finditer(text):
-            if m.start() < i or text.count("'", 0, m.start()) % 2:
+        for m in lexer.finditer(self._EXTRACT_DP_RE, text):
+            if m.start() < i:
                 continue
-            args_txt, close = self._balanced_span(text, m.end())
+            args_txt, close = lexer.balanced_span(text, m.end())
             # BQ weekday-anchored week number: EXTRACT(WEEK(SUNDAY)
             # FROM d) — weeks begin on the named weekday, days before
             # the year's first such weekday are week 0 (big-query.iq:
@@ -1427,8 +1361,8 @@ class SqlFrontend:
         builtins = self._spark_builtin_names()
         for _ in range(5):  # nested registry calls: expand to fixpoint
             res, i, changed = [], 0, False
-            for m in self._REG_CALL_RE.finditer(text):
-                if m.start() < i or text.count("'", 0, m.start()) % 2:
+            for m in lexer.finditer(self._REG_CALL_RE, text):
+                if m.start() < i:
                     continue
                 name = m.group(1).upper()
                 if (
@@ -1440,19 +1374,15 @@ class SqlFrontend:
                     or (m.start() > 0 and text[m.start() - 1] == ".")
                 ):
                     continue
-                args_txt, close = self._balanced_span(text, m.end())
-                args = [
-                    a.strip() for a in self._split_top_commas(args_txt)
-                ]
-                if args == [""]:
-                    args = []
+                args_txt, close = lexer.balanced_span(text, m.end())
+                args = lexer.split_top_level(args_txt)
                 try:
                     lowered = freg.translate(name, *args)
                 except (KeyError, ValueError):
                     continue  # wrong arity/shape: loud later in Spark
                 simple_call = bool(
                     re.fullmatch(r"\w+\(.*\)", lowered, re.S)
-                ) and self._balanced_span(
+                ) and lexer.balanced_span(
                     lowered, lowered.index("(") + 1
                 )[1] == len(lowered) - 1
                 follows_clause = re.match(
@@ -1488,21 +1418,8 @@ class SqlFrontend:
     )
 
     def _expand_approximate(self, text: str) -> str:
-        def first_outside_literal(regex, t):
-            # a match inside a string literal is data — skip it and keep
-            # scanning; breaking on it would abandon later genuine calls
-            # (review r8)
-            return next(
-                (
-                    c
-                    for c in regex.finditer(t)
-                    if t.count("'", 0, c.start()) % 2 == 0
-                ),
-                None,
-            )
-
         while True:
-            m = first_outside_literal(self._APPROX_PCT_RE, text)
+            m = lexer.search(self._APPROX_PCT_RE, text)
             if m is None:
                 break
             key = m.group(2).strip()
@@ -1526,7 +1443,7 @@ class SqlFrontend:
                 + text[m.end() :]
             )
         while True:
-            m = first_outside_literal(self._APPROX_COUNT_RE, text)
+            m = lexer.search(self._APPROX_COUNT_RE, text)
             if m is None:
                 break
             text = (
@@ -1534,10 +1451,7 @@ class SqlFrontend:
                 + f"approx_count_distinct({m.group(1).strip()})"
                 + text[m.end() :]
             )
-        if re.search(r"(?i)\bAPPROXIMATE\b", text) and any(
-            text.count("'", 0, c.start()) % 2 == 0
-            for c in re.finditer(r"(?i)\bAPPROXIMATE\b", text)
-        ):
+        if lexer.search(r"(?i)\bAPPROXIMATE\b", text):
             raise ValueError(
                 "APPROXIMATE: only COUNT(DISTINCT ...) and "
                 "PERCENTILE_DISC(...) WITHIN GROUP (...) are supported "
@@ -1553,17 +1467,10 @@ class SqlFrontend:
 
     def _expand_ratio_to_report(self, text: str) -> str:
         while True:
-            m = next(
-                (
-                    c
-                    for c in self._RATIO_RE.finditer(text)
-                    if text.count("'", 0, c.start()) % 2 == 0
-                ),
-                None,
-            )
+            m = lexer.search(self._RATIO_RE, text)
             if m is None:
                 return text
-            e, close = self._balanced_span(text, m.end())
+            e, close = lexer.balanced_span(text, m.end())
             e = e.strip()
             om = re.match(r"(?is)\s*OVER\s*\(", text[close + 1 :])
             if om is None:
@@ -1571,7 +1478,7 @@ class SqlFrontend:
                     "RATIO_TO_REPORT requires an OVER (...) clause"
                 )
             spec_start = close + 1 + om.end()
-            spec, spec_close = self._balanced_span(text, spec_start)
+            spec, spec_close = lexer.balanced_span(text, spec_start)
             win = f"OVER ({spec.strip()})"
             rep = (
                 f"(CASE WHEN SUM({e}) {win} = 0 THEN NULL "
@@ -1595,11 +1502,7 @@ class SqlFrontend:
         from calcite_spark.functions import registry as freg
 
         while True:
-            m = None
-            for cand in self._IS_EMPTY_RE.finditer(text):
-                if text.count("'", 0, cand.start()) % 2 == 0:
-                    m = cand
-                    break
+            m = lexer.search(self._IS_EMPTY_RE, text)
             if m is None:
                 return text
             if self._lhs_is_compound(text, m.start(1), m.group(1)):
@@ -1679,14 +1582,7 @@ class SqlFrontend:
 
     def _expand_at_time_zone(self, text: str) -> str:
         while True:
-            m = next(
-                (
-                    c
-                    for c in self._AT_TZ_RE.finditer(text)
-                    if text.count("'", 0, c.start()) % 2 == 0
-                ),
-                None,
-            )
+            m = lexer.search(self._AT_TZ_RE, text)
             if m is None:
                 return text
             opd = m.group(1).strip()
@@ -1708,8 +1604,8 @@ class SqlFrontend:
 
     def _expand_tstz_literal(self, text: str) -> str:
         res, i = [], 0
-        for m in self._TSTZ_LIT_RE.finditer(text):
-            if m.start() < i or text.count("'", 0, m.start()) % 2:
+        for m in lexer.finditer(self._TSTZ_LIT_RE, text):
+            if m.start() < i:
                 continue
             body = m.group(1).strip()
             zm = re.match(
@@ -1729,8 +1625,8 @@ class SqlFrontend:
 
     def _expand_bq_datetime(self, text: str) -> str:
         res, i = [], 0
-        for m in self._BQ_DATETIME_LIT_RE.finditer(text):
-            if m.start() < i or text.count("'", 0, m.start()) % 2:
+        for m in lexer.finditer(self._BQ_DATETIME_LIT_RE, text):
+            if m.start() < i:
                 continue
             lit = m.group(1)
             if lit.startswith('"'):
@@ -1741,8 +1637,8 @@ class SqlFrontend:
         res.append(text[i:])
         text = "".join(res)
         res, i = [], 0
-        for m in self._BQ_TYPED_LIT_RE.finditer(text):
-            if m.start() < i or text.count("'", 0, m.start()) % 2:
+        for m in lexer.finditer(self._BQ_TYPED_LIT_RE, text):
+            if m.start() < i:
                 continue
             res.append(text[i : m.start()])
             res.append(f"{m.group(1)} '{m.group(2)}'")
@@ -1752,19 +1648,19 @@ class SqlFrontend:
         # BQ DATE(y, m, d) civil constructor → make_date (the 1-arg
         # cast form is Spark-native)
         res, i = [], 0
-        for m in re.finditer(r"(?i)\bDATE\s*\(", text):
-            if m.start() < i or text.count("'", 0, m.start()) % 2:
+        for m in lexer.finditer(r"(?i)\bDATE\s*\(", text):
+            if m.start() < i:
                 continue
-            args_txt, close = self._balanced_span(text, m.end())
-            if len(self._split_top_commas(args_txt)) == 3:
+            args_txt, close = lexer.balanced_span(text, m.end())
+            if len(lexer.split_top_level(args_txt)) == 3:
                 res.append(text[i : m.start()])
                 res.append(f"make_date({args_txt})")
                 i = close + 1
         res.append(text[i:])
         text = "".join(res)
         res, i = [], 0
-        for m in self._BQ_CURDATE_RE.finditer(text):
-            if m.start() < i or text.count("'", 0, m.start()) % 2:
+        for m in lexer.finditer(self._BQ_CURDATE_RE, text):
+            if m.start() < i:
                 continue
             tz = m.group(1)
             if tz.startswith('"'):
@@ -1794,17 +1690,10 @@ class SqlFrontend:
 
     def _expand_bq_subscripts(self, text: str) -> str:
         while True:
-            m = next(
-                (
-                    c
-                    for c in self._BQ_SUBSCRIPT_RE.finditer(text)
-                    if text.count("'", 0, c.start()) % 2 == 0
-                ),
-                None,
-            )
+            m = lexer.search(self._BQ_SUBSCRIPT_RE, text)
             if m is None:
                 return text
-            idx, close = self._balanced_span(text, m.end())
+            idx, close = lexer.balanced_span(text, m.end())
             if close + 1 >= len(text) or text[close + 1 :].lstrip()[:1] != "]":
                 return text  # malformed: leave for Spark to refuse
             rb = text.index("]", close)
@@ -1859,17 +1748,10 @@ class SqlFrontend:
 
     def _expand_bq_unnest(self, text: str) -> str:
         while True:
-            m = next(
-                (
-                    c
-                    for c in self._BQ_UNNEST_RE.finditer(text)
-                    if text.count("'", 0, c.start()) % 2 == 0
-                ),
-                None,
-            )
+            m = lexer.search(self._BQ_UNNEST_RE, text)
             if m is None:
                 return text
-            arr, close = self._balanced_span(text, m.end())
+            arr, close = lexer.balanced_span(text, m.end())
             am = re.match(
                 r"(?is)\s*(?:AS\s+)?(\w+)", text[close + 1 :]
             )
@@ -1909,62 +1791,22 @@ class SqlFrontend:
         head = re.match(r"(?is)^(\s*SELECT\s+)(DISTINCT\s+)?", text)
         if head is None:
             return text
-        # walk to the top-level FROM (quote- and paren-aware)
-        i, depth, in_str, frm = head.end(), 0, False, None
-        while i < len(text):
-            ch = text[i]
-            if ch == "'":
-                in_str = not in_str
-            elif not in_str:
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                elif depth == 0 and text[i : i + 5].upper() == "FROM " and (
-                    i == 0 or not (text[i - 1].isalnum() or text[i - 1] == "_")
-                ):
-                    frm = i
-                    break
-            i += 1
-        if frm is None:
+        frm = lexer.find_top_level(text, "FROM", head.end())
+        if frm < 0:
             return text
         sel_list = text[head.end() : frm]
-        # find the top-level bare BY inside the select list
-        j, depth, in_str, by_at = 0, 0, False, None
-        while j < len(sel_list) - 2:
-            ch = sel_list[j]
-            if ch == "'":
-                in_str = not in_str
-            elif not in_str:
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                elif (
-                    depth == 0
-                    and sel_list[j : j + 2].upper() == "BY"
-                    and (j == 0 or sel_list[j - 1].isspace())
-                    and j + 2 < len(sel_list)
-                    and sel_list[j + 2].isspace()
-                ):
-                    by_at = j
-                    break
-            j += 1
-        if by_at is None:
+        # the top-level bare BY inside the select list
+        by_at = lexer.find_top_level(sel_list, r"(?<!\S)BY(?=\s)")
+        if by_at < 0:
             return text
         tail = text[frm:]
-        if re.search(r"(?i)\b(GROUP|ORDER)\s+BY\b", self._strip_parens(tail)):
+        if lexer.find_top_level(tail, r"(?:GROUP|ORDER)\s+BY") >= 0:
             raise ValueError(
                 "SELECT ... BY cannot be combined with GROUP BY or "
                 "ORDER BY (SqlByRewriter contract)"
             )
-        items = [
-            s.strip() for s in self._split_top_commas(sel_list[:by_at])
-        ]
-        by_items = [
-            s.strip()
-            for s in self._split_top_commas(sel_list[by_at + 2 :])
-        ]
+        items = lexer.split_top_level(sel_list[:by_at])
+        by_items = lexer.split_top_level(sel_list[by_at + 2 :])
         sel_keys, group_keys, order_keys = [], [], []
         for b in by_items:
             bm = re.match(
@@ -2006,26 +1848,8 @@ class SqlFrontend:
                 "aggregate explicitly"
             )
         # GROUP BY / ORDER BY go before any top-level LIMIT/OFFSET/FETCH
-        lm = None
-        k, depth, in_str = 0, 0, False
-        while k < len(tail):
-            ch = tail[k]
-            if ch == "'":
-                in_str = not in_str
-            elif not in_str:
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                elif depth == 0:
-                    mm = re.match(r"(?i)\b(LIMIT|OFFSET|FETCH)\b", tail[k:])
-                    if mm and (k == 0 or not (
-                        tail[k - 1].isalnum() or tail[k - 1] == "_"
-                    )):
-                        lm = k
-                        break
-            k += 1
-        body, limit = (tail[:lm], tail[lm:]) if lm is not None else (tail, "")
+        lm = lexer.find_top_level(tail, "LIMIT|OFFSET|FETCH")
+        body, limit = (tail[:lm], tail[lm:]) if lm >= 0 else (tail, "")
         return (
             head.group(0)
             + ", ".join(sel_keys + wrapped)
@@ -2037,23 +1861,6 @@ class SqlFrontend:
             + ", ".join(order_keys)
             + (" " + limit if limit else "")
         )
-
-    @staticmethod
-    def _strip_parens(text: str) -> str:
-        out, depth, in_str = [], 0, False
-        for ch in text:
-            if ch == "'":
-                in_str = not in_str
-            if not in_str:
-                if ch == "(":
-                    depth += 1
-                    continue
-                if ch == ")":
-                    depth -= 1
-                    continue
-            if depth == 0:
-                out.append(ch)
-        return "".join(out)
 
     # SQL-standard collection types in CAST position (spark.iq:34 —
     # `CAST(x AS VARCHAR ARRAY)`): Spark's parser only takes the
@@ -2068,14 +1875,7 @@ class SqlFrontend:
         from calcite_spark.sql.ddl import _spark_type
 
         for _ in range(4):
-            m = next(
-                (
-                    c
-                    for c in self._STD_ARRAY_TYPE_RE.finditer(text)
-                    if text.count("'", 0, c.start()) % 2 == 0
-                ),
-                None,
-            )
+            m = lexer.search(self._STD_ARRAY_TYPE_RE, text)
             if m is None:
                 return text
             inner = m.group(1)
@@ -2097,32 +1897,14 @@ class SqlFrontend:
 
     def _expand_map_literal(self, text: str) -> str:
         while True:
-            m = next(
-                (
-                    c
-                    for c in self._MAP_KW_RE.finditer(text)
-                    if text.count("'", 0, c.start()) % 2 == 0
-                ),
-                None,
-            )
+            m = lexer.search(self._MAP_KW_RE, text)
             if m is None:
                 return text
-            depth, i, in_str = 1, m.end(), False
-            while i < len(text):
-                ch = text[i]
-                if ch == "'":
-                    in_str = not in_str
-                elif not in_str:
-                    if ch == "[":
-                        depth += 1
-                    elif ch == "]":
-                        depth -= 1
-                        if depth == 0:
-                            break
-                i += 1
-            if depth != 0:
-                raise ValueError("unterminated MAP[ constructor")
-            inner = self._expand_map_literal(text[m.end() : i])
+            try:
+                inner, i = lexer.balanced_span(text, m.end(), "]")
+            except ValueError:
+                raise ValueError("unterminated MAP[ constructor") from None
+            inner = self._expand_map_literal(inner)
             text = text[: m.start()] + f"map({inner})" + text[i + 1 :]
 
     def _expand_multiset_ctor(self, text: str) -> str:
@@ -2131,14 +1913,7 @@ class SqlFrontend:
         # keyword and let the ARRAY[...] expansion (which runs later
         # in the dispatch) do the bracket walk
         while True:
-            m = next(
-                (
-                    c
-                    for c in self._MS_KW_RE.finditer(text)
-                    if text.count("'", 0, c.start()) % 2 == 0
-                ),
-                None,
-            )
+            m = lexer.search(self._MS_KW_RE, text)
             if m is None:
                 return text
             text = text[: m.start()] + "ARRAY [" + text[m.end() :]
@@ -2148,14 +1923,7 @@ class SqlFrontend:
 
         for _ in range(8):  # chained ops: expand to fixpoint
             prev = text
-            m = next(
-                (
-                    c
-                    for c in self._MS_BIN_RE.finditer(text)
-                    if text.count("'", 0, c.start()) % 2 == 0
-                ),
-                None,
-            )
+            m = lexer.search(self._MS_BIN_RE, text)
             if m is not None:
                 op = m.group(2).upper()
                 name = f"MULTISET_{op}" + (
@@ -2165,28 +1933,14 @@ class SqlFrontend:
                 )
                 rep = "(" + freg.translate(name, m.group(1), m.group(4)) + ")"
                 text = text[: m.start()] + rep + text[m.end() :]
-            m = next(
-                (
-                    c
-                    for c in self._MS_SUB_RE.finditer(text)
-                    if text.count("'", 0, c.start()) % 2 == 0
-                ),
-                None,
-            )
+            m = lexer.search(self._MS_SUB_RE, text)
             if m is not None:
                 name = (
                     "NOT_SUBMULTISET_OF" if m.group(2) else "SUBMULTISET_OF"
                 )
                 rep = "(" + freg.translate(name, m.group(1), m.group(3)) + ")"
                 text = text[: m.start()] + rep + text[m.end() :]
-            m = next(
-                (
-                    c
-                    for c in self._MS_SET_RE.finditer(text)
-                    if text.count("'", 0, c.start()) % 2 == 0
-                ),
-                None,
-            )
+            m = lexer.search(self._MS_SET_RE, text)
             if m is not None:
                 body = freg.translate("IS_A_SET", m.group(1))
                 rep = f"(NOT ({body}))" if m.group(2) else f"({body})"
@@ -2206,11 +1960,7 @@ class SqlFrontend:
 
     def _expand_null_postfix(self, text: str) -> str:
         while True:
-            m = None
-            for cand in self._NULL_POSTFIX_RE.finditer(text):
-                if text.count("'", 0, cand.start(2)) % 2 == 0:
-                    m = cand
-                    break
+            m = lexer.search(self._NULL_POSTFIX_RE, text)
             if m is None:
                 return text
             if self._lhs_is_compound(text, m.start(1), m.group(1)):
@@ -2230,15 +1980,7 @@ class SqlFrontend:
     _ROW_RE = re.compile(r"\bROW\s*\(", re.I)
 
     def _expand_row_constructor(self, text: str) -> str:
-        out, i = [], 0
-        for m in self._ROW_RE.finditer(text):
-            if text.count("'", 0, m.start()) % 2:
-                continue
-            out.append(text[i : m.start()])
-            out.append("struct(")
-            i = m.end()
-        out.append(text[i:])
-        return "".join(out)
+        return lexer.sub(self._ROW_RE, lambda m: "struct(", text)
 
     # FROM DUAL (dual-table-query.iq — Oracle's 1-row pseudo-table,
     # accepted by the reference under Oracle conformance): Spark allows
@@ -2248,22 +1990,12 @@ class SqlFrontend:
     _DUAL_RE = re.compile(r"\s+FROM\s+DUAL\b(?!\s*,)", re.I)
 
     def _expand_dual(self, text: str) -> str:
-        # quote-parity per match (a literal containing 'FROM DUAL' is
-        # data), and never when DUAL sits in a multi-table FROM list
-        # (dropping one item would leave a dangling comma) — review r6
-        def sub_star(m):
-            if text.count("'", 0, m.start()) % 2:
-                return m.group(0)
-            return "SELECT 'X' AS DUMMY"
-
-        text = self._DUAL_STAR_RE.sub(sub_star, text)
-
-        def sub_plain(m):
-            if text.count("'", 0, m.start()) % 2:
-                return m.group(0)
-            return ""
-
-        return self._DUAL_RE.sub(sub_plain, text)
+        # never when DUAL sits in a multi-table FROM list (dropping one
+        # item would leave a dangling comma) — review r6
+        text = lexer.sub(
+            self._DUAL_STAR_RE, lambda m: "SELECT 'X' AS DUMMY", text
+        )
+        return lexer.sub(self._DUAL_RE, lambda m: "", text)
 
     def _expand_similar_to(self, text: str) -> str:
         def sub(m):
@@ -2373,24 +2105,12 @@ class SqlFrontend:
         # one replacement per CAST: the trailing type token inside its
         # balanced paren span (nested CASTs yield distinct tokens)
         repls = []
-        for m in re.finditer(r"\b(?:CAST|TRY_CAST)\s*\(", text, flags=re.I):
-            if text.count("'", 0, m.start()) % 2:
-                continue  # CAST token inside a string literal
+        for m in lexer.finditer(r"(?i)\b(?:CAST|TRY_CAST)\s*\(", text):
             start = m.end()  # index just past the open paren
-            depth, i, in_str = 1, start, False
-            while i < len(text) and depth:
-                ch = text[i]
-                if ch == "'":
-                    in_str = not in_str  # parens in literals are opaque
-                elif not in_str:
-                    if ch == "(":
-                        depth += 1
-                    elif ch == ")":
-                        depth -= 1
-                i += 1
-            if depth:  # unbalanced — leave the text alone
+            try:
+                body, _ = lexer.balanced_span(text, start)
+            except ValueError:  # unbalanced — leave the text alone
                 continue
-            body = text[start : i - 1]
             tail = re.search(r"(\bAS\s+)(\w+)(\s*)$", body, flags=re.I)
             if tail and tail.group(2).lower() in types:
                 repls.append(
@@ -2435,10 +2155,8 @@ class SqlFrontend:
             return text
         while True:
             found = None
-            for m in re.finditer(r"\bCAST\s*\(", text, re.I):
-                if text.count("'", 0, m.start()) % 2:
-                    continue
-                body, close = self._balanced_span(text, m.end())
+            for m in lexer.finditer(r"(?i)\bCAST\s*\(", text):
+                body, close = lexer.balanced_span(text, m.end())
                 tail = re.search(
                     r"(\bAS\s+)(\w*)\s*\bUNSIGNED\s*$", body, flags=re.I
                 )
@@ -2489,32 +2207,20 @@ class SqlFrontend:
         scan so nested CASTs and parens inside x are safe."""
         from calcite_spark.functions.format_clause import lower_cast_format
 
-        pat = re.compile(r"\bCAST\s*\(", re.I)
         while True:
             m = None
-            for cand in pat.finditer(text):
-                if text.count("'", 0, cand.start()) % 2:
-                    continue  # inside a string literal
-                # balanced span for this CAST
-                depth, i, in_str = 1, cand.end(), False
-                while i < len(text) and depth:
-                    ch = text[i]
-                    if ch == "'":
-                        in_str = not in_str
-                    elif not in_str:
-                        depth += ch == "("
-                        depth -= ch == ")"
-                    i += 1
-                if depth:
+            for cand in lexer.finditer(r"(?i)\bCAST\s*\(", text):
+                try:
+                    inner, close = lexer.balanced_span(text, cand.end())
+                except ValueError:
                     continue
-                inner = text[cand.end() : i - 1]
                 fm = re.match(
                     r"(?is)^(.*)\s+AS\s+(\w+(?:\s*\(\s*\d+(?:\s*,\s*\d+)?\s*\))?)"
                     r"\s+FORMAT\s+'([^']*)'\s*$",
                     inner,
                 )
                 if fm:
-                    m = (cand.start(), i, fm)
+                    m = (cand.start(), close + 1, fm)
                     break
             if m is None:
                 return text
@@ -2535,45 +2241,6 @@ class SqlFrontend:
     _MR_INTERVAL = re.compile(
         r"INTERVAL\s+'?(\d+)'?\s+(SECOND|MINUTE|HOUR|DAY)S?", re.I
     )
-
-    @staticmethod
-    def _balanced_span(text: str, start: int) -> tuple[str, int]:
-        """(inner text, index of closing paren) for an open paren just
-        before `start`; single-quoted strings are opaque."""
-        depth, i, in_str = 1, start, False
-        while i < len(text):
-            ch = text[i]
-            if ch == "'":
-                in_str = not in_str
-            elif not in_str:
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0:
-                        return text[start:i], i
-            i += 1
-        raise ValueError("unbalanced parens in MATCH_RECOGNIZE clause")
-
-    @staticmethod
-    def _split_top_commas(text: str) -> list[str]:
-        parts, cur, depth, in_str = [], [], 0, False
-        for ch in text:
-            if ch == "'":
-                in_str = not in_str
-            elif not in_str:
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                elif ch == "," and depth == 0:
-                    parts.append("".join(cur).strip())
-                    cur = []
-                    continue
-            cur.append(ch)
-        if "".join(cur).strip():
-            parts.append("".join(cur).strip())
-        return parts
 
     def _parse_mr_spec(self, inner: str) -> dict:
         """MATCH_RECOGNIZE clause list → match_recognize() kwargs ≈
@@ -2605,7 +2272,7 @@ class SqlFrontend:
         pm = re.match(r"\s*\(", pat)
         if not pm:
             raise ValueError("PATTERN clause must be parenthesized")
-        pattern, _ = self._balanced_span(pat, pm.end())
+        pattern, _ = lexer.balanced_span(pat, pm.end())
         spec["pattern"] = pattern.strip()
         if "WITHIN" in segs:
             im = self._MR_INTERVAL.match(segs["WITHIN"].strip())
@@ -2617,7 +2284,7 @@ class SqlFrontend:
             spec["within"] = int(im.group(1)) * mult[im.group(2).upper()]
         subsets = {}
         if "SUBSET" in segs:
-            for ent in self._split_top_commas(segs["SUBSET"]):
+            for ent in lexer.split_top_level(segs["SUBSET"]):
                 sm = re.match(r"(\w+)\s*=\s*\(([^)]*)\)\s*$", ent.strip())
                 if not sm:
                     raise ValueError(f"unsupported SUBSET entry: {ent!r}")
@@ -2627,7 +2294,7 @@ class SqlFrontend:
             spec["subsets"] = subsets
         define = {}
         sym_names = set()
-        for ent in self._split_top_commas(segs.get("DEFINE", "")):
+        for ent in lexer.split_top_level(segs.get("DEFINE", "")):
             dm = re.match(r"(?is)^(\w+)\s+AS\s+(.*)$", ent.strip())
             if not dm:
                 raise ValueError(f"unsupported DEFINE entry: {ent!r}")
@@ -2645,7 +2312,7 @@ class SqlFrontend:
 
         spec["define"] = {k: unqual(v) for k, v in define.items()}
         measures = {}
-        for ent in self._split_top_commas(segs.get("MEASURES", "")):
+        for ent in lexer.split_top_level(segs.get("MEASURES", "")):
             mm = re.match(r"(?is)^(.*?)\s+AS\s+(\w+)\s*$", ent.strip())
             if not mm:
                 raise ValueError(f"unsupported MEASURES entry: {ent!r}")
@@ -2669,7 +2336,7 @@ class SqlFrontend:
             if not m:
                 return text
             table = m.group(1)
-            inner, close = self._balanced_span(text, m.end())
+            inner, close = lexer.balanced_span(text, m.end())
             spec = self._parse_mr_spec(inner)
             df = match_recognize(self.catalog.table(table), **spec)
             name = f"__mr_{n}"
@@ -2786,33 +2453,9 @@ class SqlFrontend:
             text = text[: m.start(1)] + name + text[m.end():]
             # strip now-dangling alias qualifiers (outside string literals)
             for q in aliases:
-                qpat = re.compile(rf"\b{re.escape(q)}\.", re.I)
-                text = qpat.sub(
-                    lambda mm: "" if text.count("'", 0, mm.start()) % 2 == 0 else mm.group(0),
-                    text,
+                text = lexer.sub(
+                    rf"(?i)\b{re.escape(q)}\.", lambda mm: "", text
                 )
-
-    @staticmethod
-    def _top_level_kw(text: str, word: str, start: int = 0) -> int:
-        """Index of the first occurrence of `word` at paren depth 0 and
-        outside string literals, or -1."""
-        pat = re.compile(rf"\b{word}\b", re.I)
-        depth, in_str, i = 0, False, 0
-        while i < len(text):
-            ch = text[i]
-            if ch == "'":
-                in_str = not in_str
-            elif not in_str:
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                elif depth == 0 and i >= start:
-                    m = pat.match(text, i)
-                    if m:
-                        return i
-            i += 1
-        return -1
 
     # -- WITHIN DISTINCT (SQL surface) --------------------------------
 
@@ -2835,16 +2478,12 @@ class SqlFrontend:
             )
         out, i, n = [], 0, 0
         while True:
-            m = self._AGG_CALL_RE.search(item, i)
+            m = lexer.search(self._AGG_CALL_RE, item, i)
             if m is None:
                 out.append(item[i:])
                 return "".join(out)
-            if item.count("'", 0, m.start()) % 2:
-                out.append(item[i : m.end()])
-                i = m.end()
-                continue
             fn = m.group(1).lower()
-            arg, close = self._balanced_span(item, m.end())
+            arg, close = lexer.balanced_span(item, m.end())
             if re.match(r"(?is)\s*DISTINCT\b", arg):
                 # SUM of per-(key, d) COUNT(DISTINCT x) partials
                 # overcounts values shared across d groups — refuse
@@ -2891,14 +2530,14 @@ class SqlFrontend:
         if not self._WD_RE.search(text):
             return text
         text = text.strip()
-        sel = self._top_level_kw(text, "SELECT")
+        sel = lexer.find_top_level(text, "SELECT")
         # a WITH clause may precede the top-level SELECT: keep it as a
         # verbatim prefix and rewrite only the SELECT body
         prefix = ""
         if sel > 0 and re.match(r"(?is)^\s*WITH\b", text[:sel]):
             prefix, text = text[:sel], text[sel:]
-            sel = self._top_level_kw(text, "SELECT")
-        frm = self._top_level_kw(text, "FROM")
+            sel = lexer.find_top_level(text, "SELECT")
+        frm = lexer.find_top_level(text, "FROM")
         if sel != 0 or frm < 0:
             raise ValueError(
                 "WITHIN DISTINCT: top-level SELECT ... FROM ... only"
@@ -2908,12 +2547,12 @@ class SqlFrontend:
                 "WITHIN DISTINCT inside a WITH clause body: unsupported "
                 "(use it in the top-level SELECT)"
             )
-        if self._top_level_kw(text, "HAVING") >= 0:
+        if lexer.find_top_level(text, "HAVING") >= 0:
             raise ValueError("WITHIN DISTINCT with HAVING: unsupported")
-        grp = self._top_level_kw(text, "GROUP")
+        grp = lexer.find_top_level(text, "GROUP")
         tail_start = len(text)
         for kw in ("ORDER", "LIMIT", "OFFSET"):
-            k = self._top_level_kw(text, kw, frm)
+            k = lexer.find_top_level(text, kw, frm)
             if 0 <= k < tail_start:
                 tail_start = k
         tail = text[tail_start:].strip()
@@ -2921,11 +2560,11 @@ class SqlFrontend:
             base = text[frm:grp].strip()
             keys_text = text[grp:tail_start]
             keys_text = re.sub(r"(?is)^GROUP\s+BY", "", keys_text).strip()
-            keys = [k.strip() for k in self._split_top_commas(keys_text)]
+            keys = lexer.split_top_level(keys_text)
         else:
             base, keys = text[frm:tail_start].strip(), []
 
-        items = self._split_top_commas(text[sel + len("SELECT") : frm])
+        items = lexer.split_top_level(text[sel + len("SELECT") : frm])
         out_items, inner_aggs, dset = [], [], None
         for i, item in enumerate(items):
             item = item.strip()
@@ -2956,11 +2595,9 @@ class SqlFrontend:
             # closing paren abuts WITHIN, keep the wrappers verbatim
             anchor = None
             cm = re.match(r"\s*(\w+)\s*\(", item)
-            for am in re.finditer(r"\b(\w+)\s*\(", item[: wd.start()]):
-                if item.count("'", 0, am.start()) % 2:
-                    continue
+            for am in lexer.finditer(r"\b(\w+)\s*\(", item[: wd.start()]):
                 try:
-                    v, aclose = self._balanced_span(item, am.end())
+                    v, aclose = lexer.balanced_span(item, am.end())
                 except ValueError:
                     continue
                 if not item[aclose + 1 : wd.start()].strip():
@@ -2970,8 +2607,8 @@ class SqlFrontend:
             am, val, aclose = anchor
             fn = am.group(1)
             pre = item[: am.start()]
-            dks_text, close = self._balanced_span(item, wd.end())
-            dks = [d.strip() for d in self._split_top_commas(dks_text)]
+            dks_text, close = lexer.balanced_span(item, wd.end())
+            dks = lexer.split_top_level(dks_text)
             post = item[close + 1 :]
             if dset is None:
                 dset = dks
@@ -3053,12 +2690,12 @@ class SqlFrontend:
         SELECT DISTINCT ... QUALIFY refuses: injecting the predicate
         column would change the distinct key. Top-level QUALIFY only —
         subqueries carry their own when routed through parse()."""
-        q = self._top_level_kw(text, "QUALIFY")
+        q = lexer.find_top_level(text, "QUALIFY")
         if q < 0:
             return text
         tail_start = len(text)
         for kw in ("ORDER", "LIMIT", "OFFSET"):
-            k = self._top_level_kw(text, kw, q + 7)
+            k = lexer.find_top_level(text, kw, q + 7)
             if 0 <= k < tail_start:
                 tail_start = k
         base = text[:q].rstrip()
@@ -3066,8 +2703,8 @@ class SqlFrontend:
         tail = text[tail_start:].strip()
         if not pred:
             raise ValueError("QUALIFY requires a predicate")
-        sel = self._top_level_kw(base, "SELECT")
-        frm = self._top_level_kw(base, "FROM")
+        sel = lexer.find_top_level(base, "SELECT")
+        frm = lexer.find_top_level(base, "FROM")
         if sel < 0 or frm < 0:
             raise ValueError("QUALIFY requires a SELECT ... FROM query")
         if re.match(r"\s*DISTINCT\b", base[sel + 6 :], re.I):
@@ -3098,15 +2735,11 @@ class SqlFrontend:
         context; Spark only accepts OVER on the aggregate itself."""
         out, i = [], 0
         while True:
-            m = self._AGG_CALL_RE.search(expr, i)
+            m = lexer.search(self._AGG_CALL_RE, expr, i)
             if m is None:
                 out.append(expr[i:])
                 return "".join(out)
-            if expr.count("'", 0, m.start()) % 2:
-                out.append(expr[i : m.end()])
-                i = m.end()
-                continue
-            _, close = self._balanced_span(expr, m.end())
+            _, close = lexer.balanced_span(expr, m.end())
             out.append(expr[i : close + 1])
             out.append(" OVER ()")
             i = close + 1
@@ -3131,43 +2764,27 @@ class SqlFrontend:
         # definitions: scan for top-level "AS MEASURE name"
         pat = re.compile(r"\bAS\s+MEASURE\s+([A-Za-z_]\w*)", re.I)
         while True:
-            m = None
-            for cand in pat.finditer(text):
-                # top-level-ness: definition sites live in select lists;
-                # accept any depth (subquery select lists included) but
-                # skip string literals
-                if text.count("'", 0, cand.start()) % 2 == 0:
-                    m = cand
-                    break
+            # definition sites live in select lists; accept any depth
+            # (subquery select lists included)
+            m = lexer.search(pat, text)
             if m is None:
                 break
             name = m.group(1)
             # expression start: walk back (tracking relative depth) to
             # the previous same-depth comma, SELECT keyword, or the
             # opening paren of the enclosing subquery
-            i, depth, in_str = m.start() - 1, 0, False
-            start = 0
-            while i >= 0:
-                ch = text[i]
-                if ch == "'":
-                    in_str = not in_str
-                elif not in_str:
-                    if ch == ")":
-                        depth += 1
-                    elif ch == "(":
-                        depth -= 1
-                    if depth == -1:  # opening paren of our subquery level
-                        start = i + 1
-                        break
-                    if depth == 0 and ch == ",":
-                        start = i + 1
-                        break
-                    if depth == 0 and text[max(0, i - 5) : i + 1].upper().endswith(
-                        "SELECT"
-                    ):
-                        start = i + 1
-                        break
-                i -= 1
+            mk, depth, start = lexer.mask(text), 0, 0
+            for i in range(m.start() - 1, -1, -1):
+                ch = mk[i]
+                if ch == ")":
+                    depth += 1
+                elif ch == "(":
+                    depth -= 1
+                if depth == -1 or depth == 0 and (
+                    ch == "," or mk[max(0, i - 5) : i + 1].upper() == "SELECT"
+                ):
+                    start = i + 1
+                    break
             expr = text[start : m.start()].strip()
             if not expr:
                 raise ValueError(f"AS MEASURE {name}: empty expression")
@@ -3229,11 +2846,9 @@ class SqlFrontend:
         # walk back to the owning SELECT: nearest SELECT at the same
         # paren depth as the GROUP BY (depth measured walking backward:
         # ')' opens, '(' closes)
-        depth = 0
-        sel = -1
-        i = gb_pos - 1
-        while i >= 0:
-            c = text[i]
+        mk, depth, sel = lexer.mask(text), 0, -1
+        for i in range(gb_pos - 1, -1, -1):
+            c = mk[i]
             if c == ")":
                 depth += 1
             elif c == "(":
@@ -3241,62 +2856,18 @@ class SqlFrontend:
                 if depth < 0:
                     break  # left the subquery that holds the GROUP BY
             elif depth == 0 and c in "tT" and i >= 5:
-                frag = text[i - 5 : i + 1]
-                if frag.lower() == "select" and (
-                    i == 5 or not (text[i - 6].isalnum() or text[i - 6] == "_")
+                if mk[i - 5 : i + 1].lower() == "select" and (
+                    i == 5 or not (mk[i - 6].isalnum() or mk[i - 6] == "_")
                 ):
                     sel = i + 1
                     break
-            i -= 1
         if sel < 0:
             return False
         # select list = [sel .. FROM at depth 0]
-        j = sel
-        depth = 0
-        frm = -1
-        while j < gb_pos:
-            c = text[j]
-            if c == "'":
-                j = text.find("'", j + 1)
-                if j < 0:
-                    return False
-                j += 1
-                continue
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            elif depth == 0 and c in "fF" and text[j : j + 4].lower() == "from":
-                before_ok = j == 0 or not (text[j - 1].isalnum() or text[j - 1] == "_")
-                after = text[j + 4 : j + 5]
-                if before_ok and (after == "" or not (after.isalnum() or after == "_")):
-                    frm = j
-                    break
-            j += 1
+        frm = lexer.find_top_level(text[sel:gb_pos], "FROM")
         if frm < 0:
             return False
-        items, buf, depth, k = [], [], 0, 0
-        body = text[sel:frm]
-        while k < len(body):
-            c = body[k]
-            if c == "'":
-                end = body.find("'", k + 1)
-                if end < 0:
-                    return False
-                buf.append(body[k : end + 1])
-                k = end + 1
-                continue
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            if c == "," and depth == 0:
-                items.append("".join(buf))
-                buf = []
-            else:
-                buf.append(c)
-            k += 1
-        items.append("".join(buf))
+        items = lexer.split_top_level(text[sel : sel + frm])
         saw_agg = False
         lit_re = re.compile(
             r"^\s*(?:DISTINCT\s+)?(?:-?\d+(?:\.\d+)?|'[^']*'|NULL|TRUE|FALSE)\s*"
@@ -3321,9 +2892,12 @@ class SqlFrontend:
         return saw_agg
 
     def parse(self, text: str) -> tuple[str, bool]:
-        """Macro-expand; returns (spark_sql_text, is_stream)."""
-        is_stream = bool(self._STREAM_RE.search(text))
-        text = self._STREAM_RE.sub("SELECT ", text)
+        """Macro-expand; returns (spark_sql_text, is_stream). Comments
+        before and after the statement are kept verbatim around the
+        expansion, so a clause a macro appends never lands in one."""
+        lead, text, trail = lexer.split_comments(text)
+        is_stream = bool(lexer.search(self._STREAM_RE, text))
+        text = lexer.sub(self._STREAM_RE, lambda m: "SELECT ", text)
         if re.search(r"\bMEASURE\b|\bAGGREGATE\s*\(", text, re.I):
             text = self._expand_measures_sql(text)
         text = self._expand_qualify(text)
@@ -3358,16 +2932,13 @@ class SqlFrontend:
             # `SELECT col FROM t GROUP BY ()`, which PG/DuckDB reject —
             # now the clause is left in place and Spark rejects it
             # loudly, refuse-over-guess). `GROUP BY (), a` is likewise
-            # left for Spark to reject. Quote-parity guarded like every
-            # text rewrite.
+            # left for Spark to reject.
             def _gb_empty(m):
-                if text.count("'", 0, m.start()) % 2 == 1:
-                    return m.group(0)
                 if not self._gb_empty_select_is_aggregate(text, m.start()):
                     return m.group(0)
                 return " "
 
-            text = re.sub(
+            text = lexer.sub(
                 r"(?i)\bGROUP\s+BY\s*\(\s*\)(?!\s*,)", _gb_empty, text
             )
         if re.search(r"\bDISTINCT\s+ON\s*\(", text, re.I):
@@ -3435,11 +3006,11 @@ class SqlFrontend:
         if re.search(r"(?i)\bSPLIT\s*\(", text):
             # BQ's 1-arg SPLIT defaults the delimiter to ','
             res, i = [], 0
-            for m in re.finditer(r"(?i)\bSPLIT\s*\(", text):
-                if m.start() < i or text.count("'", 0, m.start()) % 2:
+            for m in lexer.finditer(r"(?i)\bSPLIT\s*\(", text):
+                if m.start() < i:
                     continue
-                args_txt, close = self._balanced_span(text, m.end())
-                if len(self._split_top_commas(args_txt)) == 1 and args_txt.strip():
+                args_txt, close = lexer.balanced_span(text, m.end())
+                if len(lexer.split_top_level(args_txt)) == 1 and args_txt.strip():
                     res.append(text[i : m.start()])
                     res.append(f"split({args_txt}, ',')")
                     i = close + 1
@@ -3449,11 +3020,11 @@ class SqlFrontend:
             # Redshift's NVL is variadic COALESCE (redshift.iq:903);
             # Spark's is strictly 2-arg — widen only the 3+-arg calls
             res, i = [], 0
-            for m in re.finditer(r"(?i)\bNVL\s*\(", text):
-                if m.start() < i or text.count("'", 0, m.start()) % 2:
+            for m in lexer.finditer(r"(?i)\bNVL\s*\(", text):
+                if m.start() < i:
                     continue
-                args_txt, close = self._balanced_span(text, m.end())
-                if len(self._split_top_commas(args_txt)) > 2:
+                args_txt, close = lexer.balanced_span(text, m.end())
+                if len(lexer.split_top_level(args_txt)) > 2:
                     res.append(text[i : m.start()])
                     res.append(f"coalesce({args_txt})")
                     i = close + 1
@@ -3466,11 +3037,10 @@ class SqlFrontend:
             # when no column matches (redshift.iq:1476-1637 uses bare
             # `pi`); text-level resolution is only safe when no table
             # is in scope — FROM-less selects have no columns
-            text = re.sub(
+            text = lexer.sub(
                 r"(?i)\bpi\b(?!\s*\()",
                 lambda m: m.group(0)
-                if text.count("'", 0, m.start()) % 2
-                or re.search(r"(?i)\bAS\s+$", text[: m.start()])
+                if re.search(r"(?i)\bAS\s+$", text[: m.start()])
                 or (m.start() > 0 and text[m.start() - 1] == ".")
                 else "pi()",
                 text,
@@ -3512,7 +3082,7 @@ class SqlFrontend:
         # expansion has had first claim on its spellings
         if self._REG_CALL_RE.search(text):
             text = self._expand_registry_calls(text)
-        return text, is_stream
+        return lead + text + trail, is_stream
 
     def _rewrite_schema_refs(self, text: str) -> str:
         """`<schema>.<table>` references for LOCALLY-registered schemas
@@ -3530,12 +3100,8 @@ class SqlFrontend:
             if t not in text:
                 continue  # cheap pre-check: don't materialize views
             self.catalog.table(t)  # ensure the mangled view exists
-            pat = re.compile(rf"\b{re.escape(t)}\b")
-            text = pat.sub(
-                lambda m: m.group(0)
-                if text.count("'", 0, m.start()) % 2 == 1
-                else t.replace(".", "__"),
-                text,
+            text = lexer.sub(
+                rf"\b{re.escape(t)}\b", lambda m: t.replace(".", "__"), text
             )
         return text
 
@@ -3646,28 +3212,11 @@ class SqlFrontend:
         sm = re.match(r"(?is)^\s*SELECT\s+", text)
         if sm is None:
             return None, None
-        depth, in_str = 0, False
-        up = text.upper()
-        for i in range(sm.end(), len(text)):
-            ch = text[i]
-            if ch == "'":
-                in_str = not in_str
-            elif not in_str:
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                elif (
-                    depth == 0
-                    and up.startswith("FROM", i)
-                    and text[i - 1].isspace()
-                    and (
-                        i + 4 >= len(text)
-                        or not (text[i + 4].isalnum() or text[i + 4] == "_")
-                    )
-                ):
-                    return text[sm.end(): i], text[i + 4:]
-        return None, None
+        frm = lexer.find_top_level(text, "FROM", sm.end())
+        if frm < 0:
+            return None, None
+        return text[sm.end() : frm], text[frm + 4 :]
+
     _ORDER_KEY_RE = re.compile(
         r"(?i)^[A-Za-z_]\w*(?:\s+(?:ASC|DESC))?(?:\s+NULLS\s+(?:FIRST|LAST))?$"
     )
@@ -3699,7 +3248,7 @@ class SqlFrontend:
         from calcite_spark.plans.materialize import liftable_agg_call
         from calcite_spark.plans.rewrite import default_program
 
-        sel = [s.strip() for s in self._split_top_commas(sel_txt)]
+        sel = lexer.split_top_level(sel_txt)
         b = RelBuilder(self.catalog)
         fr = m.group("from").strip()
         if "'" in fr or "(" in fr:
@@ -3733,7 +3282,7 @@ class SqlFrontend:
             elif gs is not None:
                 group_type = "GROUPING_SETS"
                 sets, ordered = [], []
-                for item in self._split_top_commas(gs.group(1)):
+                for item in lexer.split_top_level(gs.group(1)):
                     item = item.strip()
                     if not (item.startswith("(") and item.endswith(")")):
                         item = f"({item})"  # bare column = singleton set
@@ -3754,9 +3303,7 @@ class SqlFrontend:
                 key_text = ", ".join(ordered)
             else:
                 key_text = gb
-            raw_keys = [
-                k.strip() for k in self._split_top_commas(key_text)
-            ]
+            raw_keys = lexer.split_top_level(key_text)
             keys = []  # IR group keys: 'col' or 'expr AS alias'
             for k in raw_keys:
                 if re.fullmatch(r"[A-Za-z_]\w*", k):
@@ -3834,9 +3381,7 @@ class SqlFrontend:
             if hv is not None:
                 hv_expr = hv.strip()
                 spliced, last = [], 0
-                for mt in _AGG_IN_EXPR_RE.finditer(hv_expr):
-                    if hv_expr.count("'", 0, mt.start()) % 2 == 1:
-                        continue  # call-shaped text inside a literal
+                for mt in lexer.finditer(_AGG_IN_EXPR_RE, hv_expr):
                     call = f"{mt.group(1)}{mt.group(2)} AS __h{len(hidden)}"
                     if not liftable_agg_call(call):
                         return None  # unliftable HAVING call: verbatim
@@ -4025,9 +3570,9 @@ class SqlFrontend:
             b._push(left)
             b._push(right)
         b.join(m.group("on"))
-        gb = [k.strip() for k in self._split_top_commas(m.group("gb"))]
+        gb = lexer.split_top_level(m.group("gb"))
         agg_calls, out_names = [], []
-        for item in self._split_top_commas(m.group("sel")):
+        for item in lexer.split_top_level(m.group("sel")):
             item = item.strip()
             if re.match(r"^[A-Za-z_]\w*$", item):
                 if item not in gb:
@@ -4058,7 +3603,7 @@ class SqlFrontend:
         if out_names != gb + agg_aliases:
             b.project(*out_names)
         if m.group("ob"):
-            b.sort(*[k.strip() for k in self._split_top_commas(m.group("ob"))])
+            b.sort(*lexer.split_top_level(m.group("ob")))
         plan = default_program(self.catalog).run(b.build())
         return plan.to_df(self.catalog)
 
@@ -4114,12 +3659,12 @@ class SqlFrontend:
             cols = bm.group("cols").strip()
             if cols != "*":
                 b.project(
-                    *[c.strip() for c in self._split_top_commas(cols)]
+                    *lexer.split_top_level(cols)
                 )
         b.union(all=True, n=len(branches))
-        gb = [k.strip() for k in self._split_top_commas(m.group("gb"))]
+        gb = lexer.split_top_level(m.group("gb"))
         agg_calls, out_names = [], []
-        for item in self._split_top_commas(m.group("sel")):
+        for item in lexer.split_top_level(m.group("sel")):
             item = item.strip()
             if re.match(r"^[A-Za-z_]\w*$", item):
                 if item not in gb:
@@ -4150,7 +3695,7 @@ class SqlFrontend:
         if out_names != gb + agg_aliases:
             b.project(*out_names)
         if m.group("ob"):
-            b.sort(*[k.strip() for k in self._split_top_commas(m.group("ob"))])
+            b.sort(*lexer.split_top_level(m.group("ob")))
         plan = default_program(self.catalog).run(b.build())
         return plan.to_df(self.catalog)
 
@@ -4184,8 +3729,6 @@ class SqlFrontend:
             return seqs[name]
 
         def curr(m):
-            if expanded.count("'", 0, m.start()) % 2:
-                return m.group(0)  # inside a string literal — opaque
             s = _seq(m.group(1))
             if s["current"] is None:
                 raise ValueError(
@@ -4194,29 +3737,20 @@ class SqlFrontend:
                 )
             return f"CAST({s['current']} AS BIGINT)"
 
-        expanded = self._SEQ_CURR_RE.sub(curr, expanded)
+        expanded = lexer.sub(self._SEQ_CURR_RE, curr, expanded)
         nexts = []
-        for m in self._SEQ_NEXT_RE.finditer(expanded):
-            if expanded.count("'", 0, m.start()) % 2:
-                continue
+        for m in lexer.finditer(self._SEQ_NEXT_RE, expanded):
             # Advancing by the statement's row count is only correct
             # when every projected NEXT VALUE row reaches the output:
             # a NEXT VALUE inside a SUBQUERY can be filtered above its
             # projection, and LIMIT/OFFSET truncate after it — both
             # would let later statements re-issue exposed values.
             # Refuse those shapes rather than break uniqueness
-            # (review r6). Depth is computed with a QUOTE-AWARE scan
-            # (ADVICE r6): a paren inside a preceding string literal
-            # must neither hide a real subquery nesting nor fake one.
-            depth, in_str = 0, False
-            for ch in expanded[: m.start()]:
-                if ch == "'":
-                    in_str = not in_str
-                elif not in_str and ch == "(":
-                    depth += 1
-                elif not in_str and ch == ")":
-                    depth -= 1
-            if depth > 0:
+            # (review r6). Depth is counted on the mask (ADVICE r6): a
+            # paren inside a preceding string literal must neither hide
+            # a real subquery nesting nor fake one.
+            before = lexer.mask(expanded)[: m.start()]
+            if before.count("(") > before.count(")"):
                 raise ValueError(
                     "NEXT VALUE FOR inside a subquery: allocation "
                     "cannot be tracked through outer filters — use it "
@@ -4240,15 +3774,13 @@ class SqlFrontend:
             bases[name.lower()] = (s["next"], s["inc"])
 
         def nxt(m):
-            if expanded.count("'", 0, m.start()) % 2:
-                return m.group(0)  # inside a string literal — opaque
             base, inc = bases[m.group(1).lower()]
             return (
                 f"(CAST({base - inc} AS BIGINT) + CAST(row_number() OVER "
                 f"(ORDER BY (SELECT NULL)) AS BIGINT) * {inc})"
             )
 
-        expanded = self._SEQ_NEXT_RE.sub(nxt, expanded)
+        expanded = lexer.sub(self._SEQ_NEXT_RE, nxt, expanded)
         df = self.spark.sql(expanded)
         if nexts:
             n = df.count()  # rows consumed — advances the sequence

@@ -30,6 +30,7 @@ from __future__ import annotations
 import re
 
 from calcite_spark.plans import ir
+from calcite_spark.sql import lexer
 
 
 class UnsupportedDialectExpression(Exception):
@@ -91,19 +92,11 @@ _KEYWORDS = {
 _CALL_RE = re.compile(r"\b([A-Za-z_]\w*)\s*\(")
 
 
-def _outside_literal(text: str, pos: int) -> bool:
-    """True when pos is not inside a single-quoted SQL string (doubled
-    quotes toggle twice — net no-op)."""
-    return text.count("'", 0, pos) % 2 == 0
-
-
 def _check_and_map_calls(text: str, shared: set, fn_map: dict, dialect: str) -> str:
     """Shared refuse-over-wrong core: every function call outside the
     dialect's known surface raises; known calls are renamed via fn_map."""
     unknown = []
-    for m in _CALL_RE.finditer(text):
-        if not _outside_literal(text, m.start()):
-            continue
+    for m in lexer.finditer(_CALL_RE, text):
         fn = m.group(1).lower()
         if fn in _KEYWORDS or fn in shared or fn in fn_map:
             continue
@@ -114,12 +107,11 @@ def _check_and_map_calls(text: str, shared: set, fn_map: dict, dialect: str) -> 
             f"in expression: {text!r}"
         )
 
-    def sub(m):
-        if not _outside_literal(text, m.start()):
-            return m.group(0)
-        return f"{fn_map.get(m.group(1).lower(), m.group(1))}("
-
-    return _CALL_RE.sub(sub, text)
+    return lexer.sub(
+        _CALL_RE,
+        lambda m: f"{fn_map.get(m.group(1).lower(), m.group(1))}(",
+        text,
+    )
 
 
 class Dialect:
@@ -258,28 +250,7 @@ class DuckDBDialect(Dialect):
     anti_join_kw = "ANTI JOIN"
 
     def expr(self, text: str) -> str:
-        unknown = []
-        for m in _CALL_RE.finditer(text):
-            if not _outside_literal(text, m.start()):
-                continue
-            fn = m.group(1).lower()
-            if fn in _KEYWORDS or fn in _SHARED_FNS or fn in _DUCKDB_FN_MAP:
-                continue
-            unknown.append(fn)
-        if unknown:
-            raise UnsupportedDialectExpression(
-                f"duckdb dialect cannot replay function(s) {sorted(set(unknown))} "
-                f"in expression: {text!r}"
-            )
-
-        def sub(m):
-            if not _outside_literal(text, m.start()):
-                return m.group(0)
-            fn = m.group(1)
-            mapped = _DUCKDB_FN_MAP.get(fn.lower(), fn)
-            return f"{mapped}("
-
-        return _CALL_RE.sub(sub, text)
+        return _check_and_map_calls(text, _SHARED_FNS, _DUCKDB_FN_MAP, "duckdb")
 
     def sort_key(self, text: str) -> str:
         # DuckDB's un-annotated default (default_null_order) is NULLS
@@ -338,26 +309,26 @@ _SORT_KEY_RE = re.compile(
 )
 
 
+_DATE_TRUNC_RE = re.compile(r"(?i)\bdate_trunc\s*\(\s*'([^']*)'\s*,\s*")
+
+
 def _rewrite_date_trunc_to_trunc(text: str, fmt_map: dict, dialect: str) -> str:
     """date_trunc('unit', x) → TRUNC(x, 'fmt') for engines whose
     datetime-floor spelling is Oracle-style TRUNC: Oracle
     (OracleSqlDialect's FLOOR unparse via SqlFloorFunction) and HSQLDB
     (HsqldbSqlDialect.convertTimeUnit + unparseDatetimeFunction
     "TRUNC"). Units outside the engine's format-element list refuse."""
-    pat = re.compile(r"\bdate_trunc\s*\(\s*'(\w+)'\s*,\s*", re.I)
     while True:
-        m = pat.search(text)
+        m = lexer.search(_DATE_TRUNC_RE, text)
         if not m:
             return text
-        if text.count("'", 0, m.start()) % 2:
-            return text  # inside a literal; refusal net catches it
         unit = m.group(1).lower()
         if unit not in fmt_map:
             raise UnsupportedDialectExpression(
                 f"{dialect} TRUNC has no format element for unit {unit!r}"
             )
         fmt = fmt_map[unit]
-        arg, close = _balanced_arg(text, m.end())
+        arg, close = lexer.balanced_span(text, m.end())
         text = (
             text[: m.start()]
             + f"TRUNC({_rewrite_date_trunc_to_trunc(arg, fmt_map, dialect)}, '{fmt}')"
@@ -384,45 +355,20 @@ def _sort_key_explicit_nulls(expr_fn, text: str) -> str:
     return f"{expr}{d} NULLS {nulls}"
 
 
-def _balanced_arg(text: str, start: int) -> tuple[str, int]:
-    """Return (argument text, index of closing paren) for a call whose
-    opening paren is at start-1. Single-quoted strings are opaque
-    (doubled-quote escapes toggle twice — net no-op for depth)."""
-    depth, j, in_str = 1, start, False
-    while j < len(text):
-        ch = text[j]
-        if ch == "'":
-            in_str = not in_str
-        elif not in_str:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    return text[start:j], j
-        j += 1
-    raise UnsupportedDialectExpression(f"unbalanced parens in {text!r}")
-
-
 def _rewrite_extract_units(text: str) -> str:
     """`year(x)`-style unit shorthands → `EXTRACT(YEAR FROM x)` for
     dialects that lack the shorthand functions (PostgreSQL, BigQuery,
     Oracle). Recurses into arguments; string literals are opaque."""
-    pos = 0
-    m = _PG_EXTRACT_UNITS.search(text, pos)
+    m = lexer.search(_PG_EXTRACT_UNITS, text)
     while m:
-        if text.count("'", 0, m.start()) % 2:  # inside a string literal
-            pos = m.end()
-        else:
-            arg, close = _balanced_arg(text, m.end())
-            unit = m.group(1).upper()
-            head = (
-                text[: m.start()]
-                + f"EXTRACT({unit} FROM {_rewrite_extract_units(arg)})"
-            )
-            text = head + text[close + 1 :]
-            pos = len(head)
-        m = _PG_EXTRACT_UNITS.search(text, pos)
+        arg, close = lexer.balanced_span(text, m.end())
+        unit = m.group(1).upper()
+        head = (
+            text[: m.start()]
+            + f"EXTRACT({unit} FROM {_rewrite_extract_units(arg)})"
+        )
+        text = head + text[close + 1 :]
+        m = lexer.search(_PG_EXTRACT_UNITS, text, len(head))
     return text
 
 
@@ -441,36 +387,19 @@ def _rewrite_cast_types(
     mirrors SqlAlienSystemTypeNameSpec cast specs that carry no
     precision (e.g. Firebolt DECIMAL(p,s) → bare FLOAT,
     FireboltSqlDialect.java:150-152)."""
-    pat = re.compile(r"\bcast\s*\(", re.I)
     out, i = [], 0
     while True:
-        m = pat.search(text, i)
+        m = lexer.search(r"(?i)\bcast\s*\(", text, i)
         if not m:
             out.append(text[i:])
             break
-        if text.count("'", 0, m.start()) % 2:  # inside a string literal
-            out.append(text[i : m.end()])
-            i = m.end()
-            continue
-        arg, close = _balanced_arg(text, m.end())
+        arg, close = lexer.balanced_span(text, m.end())
         # nested CASTs keep the refusal/strip lists
         arg = _rewrite_cast_types(arg, type_map, refuse, strip_args)
         # the cast type is the token after the LAST top-level " AS "
-        last_as = None
-        for am in re.finditer(r"(?i)\bAS\b", arg):
-            before = arg[: am.start()]
-            depth = 0
-            in_str = False
-            for ch in before:
-                if ch == "'":
-                    in_str = not in_str
-                elif not in_str:
-                    depth += ch == "("
-                    depth -= ch == ")"
-            if depth == 0 and not in_str:
-                last_as = am
-        if last_as is not None:
-            head, ty = arg[: last_as.end()], arg[last_as.end() :].strip()
+        last_as = max(lexer.iter_top_level(arg, "AS"), default=-1)
+        if last_as >= 0:
+            head, ty = arg[: last_as + 2], arg[last_as + 2 :].strip()
             base = re.match(r"[A-Za-z_]+", ty)
             if base and base.group(0).lower() in refuse:
                 raise UnsupportedDialectExpression(
@@ -512,26 +441,7 @@ class PostgresDialect(Dialect):
     def expr(self, text: str) -> str:
         text = self._rewrite_extract(text)
         text = self._rewrite_cast_types(text)
-        unknown = []
-        for m in _CALL_RE.finditer(text):
-            if not _outside_literal(text, m.start()):
-                continue
-            fn = m.group(1).lower()
-            if fn in _KEYWORDS or fn in _PG_SHARED or fn in _PG_FN_MAP:
-                continue
-            unknown.append(fn)
-        if unknown:
-            raise UnsupportedDialectExpression(
-                f"postgres dialect cannot replay function(s) "
-                f"{sorted(set(unknown))} in expression: {text!r}"
-            )
-
-        def sub(m):
-            if not _outside_literal(text, m.start()):
-                return m.group(0)
-            return f"{_PG_FN_MAP.get(m.group(1).lower(), m.group(1))}("
-
-        return _CALL_RE.sub(sub, text)
+        return _check_and_map_calls(text, _PG_SHARED, _PG_FN_MAP, "postgres")
 
     def sort_key(self, text: str) -> str:
         return _sort_key_explicit_nulls(self.expr, text)
@@ -703,14 +613,9 @@ class BigQueryDialect(Dialect):
         return _rewrite_extract_units(text)
 
     def _rewrite_date_trunc(self, text: str) -> str:
-        pat = re.compile(r"\bdate_trunc\s*\(\s*'(\w+)'\s*,\s*", re.I)
         while True:
-            m = pat.search(text)
+            m = lexer.search(_DATE_TRUNC_RE, text)
             if not m:
-                return text
-            if text.count("'", 0, m.start()) % 2:
-                # literal containing "date_trunc('..." — give up rewriting
-                # past it rather than corrupt (refusal net catches it)
                 return text
             unit = m.group(1).lower()
             if unit not in _BQ_TRUNC_UNITS:
@@ -718,7 +623,7 @@ class BigQueryDialect(Dialect):
                     f"bigquery TIMESTAMP_TRUNC has no unit {unit!r}"
                 )
             canon = _BQ_UNIT_CANON.get(unit, unit.upper())
-            arg, close = _balanced_arg(text, m.end())
+            arg, close = lexer.balanced_span(text, m.end())
             text = (
                 text[: m.start()]
                 + f"TIMESTAMP_TRUNC({self._rewrite_date_trunc(arg)}, {canon})"
@@ -938,50 +843,29 @@ class MssqlDialect(Dialect):
     anti_join_kw = None
 
     def _rewrite_datepart(self, text: str) -> str:
-        pos = 0
-        m = _MSSQL_DATEPART_UNITS.search(text, pos)
+        m = lexer.search(_MSSQL_DATEPART_UNITS, text)
         while m:
-            if text.count("'", 0, m.start()) % 2:
-                pos = m.end()
-            else:
-                arg, close = _balanced_arg(text, m.end())
-                unit = m.group(1).upper()
-                head = (
-                    text[: m.start()]
-                    + f"DATEPART({unit}, {self._rewrite_datepart(arg)})"
-                )
-                text = head + text[close + 1 :]
-                pos = len(head)
-            m = _MSSQL_DATEPART_UNITS.search(text, pos)
+            arg, close = lexer.balanced_span(text, m.end())
+            unit = m.group(1).upper()
+            head = (
+                text[: m.start()]
+                + f"DATEPART({unit}, {self._rewrite_datepart(arg)})"
+            )
+            text = head + text[close + 1 :]
+            m = lexer.search(_MSSQL_DATEPART_UNITS, text, len(head))
         return text
 
     def _rewrite_round(self, text: str) -> str:
         """T-SQL ROUND(x) is an arity error — emit ROUND(x, 0)."""
         pat = re.compile(r"\bround\s*\(", re.I)
-        pos = 0
-        m = pat.search(text, pos)
+        m = lexer.search(pat, text)
         while m:
-            if text.count("'", 0, m.start()) % 2:
-                pos = m.end()
-            else:
-                arg, close = _balanced_arg(text, m.end())
-                depth, in_str, has_comma = 0, False, False
-                for ch in arg:
-                    if ch == "'":
-                        in_str = not in_str
-                    elif not in_str:
-                        if ch == "(":
-                            depth += 1
-                        elif ch == ")":
-                            depth -= 1
-                        elif ch == "," and depth == 0:
-                            has_comma = True
-                if not has_comma:
-                    text = text[:close] + ", 0" + text[close:]
-                # resume INSIDE the call so nested round(round(x))
-                # also gets padded (r5 review)
-                pos = m.end()
-            m = pat.search(text, pos)
+            arg, close = lexer.balanced_span(text, m.end())
+            if len(lexer.split_top_level(arg)) < 2:
+                text = text[:close] + ", 0" + text[close:]
+            # resume INSIDE the call so nested round(round(x))
+            # also gets padded (r5 review)
+            m = lexer.search(pat, text, m.end())
         return text
 
     def expr(self, text: str) -> str:
@@ -1160,12 +1044,9 @@ class HiveDialect(Dialect):
     anti_join_kw = None
 
     def _rewrite_date_trunc(self, text: str) -> str:
-        pat = re.compile(r"\bdate_trunc\s*\(\s*'(\w+)'\s*,\s*", re.I)
         while True:
-            m = pat.search(text)
+            m = lexer.search(_DATE_TRUNC_RE, text)
             if not m:
-                return text
-            if text.count("'", 0, m.start()) % 2:
                 return text
             unit = m.group(1).lower()
             if unit not in _HIVE_TRUNC_FMT:
@@ -1173,7 +1054,7 @@ class HiveDialect(Dialect):
                     f"hive TRUNC supports year/quarter/month, not {unit!r}"
                 )
             fmt = _HIVE_TRUNC_FMT[unit]
-            arg, close = _balanced_arg(text, m.end())
+            arg, close = lexer.balanced_span(text, m.end())
             text = (
                 text[: m.start()]
                 + f"TRUNC({self._rewrite_date_trunc(arg)}, '{fmt}')"
@@ -1368,13 +1249,12 @@ class ClickHouseDialect(Dialect):
             raise UnsupportedDialectExpression(
                 "clickhouse dialect refuses correlated EXISTS"
             )
-        text = _DATE_LIT_RE.sub(
+        text = lexer.sub(
+            _DATE_LIT_RE,
             lambda m: (
                 ("toDate" if m.group(1).upper() == "DATE" else "toDateTime")
                 + f"('{m.group(2)}')"
-            )
-            if not text.count("'", 0, m.start()) % 2
-            else m.group(0),
+            ),
             text,
         )
         text = _rewrite_cast_types(
@@ -1860,39 +1740,29 @@ def _sqlite_units_to_strftime(text: str) -> str:
         return f"CAST(strftime('{_SQLITE_STRFTIME[unit]}', {arg}) AS INTEGER)"
 
     # EXTRACT(unit FROM x) first (its arg may hold shorthands; recurse)
-    pos = 0
-    m = _EXTRACT_RE.search(text, pos)
+    m = lexer.search(_EXTRACT_RE, text)
     while m:
-        if not _outside_literal(text, m.start()):
-            pos = m.end()
-        else:
-            arg, close = _balanced_arg(text, m.end())
-            um = re.match(r"\s*(\w+)\s+FROM\s+(.*)$", arg, re.I | re.S)
-            if not um or um.group(1).lower() not in (
-                *_SQLITE_STRFTIME, "quarter"
-            ):
-                raise UnsupportedDialectExpression(
-                    f"sqlite cannot extract {arg!r} (strftime units only)"
-                )
-            head = text[: m.start()] + unit_sql(
-                um.group(1).lower(), _sqlite_units_to_strftime(um.group(2))
+        arg, close = lexer.balanced_span(text, m.end())
+        um = re.match(r"\s*(\w+)\s+FROM\s+(.*)$", arg, re.I | re.S)
+        if not um or um.group(1).lower() not in (
+            *_SQLITE_STRFTIME, "quarter"
+        ):
+            raise UnsupportedDialectExpression(
+                f"sqlite cannot extract {arg!r} (strftime units only)"
             )
-            text = head + text[close + 1 :]
-            pos = len(head)
-        m = _EXTRACT_RE.search(text, pos)
-    pos = 0
-    m = _UNIT_SHORTHAND_RE.search(text, pos)
+        head = text[: m.start()] + unit_sql(
+            um.group(1).lower(), _sqlite_units_to_strftime(um.group(2))
+        )
+        text = head + text[close + 1 :]
+        m = lexer.search(_EXTRACT_RE, text, len(head))
+    m = lexer.search(_UNIT_SHORTHAND_RE, text)
     while m:
-        if not _outside_literal(text, m.start()):
-            pos = m.end()
-        else:
-            arg, close = _balanced_arg(text, m.end())
-            head = text[: m.start()] + unit_sql(
-                m.group(1).lower(), _sqlite_units_to_strftime(arg)
-            )
-            text = head + text[close + 1 :]
-            pos = len(head)
-        m = _UNIT_SHORTHAND_RE.search(text, pos)
+        arg, close = lexer.balanced_span(text, m.end())
+        head = text[: m.start()] + unit_sql(
+            m.group(1).lower(), _sqlite_units_to_strftime(arg)
+        )
+        text = head + text[close + 1 :]
+        m = lexer.search(_UNIT_SHORTHAND_RE, text, len(head))
     return text
 
 
@@ -1900,31 +1770,12 @@ def _sqlite_concat_to_pipes(text: str) -> str:
     """concat(a, b, ...) → (a || b || ...). NULL semantics MATCH: both
     Spark's concat and SQLite's || propagate NULL from any argument
     (unlike concat_ws, which skips NULLs and therefore refuses)."""
-    pat = re.compile(r"\bconcat\s*\(", re.I)
     while True:
-        m = None
-        for cand in pat.finditer(text):
-            if _outside_literal(text, cand.start()):
-                m = cand
-                break
+        m = lexer.search(r"(?i)\bconcat\s*\(", text)
         if m is None:
             return text
-        arg, close = _balanced_arg(text, m.end())
-        # split top-level commas
-        parts, depth, in_str, start = [], 0, False, 0
-        for i, ch in enumerate(arg):
-            if ch == "'":
-                in_str = not in_str
-            elif not in_str:
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                elif ch == "," and depth == 0:
-                    parts.append(arg[start:i])
-                    start = i + 1
-        parts.append(arg[start:])
-        joined = " || ".join(p.strip() for p in parts)
+        arg, close = lexer.balanced_span(text, m.end())
+        joined = " || ".join(lexer.split_top_level(arg))
         text = text[: m.start()] + f"({joined})" + text[close + 1 :]
 
 
@@ -1939,8 +1790,8 @@ def _sqlite_division_guard(text: str) -> None:
         "avg", "sqrt", "exp", "ln", "log10", "pi", "power",
         "julianday", "cume_dist", "percent_rank", "round",
     )
-    for i, ch in enumerate(text):
-        if ch != "/" or not _outside_literal(text, i):
+    for i, ch in enumerate(lexer.mask(text)):
+        if ch != "/":
             continue
         # left operand: token ending at i-1
         j = i - 1
@@ -2117,11 +1968,10 @@ _AGG_FILTER_RE = re.compile(r"(?i)\bfilter\s*\(")
 
 
 def _refuse_clause(text: str, pattern: re.Pattern, dialect: str, what: str) -> None:
-    for m in pattern.finditer(text):
-        if _outside_literal(text, m.start()):
-            raise UnsupportedDialectExpression(
-                f"{dialect} does not support {what}: {text!r}"
-            )
+    if lexer.search(pattern, text):
+        raise UnsupportedDialectExpression(
+            f"{dialect} does not support {what}: {text!r}"
+        )
 
 
 class AnsiDialect(Dialect):
@@ -2279,7 +2129,7 @@ class Db2Dialect(AnsiDialect):
     _merge = True  # native MERGE INTO
 
     _INTERVAL_RE = re.compile(
-        r"(?i)\bINTERVAL\s+'(-?\d+)'\s+"
+        r"(?i)\bINTERVAL\s+'([^']*)'\s+"
         r"(YEAR|MONTH|DAY|HOUR|MINUTE|SECOND|MICROSECOND)\b"
     )
     _ANY_INTERVAL_RE = re.compile(r"(?i)\bINTERVAL\b")
@@ -2289,17 +2139,16 @@ class Db2Dialect(AnsiDialect):
 
     def expr(self, text: str) -> str:
         def repl(m):
-            if not _outside_literal(text, m.start()):
+            if not re.fullmatch(r"-?\d+", m.group(1)):
                 return m.group(0)
             return f"{m.group(1)} {m.group(2).upper()}"
 
-        rewritten = self._INTERVAL_RE.sub(repl, text)
-        for m in self._ANY_INTERVAL_RE.finditer(rewritten):
-            if _outside_literal(rewritten, m.start()):
-                raise UnsupportedDialectExpression(
-                    "db2 labeled durations support single-unit "
-                    f"qualifiers only: {text!r}"
-                )
+        rewritten = lexer.sub(self._INTERVAL_RE, repl, text)
+        if lexer.search(self._ANY_INTERVAL_RE, rewritten):
+            raise UnsupportedDialectExpression(
+                "db2 labeled durations support single-unit "
+                f"qualifiers only: {text!r}"
+            )
         return super().expr(rewritten)
 
 

@@ -63,13 +63,6 @@ def tumble_grouped(df: DataFrame, ts_col: str, size: str, partition_keys=()):
     return df.groupBy(F.window(F.col(ts_col), size).alias("window"), *partition_keys)
 
 
-def hop_grouped(df: DataFrame, ts_col: str, size: str, slide: str, partition_keys=()):
-    """HOP for streaming append mode — see tumble_grouped."""
-    return df.groupBy(
-        F.window(F.col(ts_col), size, slide).alias("window"), *partition_keys
-    )
-
-
 def with_watermark(df: DataFrame, ts_col: str, delay: str) -> DataFrame:
     """Late-data bound for streaming inputs (no-op on batch frames).
 

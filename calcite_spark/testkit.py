@@ -42,6 +42,8 @@ import decimal
 import re
 from dataclasses import dataclass, field
 
+from calcite_spark.sql import lexer
+
 
 @dataclass
 class ScriptResult:
@@ -78,19 +80,7 @@ def _fmt_val(v) -> str:
 
 
 def _has_top_level_order_by(sql: str) -> bool:
-    depth, in_str = 0, False
-    u = sql.upper()
-    for i, ch in enumerate(sql):
-        if ch == "'":
-            in_str = not in_str
-        elif not in_str:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0 and u.startswith("ORDER BY", i):
-                return True
-    return False
+    return lexer.find_top_level(sql, r"ORDER\s+BY") >= 0
 
 
 def format_result(df, ordered: bool) -> list[str]:
@@ -141,10 +131,8 @@ class QuidemRunner:
                 )
                 continue
             # accumulate a SQL statement; full-line `--` comments are
-            # kept in the file but dropped from the executed text — an
-            # apostrophe inside one ("the reference's ...") would
-            # otherwise flip the quote-parity scan every macro pass
-            # uses to keep string literals opaque
+            # kept in the file but dropped from the executed text — the
+            # DDL/DML statement patterns are anchored at its first word
             sql_line = i + 1
             buf = []
             while i < n:
@@ -152,24 +140,19 @@ class QuidemRunner:
                 if lines[i].rstrip().endswith(";"):
                     break
                 i += 1
-            # quote-parity across buffered lines (ADVICE r6): a line
+            # drop the lines that are `--` comments (ADVICE r6): a line
             # starting with `--` INSIDE a multi-line string literal is
             # literal content, not a comment — dropping it would
-            # silently alter the executed SQL. Parity counting stops at
-            # a genuine (outside-string) `--` so apostrophes in trailing
-            # comments don't flip it.
-            sql_lines, in_str = [], False
+            # silently alter the executed SQL
+            text = "\n".join(buf)
+            comments = {
+                r[0] for r in lexer.regions(text) if text.startswith("--", r[0])
+            }
+            sql_lines, pos = [], 0
             for ln in buf:
-                if not in_str and ln.strip().startswith("--"):
-                    continue
-                sql_lines.append(ln)
-                k = 0
-                while k < len(ln):
-                    if ln[k] == "'":
-                        in_str = not in_str
-                    elif not in_str and ln[k : k + 2] == "--":
-                        break
-                    k += 1
+                if pos + len(ln) - len(ln.lstrip()) not in comments:
+                    sql_lines.append(ln)
+                pos += len(ln) + 1
             sql = "\n".join(sql_lines).rstrip().rstrip(";")
             out_lines.extend(buf)
             i += 1

@@ -88,13 +88,6 @@ def to_spark_type(name: str, precision: int | None = None, scale: int | None = N
     raise TypeError(f"unknown Calcite type {name}")
 
 
-def timestamp_tz_struct() -> T.StructType:
-    """TIMESTAMP_TZ (:81) zone-preserving encoding."""
-    return T.StructType(
-        [T.StructField("ts", T.TimestampType()), T.StructField("tz", T.StringType())]
-    )
-
-
 def time_to_nanos_expr(col: str) -> str:
     """Encode a Spark timestamp's time-of-day as TIME (nanos since
     midnight)."""
