@@ -46,17 +46,41 @@ _DEFAULTS = {
 
 def _host_heap() -> str:
     """Half of the memory this process can have: the smaller of physical
-    RAM and the cgroup v2 limit (`memory.max`, "max" when unlimited). A
-    fixed heap larger than the host lets the kernel OOM-kill the JVM."""
-    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    try:
-        with open("/sys/fs/cgroup/memory.max") as f:
-            cg = f.read().strip()
-        if cg.isdigit():
-            limit = min(limit, int(cg))
-    except OSError:
-        pass
+    RAM and every memory limit of its cgroups. A fixed heap larger than
+    the host lets the kernel OOM-kill the JVM."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    limit = min([phys, *_cgroup_limits()])
     return f"{max(limit // 2 >> 20, 512)}m"
+
+
+def _cgroup_limits():
+    """The cgroup memory limits set on this process: v2 `memory.max` and
+    v1 `memory.limit_in_bytes`, read at the process's own cgroup path
+    (from /proc/self/cgroup) and at each parent up to the root."""
+    try:
+        with open("/proc/self/cgroup") as f:
+            entries = [ln.split(":", 2) for ln in f.read().splitlines()]
+    except OSError:
+        return
+    for _, controllers, path in entries:
+        if not controllers:
+            roots, name = ("/sys/fs/cgroup", "/sys/fs/cgroup/unified"), "memory.max"
+        elif "memory" in controllers.split(","):
+            roots, name = ("/sys/fs/cgroup/memory",), "memory.limit_in_bytes"
+        else:
+            continue
+        while True:
+            for root in roots:
+                try:
+                    with open(f"{root}{path.rstrip('/')}/{name}") as f:
+                        value = f.read().strip()
+                except OSError:
+                    continue
+                if value.isdigit():  # "max" when unlimited
+                    yield int(value)
+            if path in ("/", ""):
+                break
+            path = os.path.dirname(path)
 
 
 def get_spark(app_name: str = "calcite_spark", extra_conf: dict | None = None) -> SparkSession:

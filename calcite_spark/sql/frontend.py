@@ -723,10 +723,7 @@ class SqlFrontend:
             # than @>/<@, so `x @> y || z` means x @> (y || z) —
             # rewriting just y would concat a boolean with an array
             after = text[m.end() :].lstrip()
-            # '--' starts a line comment, not a subtraction (ADVICE r8)
-            if after.startswith(("||", "+", "*", "/", "%")) or (
-                after.startswith("-") and not after.startswith("--")
-            ):
+            if after.startswith(("||", "+", "-", "*", "/", "%")):
                 raise ValueError(
                     f"array containment has a compound right-hand side "
                     f"starting at {b!r}: parenthesize the full RHS"
@@ -2894,8 +2891,11 @@ class SqlFrontend:
     def parse(self, text: str) -> tuple[str, bool]:
         """Macro-expand; returns (spark_sql_text, is_stream). Comments
         before and after the statement are kept verbatim around the
-        expansion, so a clause a macro appends never lands in one."""
+        expansion, so a clause a macro appends never lands in one.
+        Comments inside it are whitespace to SQL: they are dropped
+        before any macro reads the text."""
         lead, text, trail = lexer.split_comments(text)
+        text = lexer.strip_comments(text)
         is_stream = bool(lexer.search(self._STREAM_RE, text))
         text = lexer.sub(self._STREAM_RE, lambda m: "SELECT ", text)
         if re.search(r"\bMEASURE\b|\bAGGREGATE\s*\(", text, re.I):

@@ -10,10 +10,11 @@ Opaque regions:
     /*+ ... */ included).
 An unterminated region runs to the end of the text.
 
-The core is `mask(text)`: the same text with each region's contents
-blanked and its delimiters kept in place. Regexes and depth counters
-run on the mask; every slice is taken from the original text at the
-same offsets, so patterns that read literal contents (TIMESTAMP '...',
+The core is `mask(text)`: the same text with each literal's, name's and
+hint's contents blanked and its delimiters kept in place, and each
+comment blanked whole (newlines kept), since to SQL it is whitespace.
+Regexes and depth counters run on the mask; every slice is taken from
+the original text at the same offsets, so patterns that read literal contents (TIMESTAMP '...',
 '{1,2}') still see them. `finditer` / `search` / `sub` do exactly that
 and hand back matches that read the original text.
 """
@@ -27,6 +28,7 @@ _OPENER = re.compile(r"['\"`]|--|/\*")
 _BLOCK_EDGE = re.compile(r"/\*|\*/")
 _TOP_COMMA = re.compile(r"[(),]")
 _BRACKETS = {")": re.compile(r"[()]"), "]": re.compile(r"[\[\]]")}
+_NOT_NEWLINE = re.compile(r"[^\n]")
 
 
 @lru_cache(maxsize=256)
@@ -69,42 +71,64 @@ def regions(text: str) -> tuple:
 
 @lru_cache(maxsize=256)
 def mask(text: str) -> str:
-    """`text` with the contents of every literal, quoted name and
-    comment blanked to spaces; same length, delimiters in place."""
+    """`text` with the contents of every literal, quoted name and hint
+    blanked to spaces, delimiters in place, and every comment blanked
+    whole but for its newlines: to SQL a comment is whitespace. Same
+    length as `text`."""
     regs = regions(text)
     if not regs:
         return text
     parts, i = [], 0
-    for _, body_start, body_end, _ in regs:
-        parts.append(text[i:body_start])
-        parts.append(" " * (body_end - body_start))
-        i = body_end
+    for start, body_start, body_end, end in regs:
+        parts.append(text[i:start])
+        if _is_comment(text, start):
+            parts.append(_NOT_NEWLINE.sub(" ", text[start:end]))
+        else:
+            parts.append(text[start:body_start])
+            parts.append(" " * (body_end - body_start))
+            parts.append(text[body_end:end])
+        i = end
     parts.append(text[i:])
     return "".join(parts)
+
+
+def _is_comment(text: str, start: int) -> bool:
+    """Whether the region at `start` is a comment (a hint is not)."""
+    return text.startswith("--", start) or (
+        text.startswith("/*", start) and not text.startswith("/*+", start)
+    )
+
+
+def strip_comments(text: str) -> str:
+    """`text` with every comment replaced by one space; hints stay."""
+    out, i = [], 0
+    for start, _, _, end in regions(text):
+        if _is_comment(text, start):
+            out.append(text[i:start] + " ")
+            i = end
+    out.append(text[i:])
+    return "".join(out)
 
 
 def split_comments(text: str) -> tuple[str, str, str]:
     """(leading, body, trailing): the comments and whitespace before and
     after the statement split off. Hints stay in the body."""
-    def comment(r):
-        return text.startswith("--", r[0]) or (
-            text.startswith("/*", r[0]) and not text.startswith("/*+", r[0])
-        )
-
     regs = regions(text)
     lo, k = 0, 0
     while True:
         lo = len(text) - len(text[lo:].lstrip())
-        if k < len(regs) and regs[k][0] == lo and comment(regs[k]):
-            lo = regs[k][3]
+        r = regs[k] if k < len(regs) else None
+        if r and r[0] == lo and _is_comment(text, r[0]):
+            lo = r[3]
             k += 1
         else:
             break
     hi, k = len(text), len(regs) - 1
     while hi > lo:
         hi = len(text[:hi].rstrip())
-        if k >= 0 and regs[k][3] == hi and regs[k][0] >= lo and comment(regs[k]):
-            hi = regs[k][0]
+        r = regs[k] if k >= 0 else None
+        if r and r[3] == hi and r[0] >= lo and _is_comment(text, r[0]):
+            hi = r[0]
             k -= 1
         else:
             break

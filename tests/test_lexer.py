@@ -36,8 +36,16 @@ def test_mask_paren_inside_literal_is_opaque():
 
 
 def test_mask_nested_comments_next_to_literals():
+    # a comment is whitespace: blanked whole, delimiters included
     text = "a/* x /* 'y */ z' */'/*' -- c'd\nb"
-    assert lexer.mask(text) == "a/*" + " " * 15 + "*/'  ' --    \nb"
+    assert lexer.mask(text) == "a" + " " * 19 + "'  ' " + " " * 6 + "\nb"
+
+
+def test_mask_comment_keeps_only_its_newlines():
+    text = "a, -- it's\n  b /* x\ny */ - 1"
+    want = "a, " + " " * 7 + "\n  b " + " " * 4 + "\n" + " " * 4 + " - 1"
+    assert lexer.mask(text) == want
+    assert "-" not in lexer.mask("x -- y\n")
 
 
 def test_mask_hint_and_quoted_names():
@@ -97,6 +105,11 @@ def test_split_comments():
     assert lexer.split_comments("/*+ H */ SELECT 1")[1] == "/*+ H */ SELECT 1"
 
 
+def test_strip_comments_keeps_literals_and_hints():
+    text = "SELECT /*+ H */ a, -- it's\n '-- x' /* y */ FROM t"
+    assert lexer.strip_comments(text) == "SELECT /*+ H */ a,  \n '-- x'   FROM t"
+
+
 def test_matches_read_the_original_text():
     m = lexer.search(r"TIMESTAMP\s+'([^']*)'", "x = TIMESTAMP '2020-01-01 00:00'")
     assert m.group(1) == "2020-01-01 00:00"
@@ -139,6 +152,16 @@ _EXPANDED = "array(1,2) AS a, coalesce(a,b,c) FROM t"
 )
 def test_apostrophe_outside_literals_does_not_stop_expansion(fe, sql, want):
     assert fe.parse(sql)[0] == want
+
+
+def test_comment_dash_is_not_a_unary_minus(fe):
+    # the operand of `::` must not start at the comment's second dash
+    out = fe.parse("SELECT a, -- first column\n  b::int AS c FROM t")[0]
+    assert out == "SELECT a,  \n  CAST(b AS int) AS c FROM t"
+    out = fe.parse("SELECT a, -- 2 *\n b::int AS c FROM t")[0]
+    assert out == "SELECT a,  \n CAST(b AS int) AS c FROM t"
+    m = lexer.search(r"(?:-\s*)?\w+::int", "SELECT a, -- x\n b::int")
+    assert m.group() == "b::int"
 
 
 def test_trailing_comment_stays_after_appended_clause(fe):
@@ -187,6 +210,43 @@ def test_comment_mutation_keeps_expansion(fe):
         if got != want:
             bad.append((sql, want, got))
     assert not bad, bad[:3]
+
+
+_INLINE = " -- it's"
+_TOKEN_RE = re.compile(r"'(?:[^']|'')*'|\"(?:[^\"]|\"\")*\"|`[^`]*`|\w+|\S")
+
+
+def _inline_comments(sql: str) -> str:
+    """`sql` with a `-- it's` comment after every comma and at the end
+    of every line, wherever the mask shows plain SQL there."""
+    mk, out = lexer.mask(sql), []
+    for ch, m in zip(sql, mk):
+        if m == "\n" and ch == "\n":
+            out.append(_INLINE)
+        out.append(ch)
+        if m == ",":
+            out.append(_INLINE + "\n")
+    return "".join(out)
+
+
+def _tokens(sql: str) -> list[str]:
+    """The tokens of `sql` with its comments dropped."""
+    return _TOKEN_RE.findall(lexer.strip_comments(sql))
+
+
+def test_inline_comment_mutation_keeps_expansion(fe):
+    stmts = [s for s in _corpus_statements() if "," in s or "\n" in s]
+    assert len(stmts) > 100
+    bad = []
+    for sql in stmts:
+        want = _parse(fe, sql)
+        got = _parse(fe, _inline_comments(sql))
+        if isinstance(want, tuple) and isinstance(got, tuple):
+            want = (_tokens(want[0]), want[1])
+            got = (_tokens(got[0]), got[1])
+        if got != want:
+            bad.append((sql, want, got))
+    assert not bad, f"{len(bad)} of {len(stmts)}: {bad[:3]}"
 
 
 # -- guard: one lexer --------------------------------------------------
