@@ -214,6 +214,7 @@ class Catalog:
 
         from calcite_spark.plans.builder import RelBuilder
         from calcite_spark.plans.materialize import MaterializationRegistry
+        from calcite_spark.sql import lexer
 
         reg = getattr(self, "mv_registry", None)
         if reg is None:
@@ -435,15 +436,15 @@ class Catalog:
                     # (r12 review: "SUM(a) AS rev" + {..., name: rev}
                     # used to slip past the guard and die later with
                     # an opaque duplicate-column error)
-                    sm = re.search(r"(?is)\bAS\s+(\w+)\s*$", c)
-                    if sm is not None:
-                        if sm.group(1) in aliases:
+                    alias = lexer.split_alias(c)[1]
+                    if alias is not None:
+                        if alias in aliases:
                             raise ValueError(
                                 f"lattice tile {name!r}: duplicate "
-                                f"measure alias {sm.group(1)!r} — name "
+                                f"measure alias {alias!r} — name "
                                 "the measures distinctly"
                             )
-                        aliases.append(sm.group(1))
+                        aliases.append(alias)
                     measures.append(c)
                     continue
                 # JsonTile measure objects: {"agg": "sum", "args": "x",

@@ -22,6 +22,8 @@ from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from calcite_spark.sql import lexer
+
 
 class RelNode:
     """Base relational operator ≈ rel/RelNode.java."""
@@ -90,6 +92,14 @@ def _split_schema_fields(schema: str) -> list:
             start = i + 1
     fields.append(schema[start:].strip())
     return [f for f in fields if f]
+
+
+def schema_column_names(schema: str) -> list[str]:
+    """Column names of a `"name type, name type"` schema string —
+    `"a decimal(10,2), b string"` is two columns. The shared helper for
+    every consumer of Values.schema (rel2sql VALUES aliases, lineage,
+    size metadata)."""
+    return [f.split()[0] for f in _split_schema_fields(schema)]
 
 
 @dataclass(repr=False)
@@ -210,17 +220,13 @@ class Aggregate(RelNode):
             # DataFrame rollup/cube API fails GROUPING_COLUMN_MISMATCH
             # because the alias wraps the grouping expression; the SQL
             # form matches by expression and is exact
-            has_alias = any(
-                re.search(r"(?is)\s+AS\s+\w+\s*$", k) for k in self.group_keys
-            )
+            has_alias = any(lexer.split_alias(k)[1] for k in self.group_keys)
             has_grouping = any(
                 re.search(r"(?i)\bGROUPING(_ID)?\s*\(", c) for c in self.agg_calls
             )
             if has_alias and has_grouping:
                 df.createOrReplaceTempView("__gs_input__")
-                bare = [
-                    re.sub(r"(?is)\s+AS\s+\w+\s*$", "", k) for k in self.group_keys
-                ]
+                bare = [lexer.split_alias(k)[0] for k in self.group_keys]
                 keys = ", ".join(self.group_keys)
                 calls = ", ".join(self.agg_calls)
                 return ctx.spark.sql(
@@ -253,8 +259,6 @@ class Aggregate(RelNode):
         i-th copy (0-based) aggregates the distinct sets occurring more
         than i times and emits literal i. With no duplicates this is a
         single branch with GROUP_ID() = 0."""
-        from calcite_spark.sql import lexer
-
         counts: dict[tuple, int] = {}
         for s in self.grouping_sets:
             counts[tuple(s)] = counts.get(tuple(s), 0) + 1
@@ -610,22 +614,46 @@ class Spool(RelNode):
         return self.inputs[0].to_df(ctx).cache()
 
 
-def schema_column_names(schema: str) -> list[str]:
-    """Column names from a `"name type, name type"` schema string,
-    splitting on TOP-LEVEL commas only — `"a decimal(10,2), b string"`
-    is two columns; the comma inside the parameterized type is not a
-    separator. The shared helper for every consumer of Values.schema
-    (rel2sql VALUES aliases, lineage, size metadata)."""
-    out, depth, buf = [], 0, []
-    for ch in schema:
-        if ch in "(<":  # decimal(10,2) parens, struct<...>/map<...> brackets
-            depth += 1
-        elif ch in ")>":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(buf))
-            buf = []
+def output_names(node: RelNode, catalog) -> list | None:
+    """Output column names, read structurally ≈ RelNode.getRowType()'s
+    field names: no subtree is lowered, and an external scan answers
+    through its engine's schema_of (fetching it would pull the remote
+    table). A list only when it equals node.to_df(catalog).columns;
+    None where a node's shape is not modeled or Spark derives the name
+    itself (count(*) is named count(1))."""
+    if isinstance(node, Scan):
+        ext = getattr(catalog, "external_tables", {}).get(node.table)
+        if ext is None:
+            return list(catalog.table(node.table).columns)
+        schema_of = getattr(ext, "schema_of", None)
+        return list(schema_of(node.table)) if schema_of else None
+    if isinstance(node, Values):
+        return [n.strip("`") for n in schema_column_names(node.schema)]
+    if isinstance(node, (Filter, Sort, Sample, Exchange, Snapshot, Spool, SetOp)):
+        return output_names(node.inputs[0], catalog)
+    if isinstance(node, Join):
+        left = output_names(node.inputs[0], catalog)
+        if left is None or node.join_type.upper() in ("SEMI", "ANTI"):
+            return left
+        right = output_names(node.inputs[1], catalog)
+        return None if right is None else left + right
+    if isinstance(node, Project):
+        items = node.exprs
+    elif isinstance(node, Aggregate):
+        items = (*node.group_keys, *node.agg_calls)
+    elif isinstance(node, Window):
+        items = (*node.keep, *node.window_exprs)
+    else:
+        return None
+    out = []
+    for item in items:
+        if item.strip() == "*":
+            child = output_names(node.inputs[0], catalog)
+            if child is None:
+                return None
+            out.extend(child)
+        elif (name := lexer.item_name(item)) is not None:
+            out.append(name)
         else:
-            buf.append(ch)
-    out.append("".join(buf))
-    return [c.split()[0] for c in out if c.strip()]
+            return None
+    return out

@@ -121,7 +121,6 @@ _AGG_IN_EXPR_RE = re.compile(
     r"(?is)\b(SUM|COUNT|MIN|MAX|AVG|VAR_POP|VAR_SAMP|VARIANCE|"
     r"STDDEV_POP|STDDEV_SAMP|STDDEV)\s*(\((?:[^()]|\([^()]*\))*\))"
 )
-_CALL_ALIAS_RE = re.compile(r"(?is)^(.+)\s+AS\s+(\w+)\s*$")
 
 
 @dataclass
@@ -217,8 +216,8 @@ def liftable_agg_call(call: str) -> bool:
     (Spark executes the raw string whether or not substitution fires)."""
     if parse_agg_call(call) is not None or _DERIVED_RE.match(call):
         return True
-    m = _CALL_ALIAS_RE.match(call)
-    return m is not None and _AGG_IN_EXPR_RE.search(m.group(1)) is not None
+    body, alias = lexer.split_alias(call)
+    return alias is not None and _AGG_IN_EXPR_RE.search(body) is not None
 
 
 # ---------------------------------------------------------------------
@@ -252,15 +251,19 @@ _ISO_CANON_RE = re.compile(
 )
 
 
-_KEY_ALIAS_RE = re.compile(r"(?is)^(.*\S)\s+AS\s+([A-Za-z_]\w*)\s*$")
+# a filter over tile rows answers like one over base rows only when it
+# is deterministic (≈ RexUtil.isDeterministic)
+_NONDETERMINISTIC_CALL_RE = re.compile(
+    r"(?i)\b(?:rand|randn|random|uuid|shuffle|monotonically_increasing_id|"
+    r"spark_partition_id|input_file_\w+)\s*\("
+)
 
 
-def _key_alias(key: str) -> str:
-    """Output column name of a group key: ``expr AS alias`` → alias,
-    plain column → itself. Greedy prefix so the TRAILING AS wins
-    (``CAST(a AS INT) AS b`` → b)."""
-    m = _KEY_ALIAS_RE.match(key)
-    return m.group(2) if m else key
+# calls an expression over re-aggregated calls may keep (AND/OR/NOT
+# before a parenthesis are operators)
+_SCALAR_CALLS = frozenset(
+    "CAST COALESCE GREATEST LEAST SQRT ABS ROUND AND OR NOT".split()
+)
 
 
 def _plain_key(key: str) -> bool:
@@ -276,8 +279,8 @@ def _valid_group_key(key: str) -> bool:
     normalized text and re-reference the tile's alias column)."""
     if _plain_key(key):
         return True
-    m = _KEY_ALIAS_RE.match(key)
-    return m is not None and _paren_balanced(m.group(1))
+    body, alias = lexer.split_alias(key)
+    return alias is not None and _plain_key(alias) and _paren_balanced(body)
 
 
 def _parse_lit(text: str):
@@ -532,7 +535,7 @@ class MaterializationRegistry:
                 "define: group keys must be plain columns or "
                 f"'expr AS alias'; got {bad_keys[0]!r}"
             )
-        out_names = [_key_alias(k) for k in group_keys]
+        out_names = [lexer.item_name(k) for k in group_keys]
         if len(set(out_names)) != len(out_names):
             raise ValueError(
                 f"define: duplicate group-key output names {out_names}"
@@ -730,15 +733,15 @@ class MaterializationRegistry:
         base_cols = {
             c for t in tables for c in catalog.table(t).columns
         }
-        key_out = [_key_alias(k) for k in plan.group_keys]
+        key_out = [lexer.item_name(k) for k in plan.group_keys]
         if len(set(key_out)) != len(key_out):
             raise ValueError(
                 f"define_join: duplicate group-key output names {key_out}"
             )
         for k in plan.group_keys:
-            if not _plain_key(k) and _key_alias(k) in base_cols:
+            if not _plain_key(k) and lexer.item_name(k) in base_cols:
                 raise ValueError(
-                    f"define_join: expression-key alias {_key_alias(k)!r} "
+                    f"define_join: expression-key alias {lexer.item_name(k)!r} "
                     "shadows a base-table column — the tile column would "
                     "be ambiguous to the compensation tiers"
                 )
@@ -939,7 +942,7 @@ class MaterializationRegistry:
             merged = (
                 catalog.table(name)
                 .unionByName(delta_agg)
-                .groupBy(*[_key_alias(k) for k in mv.group_keys])
+                .groupBy(*[lexer.item_name(k) for k in mv.group_keys])
                 .agg(*merge_calls)
             )
             # pin results BEFORE overwriting the parquet being read
@@ -1159,7 +1162,7 @@ class MaterializationRegistry:
             merged = (
                 catalog.table(name)
                 .unionByName(delta_agg)
-                .groupBy(*[_key_alias(k) for k in mv.group_keys])
+                .groupBy(*[lexer.item_name(k) for k in mv.group_keys])
                 .agg(*merge_calls)
             )
             merged = merged.localCheckpoint(eager=True)
@@ -1518,17 +1521,9 @@ class MaterializationRegistry:
 
     @staticmethod
     def _filter_refs_ok(cond: str, allowed: set) -> bool:
-        """Every identifier in cond (string literals stripped) is an
-        allowed column, a SQL word, or a number."""
-        cond_no_literals = re.sub(r"'[^']*'", "", cond)
-        idents = set(re.findall(r"[A-Za-z_]\w*", cond_no_literals))
-        sql_words = {
-            "AND", "OR", "NOT", "IN", "BETWEEN", "LIKE", "IS", "NULL",
-            "TRUE", "FALSE", "TIMESTAMP", "DATE", "INTERVAL", "CAST",
-            "AS", "INT", "BIGINT", "DOUBLE", "STRING",
-        }
-        return all(
-            i in allowed or i.upper() in sql_words or i.isdigit() for i in idents
+        """cond references allowed columns only and is deterministic."""
+        return set(lexer.column_refs(cond)) <= allowed and not lexer.search(
+            _NONDETERMINISTIC_CALL_RE, cond
         )
 
     @staticmethod
@@ -1676,13 +1671,13 @@ class MaterializationRegistry:
         derived expressions): an arithmetic expression over aggregate
         calls — SUM(a) + SUM(b) AS x, MAX(a) - MIN(a) AS rng,
         SUM(a) * 2 AS d — maps each embedded call through the
-        simple/derived tiers and splices the results. Identifiers
-        OUTSIDE the calls must be the query's group keys or SQL words
-        (anything else could silently rebind against the tile)."""
-        m = _CALL_ALIAS_RE.match(call)
-        if m is None:
+        simple/derived tiers and splices the results. Columns OUTSIDE
+        the calls must be the query's group keys, and calls there known
+        scalars (anything else could silently rebind against the
+        tile)."""
+        body, alias = lexer.split_alias(call)
+        if alias is None:
             return None
-        body, alias = m.group(1).strip(), m.group(2)
         out, last, found = [], 0, 0
         # aggregate-SHAPED text inside a string literal is data, not
         # a call (review r9: splicing it rewrote the literal)
@@ -1704,22 +1699,18 @@ class MaterializationRegistry:
         if not found:
             return None
         out.append(body[last:])
-        residual = _AGG_IN_EXPR_RE.sub(" ", body)
-        idents = set(
-            re.findall(r"[A-Za-z_]\w*", re.sub(r"'[^']*'", "", residual))
-        )
-        sql_words = {
-            "CASE", "WHEN", "THEN", "ELSE", "END", "AND", "OR", "NOT",
-            "NULL", "TRUE", "FALSE", "CAST", "AS", "DOUBLE", "BIGINT",
-            "INT", "COALESCE", "GREATEST", "LEAST", "SQRT", "ABS", "ROUND",
+        # outside the calls: columns are the query's group keys or a
+        # key's ALIAS (r10) — it names the tile column the key maps to —
+        # and calls are known scalars (any other could be an aggregate
+        # the tile answers differently, e.g. collect_list)
+        residual = lexer.sub(_AGG_IN_EXPR_RE, lambda _: " ", body)
+        allowed = set(query_keys) | {lexer.item_name(k) for k in query_keys}
+        calls = {
+            m.group(1).upper()
+            for m in lexer.finditer(r"\b([A-Za-z_]\w*)\s*\(", residual)
         }
-        # expression group keys (r10): the key's ALIAS is a legal
-        # identifier in a sibling aggregate expression — it names the
-        # tile column the key maps to
-        allowed = set(query_keys) | {_key_alias(k) for k in query_keys}
-        if not all(
-            i in allowed or i.upper() in sql_words or i.isdigit()
-            for i in idents
+        if not set(lexer.column_refs(residual)) <= allowed or not (
+            calls <= _SCALAR_CALLS
         ):
             return None
         return f"{''.join(out)} AS {alias}"
@@ -1778,20 +1769,19 @@ class MaterializationRegistry:
                     # the caller passes its resolved keys positionally
                     derived_by_norm = {}
                     for qk, rk in zip(query_keys, resolved_keys):
-                        am = _KEY_ALIAS_RE.match(rk)
-                        tgt = am.group(1) if am is not None else _key_alias(rk)
+                        tgt = lexer.split_alias(rk)[0]
                         derived_by_norm[_norm(qk)] = tgt
                         # the call's argument writes the bare expression
                         # (GROUPING(year(d)), no alias) — register the
                         # alias-stripped spelling of the query key too
-                        qm = _KEY_ALIAS_RE.match(qk)
-                        if qm is not None:
-                            derived_by_norm[_norm(qm.group(1))] = tgt
+                        qbody, qalias = lexer.split_alias(qk)
+                        if qalias is not None:
+                            derived_by_norm[_norm(qbody)] = tgt
                     args, ok = [], True
                     for a in re.split(r",(?![^()]*\))", gm.group(2)):
                         hit = tile_by_norm.get(_norm(a.strip()))
                         if hit is not None:
-                            args.append(_key_alias(hit))
+                            args.append(lexer.item_name(hit))
                             continue
                         der = derived_by_norm.get(_norm(a.strip()))
                         if der is None:
@@ -1896,17 +1886,14 @@ class MaterializationRegistry:
         _map_rollup_calls (verdict r13 Missing #2)."""
         key_map, derived_any = {}, False
         for qk, mk in zip(agg.group_keys, resolved):
-            am = _KEY_ALIAS_RE.match(mk)
-            if am is not None:
-                derived_any = True
-                key_map[_norm(qk)] = am.group(1)
-            else:
-                key_map[_norm(qk)] = mk
+            mbody, malias = lexer.split_alias(mk)
+            derived_any |= malias is not None
+            key_map[_norm(qk)] = mbody
             # sets may spell the key bare ("year(d)") or aliased
             # ("year(d) AS yr") — register both (r14)
-            qm = _KEY_ALIAS_RE.match(qk)
-            if qm is not None:
-                key_map[_norm(qm.group(1))] = key_map[_norm(qk)]
+            qbody, qalias = lexer.split_alias(qk)
+            if qalias is not None:
+                key_map[_norm(qbody)] = mbody
         if derived_any and any(
             re.search(r"(?i)\bGROUP_ID\s*\(", c) for c in agg.agg_calls
         ):
@@ -1936,7 +1923,7 @@ class MaterializationRegistry:
         for k in agg.group_keys:
             hit = tile_by_norm.get(_norm(k))
             if hit is not None:
-                out.append(_key_alias(hit))
+                out.append(lexer.item_name(hit))
                 continue
             sub = self._grain_hierarchy_key(k, mv)
             if sub is None:
@@ -1983,7 +1970,7 @@ class MaterializationRegistry:
                     continue
                 if tm.group(1).lower() in _EXTRACT_SAFE_GRAINS[canon]:
                     return (
-                        rebuild(f=field_txt, a=_key_alias(k))
+                        rebuild(f=field_txt, a=lexer.item_name(k))
                         + f" AS {alias}"
                     )
             return None
@@ -2002,9 +1989,9 @@ class MaterializationRegistry:
             # contract (qx46/qx52 negatives: same expression, different
             # alias → no match), and this tier must not relitigate it
             if q_grain in _GRAIN_COARSER_OF.get(t_grain, ()):
-                alias = _key_alias(query_key)
+                alias = lexer.item_name(query_key)
                 return (
-                    f"date_trunc('{q_grain}', {_key_alias(k)}) AS {alias}"
+                    f"date_trunc('{q_grain}', {lexer.item_name(k)}) AS {alias}"
                 )
         return None
 
@@ -2059,7 +2046,7 @@ class MaterializationRegistry:
         # refuse).
         avail = {k for k in mv.group_keys if _plain_key(k)}
         expr_by_norm = {
-            _norm(k): _key_alias(k)
+            _norm(k): lexer.item_name(k)
             for k in mv.group_keys
             if not _plain_key(k)
         }
@@ -2208,7 +2195,7 @@ class MaterializationRegistry:
         # re-computes the expression (raw key over the base scan names
         # its output with the same alias), the tile branch reads it
         branch_cols = tuple(
-            [_key_alias(k) for k in mv.group_keys] + list(mv.agg_calls)
+            [lexer.item_name(k) for k in mv.group_keys] + list(mv.agg_calls)
         )
         tile_branch = ir.Project(
             branch_cols,
@@ -2262,7 +2249,7 @@ class MaterializationRegistry:
         keys = (
             tuple(merge_keys)
             if merge_keys is not None
-            else tuple(_key_alias(k) for k in agg.group_keys)
+            else tuple(lexer.item_name(k) for k in agg.group_keys)
         )
         if agg.group_type == "SIMPLE":
             return ir.Aggregate(keys, tuple(merged_calls), inputs=(union,))
@@ -2386,7 +2373,7 @@ class MaterializationRegistry:
         if extra_sql:
             residual_sql += " AND " + " AND ".join(extra_sql)
         branch_cols = tuple(
-            [_key_alias(k) for k in mv.group_keys] + list(mv.agg_calls)
+            [lexer.item_name(k) for k in mv.group_keys] + list(mv.agg_calls)
         )
         tile_branch = ir.Project(
             branch_cols,
@@ -2523,7 +2510,7 @@ class MaterializationRegistry:
                 # serving on mixed-case columns — mirror
                 # _grain_hierarchy_key's _norm)
                 if m and _norm(m.group(2)) == _norm(c):
-                    grain, alias, col = m.group(1).lower(), _key_alias(k), c
+                    grain, alias, col = m.group(1).lower(), lexer.item_name(k), c
                     break
             if grain is not None:
                 break
@@ -2631,7 +2618,7 @@ class MaterializationRegistry:
             elif c_hi is None:
                 slivers.append(f"({col} >= {_ts_sql(t_hi)})")
         branch_cols = tuple(
-            [_key_alias(k) for k in mv.group_keys] + list(mv.agg_calls)
+            [lexer.item_name(k) for k in mv.group_keys] + list(mv.agg_calls)
         )
         tile_branch = ir.Project(
             branch_cols,
@@ -2789,9 +2776,9 @@ class MaterializationRegistry:
                 continue  # full-column tiles already fired at the Filter node
             needed = set()
             for e in node.exprs:
-                needed |= _expr_cols(e)
+                needed |= set(lexer.column_refs(e))
             if filt is not None:
-                needed |= _expr_cols(filt.condition)
+                needed |= set(lexer.column_refs(filt.condition))
             if not needed <= set(mv.spf_columns):
                 continue
             if filt is None:
@@ -3009,29 +2996,6 @@ def _norm(expr: str) -> str:
         p if i % 2 else re.sub(r"\s+", "", p).lower()
         for i, p in enumerate(parts)
     )
-
-
-_SQL_WORDS = {
-    "AND", "OR", "NOT", "IN", "BETWEEN", "LIKE", "IS", "NULL",
-    "TRUE", "FALSE", "TIMESTAMP", "DATE", "INTERVAL", "CAST",
-    "AS", "INT", "BIGINT", "DOUBLE", "STRING", "DECIMAL", "FLOAT",
-    "CASE", "WHEN", "THEN", "ELSE", "END", "DISTINCT", "ASC", "DESC",
-}
-
-
-def _expr_cols(expr: str) -> set:
-    """Column identifiers referenced by a SQL expression string:
-    literals stripped, function-call names and a trailing output alias
-    removed, keywords excluded. Conservative — an unrecognized keyword
-    reads as a column and simply disqualifies a rewrite."""
-    s = re.sub(r"\s+AS\s+[A-Za-z_]\w*\s*$", "", expr, flags=re.I)
-    s = re.sub(r"'[^']*'", "", s)
-    s = re.sub(r"\b[A-Za-z_]\w*\s*\(", "(", s)  # drop function names
-    return {
-        i
-        for i in re.findall(r"[A-Za-z_]\w*", s)
-        if i.upper() not in _SQL_WORDS and not i.isdigit()
-    }
 
 
 def _column_nulls(catalog, table: str, col: str):
@@ -3345,8 +3309,7 @@ class LatticeSuggester:
                 # norm-differs from the derived `... AS d_month` only
                 # by alias — storing both would duplicate the column)
                 def _expr_of(k):
-                    m2 = _KEY_ALIAS_RE.match(k)
-                    return _norm(m2.group(1) if m2 else k)
+                    return _norm(lexer.split_alias(k)[0])
 
                 if not any(
                     _expr_of(derived) == _expr_of(m2)
@@ -3366,7 +3329,7 @@ class LatticeSuggester:
             # corpus's own truncation wins), and skip alias collisions.
             referenced = set()
             for k in keys:
-                referenced |= {k} if _plain_key(k) else _expr_cols(k)
+                referenced |= set(lexer.column_refs(k))
             trunc_cols = []  # (col, chosen grain) — slice candidates
             for c in sorted({c for s2 in stats for c in s2.filter_cols}):
                 # grain selection (r12): the LARGEST grain whose whole
@@ -3405,7 +3368,7 @@ class LatticeSuggester:
                 alias = f"{c}_{grain}"
                 derived = f"date_trunc('{grain}', {c}) AS {alias}"
                 if c in referenced or alias in {
-                    _key_alias(k) for k in keys
+                    lexer.item_name(k) for k in keys
                 }:
                     continue
                 keys.append(derived)
@@ -3440,7 +3403,7 @@ class LatticeSuggester:
                 slice_lo = _grain_floor(grain, min(los))
                 slice_conds.append(f"{c} >= {_ts_sql(slice_lo)}")
             filter_condition = " AND ".join(slice_conds) or None
-            aliases = [_key_alias(k) for k in keys]
+            aliases = [lexer.item_name(k) for k in keys]
             if len(set(aliases)) != len(aliases):
                 continue
             seen_calls: dict[tuple, str] = {}
@@ -3502,7 +3465,7 @@ class LatticeSuggester:
             # shape (ambiguous to the compensation tiers), so the
             # suggester skips the proposal instead of crashing
             # auto_build
-            if not _plain_key(k) and _key_alias(k) in owner:
+            if not _plain_key(k) and lexer.item_name(k) in owner:
                 return None
 
         def edge_count(t):
@@ -3567,8 +3530,8 @@ class LatticeSuggester:
         if _plain_key(key):
             expr, idents = key, {key}
         else:
-            expr = _KEY_ALIAS_RE.match(key).group(1)
-            idents = _expr_cols(expr)
+            expr = lexer.split_alias(key)[0]
+            idents = set(lexer.column_refs(expr))
             if not idents:
                 return 1  # constant expression: one group
         owners = [
@@ -3654,9 +3617,9 @@ class LatticeSuggester:
                 key_exprs.append(k)
                 key_idents.append({k})
             else:
-                expr = _KEY_ALIAS_RE.match(k).group(1)
+                expr = lexer.split_alias(k)[0]
                 key_exprs.append(expr)
-                key_idents.append(_expr_cols(expr))
+                key_idents.append(set(lexer.column_refs(expr)))
         all_idents = set().union(*key_idents) if key_idents else set()
         joint_owner = [
             t for t in tables
@@ -3826,7 +3789,7 @@ class LatticeSuggester:
                     continue
             base_cols = set(catalog.table(p["table"]).columns)
             if any(
-                not _plain_key(k) and _key_alias(k) in base_cols
+                not _plain_key(k) and lexer.item_name(k) in base_cols
                 for k in p["group_keys"]
             ):
                 continue  # derived alias shadows a base column: skip

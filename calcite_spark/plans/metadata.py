@@ -31,6 +31,7 @@ from __future__ import annotations
 import re
 
 from calcite_spark.plans import ir
+from calcite_spark.sql import lexer
 
 _EQUI = re.compile(r"^\s*([A-Za-z_]\w*)\s*=\s*([A-Za-z_]\w*)\s*$")
 _EQ_LITERAL = re.compile(
@@ -41,13 +42,6 @@ _CMP_LITERAL = re.compile(
 )
 _IS_NOT_NULL = re.compile(r"^\s*[A-Za-z_]\w*\s+IS\s+NOT\s+NULL\s*$", re.I)
 _BARE_COL = re.compile(r"^\s*[A-Za-z_]\w*\s*$")
-
-
-def _split_alias(expr: str) -> tuple[str, str | None]:
-    m = re.match(r"^(.*?)\s+AS\s+([A-Za-z_]\w*)\s*$", expr.strip(), re.I | re.S)
-    if m:
-        return m.group(1).strip(), m.group(2)
-    return expr.strip(), None
 
 
 class MetadataQuery:
@@ -136,7 +130,7 @@ class MetadataQuery:
             return None
         groups = 1.0
         for k in node.group_keys:
-            base, _ = _split_alias(k)
+            base, _ = lexer.split_alias(k)
             ndv = (
                 self.distinct_row_count(node.inputs[0], base)
                 if _BARE_COL.match(base)
@@ -374,7 +368,7 @@ class MetadataQuery:
             for e in node.exprs:
                 if e == "*":
                     return self.unique_keys(node.inputs[0])
-                body, alias = _split_alias(e)
+                body, alias = lexer.split_alias(e)
                 if _BARE_COL.match(body):
                     out_name = alias or body
                     renames[body] = out_name
@@ -388,8 +382,7 @@ class MetadataQuery:
             if node.group_type != "SIMPLE" or not node.group_keys:
                 return set()
             names = tuple(
-                (_split_alias(k)[1] or _split_alias(k)[0])
-                for k in node.group_keys
+                alias or body for body, alias in map(lexer.split_alias, node.group_keys)
             )
             return {names}
         if isinstance(node, ir.Join):
@@ -452,13 +445,13 @@ class MetadataQuery:
             for e in node.exprs:
                 if e == "*":
                     return self._preds(node.inputs[0])
-                body, alias = _split_alias(e)
+                body, alias = lexer.split_alias(e)
                 if _BARE_COL.match(body) and alias is None:
                     out_names.add(body)
             return uniq(
                 p
                 for p in self._preds(node.inputs[0])
-                if _pred_columns(p) <= {c.lower() for c in out_names}
+                if {r.lower() for r in lexer.column_refs(p)} <= {c.lower() for c in out_names}
             )
         if isinstance(node, ir.Join):
             jt = node.join_type.upper()
@@ -475,13 +468,12 @@ class MetadataQuery:
             return []
         if isinstance(node, ir.Aggregate):
             keys = {
-                (_split_alias(k)[1] or _split_alias(k)[0])
-                for k in node.group_keys
+                alias or body for body, alias in map(lexer.split_alias, node.group_keys)
             }
             return uniq(
                 p
                 for p in self._preds(node.inputs[0])
-                if _pred_columns(p) <= {c.lower() for c in keys}
+                if {r.lower() for r in lexer.column_refs(p)} <= {c.lower() for c in keys}
             )
         return []
 
@@ -542,7 +534,7 @@ class MetadataQuery:
             # survive the projection under identity or aliasing
             out = {}
             for e in node.exprs:
-                expr, alias = _split_alias(e)
+                expr, alias = lexer.split_alias(e)
                 out[expr.strip()] = (alias or expr).strip()
             mapped = tuple(out.get(k) for k in keys)
             if all(m is not None for m in mapped):
@@ -712,7 +704,7 @@ class MetadataQuery:
                 if e == "*":
                     out.update(child)
                     continue
-                body, alias = _split_alias(e)
+                body, alias = lexer.split_alias(e)
                 if _BARE_COL.match(body):
                     out[alias or body] = child.get(body)
                 else:
@@ -727,7 +719,7 @@ class MetadataQuery:
                 else:
                     out[k] = child.get(k)
             for e in node.window_exprs:
-                _, alias = _split_alias(e)
+                _, alias = lexer.split_alias(e)
                 if alias:
                     out[alias] = 8.0  # ranking/offset results are longs
             return out
@@ -743,12 +735,12 @@ class MetadataQuery:
             child = self.average_column_sizes(node.inputs[0]) or {}
             out = {}
             for k in node.group_keys:
-                body, alias = _split_alias(k)
+                body, alias = lexer.split_alias(k)
                 out[alias or body] = (
                     child.get(body) if _BARE_COL.match(body) else self._EXPR_DEFAULT
                 )
             for c in node.agg_calls:
-                _, alias = _split_alias(c)
+                _, alias = lexer.split_alias(c)
                 if alias:
                     # averageTypeValueSize(aggregateCall.type): the
                     # standard aggregates are numeric → 8 bytes
@@ -790,21 +782,6 @@ class MetadataQuery:
             return None
         known = [v for v in sizes.values() if v is not None]
         return sum(known) if known else None
-
-
-_SQL_WORDS = frozenset(
-    "and or not in is null true false between like case when then "
-    "else end cast as date timestamp interval exists".split()
-)
-
-
-def _pred_columns(pred: str) -> set:
-    """Lower-cased identifier tokens of a predicate — SQL keywords out,
-    string-literal contents out (a token inside '...' is a value)."""
-    return {
-        t.lower()
-        for t in re.findall(r"[A-Za-z_]\w*", re.sub(r"'[^']*'", "''", pred))
-    } - _SQL_WORDS
 
 
 def _conjuncts(condition: str) -> list[str]:

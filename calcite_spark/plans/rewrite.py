@@ -233,8 +233,7 @@ def _has_external_scan(n, catalog) -> bool:
 
 def _unwrap_column_preserving(n):
     """Descend through column-preserving wrappers to the underlying
-    node — the shared front half of _output_columns/_output_dtypes
-    (review r7: one resolution policy, two accessors)."""
+    node — the front half of _output_dtypes."""
     base = n
     while isinstance(base, (ir.Filter, ir.Exchange, ir.Sort)) and base.inputs:
         base = base.inputs[0]
@@ -243,25 +242,18 @@ def _unwrap_column_preserving(n):
 
 def _output_columns(n, catalog) -> set:
     """Output schema of a join input, WITHOUT executing anything
-    remote: column-preserving chains over a Scan resolve through the
-    catalog (external tables via the engine's schema_of metadata probe
-    ≈ JDBC DatabaseMetaData — a full to_df here would fetch the whole
-    remote table just to read .columns); anything still containing an
-    external scan refuses (empty set = no inference onto that side);
-    local subtrees fall back to the lowered DataFrame's schema."""
-    base = _unwrap_column_preserving(n)
-    if isinstance(base, ir.Scan):
-        ext = getattr(catalog, "external_tables", {})
-        if base.table in ext:
-            schema_of = getattr(ext[base.table], "schema_of", None)
-            return set(schema_of(base.table)) if schema_of else set()
-        if base.table in getattr(catalog, "tables", {}) or base.table in getattr(
-            catalog, "_dfs", {}
-        ):
-            return set(catalog.table(base.table).columns)
-    if _has_external_scan(n, catalog):
-        return set()
+    remote: ir.output_names reads it structurally (external tables via
+    the engine's schema_of metadata probe ≈ JDBC DatabaseMetaData — a
+    full to_df here would fetch the whole remote table just to read
+    .columns); where it cannot, a subtree still containing an external
+    scan refuses (empty set = no inference onto that side) and a local
+    one falls back to the lowered DataFrame's schema."""
     try:
+        names = ir.output_names(n, catalog)
+        if names is not None:
+            return set(names)
+        if _has_external_scan(n, catalog):
+            return set()
         return set(n.to_df(catalog).columns)
     except Exception:
         return set()
@@ -589,8 +581,6 @@ def _resolve_multijoin(node, catalog):
         return None
 
     # resolve each leaf's column set + row estimate
-    import re as _re
-
     infos = []
     for leaf in leaves:
         base, selectivity = leaf, 1.0
@@ -631,7 +621,7 @@ def _resolve_multijoin(node, catalog):
     all_cols = {c for i in infos for c in i["cols"]}
     cond_refs = []
     for c in conjuncts:
-        idents = {t for t in _re.findall(r"[A-Za-z_]\w*", c) if t in all_cols}
+        idents = set(lexer.column_refs(c)) & all_cols
         touched = [i for i, info in enumerate(infos) if idents & info["cols"]]
         if not idents or not touched:
             return None  # unmappable condition — don't reorder
@@ -867,8 +857,6 @@ def estimate_plan_cost(node, catalog) -> float:
     rules use (leaf rows × 0.25/filter; per-conjunct selectivity
     1/min(base rows referenced)). Used by plan tests to compare rewrite
     tiers and exposed for EXPLAIN-style diagnostics."""
-    import re as _re
-
     # leaf column map
     leaf_info = {}
     stack = [node]
@@ -910,9 +898,7 @@ def estimate_plan_cost(node, catalog) -> float:
                     rows /= max(max(ndvs), 1.0)
                     continue
                 owners = [
-                    r
-                    for t in _re.findall(r"[A-Za-z_]\w*", c)
-                    for r in col_owner_rows(t)
+                    r for t in lexer.column_refs(c) for r in col_owner_rows(t)
                 ]
                 if owners:
                     rows /= max(min(owners), 1.0)
@@ -1107,11 +1093,55 @@ _AJT_CALL_RE = re.compile(
 _AJT_IDENT_RE = re.compile(r"^[A-Za-z_]\w*$")
 
 
+def _splittable_calls(agg_calls) -> list | None:
+    """(FN, arg, alias) of every call when each is strictly
+    FN(col) AS name or COUNT(*) AS name, FN one of SUM COUNT MIN MAX
+    AVG; None otherwise (DISTINCT, FILTER, expressions)."""
+    parsed = []
+    for call in agg_calls:
+        m = _AJT_CALL_RE.match(call)
+        if not m:
+            return None
+        fn, arg, alias = m.group(1).upper(), m.group(2), m.group(3)
+        if arg == "*" and fn != "COUNT":
+            return None
+        parsed.append((fn, arg, alias))
+    return parsed
+
+
+def _split_calls(parsed, prefix) -> tuple[list, list]:
+    """(partial calls, merge calls) for one pre-aggregation level ≈
+    SqlSplittableAggFunction: partial i is named {prefix}i. MIN/MAX
+    merge as themselves, SUM as SUM-of-partials, COUNT as
+    COALESCE(SUM) — ≈ $SUM0: a GLOBAL aggregate over empty input must
+    yield 0, not SUM-over-nothing NULL — and AVG as a SUM/COUNT pair
+    ({prefix}is / {prefix}ic; bigint/ or double/ division → double,
+    matching Spark's AVG result type for non-decimal inputs)."""
+    partial_calls, merge_calls = [], []
+    for i, (fn, arg, alias) in enumerate(parsed):
+        pc = f"{prefix}{i}"
+        if fn in ("MIN", "MAX"):
+            partial_calls.append(f"{fn}({arg}) AS {pc}")
+            merge_calls.append(f"{fn}({pc}) AS {alias}")
+        elif fn == "COUNT":
+            partial_calls.append(f"COUNT({arg}) AS {pc}")
+            merge_calls.append(f"COALESCE(SUM({pc}), 0) AS {alias}")
+        elif fn == "SUM":
+            partial_calls.append(f"SUM({arg}) AS {pc}")
+            merge_calls.append(f"SUM({pc}) AS {alias}")
+        else:  # AVG
+            partial_calls.append(f"SUM({arg}) AS {pc}s")
+            partial_calls.append(f"COUNT({arg}) AS {pc}c")
+            merge_calls.append(f"SUM({pc}s) / SUM({pc}c) AS {alias}")
+    return partial_calls, merge_calls
+
+
 def _output_dtypes(n, catalog) -> dict:
-    """Column → Spark dtype string for a join input, same resolution
-    strategy (and the same no-remote-fetch refusal) as _output_columns;
-    external tables answer {} — schema_of yields names only, and
-    fetching remote dtypes would pull the table."""
+    """Column → Spark dtype string for a join input: a
+    column-preserving chain over a Scan reads the catalog, anything else
+    lowers (the IR knows names, not types); external tables answer {} —
+    schema_of yields names only, and fetching remote dtypes would pull
+    the table."""
     base = _unwrap_column_preserving(n)
     if isinstance(base, ir.Scan):
         if base.table in getattr(catalog, "external_tables", {}):
@@ -1229,22 +1259,16 @@ def _aggregate_join_transpose(node, catalog):
         group_sides.append((k.strip(), s))
 
     # aggregate calls: strictly FN(col|*) AS name, args all on ONE side
-    parsed = []
+    parsed = _splittable_calls(node.agg_calls)
+    if parsed is None:
+        return None
     arg_sides = set()
-    for call in node.agg_calls:
-        m = _AJT_CALL_RE.match(call)
-        if not m:
-            return None
-        fn, arg, alias = m.group(1).upper(), m.group(2), m.group(3)
-        if arg == "*":
-            if fn != "COUNT":
-                return None
-        else:
+    for _, arg, _ in parsed:
+        if arg != "*":
             s = side_of(arg)
             if s is None:
                 return None
             arg_sides.add(s)
-        parsed.append((fn, arg, alias))
     from calcite_spark.plans.metadata import MetadataQuery
 
     mq = MetadataQuery(catalog)
@@ -1366,25 +1390,7 @@ def _aggregate_join_transpose(node, catalog):
     if not gate(p) or decimal_refused(p):
         return None
 
-    partial_calls, merge_calls = [], []
-    for i, (fn, arg, alias) in enumerate(parsed):
-        pc = f"__ajt{i}"
-        if fn in ("MIN", "MAX"):
-            partial_calls.append(f"{fn}({arg}) AS {pc}")
-            merge_calls.append(f"{fn}({pc}) AS {alias}")
-        elif fn == "COUNT":
-            partial_calls.append(f"COUNT({arg}) AS {pc}")
-            # COALESCE ≈ $SUM0: a GLOBAL aggregate over an empty join
-            # must yield 0, not SUM-over-nothing NULL
-            merge_calls.append(f"COALESCE(SUM({pc}), 0) AS {alias}")
-        elif fn == "SUM":
-            partial_calls.append(f"SUM({arg}) AS {pc}")
-            merge_calls.append(f"SUM({pc}) AS {alias}")
-        else:  # AVG → SUM/COUNT pair; bigint/ or double/ division → double,
-            # matching Spark's AVG result type for non-decimal inputs
-            partial_calls.append(f"SUM({arg}) AS {pc}s")
-            partial_calls.append(f"COUNT({arg}) AS {pc}c")
-            merge_calls.append(f"SUM({pc}s) / SUM({pc}c) AS {alias}")
+    partial_calls, merge_calls = _split_calls(parsed, "__ajt")
 
     partial = ir.Aggregate(
         tuple(partial_group(p)), tuple(partial_calls), inputs=(child.inputs[p],)
@@ -1496,15 +1502,9 @@ def _aggregate_union_transpose(node, catalog, gate=True):
     for k in node.group_keys:
         if not _AJT_IDENT_RE.match(k.strip()):
             return None
-    parsed = []
-    for call in node.agg_calls:
-        m = _AJT_CALL_RE.match(call)
-        if not m:
-            return None
-        fn, arg, alias = m.group(1).upper(), m.group(2), m.group(3)
-        if arg == "*" and fn != "COUNT":
-            return None
-        parsed.append((fn, arg, alias))
+    parsed = _splittable_calls(node.agg_calls)
+    if parsed is None:
+        return None
     fresh = [f"__aut{i}{s}" for i in range(len(parsed)) for s in ("", "s", "c")]
     sum_avg_args = {
         arg for fn, arg, _ in parsed if fn in ("SUM", "AVG") and arg != "*"
@@ -1530,22 +1530,7 @@ def _aggregate_union_transpose(node, catalog, gate=True):
                 groups *= ndv
             if min(groups, rows) > rows / 2:
                 return None
-    partial_calls, merge_calls = [], []
-    for i, (fn, arg, alias) in enumerate(parsed):
-        pc = f"__aut{i}"
-        if fn in ("MIN", "MAX"):
-            partial_calls.append(f"{fn}({arg}) AS {pc}")
-            merge_calls.append(f"{fn}({pc}) AS {alias}")
-        elif fn == "COUNT":
-            partial_calls.append(f"COUNT({arg}) AS {pc}")
-            merge_calls.append(f"COALESCE(SUM({pc}), 0) AS {alias}")
-        elif fn == "SUM":
-            partial_calls.append(f"SUM({arg}) AS {pc}")
-            merge_calls.append(f"SUM({pc}) AS {alias}")
-        else:  # AVG
-            partial_calls.append(f"SUM({arg}) AS {pc}s")
-            partial_calls.append(f"COUNT({arg}) AS {pc}c")
-            merge_calls.append(f"SUM({pc}s) / SUM({pc}c) AS {alias}")
+    partial_calls, merge_calls = _split_calls(parsed, "__aut")
     new_branches = tuple(
         ir.Aggregate(tuple(node.group_keys), tuple(partial_calls), inputs=(b,))
         for b in child.inputs

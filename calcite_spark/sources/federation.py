@@ -21,11 +21,10 @@ parallel fetch; that path is gated on a driver jar being present.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame
 
 from calcite_spark.plans import ir
+from calcite_spark.sql import lexer
 from calcite_spark.sql.rel2sql import DUCKDB, SQLITE, Dialect, to_sql
 
 
@@ -367,9 +366,6 @@ _PRUNE_SAFE_NODES = (
     ir.Exchange,
 )
 
-_IDENT_RE = re.compile(r"[A-Za-z_]\w*")
-
-
 def _all_nodes_safe(root) -> bool:
     if not isinstance(root, _PRUNE_SAFE_NODES):
         return False
@@ -388,10 +384,11 @@ def _output_is_expression_defined(root) -> bool:
     return isinstance(n, (ir.Project, ir.Aggregate))
 
 
-def _referenced_identifiers(root) -> set:
-    """Every identifier token in every string attribute of every node
-    (conditions, projections, agg calls, sort keys). Over-collection
-    (function names, table names) is sound — it only KEEPS columns."""
+def _plan_column_refs(root) -> set:
+    """Lower-cased lexer.column_refs of every string attribute of every
+    node (conditions, projections, agg calls, sort keys).
+    Over-collection (table names, join types) is sound — it only KEEPS
+    columns."""
     out: set = set()
 
     def walk(n):
@@ -400,12 +397,9 @@ def _referenced_identifiers(root) -> set:
                 continue
             items = v if isinstance(v, (tuple, list)) else (v,)
             for item in items:
-                if isinstance(item, str):
-                    out.update(t.lower() for t in _IDENT_RE.findall(item))
-                elif isinstance(item, (tuple, list)):
-                    for s in item:
-                        if isinstance(s, str):
-                            out.update(t.lower() for t in _IDENT_RE.findall(s))
+                for s in item if isinstance(item, (tuple, list)) else (item,):
+                    if isinstance(s, str):
+                        out.update(t.lower() for t in lexer.column_refs(s))
         for c in n.inputs:
             walk(c)
 
@@ -430,7 +424,7 @@ def federate(node: ir.RelNode, catalog) -> ir.RelNode:
     counter = [0]
     prune_refs = None
     if _all_nodes_safe(node) and _output_is_expression_defined(node):
-        prune_refs = _referenced_identifiers(node)
+        prune_refs = _plan_column_refs(node)
 
     def maybe_prune(n: ir.RelNode, eng) -> ir.RelNode:
         if prune_refs is None or n is node:  # never re-shape the root

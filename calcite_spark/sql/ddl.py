@@ -895,9 +895,7 @@ class DdlExecutor:
             g
             for g in not_null
             if g in generated
-            and {
-                i.lower() for i in re.findall(r"[A-Za-z_]\w*", generated[g])
-            }
+            and {i.lower() for i in lexer.column_refs(generated[g])}
             & {a.lower() for a in assignments}
         ]
         if checked or gen_checked:
@@ -1274,11 +1272,10 @@ class DdlExecutor:
                 hit = next(
                     (
                         s
-                        for s in sel_items
-                        if (am := re.match(
-                            r"(?is)^(.*\S)\s+AS\s+([A-Za-z_]\w*)\s*$", s
-                        ))
-                        and _expr_norm(am.group(1)) == knorm
+                        for s, (body, alias) in zip(
+                            sel_items, map(lexer.split_alias, sel_items)
+                        )
+                        if alias and _expr_norm(body) == knorm
                     ),
                     None,
                 )

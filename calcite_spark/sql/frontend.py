@@ -65,7 +65,14 @@ def similar_to_regex(pattern: str) -> str:
     return "^(" + "".join(out) + ")$"
 
 
-_SIMILAR_RE = re.compile(r"(\S+)\s+SIMILAR\s+TO\s+'([^']*)'", re.I)
+# matched on the lexer mask: the operand is a (qualified) name, a call
+# or parenthesized expression nested up to three levels, or a literal
+_NESTED = r"\((?:[^()]|\((?:[^()]|\([^()]*\))*\))*\)"
+_SIMILAR_RE = re.compile(
+    rf"((?:(?:[A-Za-z_]\w*|`[^`]*`)\s*\.\s*)*(?:[A-Za-z_]\w*|`[^`]*`)"
+    rf"(?:\s*{_NESTED})?|{_NESTED}|'[^']*')\s+SIMILAR\s+TO\s+'([^']*)'",
+    re.I,
+)
 
 # FROM <tbl> FOR SYSTEM_TIME AS OF <ts-literal/expr-until-whitespace|quoted>
 _SYSTIME_RE = re.compile(
@@ -538,12 +545,12 @@ class SqlFrontend:
             lead.append((e, order_keys[i][km.end(1):].strip()))
         out_names, alias_src = [], {}
         for s in sel_items:
-            am = re.search(r"(?is)\bAS\s+([A-Za-z_]\w*)\s*$", s)
-            if am:
-                out_names.append(am.group(1))
-                alias_src[am.group(1).lower()] = s[: am.start()].strip()
-            elif re.match(r"^[A-Za-z_]\w*(\.[A-Za-z_]\w*)?$", s):
-                out_names.append(s.split(".")[-1])
+            src, alias = lexer.split_alias(s)
+            if alias:
+                alias_src[alias.lower()] = src
+            name = lexer.item_name(s)
+            if name:
+                out_names.append(name)
             else:
                 raise ValueError(
                     f"DISTINCT ON select item {s!r} needs an AS alias"
@@ -647,18 +654,18 @@ class SqlFrontend:
             )
         repl = {}
         for item in lexer.split_top_level(m.group(2)):
-            im = re.match(r"(?is)^(.*?)\s+AS\s+([A-Za-z_]\w*)\s*$", item.strip())
-            if im is None:
+            expr, alias = lexer.split_alias(item)
+            if alias is None:
                 raise ValueError(
                     f"star REPLACE: each item must be `expr AS column` "
                     f"(got {item.strip()!r})"
                 )
-            col = im.group(2).lower()
+            col = alias.lower()
             if col in repl:
                 raise ValueError(
-                    f"star REPLACE: duplicate target column {im.group(2)!r}"
+                    f"star REPLACE: duplicate target column {alias!r}"
                 )
-            repl[col] = im.group(1).strip()
+            repl[col] = expr
         cols = list(self.catalog.table(table).columns)
         missing = [c for c in repl if c not in {x.lower() for x in cols}]
         if missing:
@@ -1832,9 +1839,7 @@ class SqlFrontend:
             ):
                 wrapped.append(it)
                 continue
-            am = re.match(r"(?is)^(.*?)\s+AS\s+(\w+)\s*$", it)
-            expr = (am.group(1) if am else it).strip()
-            name = am.group(2) if am else None
+            expr, name = lexer.split_alias(it)
             if re.fullmatch(r"[\w.]+", expr):
                 name = name or expr.rsplit(".", 1)[-1]
                 wrapped.append(f"any_value({expr}) AS {name}")
@@ -1998,7 +2003,7 @@ class SqlFrontend:
         def sub(m):
             return f"{m.group(1)} RLIKE '{similar_to_regex(m.group(2))}'"
 
-        return _SIMILAR_RE.sub(sub, text)
+        return lexer.sub(_SIMILAR_RE, sub, text)
 
     def _expand_system_time(self, text: str) -> str:
         def sub(m):
@@ -2016,7 +2021,7 @@ class SqlFrontend:
                 f"WHERE {ver} <= {ts}) WHERE __ver_rn = 1) AS {table}"
             )
 
-        return _SYSTIME_RE.sub(sub, text)
+        return lexer.sub(_SYSTIME_RE, sub, text)
 
     def _expand_window_tvfs(self, text: str) -> str:
         def sub(m):
@@ -2087,7 +2092,7 @@ class SqlFrontend:
                 f"CAST(floor({us} / 1e6 / {slide}) AS BIGINT) * {slide} - k.k * {slide} + {size})"
             )
 
-        return _TVF_RE.sub(sub, text)
+        return lexer.sub(_TVF_RE, sub, text)
 
     def _expand_custom_types(self, text: str) -> str:
         """CAST(x AS <user type>) for CREATE TYPE registrations
@@ -2310,11 +2315,10 @@ class SqlFrontend:
         spec["define"] = {k: unqual(v) for k, v in define.items()}
         measures = {}
         for ent in lexer.split_top_level(segs.get("MEASURES", "")):
-            mm = re.match(r"(?is)^(.*?)\s+AS\s+(\w+)\s*$", ent.strip())
-            if not mm:
+            mexpr, name = lexer.split_alias(ent)
+            if name is None:
                 raise ValueError(f"unsupported MEASURES entry: {ent!r}")
-            mexpr = re.sub(r"(?i)^\s*(FINAL|RUNNING)\s+", "", mm.group(1).strip())
-            measures[mm.group(2)] = mexpr
+            measures[name] = re.sub(r"(?i)^\s*(FINAL|RUNNING)\s+", "", mexpr)
         spec["measures"] = measures
         return spec
 
@@ -2628,7 +2632,7 @@ class SqlFrontend:
                     f"functionally dependent on the distinct key')))"
                 )
             rebuilt = f"{pre}{repl}{post}".strip()
-            if not re.search(r"(?is)\bAS\s+\w+\s*$", rebuilt):
+            if lexer.split_alias(rebuilt)[1] is None:
                 rebuilt += f" AS __wd_out{i}"
             out_items.append(rebuilt)
         inner_keys = keys + [d for d in (dset or []) if d not in keys]
@@ -3266,8 +3270,6 @@ class SqlFrontend:
         if m.group("w"):
             b.filter(m.group("w").strip())
         if m.group("gb"):
-            from calcite_spark.plans.materialize import _key_alias
-
             gb = m.group("gb").strip()
             # GROUP BY ROLLUP/CUBE/GROUPING SETS (r10): lift with the
             # matching IR group_type so the groupSets-from-tile
@@ -3325,11 +3327,8 @@ class SqlFrontend:
                 hit = next(
                     (
                         s
-                        for s in sel
-                        if (am := re.match(
-                            r"(?is)^(.*\S)\s+AS\s+([A-Za-z_]\w*)\s*$", s
-                        ))
-                        and _expr_norm(am.group(1)) == knorm
+                        for s, (body, alias) in zip(sel, map(lexer.split_alias, sel))
+                        if alias and _expr_norm(body) == knorm
                     ),
                     None,
                 )
@@ -3403,36 +3402,29 @@ class SqlFrontend:
             for s in sel:
                 if s in keys:
                     # expression keys output their ALIAS column
-                    out_order.append(_key_alias(s))
+                    out_order.append(lexer.item_name(s))
                 else:
-                    am = re.search(r"(?is)\bAS\s+([A-Za-z_]\w*)\s*$", s)
-                    if am is None:
+                    alias = lexer.split_alias(s)[1]
+                    if alias is None:
                         # unaliased aggregate: spark.sql's auto-name
                         # differs from the IR's — fall back verbatim
                         return None
-                    out_order.append(am.group(1))
+                    out_order.append(alias)
             if hv_expr is not None:
-                # after splicing, every remaining identifier must be an
-                # OUTPUT name (alias/key), a hidden call column, or a
-                # SQL word — anything else falls back verbatim
-                hv_idents = {
-                    i.lower()
-                    for i in re.findall(
-                        r"[A-Za-z_]\w*", re.sub(r"'[^']*'", "", hv_expr)
-                    )
+                # after splicing, every remaining column reference must
+                # be an OUTPUT name (alias/key) or a hidden call column,
+                # and no call may remain (GROUPING(), an unspliced
+                # aggregate) — anything else falls back verbatim
+                hv_idents = {i.lower() for i in lexer.column_refs(hv_expr)}
+                allowed = {n.lower() for n in out_order} | {
+                    f"__h{i}" for i in range(len(hidden))
                 }
-                allowed = (
-                    {n.lower() for n in out_order}
-                    | {f"__h{i}" for i in range(len(hidden))}
-                    | {
-                        "and", "or", "not", "in", "between", "like", "is",
-                        "null", "true", "false",
-                    }
-                )
-                if not hv_idents <= allowed:
+                if not hv_idents <= allowed or lexer.search(
+                    r"(?i)\b(?!(?:AND|OR|NOT|IN)\b)[A-Za-z_]\w*\s*\(", hv_expr
+                ):
                     return None
                 b.filter(hv_expr)
-            if hidden or out_order != [_key_alias(k) for k in keys] + [
+            if hidden or out_order != [lexer.item_name(k) for k in keys] + [
                 o for s, o in zip(sel, out_order) if s not in keys
             ]:
                 b.project(*out_order)
@@ -3455,12 +3447,9 @@ class SqlFrontend:
             else:
                 out_names = set()
                 for s in sel:
-                    am = re.search(r"(?is)\bAS\s+([A-Za-z_]\w*)\s*$", s)
-                    if am is not None:
-                        out_names.add(am.group(1).lower())
-                    elif re.fullmatch(r"[A-Za-z_]\w*", s):
-                        out_names.add(s.lower())
                     # unaliased expressions contribute no sortable name
+                    if name := lexer.item_name(s):
+                        out_names.add(name.lower())
             if out_names is not None:
                 bare = {
                     re.split(r"\s+", k.strip())[0].lower() for k in okeys
@@ -3542,13 +3531,7 @@ class SqlFrontend:
                 # string-literal CONTENTS are data, not identifiers:
                 # WHERE o_comment = 'see l_quantity' must not collect
                 # l_quantity as a right-side column (ADVICE r8)
-                idents = {
-                    w
-                    for w in re.findall(
-                        r"[A-Za-z_]\w*", re.sub(r"'(?:[^']|'')*'", " ", c)
-                    )
-                    if w in cols1 or w in cols2
-                }
+                idents = {w for w in lexer.column_refs(c) if w in cols1 or w in cols2}
                 if idents and idents <= cols1:
                     filters[t1].append(c)
                 elif idents and idents <= cols2:
@@ -3596,10 +3579,7 @@ class SqlFrontend:
             agg_calls.append(item)
             out_names.append(am.group(3))
         b.aggregate(gb, agg_calls)
-        agg_aliases = [
-            re.search(r"(?is)\bAS\s+([A-Za-z_]\w*)$", c).group(1)
-            for c in agg_calls
-        ]
+        agg_aliases = [lexer.split_alias(c)[1] for c in agg_calls]
         if out_names != gb + agg_aliases:
             b.project(*out_names)
         if m.group("ob"):
@@ -3688,10 +3668,7 @@ class SqlFrontend:
             agg_calls.append(item)
             out_names.append(am.group(3))
         b.aggregate(gb, agg_calls)
-        agg_aliases = [
-            re.search(r"(?is)\bAS\s+([A-Za-z_]\w*)$", c).group(1)
-            for c in agg_calls
-        ]
+        agg_aliases = [lexer.split_alias(c)[1] for c in agg_calls]
         if out_names != gb + agg_aliases:
             b.project(*out_names)
         if m.group("ob"):

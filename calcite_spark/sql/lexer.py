@@ -225,3 +225,106 @@ def iter_top_level(text: str, word: str):
 def find_top_level(text: str, word: str, start: int = 0) -> int:
     """The first of iter_top_level at or after `start`, or -1."""
     return next((i for i in iter_top_level(text, word) if i >= start), -1)
+
+
+# -- expression items -----------------------------------------------------
+# An IR expression is a Spark SQL string (≈ RexNode in SQL form). The
+# two readers below are the only places that decide what such a string
+# names: its alias, and the columns it references.
+
+_NAME = r"`(?:[^`]|``)*`|[A-Za-z_]\w*"
+_ALIAS_TAIL_RE = re.compile(rf"(?i)\bAS\s+({_NAME})\s*$")
+_QUALIFIED_RE = re.compile(rf"(?:(?:{_NAME})\s*\.\s*)*({_NAME})")
+# on the mask a backticked name's contents are blank
+_WORD_RE = re.compile(r"(?<!\w)(?:`[^`]*`|[A-Za-z_]\w*)")
+_CALL_AHEAD_RE = re.compile(r"\s*\(")
+# words that cannot be an unquoted column
+_OPERATOR_WORDS = frozenset(
+    "AND OR NOT IS NULL TRUE FALSE CASE WHEN THEN ELSE END IN BETWEEN LIKE "
+    "DISTINCT".split()
+)
+# Spark names these niladic functions itself (current_date())
+_NILADIC_RE = re.compile(r"(?i)current_\w+|localtimestamp|session_user|user")
+# syntax positions whose words are never column references
+_NOT_A_REFERENCE_RE = re.compile(
+    r"""(?ix)
+      (?:\bAS\b|::)\s*[A-Za-z_]\w*(?:\s*<[^()]*?>+)?   # alias, CAST / :: type
+    | \bEXTRACT\s*\(\s*[A-Za-z_]\w*\s+FROM\b           # EXTRACT(field FROM
+    | \bINTERVAL\b(?:\s*(?:'[^']*'|[-+]?[\d.]+)\s*     # INTERVAL '1' DAY,
+        [A-Za-z_]\w*(?:\s+TO\s+[A-Za-z_]\w*)?)+        #   '1-2' YEAR TO MONTH
+    | [A-Za-z_]\w*(?=\s*')                             # DATE '...', ESCAPE '\'
+    | \bNULLS\s+(?:FIRST|LAST)\b
+    | (?<=[\w)'`\]])\s+(?:ASC|DESC)\b(?=\s*(?:$|[,)]|(?:NULLS|ROWS|RANGE)\b))
+    | \b(?:PARTITION|ORDER|GROUP)\s+BY\b               # window specs
+    | \b(?:ROWS|RANGE)\s+BETWEEN\b
+    | \b(?:UNBOUNDED|CURRENT|\d+)\s+(?:PRECEDING|FOLLOWING|ROW)\b
+    | \bWITHIN\s+GROUP\b
+    | \bFILTER\s*\(\s*WHERE\b
+    | \b(?:IGNORE|RESPECT)\s+NULLS\b
+    """
+)
+
+
+def _unquote(name: str) -> str:
+    if name.startswith("`"):
+        return name[1:-1].replace("``", "`")
+    return name
+
+
+@lru_cache(maxsize=4096)
+def split_alias(expr: str) -> tuple[str, str | None]:
+    """(body, alias) of a select item `body AS alias` ≈ the AS operand
+    SqlValidatorUtil.getAlias reads: the alias is an identifier or a
+    backticked name (returned unquoted) after an AS at paren depth 0
+    that ends the item. Otherwise (expr stripped, None): an AS inside a
+    literal, a comment or a CAST's parentheses is not an alias."""
+    m = _ALIAS_TAIL_RE.search(expr)
+    if m is not None:
+        head = mask(expr)[: m.start() + 2]
+        body = expr[: m.start()].strip()
+        if body and head[-2:].upper() == "AS" and head.count("(") == head.count(")"):
+            return body, _unquote(m.group(1))
+    return expr.strip(), None
+
+
+@lru_cache(maxsize=4096)
+def item_name(expr: str) -> str | None:
+    """The output name Spark gives a select item ≈
+    SqlValidatorUtil.getAlias: its alias, else the last part of a
+    (qualified) column name, else None — Spark derives a name such as
+    `count(1)` for `count(*)` itself."""
+    body, alias = split_alias(expr)
+    if alias is not None:
+        return alias
+    m = _QUALIFIED_RE.fullmatch(body)
+    if m is None or body.upper() in _OPERATOR_WORDS or _NILADIC_RE.fullmatch(body):
+        return None
+    return _unquote(m.group(1))
+
+
+@lru_cache(maxsize=4096)
+def column_refs(expr: str) -> tuple[str, ...]:
+    """Names an expression may reference as columns, in order, once
+    each (≈ RelOptUtil.InputFinder over a RexNode). Read on the mask,
+    so literal contents never count. A word counts unless its position
+    rules it out — a function name before `(`, an alias or a CAST /
+    `::` type, EXTRACT's field, an INTERVAL unit, a typed-literal
+    prefix (DATE '...'), NULLS FIRST|LAST, ASC|DESC, window-spec
+    keywords — or it is an operator word (AND, CASE, NULL, ...). Both
+    parts of `t.c` count. Over-collection is the safe side: a caller
+    that intersects the result with known columns gets every column
+    the expression can touch."""
+    masked = mask(expr)
+    skip = set()
+    for m in _NOT_A_REFERENCE_RE.finditer(masked):
+        skip.update(range(m.start(), m.end()))
+    out = {}
+    for m in _WORD_RE.finditer(masked):
+        if (
+            m.start() in skip
+            or _CALL_AHEAD_RE.match(masked, m.end())
+            or m.group().upper() in _OPERATOR_WORDS
+        ):
+            continue
+        out.setdefault(_unquote(expr[m.start() : m.end()]), None)
+    return tuple(out)

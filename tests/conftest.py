@@ -17,6 +17,38 @@ TABLES = (
 )
 
 
+# a failure that names one of these may mean the Spark JVM died (OOM
+# kill, crash); every later test would then fail the same way
+_JVM_GONE = ("Py4JNetworkError", "ConnectionRefusedError", "Answer from Java side is empty")
+
+
+def _jvm_alive() -> bool:
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return True
+    try:
+        sc._jvm.java.lang.System.currentTimeMillis()
+        return True
+    except Exception:
+        return False
+
+
+def pytest_runtest_logreport(report):
+    """Stop the run once, with the root cause, when the JVM is gone."""
+    if not report.failed:
+        return
+    text = report.longreprtext
+    cause = next((c for c in _JVM_GONE if c in text), None)
+    if cause is not None and not _jvm_alive():
+        pytest.exit(
+            f"the Spark JVM is gone ({cause} in {report.nodeid}); "
+            "stopping instead of failing every later test",
+            returncode=3,
+        )
+
+
 @pytest.fixture(scope="session")
 def spark():
     from calcite_spark.session import get_spark

@@ -256,3 +256,51 @@ def test_union_transpose_value_invariant(fuzz_cat, spec):
     ra = sorted((tuple(r) for r in df_a.collect()), key=nones_last)
     rb = sorted((tuple(r) for r in df_b.collect()), key=nones_last)
     assert ra == rb, (spec, ra, rb)
+
+
+# -- structural output names -------------------------------------------
+
+
+@settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(spec=plan_spec())
+def test_output_names_match_lowered_columns(fuzz_cat, spec):
+    """ir.output_names reads a plan's column names without lowering it;
+    where it answers, the answer is the lowered DataFrame's columns."""
+    from calcite_spark.plans import ir
+
+    plan = _build(fuzz_cat, spec)
+    names = ir.output_names(plan, fuzz_cat)
+    if names is not None:
+        assert names == plan.to_df(fuzz_cat).columns
+
+
+def test_output_names_per_node_kind(fuzz_cat):
+    from calcite_spark.plans import ir
+
+    vals = ir.Values([(1, "a")], "k int, `v` string")
+    scan = ir.Scan("nation")
+    plans = [
+        vals,
+        ir.SetOp("UNION_ALL", inputs=(vals, vals)),
+        ir.Window(("rank() OVER (ORDER BY k) AS r",), inputs=(vals,)),
+        ir.Snapshot("1", "k", "k", inputs=(vals,)),
+        ir.Exchange("hash", ("k",), inputs=(vals,)),
+        ir.Join("n_regionkey = r_regionkey", "SEMI", inputs=(scan, ir.Scan("region"))),
+        ir.Aggregate(
+            ("n_regionkey % 2 AS parity",),
+            ("count(*) AS n", "max(n_name) AS m"),
+            "ROLLUP",
+            inputs=(scan,),
+        ),
+        ir.Project(("*", "`n_name` AS `c c`", "N_REGIONKEY"), inputs=(scan,)),
+    ]
+    for plan in plans:
+        assert ir.output_names(plan, fuzz_cat) == plan.to_df(fuzz_cat).columns
+    # Spark derives these names itself (count(1), (k + 1)): no answer
+    assert ir.output_names(ir.Aggregate((), ("count(*)",), inputs=(vals,)), fuzz_cat) is None
+    assert ir.output_names(ir.Project(("k + 1",), inputs=(vals,)), fuzz_cat) is None
+    assert ir.output_names(ir.Correlate("SELECT 1 AS x"), fuzz_cat) is None

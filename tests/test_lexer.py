@@ -117,6 +117,58 @@ def test_matches_read_the_original_text():
     assert out == "bar 'foo' -- foo\nbar"
 
 
+# -- expression items: split_alias, item_name, column_refs ---------------
+
+
+@pytest.mark.parametrize(
+    "expr, want",
+    [
+        ("CAST(a AS INT) AS b", ("CAST(a AS INT)", "b")),
+        ("x + 1 AS `my col`", ("x + 1", "my col")),
+        ("'x AS y'", ("'x AS y'", None)),
+        ("sum(v) as total", ("sum(v)", "total")),
+        ("CAST(a AS INT)", ("CAST(a AS INT)", None)),
+        ("  a + b  ", ("a + b", None)),
+    ],
+    ids=["cast_then_alias", "backticked", "literal", "lower_case", "cast_only", "none"],
+)
+def test_split_alias(expr, want):
+    assert lexer.split_alias(expr) == want
+
+
+def test_item_name_is_what_spark_names_the_column():
+    assert lexer.item_name("CAST(a AS INT) AS b") == "b"
+    assert lexer.item_name("t.Col") == "Col"
+    assert lexer.item_name("`a b`") == "a b"
+    # Spark derives these names itself (count(1), true, current_date())
+    for expr in ["count(*)", "a + 1", "TRUE", "current_date", "*"]:
+        assert lexer.item_name(expr) is None
+
+
+@pytest.mark.parametrize(
+    "expr, refs",
+    [
+        ("EXTRACT(YEAR FROM d)", ["d"]),
+        ("d + INTERVAL '1' DAY", ["d"]),
+        ("CAST(x AS string)", ["x"]),
+        ("x NULLS FIRST", ["x"]),
+        ("x::decimal(10,2) > DATE '2020-01-01'", ["x"]),
+        ("s LIKE 'a%' ESCAPE '!' AND s <> 'year'", ["s"]),
+        (
+            "rank() OVER (PARTITION BY a ORDER BY b DESC "
+            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)",
+            ["a", "b"],
+        ),
+        ("year + 1", ["year"]),
+        ("concat(first, last) AS n", ["first", "last"]),
+        ("CASE WHEN month > 6 THEN date ELSE string END", ["month", "date", "string"]),
+        ("t.c + `odd name` + 1e5", ["t", "c", "odd name"]),
+    ],
+)
+def test_column_refs(expr, refs):
+    assert lexer.column_refs(expr) == tuple(refs)
+
+
 # -- parse(): the cases quote parity got wrong --------------------------
 
 
@@ -167,6 +219,24 @@ def test_comment_dash_is_not_a_unary_minus(fe):
 def test_trailing_comment_stays_after_appended_clause(fe):
     out = fe.parse("SELECT a, b BY k FROM t\n-- it's")[0]
     assert out.endswith("ORDER BY k\n-- it's")
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT 'x SIMILAR TO ''a%''' AS s",
+        "SELECT 'FROM t FOR SYSTEM_TIME AS OF 1' AS s",
+        "SELECT 'TABLE(TUMBLE(TABLE t, DESCRIPTOR(ts), INTERVAL ''1'' DAY))' AS s",
+    ],
+    ids=["similar_to", "system_time", "tumble"],
+)
+def test_macro_text_inside_a_literal_is_data(fe, sql):
+    assert fe.parse(sql)[0] == sql
+
+
+def test_similar_to_operand_is_a_whole_call(fe):
+    out = fe.parse("SELECT lower('Ab') SIMILAR TO 'a%' AS m")[0]
+    assert out == "SELECT lower('Ab') RLIKE '^(a.*)$' AS m"
 
 
 # -- mutation: comments around every corpus statement -------------------
@@ -260,27 +330,60 @@ _ALLOWED_TOGGLES = {
 }
 _PARITY_RE = re.compile(r"""\.count\(\s*(?:"'"|'\\'')""")
 _TOGGLE_RE = re.compile(r"\b(\w+)\s*=\s*not\s+\1\b")
+# an `AS\s+(...)\s*$` alias capture and a findall(r"[A-Za-z_]\w*", ...)
+# identifier scan: lexer.split_alias / lexer.column_refs own these
+_ALIAS_CAPTURE_RE = re.compile(
+    r"AS\\s\+\((?:\?P<\w+>)?(?:\\w[+*]|\[A-Za-z_\]\\w\*)\)[^\"'\n]*?(?:\\s\*)?\$"
+)
+_IDENT_SCAN_RE = re.compile(r"findall\(\s*r?[\"']\[A-Za-z_\]\\w\*[\"']")
+# shape patterns of other grammars that end in an alias: aggregate
+# calls FN(arg) AS name, a GROUPING call, an ORDER item
+_ALLOWED_SHAPES = {
+    ("plans/materialize.py", "_AGG_RE"),
+    ("plans/materialize.py", "_DERIVED_RE"),
+    ("plans/materialize.py", "_EXTRACT_KEY_RE"),
+    ("plans/materialize.py", "_map_rollup_calls"),
+    ("plans/rewrite.py", "_AJT_CALL_RE"),
+    ("sql/frontend.py", "_expand_select_by"),
+}
+
+
+def _owner(nodes, no):
+    """Name of the innermost function or module-level assignment that
+    spans line `no`."""
+    node = min(
+        (n for n in nodes if n.lineno <= no <= n.end_lineno),
+        key=lambda n: n.end_lineno - n.lineno,
+        default=None,
+    )
+    if isinstance(node, ast.Assign):
+        return node.targets[0].id
+    return getattr(node, "name", None)
 
 
 def _quote_scanners(src: str, rel: str) -> list[str]:
     found = []
     tree = ast.parse(src)
-    lines = src.splitlines()
-    funcs = [
+    owners = [
         n for n in ast.walk(tree)
         if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+    ] + [
+        n for n in tree.body
+        if isinstance(n, ast.Assign) and isinstance(n.targets[0], ast.Name)
     ]
-    for no, line in enumerate(lines, 1):
+    for no, line in enumerate(src.splitlines(), 1):
         if _PARITY_RE.search(line):
             found.append(f"{rel}:{no}: quote-parity check")
-        if _TOGGLE_RE.search(line):
-            owner = min(
-                (f for f in funcs if f.lineno <= no <= f.end_lineno),
-                key=lambda f: f.end_lineno - f.lineno,
-                default=None,
-            )
-            if (rel, getattr(owner, "name", None)) not in _ALLOWED_TOGGLES:
-                found.append(f"{rel}:{no}: hand-rolled in-string toggle")
+        if _TOGGLE_RE.search(line) and (rel, _owner(owners, no)) not in _ALLOWED_TOGGLES:
+            found.append(f"{rel}:{no}: hand-rolled in-string toggle")
+    for rx, what in (
+        (_ALIAS_CAPTURE_RE, "alias capture regex"),
+        (_IDENT_SCAN_RE, "identifier scan"),
+    ):
+        for m in rx.finditer(src):
+            no = src.count("\n", 0, m.start()) + 1
+            if (rel, _owner(owners, no)) not in _ALLOWED_SHAPES:
+                found.append(f"{rel}:{no}: {what}")
     return found
 
 
@@ -302,3 +405,16 @@ def test_guard_catches_a_new_scanner():
         "    return text.count(\"'\", 0, pos) % 2\n"
     )
     assert len(_quote_scanners(src, "x.py")) == 2
+
+
+def test_guard_catches_a_new_expression_reader():
+    src = (
+        "_A = re.compile(r\"(?is)^(.*)\\s+AS\\s+(\\w+)\\s*$\")\n"
+        "def f(expr):\n"
+        "    return re.findall(\n"
+        "        r\"[A-Za-z_]\\w*\", expr)\n"
+    )
+    assert [f.split(": ", 1)[1] for f in _quote_scanners(src, "x.py")] == [
+        "alias capture regex",
+        "identifier scan",
+    ]

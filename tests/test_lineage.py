@@ -178,3 +178,32 @@ def test_lineage_report_covers_all_output_columns(cat):
         {Origin("customer", "c_mktsegment", False)}
     )
     assert rep["total"] == frozenset({Origin("orders", "o_totalprice", True)})
+
+
+def test_keyword_named_columns_keep_their_origins(spark, cat):
+    # columns named like SQL words are columns: an empty origin set
+    # would read "provably no base-table origin" and clear a PII audit
+    cat.register_df(
+        "kw_cols",
+        spark.createDataFrame(
+            [(2020, 1, "a", "b", "2020-01-01", "s")],
+            "year int, month int, first string, last string, date string, "
+            "string string",
+        ),
+    )
+    plan = (
+        _b(cat)
+        .scan("kw_cols")
+        .project(
+            "year + 1 AS y",
+            "concat(first, last) AS n",
+            "CASE WHEN month > 6 THEN date ELSE string END AS c",
+        )
+        .build()
+    )
+    derived = lambda *cols: frozenset(Origin("kw_cols", c, True) for c in cols)  # noqa: E731
+    assert lineage_report(plan, cat) == {
+        "y": derived("year"),
+        "n": derived("first", "last"),
+        "c": derived("month", "date", "string"),
+    }
