@@ -69,48 +69,95 @@ class TableEntry:
     schema: object | None = None
 
 
-# In-process parquet schema memo (r15, guide §1.2): every fresh Catalog
-# re-infers the schema of the same immutable parquet dir with one Spark
-# job per table — ~2 jobs per catalog-opening query in the registry
-# sweep. The memo is metadata-only (a StructType, never rows), lives
-# only for the process, and its key embeds the directory mtime + file
-# listing, so ANY file change (append, overwrite, compaction)
-# invalidates it and the schema is re-inferred. entry.schema (set by
-# writers that know what they wrote) takes precedence and bypasses this.
-_SCHEMA_MEMO: dict = {}
+# In-process memo of what a table's files answer without a Spark job:
+# the parquet schema (r15, guide §1.2: every fresh Catalog re-inferred
+# it with one job per table), the exact row count and NDV probes
+# (≈ Statistic.java / RelMdRowCount: statistics are read, not queried).
+# Values are metadata only, live only for the process, and are keyed by
+# the table's file snapshot: a recursive listing with (relpath, size,
+# mtime_ns) per file, so an append into a partition subdirectory or an
+# in-place rewrite that keeps the file name changes the key. entry.schema
+# (set by writers that know what they wrote) takes precedence over the
+# schema memo.
+_FILE_MEMO: dict = {}
 
 
-def _schema_memo_key(entry):
-    if entry.fmt != "parquet" or not entry.path:
-        return None  # only parquet dirs; other formats infer as before
+def _file_snapshot(path: str):
+    """(relpath, size, mtime_ns) of every file under `path`, sorted;
+    None when the path cannot be listed."""
     try:
-        st = os.stat(entry.path)
-        names = (
-            tuple(sorted(os.listdir(entry.path)))
-            if os.path.isdir(entry.path)
-            else ()
-        )
+        if os.path.isfile(path):
+            st = os.stat(path)
+            return (("", st.st_size, st.st_mtime_ns),)
+        if not os.path.isdir(path):
+            return None
+        out = []
+        for root, _dirs, files in os.walk(path):
+            for f in files:
+                full = os.path.join(root, f)
+                st = os.stat(full)
+                out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
     except OSError:
+        return None
+    return tuple(sorted(out))
+
+
+def snapshot_key(entry):
+    """The file-snapshot key of a parquet table, or None when the
+    table is not file-backed parquet (other formats, registered
+    DataFrames, unlistable paths)."""
+    if entry is None or entry.fmt != "parquet" or not entry.path:
+        return None
+    snap = _file_snapshot(entry.path)
+    if snap is None:
         return None
     return (
         entry.path,
         tuple(sorted(entry.options.items())),
-        st.st_mtime_ns,
-        names,
+        NANOS_TS_COLS.get(entry.name, ()),
+        entry.schema.simpleString() if entry.schema is not None else None,
+        snap,
     )
 
 
-def _schema_memo_get(entry):
-    key = _schema_memo_key(entry)
-    return _SCHEMA_MEMO.get(key) if key is not None else None
+def memo_get(key, what):
+    """The memoized value of `what` under a snapshot_key (None: none)."""
+    return _FILE_MEMO.get((key, what)) if key is not None else None
 
 
-def _schema_memo_put(entry, schema) -> None:
-    key = _schema_memo_key(entry)
+def memo_put(key, what, value) -> None:
     if key is not None:
-        if len(_SCHEMA_MEMO) > 512:
-            _SCHEMA_MEMO.clear()  # bound driver memory; refill on demand
-        _SCHEMA_MEMO[key] = schema
+        if len(_FILE_MEMO) > 4096:
+            _FILE_MEMO.clear()  # bound driver memory; refill on demand
+        _FILE_MEMO[(key, what)] = value
+
+
+def _footer_rows(entry) -> int | None:
+    """Exact row count from the parquet footers of the files Spark
+    reads: a single file, or a directory's files minus `_`/`.` names,
+    in flat or `col=value` partition subdirectories. None when reader
+    options or another layout could make Spark read something else."""
+    if entry.options:
+        return None
+    if os.path.isfile(entry.path):
+        files = [entry.path]
+    else:
+        files = []
+        for root, dirs, names in os.walk(entry.path):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            if root != entry.path and "=" not in os.path.basename(root):
+                return None
+            files += [
+                os.path.join(root, f)
+                for f in names
+                if not f.startswith(("_", ".")) and not f.endswith("._COPYING_")
+            ]
+    import pyarrow.parquet as pq
+
+    try:
+        return sum(pq.read_metadata(f).num_rows for f in files)
+    except Exception:
+        return None  # not parquet after all: let Spark count
 
 
 class Catalog:
@@ -560,12 +607,15 @@ class Catalog:
         reader = self.spark.read
         if entry.options:
             reader = reader.options(**entry.options)
-        known = entry.schema if entry.schema is not None else _schema_memo_get(entry)
+        known, key = entry.schema, None
+        if known is None:
+            key = snapshot_key(entry)
+            known = memo_get(key, "schema")
         if known is not None:
             reader = reader.schema(known)
         df = reader.format(entry.fmt).load(entry.path)
         if known is None:
-            _schema_memo_put(entry, df.schema)
+            memo_put(key, "schema", df.schema)
         for col in NANOS_TS_COLS.get(name, ()):
             if dict(df.dtypes).get(col) == "bigint":
                 df = df.withColumn(col, F.expr(f"timestamp_micros({col} DIV 1000)"))
@@ -593,9 +643,19 @@ class Catalog:
 
     # -- statistics ≈ Statistic.java / profile/ProfilerImpl.java ------
     def row_count(self, name: str) -> int:
+        """Exact row count: ANALYZE's when present, else the parquet
+        footers of the current files (memoized per file snapshot), else
+        one count() job. Cached on the TableEntry like ANALYZE's."""
         entry = self.tables[name]
         if entry.row_count is None:
-            entry.row_count = self.table(name).count()
+            key = snapshot_key(entry)
+            n = memo_get(key, "rows")
+            if n is None:
+                n = _footer_rows(entry) if key is not None else None
+                if n is None:
+                    n = self.table(name).count()
+                memo_put(key, "rows", n)
+            entry.row_count = n
         return entry.row_count
 
     def analyze(self, name: str, columns=None, exact: bool = False) -> dict:

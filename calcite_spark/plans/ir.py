@@ -243,7 +243,7 @@ class Aggregate(RelNode):
             # Lower through SQL: Spark's DataFrame API has no groupingSets
             # until groupingSets() (4.0); SQL form is stable.
             df.createOrReplaceTempView("__gs_input__")
-            sets = ", ".join("(" + ", ".join(s) + ")" for s in self.grouping_sets)
+            sets = _grouping_sets_sql(self.grouping_sets)
             keys = ", ".join(self.group_keys)
             calls = ", ".join(self.agg_calls)
             return ctx.spark.sql(
@@ -267,8 +267,7 @@ class Aggregate(RelNode):
 
         branches = []
         for i in range(max(counts.values())):
-            sets_i = [s for s, n in counts.items() if n > i]
-            sets_sql = ", ".join("(" + ", ".join(s) + ")" for s in sets_i)
+            sets_sql = _grouping_sets_sql(s for s, n in counts.items() if n > i)
             # a GROUP_ID() inside a string literal is data
             calls = ", ".join(
                 lexer.sub(r"(?i)GROUP_ID\s*\(\s*\)", lambda m: str(i), c)
@@ -279,6 +278,15 @@ class Aggregate(RelNode):
                 f"GROUP BY GROUPING SETS ({sets_sql})"
             )
         return ctx.spark.sql(" UNION ALL ".join(branches))
+
+
+def _grouping_sets_sql(sets) -> str:
+    """`(k1, k2), (k3), ()` with each key's body: Spark rejects an
+    aliased key (`year(d) AS yr`) inside a set list, and the SELECT
+    list aliases the key once."""
+    return ", ".join(
+        "(" + ", ".join(lexer.split_alias(k)[0] for k in s) + ")" for s in sets
+    )
 
 
 @dataclass(repr=False)

@@ -26,7 +26,9 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import functions as _F
 
+from calcite_spark.catalog import memo_get, memo_put, snapshot_key
 from calcite_spark.plans import ir
+from calcite_spark.sources.modify import _rewrite
 from calcite_spark.sql import lexer
 
 _AGG_RE = re.compile(
@@ -915,7 +917,7 @@ class MaterializationRegistry:
             return {"refreshed": False, "delta_files": 0}
 
         spark = catalog.spark
-        delta_df = spark.read.parquet(*delta)
+        delta_df = _read_delta(catalog, mv.table, delta)
         calls = tuple(
             _tile_call_sql(fn, arg, alias)
             for alias, (fn, arg) in mv.agg_calls.items()
@@ -945,17 +947,15 @@ class MaterializationRegistry:
                 .groupBy(*[lexer.item_name(k) for k in mv.group_keys])
                 .agg(*merge_calls)
             )
-            # pin results BEFORE overwriting the parquet being read
-            merged = merged.localCheckpoint(eager=True)
-            merged.write.mode("overwrite").parquet(mv.path)
+            # the merge reads the tile: write it beside the tile and swap
+            path = _rewrite(catalog, name, merged)
         finally:
             spark.catalog.dropTempView(tmp)
             catalog.tables.pop(tmp, None)
             catalog._dfs.pop(tmp, None)
-        catalog.register(name, mv.path, schema=merged.schema)
         from dataclasses import replace as _replace
 
-        self.mvs[name] = _replace(mv, base_files=current)
+        self.mvs[name] = _replace(mv, path=path, base_files=current)
         self._rebuild_companion(catalog, self.mvs[name])
         return {"refreshed": True, "delta_files": len(delta)}
 
@@ -1142,7 +1142,7 @@ class MaterializationRegistry:
             )
         spark = catalog.spark
         tmp = f"__mv_delta_{name}"
-        catalog.register_df(tmp, spark.read.parquet(*delta))
+        catalog.register_df(tmp, _read_delta(catalog, mv.table, delta))
 
         def swap_fact(node):
             if isinstance(node, ir.Scan) and node.table == mv.table:
@@ -1165,15 +1165,13 @@ class MaterializationRegistry:
                 .groupBy(*[lexer.item_name(k) for k in mv.group_keys])
                 .agg(*merge_calls)
             )
-            merged = merged.localCheckpoint(eager=True)
-            merged.write.mode("overwrite").parquet(mv.path)
+            path = _rewrite(catalog, name, merged)
         finally:
             spark.catalog.dropTempView(tmp)
             catalog.tables.pop(tmp, None)
             catalog._dfs.pop(tmp, None)
-        catalog.register(name, mv.path, schema=merged.schema)
         self.mvs[name] = replace(
-            mv, base_files=new_flat, base_files_by_table=new_by_table
+            mv, path=path, base_files=new_flat, base_files_by_table=new_by_table
         )
         return {
             "refreshed": True,
@@ -1441,8 +1439,10 @@ class MaterializationRegistry:
         while remaining_t != set(q_tables):
             peeled = None
             for t in sorted(remaining_t - q_tables):
+                # sorted: the peel's re-join condition lists these
+                # edges, and set order follows the string-hash seed
                 incident = [
-                    e for e in remaining_e
+                    e for e in sorted(remaining_e)
                     if owner.get(e[0]) == t or owner.get(e[1]) == t
                 ]
                 if not incident:
@@ -2795,6 +2795,40 @@ class MaterializationRegistry:
         return None
 
 
+def _probe_ndvs(catalog, table: str, exprs) -> list:
+    """approx_count_distinct of each expression over `table`: values
+    the process-wide memo holds for the table's current file snapshot
+    are reused, the rest run as ONE scan and are memoized. The memo
+    only helps repeated probes over unchanged files (a fresh catalog
+    per query re-probes them otherwise)."""
+    key = snapshot_key(catalog.tables.get(table))
+    out = [memo_get(key, ("ndv", e)) for e in exprs]
+    missing = [i for i, n in enumerate(out) if n is None]
+    if missing:
+        row = (
+            catalog.table(table)
+            .selectExpr(
+                *[f"approx_count_distinct({exprs[i]}) AS n{i}" for i in missing]
+            )
+            .collect()[0]
+        )
+        for i in missing:
+            out[i] = row[f"n{i}"]
+            memo_put(key, ("ndv", exprs[i]), out[i])
+    return out
+
+
+def _read_delta(catalog, table: str, files):
+    """The appended files of `table`, read with the schema its entry
+    already knows (catalog.table reads the same files with it), so the
+    read starts no schema-inference job."""
+    reader = catalog.spark.read
+    entry = catalog.tables.get(table)
+    if entry is not None and entry.schema is not None:
+        reader = reader.schema(entry.schema)
+    return reader.parquet(*files)
+
+
 def _tile_bytes(path: str) -> int:
     """On-disk size of a tile's parquet directory — the cost signal for
     choosing among competing matching tiles. Unknown/missing paths cost
@@ -3471,19 +3505,12 @@ class LatticeSuggester:
         def edge_count(t):
             return sum(1 for a, b in edges if owner.get(a) == t or owner.get(b) == t)
 
-        def row_count(t):
-            # grounded tie-break (review r10): the fact anchor decides
-            # which side's appends the refresh can delta-join, so pick
-            # the LARGER table — ANALYZE stats when present, else one
-            # count() (an auto_build already scans every table to build
-            # the tile, so this adds no asymptotic cost)
-            entry = catalog.tables.get(t)
-            if entry is not None and entry.row_count:
-                return entry.row_count
-            return catalog.table(t).count()
-
+        # grounded tie-break (review r10): the fact anchor decides which
+        # side's appends the refresh can delta-join, so pick the LARGER
+        # table — ANALYZE stats when present, else the parquet footers
         fact = max(
-            sorted(tables), key=lambda t: (edge_count(t), row_count(t))
+            sorted(tables),
+            key=lambda t: (edge_count(t), catalog.row_count(t)),
         )
         placed, pending = {fact}, [t for t in sorted(tables) if t != fact]
         pending_e = list(edges)
@@ -3546,11 +3573,7 @@ class LatticeSuggester:
                 c = entry.stats.get("columns", {}).get(key)
                 if c is not None and c.get("ndv"):
                     return c["ndv"]
-        return (
-            catalog.table(t)
-            .selectExpr(f"approx_count_distinct({expr}) AS n")
-            .collect()[0]["n"]
-        )
+        return _probe_ndvs(catalog, t, [expr])[0]
 
     def _estimate_benefit(self, catalog, proposal) -> tuple:
         """(estimated_tile_rows, fact_rows): when every group key lives
@@ -3569,47 +3592,17 @@ class LatticeSuggester:
         §2.4 fewer passes): all NDV probes that land on one table run
         as ONE approx_count_distinct scan of that table (HLL sketches
         are independent aggregates — batched values are identical to
-        solo probes), and that scan also carries count(1) when the
-        table's row count is not yet grounded, so the separate count()
-        job disappears. Per auto_build proposal this folds up to
-        (keys + tables) jobs into one job per owning table; at scale,
-        one pass per table instead of one per key."""
+        solo probes), and only the expressions the NDV memo lacks for
+        the table's current files are probed. Row counts come from
+        catalog.row_count (ANALYZE, else parquet footers), not a scan.
+        Per auto_build proposal this folds up to (keys + tables) jobs
+        into at most one job per owning table; at scale, one pass per
+        table instead of one per key."""
         tables = (
             proposal["tables"]
             if proposal["table"] is None
             else [proposal["table"]]
         )
-
-        def rows_known(t):
-            entry = catalog.tables.get(t)
-            return entry is not None and bool(
-                entry.row_count
-                or (entry.stats and entry.stats.get("rows"))
-            )
-
-        def rows(t):
-            entry = catalog.tables.get(t)
-            if entry is not None and entry.row_count:
-                return entry.row_count
-            if entry is not None and entry.stats and entry.stats.get("rows"):
-                return entry.stats["rows"]
-            return catalog.row_count(t)
-
-        def probe(t, items):
-            """One scan of t computing every pending NDV for it; piggy-
-            backs count(1) when t's row count is ungrounded and caches
-            it on the TableEntry (same in-run memo catalog.row_count
-            keeps)."""
-            exprs = [
-                f"approx_count_distinct({expr}) AS n{i}" for i, expr in items
-            ]
-            carry_rows = not rows_known(t) and catalog.tables.get(t) is not None
-            if carry_rows:
-                exprs.append("count(1) AS __rows")
-            row = catalog.table(t).selectExpr(*exprs).collect()[0]
-            if carry_rows:
-                catalog.tables[t].row_count = row["__rows"]
-            return {i: row[f"n{i}"] for i, _ in items}
 
         key_exprs, key_idents = [], []
         for k in proposal["group_keys"]:
@@ -3638,13 +3631,12 @@ class LatticeSuggester:
                 if entry is not None and entry.stats:
                     c = entry.stats.get("columns", {}).get(key_exprs[0])
                     if c is not None and c.get("ndv"):
-                        fact_rows = max(rows(t) for t in tables)
+                        fact_rows = max(catalog.row_count(t) for t in tables)
                         return min(max(c["ndv"], 1), fact_rows), fact_rows
-            joint = probe(
-                joint_owner[0],
-                [(0, "struct(" + ", ".join(key_exprs) + ")")],
+            joint = _probe_ndvs(
+                catalog, joint_owner[0], ["struct(" + ", ".join(key_exprs) + ")"]
             )[0]
-            fact_rows = max(rows(t) for t in tables)
+            fact_rows = max(catalog.row_count(t) for t in tables)
             return min(max(joint, 1), fact_rows), fact_rows
         # fallback: per-key NDVs, probes batched per owning table.
         # Grounding rules are _key_ndv's verbatim: constant expression
@@ -3662,7 +3654,7 @@ class LatticeSuggester:
                 t for t in tables if idents <= set(catalog.table(t).columns)
             ]
             if not owners:
-                return None, max(rows(t) for t in tables)
+                return None, max(catalog.row_count(t) for t in tables)
             t = owners[0]
             if _plain_key(k):
                 entry = catalog.tables.get(t)
@@ -3673,9 +3665,9 @@ class LatticeSuggester:
                         continue
             pending.setdefault(t, []).append((i, key_exprs[i]))
         for t, items in pending.items():
-            for i, n in probe(t, items).items():
+            for (i, _), n in zip(items, _probe_ndvs(catalog, t, [e for _, e in items])):
                 ndvs[i] = n
-        fact_rows = max(rows(t) for t in tables)
+        fact_rows = max(catalog.row_count(t) for t in tables)
         est = 1
         for ndv in ndvs:
             est *= max(ndv, 1)

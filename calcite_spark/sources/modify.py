@@ -16,10 +16,10 @@ partitions (dynamic partition overwrite).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 
-def _rewrite(catalog, table: str, df: DataFrame) -> None:
+def _rewrite(catalog, table: str, df: DataFrame, check=None) -> str:
     """Copy-on-write swap: write to a sibling path, re-register, and
     delete the PREVIOUS sibling. Siblings alternate between two fixed
     names derived from the original path (`.cow-a` / `.cow-b`), so
@@ -27,7 +27,12 @@ def _rewrite(catalog, table: str, df: DataFrame) -> None:
     directory per statement (r8 verdict: the old `.new` suffix
     accumulated as `x.new.new.new…`). The ORIGINAL path is never
     deleted — we may not own it (a mounted dataset); only the cow
-    siblings this function created are cleaned up."""
+    siblings this function created are cleaned up.
+
+    `check` runs after the write and before the swap: when it raises,
+    the new sibling is deleted and the table stays as it was. Returns
+    the new path. MV tile refreshes swap through here too, so a merge
+    that reads the tile never overwrites the files it reads."""
     import shutil
 
     entry = catalog.tables[table]
@@ -53,6 +58,12 @@ def _rewrite(catalog, table: str, df: DataFrame) -> None:
     # the write below EXECUTES the read of old_path (eager action), so
     # after it returns the previous sibling is dead weight
     df.write.mode("overwrite").parquet(new_path)
+    if check is not None:
+        try:
+            check()
+        except BaseException:
+            shutil.rmtree(new_path, ignore_errors=True)
+            raise
     # register with the schema just written — the next table() call
     # skips the parquet schema-inference job (same write-site pattern
     # as the MV tile registrations)
@@ -61,6 +72,18 @@ def _rewrite(catalog, table: str, df: DataFrame) -> None:
     if old_path != new_path and old_path in owned:
         shutil.rmtree(old_path, ignore_errors=True)
         owned.discard(old_path)
+    return new_path
+
+
+def _observed(obs: Observation, *names: str) -> dict:
+    """The counts an Observation collected during the write that ran
+    its DataFrame. Spark drops an observed node from the executed plan
+    only when empty-relation propagation proved its input empty (the
+    observation then completes with an empty row), so every count of a
+    missing row is 0."""
+    if obs._jo.getRow().length() == 0:
+        return dict.fromkeys(names, 0)
+    return obs.get
 
 
 def insert_into(
@@ -87,16 +110,16 @@ def insert_into(
 def delete_where(catalog, table: str, condition: str) -> int:
     """DELETE FROM t WHERE cond → keep the complement. Returns #deleted.
 
-    One count action: #deleted = #rows where cond IS TRUE, the exact
-    complement of the kept set (NOT cond OR cond IS NULL), so the old
-    count-before + re-read-the-new-table-and-count-after pair (two
-    actions, one of them re-reading the just-written files) collapses
-    into a single filtered count over the original table."""
-    df = catalog.table(table)
-    kept = df.filter(f"NOT ({condition}) OR ({condition}) IS NULL")
-    n_deleted = df.filter(condition).count()
-    _rewrite(catalog, table, kept)
-    return n_deleted
+    #deleted = #rows where cond IS TRUE, the exact complement of the
+    kept set (NOT cond OR cond IS NULL). It is observed on the rewrite's
+    input, so the write job that keeps the complement also counts it —
+    no Spark job runs besides the write."""
+    obs = Observation()
+    df = catalog.table(table).observe(
+        obs, F.count(F.when(F.expr(condition), 1)).alias("n")
+    )
+    _rewrite(catalog, table, df.filter(f"NOT ({condition}) OR ({condition}) IS NULL"))
+    return _observed(obs, "n")["n"]
 
 
 def update_set(
@@ -116,9 +139,11 @@ def update_set(
     `post_assignments` run in a SECOND pass whose RHS see the
     post-update row — the generated-column recompute hook (applied to
     every row; generator expressions are deterministic, so recomputing
-    unchanged rows is a no-op)."""
-    df = catalog.table(table)
+    unchanged rows is a no-op). The #updated count is observed on the
+    rewrite's input and rides the write job."""
     cond = F.expr(condition)
+    obs = Observation()
+    df = catalog.table(table).observe(obs, F.count(F.when(cond, 1)).alias("n"))
     out = df.select(
         *[
             F.when(cond, F.expr(assignments[c])).otherwise(F.col(c)).alias(c)
@@ -136,9 +161,8 @@ def update_set(
                 for c in out.columns
             ]
         )
-    n = df.filter(condition).count()
     _rewrite(catalog, table, out)
-    return n
+    return _observed(obs, "n")["n"]
 
 
 def merge_into(
@@ -162,98 +186,100 @@ def merge_into(
     source-anti-target for inserts — two hash joins on the merge key, no
     row explosion (caller guarantees source has unique keys, as MERGE
     requires; duplicate source keys raise like Delta does).
+
+    Every count rides the write job as an Observation on the arm that
+    produces it: target rows entering the left join, joined rows and
+    their source matches (count of the literal marker column), and the
+    anti-join insert rows. Only an insert-only MERGE, whose write plan
+    has no join, runs one semi-join count for `matched`.
     """
     tdf = catalog.table(target)
     cond = F.expr(on)
-
-    # Every count the statement needs rides ONE probe action (guide
-    # §1.2, fewer passes — was three separate .count() actions): the
-    # semi / inner / anti arms are unioned with a tag column and
-    # aggregated in a single pass. The arms are the SAME joins the old
-    # counts ran, so every value is unchanged.
-    #   matched  — target rows with >=1 source match (left_semi)
-    #   pairs    — (target, source) match pairs (inner), for the MERGE
-    #              precondition below; only when an update/delete arm
-    #              makes it observable
-    #   inserted — source rows with no target match (left_anti)
-    arms = [tdf.join(source, cond, "left_semi").select(F.lit("matched").alias("__arm__"))]
-    if when_matched_update or when_matched_delete:
-        arms.append(
-            tdf.join(source, cond, "inner").select(F.lit("pairs").alias("__arm__"))
-        )
-    if when_not_matched_insert:
-        arms.append(
-            source.join(tdf, cond, "left_anti").select(F.lit("inserted").alias("__arm__"))
-        )
-    probe = arms[0]
-    for arm in arms[1:]:
-        probe = probe.unionAll(arm)
-    counts = {
-        r["__arm__"]: r["n"]
-        for r in probe.groupBy("__arm__").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    n_matched = counts.get("matched", 0)
-    # MERGE precondition: no target row may match MULTIPLE source rows
-    # (Delta throws DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET). The
-    # pair-count vs matched-target-count comparison is CONDITION-
-    # AGNOSTIC — the old on.split('=') key extraction silently broke on
-    # compound or reversed-operand conditions (review r8: matched>0
-    # reported while nothing updated).
-    if when_matched_update or when_matched_delete:
-        if counts.get("pairs", 0) > n_matched:
-            raise ValueError(
-                "MERGE: multiple source rows match the same key"
-            )
+    modifies = bool(when_matched_update or when_matched_delete)
 
     updated = tdf
-    if when_matched_delete:
-        updated = tdf.join(source, cond, "left_anti")
-    elif when_matched_update:
+    n_matched = None
+    if modifies:
+        obs_target, obs_joined = Observation(), Observation()
         # literal marker column: src_marker must not depend on parsing
         # the condition (review r8) — a NULL marker after the LEFT join
         # means "no source match" for ANY condition shape
         marked = source.withColumn("__merge_src__", F.lit(True))
-        joined = tdf.join(marked, cond, "left")
-        out_cols = []
-        src_marker = F.col("__merge_src__").isNotNull()
-        for c in tdf.columns:
-            if c in when_matched_update:
-                out_cols.append(
+        observed = tdf.observe(obs_target, F.count(F.lit(1)).alias("n"))
+        joined = (
+            observed.join(marked, cond, "left")
+            .observe(
+                obs_joined,
+                F.count(F.lit(1)).alias("n"),
+                F.count("__merge_src__").alias("matched"),
+            )
+        )
+        if when_matched_delete:
+            # the unmatched rows of the same marked join: the target
+            # columns by reference, so a source column of the same
+            # name cannot make them ambiguous
+            updated = joined.filter("__merge_src__ IS NULL").select(
+                *[observed[c] for c in tdf.columns]
+            )
+        else:
+            src_marker = F.col("__merge_src__").isNotNull()
+            updated = joined.select(
+                *[
                     F.when(src_marker, F.expr(when_matched_update[c]))
                     .otherwise(F.col(c))
                     .alias(c)
-                )
-            else:
-                out_cols.append(F.col(c))
-        updated = joined.select(*out_cols)
+                    if c in when_matched_update
+                    else F.col(c)
+                    for c in tdf.columns
+                ]
+            )
+    else:
+        # matched-but-untouched rows are reported, not written: the
+        # write plan has no join to observe them on
+        n_matched = tdf.join(source, cond, "left_semi").count()
 
-    n_inserted = 0
     if when_not_matched_insert:
         # WHEN NOT MATCHED THEN INSERT (cols) VALUES (exprs): explicit
         # mapping target-col -> source expr; unmapped target cols default
         # to same-name source col or NULL
+        obs_inserted = Observation()
         mapping = insert_values or {}
-        inserts = source.join(tdf, cond, "left_anti").select(
-            *[
-                F.expr(mapping[c]).alias(c)
-                if c in mapping
-                else (F.col(c) if c in source.columns else F.lit(None).alias(c))
-                for c in tdf.columns
-            ]
+        inserts = (
+            source.join(tdf, cond, "left_anti")
+            .observe(obs_inserted, F.count(F.lit(1)).alias("n"))
+            .select(
+                *[
+                    F.expr(mapping[c]).alias(c)
+                    if c in mapping
+                    else (F.col(c) if c in source.columns else F.lit(None).alias(c))
+                    for c in tdf.columns
+                ]
+            )
         )
-        n_inserted = counts.get("inserted", 0)
         updated = updated.unionByName(inserts)
 
-    _rewrite(catalog, target, updated)
+    def one_match_per_target_row():
+        # MERGE precondition: no target row may match MULTIPLE source
+        # rows (Delta throws DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET).
+        # The left join emits one row per (target, source) match and
+        # one per unmatched target row, so it outgrows the target
+        # exactly when some target row matches twice — CONDITION-
+        # AGNOSTIC (review r8: on.split('=') key extraction broke on
+        # compound or reversed-operand conditions). Checked before the
+        # swap, so a failing MERGE leaves the table untouched.
+        if _observed(obs_joined, "n", "matched")["n"] > _observed(obs_target, "n")["n"]:
+            raise ValueError("MERGE: multiple source rows match the same key")
+
+    _rewrite(catalog, target, updated, check=one_match_per_target_row if modifies else None)
+    if modifies:
+        n_matched = _observed(obs_joined, "n", "matched")["matched"]
+    n_inserted = _observed(obs_inserted, "n")["n"] if when_not_matched_insert else 0
     return {
         "matched": n_matched,
         "inserted": n_inserted,
         # matched-but-untouched rows are NOT modifications: an
         # insert-only MERGE must not count its matches (review r8)
-        "rows_modified": (
-            n_matched if (when_matched_update or when_matched_delete) else 0
-        )
-        + n_inserted,
+        "rows_modified": (n_matched if modifies else 0) + n_inserted,
     }
 
 

@@ -319,7 +319,7 @@ class DdlExecutor:
                     df = df.selectExpr(*exprs)
             path = os.path.join(self.warehouse, name)
             df.write.mode("errorifexists").parquet(path)
-            self.catalog.register(name, path)
+            self.catalog.register(name, path, schema=df.schema)
             return {"table": name, "path": path}
         m = _DROP.match(sql)
         if m:
@@ -402,7 +402,7 @@ class DdlExecutor:
                 raise NotImplementedError(
                     "RESTART IDENTIFY is not supported"
                 )
-            n = self.catalog.table(name).count()
+            n = self.catalog.row_count(name)
             _rewrite(self.catalog, name, self.catalog.table(name).limit(0))
             return {"rows_modified": n}
         m = _CREATE_SEQUENCE.match(sql)

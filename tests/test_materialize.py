@@ -890,7 +890,7 @@ def test_filtered_mv_incremental_refresh_applies_slice(spark, tmp_path):
     cat = _Cat(spark)
     cat.register("t", base)
     reg = MaterializationRegistry()
-    mv = reg.define(
+    reg.define(
         cat, "slice_inc", "t", ["k"], ["SUM(v) AS sv", "COUNT(*) AS n"],
         str(tmp_path / "slice_inc"), filter_condition="k >= 50",
     )
@@ -902,7 +902,10 @@ def test_filtered_mv_incremental_refresh_applies_slice(spark, tmp_path):
     ).write.mode("append").parquet(base)  # below the slice: must be ignored
     out = reg.incremental_refresh(cat, "slice_inc")
     assert out["refreshed"] and out["delta_files"] >= 1
-    got = sorted(tuple(r) for r in spark.read.parquet(mv.path).collect())
+    # the merged tile is swapped in beside the one it read
+    got = sorted(
+        tuple(r) for r in spark.read.parquet(reg.mvs["slice_inc"].path).collect()
+    )
     exp = sorted(
         tuple(r)
         for r in spark.read.parquet(base)
@@ -5424,12 +5427,14 @@ def test_model_lattice_mixed_measure_alias_collision(spark, tmp_path):
         Catalog(spark).load_model(_write_model(tmp_path, model))
 
 
-def test_composite_peel_through_grain_edge(spark, tmp_path):
-    """r12 composition: a month-keyed star tile whose dim joins on a
-    COMPOSITE key serves a raw-date-range fact query — the composite
-    peel proves the tile's extra join row-preserving, the grain-edge
-    union reads whole months from the tile, and the sliver branch
-    re-joins the peeled dim with the full two-column conjunction."""
+_PEEL_COND = ("o_orderdate >= TIMESTAMP '1995-03-15 00:00:00' "
+              "AND o_orderdate < TIMESTAMP '1997-11-20 00:00:00'")
+
+
+def _composite_peel_setup(spark, tmp_path):
+    """A month-keyed star tile joining a composite-key dim, and the
+    raw-date-range fact query it serves through the composite peel:
+    (catalog, tile, query plan)."""
     cat = Catalog(spark).register_parquet_dir(SF_DIR)
     cat.register("prio_status", _composite_dim(spark, tmp_path), "parquet")
     cat.declare_foreign_key(
@@ -5456,28 +5461,82 @@ def test_composite_peel_through_grain_edge(spark, tmp_path):
         cat, "cfk_ge_tile", plan, str(tmp_path / "cfk_ge_tile"),
         fact="orders",
     )
-    cond = ("o_orderdate >= TIMESTAMP '1995-03-15 00:00:00' "
-            "AND o_orderdate < TIMESTAMP '1997-11-20 00:00:00'")
-    df = (
+    query = (
         RelBuilder(cat)
         .scan("orders")
-        .filter(cond)
+        .filter(_PEEL_COND)
         .aggregate(
             ["o_orderpriority"],
             ["SUM(o_totalprice) AS s", "COUNT(*) AS n"],
         )
-        .to_df()
+        .build()
     )
+    return cat, mv, query
+
+
+def test_composite_peel_through_grain_edge(spark, tmp_path):
+    """r12 composition: a month-keyed star tile whose dim joins on a
+    COMPOSITE key serves a raw-date-range fact query — the composite
+    peel proves the tile's extra join row-preserving, the grain-edge
+    union reads whole months from the tile, and the sliver branch
+    re-joins the peeled dim with the full two-column conjunction."""
+    from calcite_spark.plans.rewrite import default_program
+
+    cat, mv, query = _composite_peel_setup(spark, tmp_path)
+    df = default_program(cat).run(query).to_df(cat)
     files = df.inputFiles()
     assert any(mv.name in f for f in files), files
     assert any("orders.parquet" in f for f in files), files
     direct = (
-        cat.table("orders").filter(cond).groupBy("o_orderpriority")
+        cat.table("orders").filter(_PEEL_COND).groupBy("o_orderpriority")
         .agg(F.sum("o_totalprice").alias("s"), F.count("*").alias("n"))
     )
     got = {(r.o_orderpriority, round(r.s, 3), r.n) for r in df.collect()}
     want = {(r.o_orderpriority, round(r.s, 3), r.n) for r in direct.collect()}
     assert got == want
+
+
+def test_composite_peel_plan_text_is_hash_seed_independent(tmp_path):
+    """The optimized plan of the composite peel is byte-identical
+    across string-hash seeds: the peel's re-join condition lists the
+    composite edges in sorted order, not in set-iteration order (which
+    differs between PYTHONHASHSEED=0 and =1 for this edge pair)."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    script = (
+        "import sys\n"
+        "from pathlib import Path\n"
+        "from calcite_spark.plans.rewrite import default_program\n"
+        "from calcite_spark.session import get_spark\n"
+        "from tests.test_materialize import _composite_peel_setup\n"
+        "spark = get_spark('peel_seed')\n"
+        "cat, _mv, query = _composite_peel_setup(spark, Path(sys.argv[1]))\n"
+        "print('PLAN>' + default_program(cat).run(query).explain_str())\n"
+        "spark.stop()\n"
+    )
+    procs = []
+    for seed in ("0", "1"):
+        out = tmp_path / f"seed{seed}"
+        out.mkdir()
+        env = dict(
+            os.environ, PYTHONHASHSEED=seed, SPARK_GRAFT_CPUS="1",
+            SPARK_GRAFT_DRIVER_MEM="1g",
+        )
+        procs.append(subprocess.Popen(
+            [sys.executable, "-c", script, str(out)], cwd=root, env=env,
+            stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
+        ))
+    plans = []
+    for proc in procs:
+        stdout, stderr = proc.communicate(timeout=600)
+        assert proc.returncode == 0, stderr[-3000:]
+        plans.append(stdout.split("PLAN>", 1)[1])
+    assert "d_prio" in plans[0] and "d_status" in plans[0], plans[0]
+    assert plans[0] == plans[1], plans
 
 
 def test_model_lattice_non_equi_refuses(spark, tmp_path):
@@ -5675,10 +5734,13 @@ def test_benefit_gate_joint_ndv_in_auto_build(spark, tmp_path):
 
 def test_benefit_gate_batches_probes_per_table(spark, monkeypatch):
     """r14 probe batching: a cross-table proposal (no joint owner) runs
-    exactly ONE approx_count_distinct scan per owning table — the
-    table's ungrounded row count rides the same scan, so no separate
-    count() job fires — and the batched estimate equals the solo-probe
-    product (HLL sketches are independent aggregates)."""
+    exactly ONE approx_count_distinct scan per owning table, row counts
+    come from the parquet footers (no count() job), and the batched
+    estimate equals the solo-probe product (HLL sketches are
+    independent aggregates). The NDV memo is keyed by the tables' file
+    snapshot: a second fresh catalog over unchanged files probes
+    nothing."""
+    from calcite_spark import catalog as catalog_mod
     from calcite_spark.plans.materialize import LatticeSuggester
 
     cat = Catalog(spark).register_parquet_dir(SF_DIR)
@@ -5692,7 +5754,8 @@ def test_benefit_gate_batches_probes_per_table(spark, monkeypatch):
     ndv_c = sug._key_ndv(cat, "c_mktsegment", proposal["tables"])
     ndv_o = sug._key_ndv(cat, "o_orderpriority", proposal["tables"])
 
-    cat2 = Catalog(spark).register_parquet_dir(SF_DIR)  # fresh: no memo
+    catalog_mod._FILE_MEMO.clear()  # no memoized NDVs or row counts
+    cat2 = Catalog(spark).register_parquet_dir(SF_DIR)
     # patch the CONCRETE DataFrame class (pyspark 4's pyspark.sql.
     # DataFrame is an ABC whose subclass overrides collect/count)
     DataFrame = type(cat2.table("customer"))
@@ -5710,12 +5773,17 @@ def test_benefit_gate_batches_probes_per_table(spark, monkeypatch):
     )
     est, fact_rows = sug._estimate_benefit(cat2, proposal)
     assert calls["collect"] == 2, calls  # one batched probe per table
-    assert calls["count"] == 0, calls  # row counts rode the probes
+    assert calls["count"] == 0, calls  # row counts from the footers
     assert est == min(ndv_c * ndv_o, fact_rows)
-    # the piggybacked count(1) landed in the in-run memo
+    # the footer row count landed on the entry, exact
     assert cat2.tables["customer"].row_count == real_count(
         cat2.table("customer")
     )
+    # unchanged files: a fresh catalog re-derives nothing
+    calls.update(collect=0, count=0)
+    cat3 = Catalog(spark).register_parquet_dir(SF_DIR)
+    assert sug._estimate_benefit(cat3, proposal) == (est, fact_rows)
+    assert calls == {"collect": 0, "count": 0}, calls
 
 
 def test_percentile_tile_union_compensation(spark, tmp_path):
@@ -6392,6 +6460,44 @@ def test_extract_grouping_over_grain_edge_range(spark, tmp_path):
     want = sorted((r.yr, r.o_orderpriority, round(r.s, 3), r.n)
                   for r in direct.collect())
     assert got == want
+
+
+def test_groupsets_aliased_keys_lower_without_tile(spark, tmp_path):
+    """The un-optimized GROUPING SETS plan of
+    test_groupsets_over_derived_keys_from_tile lowers on its own: a set
+    holding an aliased key (`year(o_orderdate) AS yr`) puts the key's
+    body in the set list (Spark rejects the alias there) and aliases it
+    once in the projection — and the answer equals the tile-served
+    one."""
+    cat = Catalog(spark).register_parquet_dir(SF_DIR)
+    reg = MaterializationRegistry()
+    mv = reg.define(
+        cat, "gsd_lower_tile", "orders",
+        ["date_trunc('month', o_orderdate) AS m", "o_orderpriority"],
+        ["SUM(o_totalprice) AS s", "COUNT(*) AS n"],
+        str(tmp_path / "gsd_lower_tile"),
+    )
+
+    def builder():
+        return RelBuilder(cat).scan("orders").aggregate(
+            ["year(o_orderdate) AS yr", "o_orderpriority"],
+            ["SUM(o_totalprice) AS s"],
+            group_type="GROUPING_SETS",
+            grouping_sets=[("year(o_orderdate) AS yr",),
+                           ("o_orderpriority",), ()],
+        )
+
+    served = builder().to_df()
+    assert all(mv.name in f for f in served.inputFiles())
+    lowered = builder().build().to_df(cat)
+    assert not any(mv.name in f for f in lowered.inputFiles())
+
+    def rows(df):
+        return sorted(((r.yr, r.o_orderpriority, round(r.s, 3))
+                       for r in df.collect()), key=str)
+
+    assert rows(lowered) == rows(served)
+    assert len(rows(lowered)) > 3
 
 
 def test_groupsets_over_derived_keys_from_tile(spark, tmp_path):

@@ -82,12 +82,28 @@ def test_merge_into_upsert(spark, scratch):
 
 
 def test_merge_duplicate_source_keys_raises(spark, scratch):
+    """A target row matching two source rows raises — checked on the
+    observed counts after the sibling write, before the swap — and the
+    table keeps its path, rows and directory listing, with no `.cow-*`
+    sibling left behind."""
+    import os
+
+    path = scratch.tables["nation"].path
+    parent = os.path.dirname(path)
+    before_ls = sorted(os.listdir(parent))
+    before_rows = sorted(map(tuple, scratch.table("nation").collect()))
     dup = spark.createDataFrame(
-        [(1, "A", 1), (1, "B", 1)], "src_key int, src_name string, src_region int"
+        [(1, "A", 1), (1, "B", 1), (93, "C", 1)],
+        "src_key int, src_name string, src_region int",
     )
-    with pytest.raises(ValueError, match="multiple source rows"):
-        merge_into(scratch, "nation", dup, on="n_nationkey = src_key",
-                   when_matched_update={"n_name": "src_name"})
+    for kw in ({"when_matched_update": {"n_name": "src_name"}},
+               {"when_matched_delete": True}):
+        with pytest.raises(ValueError, match="multiple source rows"):
+            merge_into(scratch, "nation", dup, on="n_nationkey = src_key", **kw)
+        assert scratch.tables["nation"].path == path
+        assert sorted(os.listdir(parent)) == before_ls
+        assert not any(".cow-" in n for n in os.listdir(parent))
+        assert sorted(map(tuple, scratch.table("nation").collect())) == before_rows
 
 
 def test_merge_delete(spark, scratch):
@@ -206,27 +222,32 @@ def test_merge_insert_only_rows_modified(spark, scratch):
     assert stats["rows_modified"] == 1 and stats["inserted"] == 1
 
 
+def _count_actions(monkeypatch, df):
+    """Count collect()/count() calls on the concrete DataFrame class
+    (pyspark 4's pyspark.sql.DataFrame is an ABC whose subclass
+    overrides them)."""
+    DataFrame = type(df)
+    calls = {"collect": 0, "count": 0}
+    for name in calls:
+        real = getattr(DataFrame, name)
+
+        def wrapped(self, _real=real, _name=name):
+            calls[_name] += 1
+            return _real(self)
+
+        monkeypatch.setattr(DataFrame, name, wrapped)
+    return calls
+
+
 def test_merge_probe_is_one_action(spark, scratch, monkeypatch):
-    """r15: merge_into's matched/pairs/inserted counts ride ONE collect
-    (the semi/inner/anti arms unioned with a tag column) instead of
-    three separate .count() actions — and the stats are unchanged."""
+    """merge_into's matched/inserted counts and its duplicate-match
+    check are Observations on the write's own arms: no count() or
+    collect() runs besides the write, and the stats are unchanged."""
     source = spark.createDataFrame(
         [(0, "RENAMED#0", 9), (91, "NEWLAND", 9)],
         "src_key int, src_name string, src_region int",
     )
-    DataFrame = type(scratch.table("nation"))
-    calls = {"collect": 0, "count": 0}
-    real_collect, real_count = DataFrame.collect, DataFrame.count
-    monkeypatch.setattr(
-        DataFrame, "collect",
-        lambda self: calls.__setitem__("collect", calls["collect"] + 1)
-        or real_collect(self),
-    )
-    monkeypatch.setattr(
-        DataFrame, "count",
-        lambda self: calls.__setitem__("count", calls["count"] + 1)
-        or real_count(self),
-    )
+    calls = _count_actions(monkeypatch, scratch.table("nation"))
     stats = merge_into(
         scratch,
         "nation",
@@ -234,26 +255,33 @@ def test_merge_probe_is_one_action(spark, scratch, monkeypatch):
         on="n_nationkey = src_key",
         when_matched_update={"n_name": "src_name", "n_regionkey": "src_region"},
     )
-    assert calls["collect"] == 1, calls
-    assert calls["count"] == 0, calls
+    assert calls == {"collect": 0, "count": 0}, calls
     assert stats == {"matched": 1, "inserted": 1, "rows_modified": 2}
+    # the WHEN MATCHED DELETE arm observes the same marked left join
+    source2 = spark.createDataFrame([(1,), (2,), (92,)], "src_key int")
+    stats = merge_into(
+        scratch, "nation", source2, on="n_nationkey = src_key",
+        when_matched_delete=True,
+        insert_values={"n_nationkey": "src_key"},
+    )
+    assert calls == {"collect": 0, "count": 0}, calls
+    assert stats == {"matched": 2, "inserted": 1, "rows_modified": 3}
+    monkeypatch.undo()
+    keys = {r.n_nationkey for r in scratch.table("nation").collect()}
+    assert {1, 2}.isdisjoint(keys) and {0, 92} <= keys
 
 
 def test_delete_where_is_one_count(spark, scratch, monkeypatch):
-    """r15: DELETE's #deleted is one filtered count over the original
-    table (the exact complement of the kept set), not count-before plus
-    a re-read of the just-written table."""
-    DataFrame = type(scratch.table("nation"))
-    calls = {"count": 0}
-    real_count = DataFrame.count
-    monkeypatch.setattr(
-        DataFrame, "count",
-        lambda self: calls.__setitem__("count", calls["count"] + 1)
-        or real_count(self),
-    )
+    """DELETE's #deleted (rows where the condition IS TRUE, the exact
+    complement of the kept set) is observed on the rewrite's input, so
+    the write job counts it: no count() or collect() besides it."""
+    calls = _count_actions(monkeypatch, scratch.table("nation"))
     deleted = delete_where(scratch, "nation", "n_regionkey = 0")
-    assert calls["count"] == 1, calls
+    assert calls == {"collect": 0, "count": 0}, calls
     assert deleted == 5
+    updated = update_set(scratch, "nation", {"n_name": "'x'"}, "n_regionkey = 1")
+    assert calls == {"collect": 0, "count": 0}, calls
+    assert updated == 5
     assert scratch.table("nation").filter("n_regionkey = 0").count() == 0
 
 
@@ -279,3 +307,51 @@ def test_repeated_dml_path_bounded(spark, scratch, tmp_path):
     # values survived all five rewrites
     got = scratch.table("nation").filter("n_regionkey = 1").select("n_name").collect()
     assert all(r.n_name == "pass 4" for r in got)
+    # MV tile refreshes swap the same way: the delta merge reads the
+    # tile, so it is written beside it (never over the files it reads)
+    from pyspark.sql import functions as F
+
+    from calcite_spark.plans.builder import RelBuilder
+    from calcite_spark.plans.materialize import MaterializationRegistry
+
+    fact_dir = str(tmp_path / "fact")
+    spark.read.parquet(f"{SF_DIR}/nation.parquet").write.parquet(fact_dir)
+    scratch.register("fact", fact_dir)
+    scratch.register("region", f"{SF_DIR}/region.parquet")
+    reg = MaterializationRegistry()
+    plan = (
+        RelBuilder(scratch).scan("fact").scan("region")
+        .join("n_regionkey = r_regionkey")
+        .aggregate(["r_name"], ["COUNT(*) AS n", "SUM(n_nationkey) AS s"])
+        .build()
+    )
+    tile = str(tmp_path / "tile")
+    reg.define_join(scratch, "tile", plan, tile, fact="fact")
+    seen = []
+    for i in range(5):
+        (
+            spark.read.parquet(f"{SF_DIR}/nation.parquet")
+            .withColumn("n_nationkey", F.col("n_nationkey") + 100 * (i + 1))
+            .write.mode("append").parquet(fact_dir)
+        )
+        scratch._dfs.pop("fact", None)
+        stats = reg.incremental_refresh(scratch, "tile")
+        assert stats["refreshed"] and stats["delta_files"] >= 1, stats
+        p = reg.mvs["tile"].path
+        assert p == scratch.tables["tile"].path
+        assert p == tile + (".cow-a" if i % 2 == 0 else ".cow-b"), p
+        other = tile + (".cow-b" if i % 2 == 0 else ".cow-a")
+        assert not os.path.exists(other)
+        seen.append(p)
+    assert len(set(seen)) == 2
+    want = sorted(
+        tuple(r)
+        for r in spark.read.parquet(fact_dir)
+        .join(spark.read.parquet(f"{SF_DIR}/region.parquet"),
+              F.expr("n_regionkey = r_regionkey"))
+        .groupBy("r_name")
+        .agg(F.count("*").alias("n"), F.sum("n_nationkey").alias("s"))
+        .collect()
+    )
+    got = sorted(tuple(r) for r in scratch.table("tile").select("r_name", "n", "s").collect())
+    assert got == want
