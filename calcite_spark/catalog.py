@@ -11,9 +11,11 @@ Volcano cost model.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 from dataclasses import dataclass, field
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -71,52 +73,75 @@ class TableEntry:
 
 # In-process memo of what a table's files answer without a Spark job:
 # the parquet schema (r15, guide §1.2: every fresh Catalog re-inferred
-# it with one job per table), the exact row count and NDV probes
-# (≈ Statistic.java / RelMdRowCount: statistics are read, not queried).
-# Values are metadata only, live only for the process, and are keyed by
-# the table's file snapshot: a recursive listing with (relpath, size,
-# mtime_ns) per file, so an append into a partition subdirectory or an
-# in-place rewrite that keeps the file name changes the key. entry.schema
-# (set by writers that know what they wrote) takes precedence over the
-# schema memo.
+# it with one job per table) and NDV probes (≈ Statistic.java: a
+# statistic is read, not re-queried). Values are metadata only, live
+# only for the process, and are keyed by snapshot_key: a digest of
+# (relpath, size, mtime_ns) per file, so an append into a partition
+# subdirectory or an in-place rewrite that keeps the file name changes
+# the key. entry.schema (set by writers that know what they wrote)
+# takes precedence over the schema memo.
 _FILE_MEMO: dict = {}
 
 
-def _file_snapshot(path: str):
-    """(relpath, size, mtime_ns) of every file under `path`, sorted;
-    None when the path cannot be listed."""
-    try:
-        if os.path.isfile(path):
-            st = os.stat(path)
-            return (("", st.st_size, st.st_mtime_ns),)
-        if not os.path.isdir(path):
-            return None
-        out = []
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                full = os.path.join(root, f)
-                st = os.stat(full)
-                out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
-    except OSError:
+def _walk(path: str) -> list | None:
+    """Every file under `path`, recursively (`path` itself when it is a
+    file); None when the path cannot be listed."""
+    if os.path.isfile(path):
+        return [path]
+    if not os.path.isdir(path):
         return None
-    return tuple(sorted(out))
+    return [os.path.join(root, f) for root, _, files in os.walk(path) for f in files]
 
 
-def snapshot_key(entry):
-    """The file-snapshot key of a parquet table, or None when the
-    table is not file-backed parquet (other formats, registered
-    DataFrames, unlistable paths)."""
+def _local_files(df: DataFrame) -> list | None:
+    """Local paths of the files a DataFrame reads (its driver-side file
+    listing, no job); None when one is not a local file."""
+    out = []
+    for uri in df.inputFiles():
+        u = urlparse(uri)
+        if u.scheme not in ("", "file"):
+            return None
+        out.append(unquote(u.path))
+    return out
+
+
+def _footer_rows(files) -> int | None:
+    """Sum of the parquet footers' row counts; None when a file is not
+    readable parquet."""
+    import pyarrow.parquet as pq
+
+    try:
+        return sum(pq.read_metadata(f).num_rows for f in files)
+    except Exception:
+        return None
+
+
+def snapshot_key(entry, files=None):
+    """The memo key of a parquet table's files: path, reader options,
+    nanos columns and known schema, plus a digest of (relpath, size,
+    mtime_ns) for each of `files` (default: every file under the path).
+    None when the table is not file-backed parquet (other formats,
+    registered DataFrames) or a file cannot be read."""
     if entry is None or entry.fmt != "parquet" or not entry.path:
         return None
-    snap = _file_snapshot(entry.path)
-    if snap is None:
+    if files is None:
+        files = _walk(entry.path)
+    if files is None:
+        return None
+    digest = hashlib.blake2b(digest_size=16)
+    try:
+        for f in sorted(files):
+            st = os.stat(f)
+            rel = os.path.relpath(f, entry.path)
+            digest.update(f"{rel}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    except OSError:
         return None
     return (
         entry.path,
         tuple(sorted(entry.options.items())),
         NANOS_TS_COLS.get(entry.name, ()),
         entry.schema.simpleString() if entry.schema is not None else None,
-        snap,
+        digest.digest(),
     )
 
 
@@ -130,34 +155,6 @@ def memo_put(key, what, value) -> None:
         if len(_FILE_MEMO) > 4096:
             _FILE_MEMO.clear()  # bound driver memory; refill on demand
         _FILE_MEMO[(key, what)] = value
-
-
-def _footer_rows(entry) -> int | None:
-    """Exact row count from the parquet footers of the files Spark
-    reads: a single file, or a directory's files minus `_`/`.` names,
-    in flat or `col=value` partition subdirectories. None when reader
-    options or another layout could make Spark read something else."""
-    if entry.options:
-        return None
-    if os.path.isfile(entry.path):
-        files = [entry.path]
-    else:
-        files = []
-        for root, dirs, names in os.walk(entry.path):
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            if root != entry.path and "=" not in os.path.basename(root):
-                return None
-            files += [
-                os.path.join(root, f)
-                for f in names
-                if not f.startswith(("_", ".")) and not f.endswith("._COPYING_")
-            ]
-    import pyarrow.parquet as pq
-
-    try:
-        return sum(pq.read_metadata(f).num_rows for f in files)
-    except Exception:
-        return None  # not parquet after all: let Spark count
 
 
 class Catalog:
@@ -644,19 +641,34 @@ class Catalog:
     # -- statistics ≈ Statistic.java / profile/ProfilerImpl.java ------
     def row_count(self, name: str) -> int:
         """Exact row count: ANALYZE's when present, else the parquet
-        footers of the current files (memoized per file snapshot), else
-        one count() job. Cached on the TableEntry like ANALYZE's."""
+        footers of the files table(name) reads, else one count() job.
+        Cached on the TableEntry like ANALYZE's."""
         entry = self.tables[name]
         if entry.row_count is None:
-            key = snapshot_key(entry)
-            n = memo_get(key, "rows")
-            if n is None:
-                n = _footer_rows(entry) if key is not None else None
-                if n is None:
-                    n = self.table(name).count()
-                memo_put(key, "rows", n)
-            entry.row_count = n
+            n = self.footer_rows(name)
+            entry.row_count = n if n is not None else self.table(name).count()
         return entry.row_count
+
+    def footer_rows(self, name: str) -> int | None:
+        """Row count of what table(name) reads, summed from the parquet
+        footers of its files — no Spark job, never cached. None when
+        the table is not read from local parquet files."""
+        entry = self.tables[name]
+        if entry.fmt != "parquet" or not entry.path:
+            return None
+        files = _local_files(self.table(name))
+        return None if files is None else _footer_rows(files)
+
+    def files_key(self, name: str):
+        """snapshot_key of the files table(name) reads — values probed
+        on that DataFrame are memoized under it, so a cached handle
+        whose listing predates an append never files its answer under
+        the newer files' key. None when not read from local parquet."""
+        entry = self.tables.get(name)
+        if entry is None or entry.fmt != "parquet" or not entry.path:
+            return None
+        files = _local_files(self.table(name))
+        return None if files is None else snapshot_key(entry, files)
 
     def analyze(self, name: str, columns=None, exact: bool = False) -> dict:
         # exact=True (r15): count(DISTINCT) instead of the rsd=0.01 HLL

@@ -21,14 +21,15 @@ table; the rewrite turns a full-fact shuffle into a dimension-sized one.
 
 from __future__ import annotations
 
+import os
 import re
+import shutil
 from dataclasses import dataclass, field
 
 from pyspark.sql import functions as _F
 
-from calcite_spark.catalog import memo_get, memo_put, snapshot_key
+from calcite_spark.catalog import memo_get, memo_put
 from calcite_spark.plans import ir
-from calcite_spark.sources.modify import _rewrite
 from calcite_spark.sql import lexer
 
 _AGG_RE = re.compile(
@@ -947,15 +948,14 @@ class MaterializationRegistry:
                 .groupBy(*[lexer.item_name(k) for k in mv.group_keys])
                 .agg(*merge_calls)
             )
-            # the merge reads the tile: write it beside the tile and swap
-            path = _rewrite(catalog, name, merged)
+            _replace_tile(catalog, name, merged, mv.path)
         finally:
             spark.catalog.dropTempView(tmp)
             catalog.tables.pop(tmp, None)
             catalog._dfs.pop(tmp, None)
         from dataclasses import replace as _replace
 
-        self.mvs[name] = _replace(mv, path=path, base_files=current)
+        self.mvs[name] = _replace(mv, base_files=current)
         self._rebuild_companion(catalog, self.mvs[name])
         return {"refreshed": True, "delta_files": len(delta)}
 
@@ -1165,13 +1165,13 @@ class MaterializationRegistry:
                 .groupBy(*[lexer.item_name(k) for k in mv.group_keys])
                 .agg(*merge_calls)
             )
-            path = _rewrite(catalog, name, merged)
+            _replace_tile(catalog, name, merged, mv.path)
         finally:
             spark.catalog.dropTempView(tmp)
             catalog.tables.pop(tmp, None)
             catalog._dfs.pop(tmp, None)
         self.mvs[name] = replace(
-            mv, path=path, base_files=new_flat, base_files_by_table=new_by_table
+            mv, base_files=new_flat, base_files_by_table=new_by_table
         )
         return {
             "refreshed": True,
@@ -1215,7 +1215,7 @@ class MaterializationRegistry:
             return {"refreshed": False, "delta_files": 0}
         spark = catalog.spark
         tmp = f"__mv_delta_{mv.name}"
-        catalog.register_df(tmp, spark.read.parquet(*delta))
+        catalog.register_df(tmp, _read_delta(catalog, mv.table, delta))
         try:
             appended_df = self._spf_plan(mv, tmp).to_df(catalog)
             appended_df.write.mode("append").parquet(mv.path)
@@ -2797,11 +2797,11 @@ class MaterializationRegistry:
 
 def _probe_ndvs(catalog, table: str, exprs) -> list:
     """approx_count_distinct of each expression over `table`: values
-    the process-wide memo holds for the table's current file snapshot
+    the process-wide memo holds for the files `table`'s DataFrame reads
     are reused, the rest run as ONE scan and are memoized. The memo
     only helps repeated probes over unchanged files (a fresh catalog
     per query re-probes them otherwise)."""
-    key = snapshot_key(catalog.tables.get(table))
+    key = catalog.files_key(table)
     out = [memo_get(key, ("ndv", e)) for e in exprs]
     missing = [i for i, n in enumerate(out) if n is None]
     if missing:
@@ -2816,6 +2816,20 @@ def _probe_ndvs(catalog, table: str, exprs) -> list:
             out[i] = row[f"n{i}"]
             memo_put(key, ("ndv", exprs[i]), out[i])
     return out
+
+
+def _replace_tile(catalog, name: str, df, path: str) -> None:
+    """Store `df`, which reads the tile at `path` (a refresh merge), as
+    that tile: write it beside the tile, then move it into place. The
+    merge never overwrites the files it reads, and the tile keeps its
+    path, so the Materialization define() returned and DROP still name
+    the only copy."""
+    path = path.rstrip("/")
+    staged = path + ".refresh"
+    df.write.mode("overwrite").parquet(staged)
+    shutil.rmtree(path, ignore_errors=True)
+    os.rename(staged, path)
+    catalog.register(name, path, schema=df.schema)
 
 
 def _read_delta(catalog, table: str, files):

@@ -16,71 +16,77 @@ partitions (dynamic partition overwrite).
 
 from __future__ import annotations
 
+import shutil
+
 from pyspark.sql import DataFrame, Observation, functions as F
 
 
-def _rewrite(catalog, table: str, df: DataFrame, check=None) -> str:
-    """Copy-on-write swap: write to a sibling path, re-register, and
-    delete the PREVIOUS sibling. Siblings alternate between two fixed
-    names derived from the original path (`.cow-a` / `.cow-b`), so
-    repeated DML neither grows the path unboundedly nor orphans a
-    directory per statement (r8 verdict: the old `.new` suffix
-    accumulated as `x.new.new.new…`). The ORIGINAL path is never
-    deleted — we may not own it (a mounted dataset); only the cow
-    siblings this function created are cleaned up.
+def _owned(catalog) -> set:
+    """The copy-on-write siblings this module created in `catalog`.
 
-    `check` runs after the write and before the swap: when it raises,
-    the new sibling is deleted and the table stays as it was. Returns
-    the new path. MV tile refreshes swap through here too, so a merge
-    that reads the tile never overwrites the files it reads."""
-    import shutil
-
-    entry = catalog.tables[table]
-    old_path = entry.path.rstrip("/")
-    # ownership is tracked EXPLICITLY, not inferred from the suffix: a
-    # user-registered path that happens to end in .cow-a must never be
-    # written over OR rmtree'd (review r9 — suffix inference deleted
-    # the user's source data, and suffix ALTERNATION would have written
-    # into it one swap later). Only a sibling THIS function created
-    # alternates and gets cleaned; an unowned path — whatever its name
-    # — is treated as the user's original and only ever read. The set
-    # is session-local; at worst one sibling directory survives a
-    # restart.
+    Ownership is tracked EXPLICITLY, not inferred from the suffix: a
+    user-registered path that happens to end in .cow-a must never be
+    written over OR rmtree'd (review r9 — suffix inference deleted the
+    user's source data, and suffix ALTERNATION would have written into
+    it one swap later). Only a sibling a rewrite created alternates and
+    gets cleaned; an unowned path — whatever its name — is treated as
+    the user's original and only ever read. The set is session-local;
+    at worst one sibling directory survives a restart."""
     owned = getattr(catalog, "_cow_owned", None)
     if owned is None:
         owned = catalog._cow_owned = set()
+    return owned
+
+
+def _sibling_path(catalog, table: str) -> str:
+    """Where the next copy-on-write rewrite of `table` writes. Siblings
+    alternate between two fixed names derived from the original path
+    (`.cow-a` / `.cow-b`), so repeated DML neither grows the path
+    unboundedly nor orphans a directory per statement (r8 verdict: the
+    old `.new` suffix accumulated as `x.new.new.new…`)."""
+    old_path = catalog.tables[table].path.rstrip("/")
+    owned = _owned(catalog)
     if old_path in owned and old_path.endswith(".cow-a"):
-        new_path = old_path[: -len(".cow-a")] + ".cow-b"
-    elif old_path in owned and old_path.endswith(".cow-b"):
-        new_path = old_path[: -len(".cow-b")] + ".cow-a"
-    else:
-        new_path = old_path + ".cow-a"
-    # the write below EXECUTES the read of old_path (eager action), so
-    # after it returns the previous sibling is dead weight
-    df.write.mode("overwrite").parquet(new_path)
-    if check is not None:
-        try:
-            check()
-        except BaseException:
-            shutil.rmtree(new_path, ignore_errors=True)
-            raise
+        return old_path[: -len(".cow-a")] + ".cow-b"
+    if old_path in owned and old_path.endswith(".cow-b"):
+        return old_path[: -len(".cow-b")] + ".cow-a"
+    return old_path + ".cow-a"
+
+
+def _swap(catalog, table: str, new_path: str, schema) -> None:
+    """Re-register `table` at the sibling just written and delete the
+    PREVIOUS sibling. The ORIGINAL path is never deleted — we may not
+    own it (a mounted dataset)."""
+    old_path = catalog.tables[table].path.rstrip("/")
     # register with the schema just written — the next table() call
     # skips the parquet schema-inference job (same write-site pattern
     # as the MV tile registrations)
-    catalog.register(table, new_path, schema=df.schema)
+    catalog.register(table, new_path, schema=schema)
+    owned = _owned(catalog)
     owned.add(new_path)
     if old_path != new_path and old_path in owned:
         shutil.rmtree(old_path, ignore_errors=True)
         owned.discard(old_path)
-    return new_path
+
+
+def _rewrite(catalog, table: str, df: DataFrame) -> None:
+    """Copy-on-write swap: write to a sibling path, re-register, and
+    delete the previous sibling."""
+    new_path = _sibling_path(catalog, table)
+    # the write EXECUTES the read of the old path (eager action), so
+    # after it returns the previous sibling is dead weight
+    df.write.mode("overwrite").parquet(new_path)
+    _swap(catalog, table, new_path, df.schema)
 
 
 def _observed(obs: Observation, *names: str) -> dict:
     """The counts an Observation collected during the write that ran
-    its DataFrame. Spark drops an observed node from the executed plan
-    only when empty-relation propagation proved its input empty (the
-    observation then completes with an empty row), so every count of a
-    missing row is 0."""
+    its DataFrame. The observations here sit where only an empty input
+    removes them: AQE's empty-relation propagation drops the join of an
+    empty MERGE target, observed nodes included, and Spark then
+    completes the observation with an empty row, which
+    `Observation.get` cannot convert — so the row is read on the JVM
+    side first, and every count of a missing row is 0."""
     if obs._jo.getRow().length() == 0:
         return dict.fromkeys(names, 0)
     return obs.get
@@ -110,16 +116,23 @@ def insert_into(
 def delete_where(catalog, table: str, condition: str) -> int:
     """DELETE FROM t WHERE cond → keep the complement. Returns #deleted.
 
-    #deleted = #rows where cond IS TRUE, the exact complement of the
-    kept set (NOT cond OR cond IS NULL). It is observed on the rewrite's
-    input, so the write job that keeps the complement also counts it —
-    no Spark job runs besides the write."""
-    obs = Observation()
-    df = catalog.table(table).observe(
-        obs, F.count(F.when(F.expr(condition), 1)).alias("n")
+    The kept set is NOT cond OR cond IS NULL, the exact complement of
+    the deleted rows, so #deleted = rows before − rows after, both read
+    from the parquet footers of the files the rewrite reads and writes:
+    no Spark job runs besides the write. (A count observed on the plan
+    would be lost: a condition that folds to TRUE makes the kept filter
+    FALSE, and Spark prunes the whole input, observed node included.)
+    `before` is taken from the handle's own files, not the entry's
+    cached count, which may predate an append."""
+    before = catalog.footer_rows(table)
+    if before is None:  # not read from local parquet: one count() job
+        before = catalog.row_count(table)
+    _rewrite(
+        catalog,
+        table,
+        catalog.table(table).filter(f"NOT ({condition}) OR ({condition}) IS NULL"),
     )
-    _rewrite(catalog, table, df.filter(f"NOT ({condition}) OR ({condition}) IS NULL"))
-    return _observed(obs, "n")["n"]
+    return before - catalog.row_count(table)
 
 
 def update_set(
@@ -258,19 +271,24 @@ def merge_into(
         )
         updated = updated.unionByName(inserts)
 
-    def one_match_per_target_row():
-        # MERGE precondition: no target row may match MULTIPLE source
-        # rows (Delta throws DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET).
-        # The left join emits one row per (target, source) match and
-        # one per unmatched target row, so it outgrows the target
-        # exactly when some target row matches twice — CONDITION-
-        # AGNOSTIC (review r8: on.split('=') key extraction broke on
-        # compound or reversed-operand conditions). Checked before the
-        # swap, so a failing MERGE leaves the table untouched.
-        if _observed(obs_joined, "n", "matched")["n"] > _observed(obs_target, "n")["n"]:
-            raise ValueError("MERGE: multiple source rows match the same key")
-
-    _rewrite(catalog, target, updated, check=one_match_per_target_row if modifies else None)
+    # write beside the target first: the counts below ride this job
+    new_path = _sibling_path(catalog, target)
+    updated.write.mode("overwrite").parquet(new_path)
+    # MERGE precondition: no target row may match MULTIPLE source rows
+    # (Delta throws DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET). The left
+    # join emits one row per (target, source) match and one per
+    # unmatched target row, so it outgrows the target exactly when some
+    # target row matches twice — CONDITION-AGNOSTIC (review r8:
+    # on.split('=') key extraction broke on compound or reversed-
+    # operand conditions). Checked before the swap, so a failing MERGE
+    # deletes its sibling and leaves the table untouched.
+    if modifies and (
+        _observed(obs_joined, "n", "matched")["n"]
+        > _observed(obs_target, "n")["n"]
+    ):
+        shutil.rmtree(new_path, ignore_errors=True)
+        raise ValueError("MERGE: multiple source rows match the same key")
+    _swap(catalog, target, new_path, updated.schema)
     if modifies:
         n_matched = _observed(obs_joined, "n", "matched")["matched"]
     n_inserted = _observed(obs_inserted, "n")["n"] if when_not_matched_insert else 0

@@ -1,8 +1,8 @@
-"""The file-snapshot memo behind the catalog's schema, row-count and NDV
-reuse: any change to the files Spark would read — an append into an
-existing partition subdirectory, or an in-place rewrite that keeps the
-file name — must change the key, so a fresh catalog re-derives all
-three instead of serving the old files' answers."""
+"""The file-snapshot memo behind the catalog's schema and NDV reuse, and
+footer row counts: any change to the files Spark would read — an append
+into an existing partition subdirectory, or an in-place rewrite that
+keeps the file name — must change the key, so a fresh catalog re-derives
+all three instead of serving the old files' answers."""
 
 from __future__ import annotations
 
@@ -98,3 +98,22 @@ def test_memo_answers_unchanged_files_without_a_job(spark, tmp_path, monkeypatch
     _no_count(monkeypatch, df)
     assert _probe_ndvs(cat, "t", ["x"]) == [2]
     assert cat.row_count("t") == 3
+
+
+def test_stale_handle_probe_is_not_filed_under_new_files(spark, tmp_path):
+    """A catalog's cached DataFrame lists the files as of its creation;
+    an NDV probed on it after an append is keyed by the files it read,
+    so a fresh catalog over the appended files probes them itself."""
+    root = str(tmp_path / "t")
+    _write(f"{root}/part-0.parquet", x=[1, 2, 3])
+    stale = Catalog(spark)
+    stale.register("t", root)
+    stale.table("t")
+    time.sleep(0.01)
+    _write(f"{root}/part-1.parquet", x=[4, 5, 6, 7])
+    assert _probe_ndvs(stale, "t", ["x"]) == [3]
+    assert stale.row_count("t") == 3
+    cat = Catalog(spark)
+    cat.register("t", root)
+    assert _probe_ndvs(cat, "t", ["x"]) == [7]
+    assert cat.row_count("t") == 7

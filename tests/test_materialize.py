@@ -890,7 +890,7 @@ def test_filtered_mv_incremental_refresh_applies_slice(spark, tmp_path):
     cat = _Cat(spark)
     cat.register("t", base)
     reg = MaterializationRegistry()
-    reg.define(
+    mv = reg.define(
         cat, "slice_inc", "t", ["k"], ["SUM(v) AS sv", "COUNT(*) AS n"],
         str(tmp_path / "slice_inc"), filter_condition="k >= 50",
     )
@@ -902,10 +902,7 @@ def test_filtered_mv_incremental_refresh_applies_slice(spark, tmp_path):
     ).write.mode("append").parquet(base)  # below the slice: must be ignored
     out = reg.incremental_refresh(cat, "slice_inc")
     assert out["refreshed"] and out["delta_files"] >= 1
-    # the merged tile is swapped in beside the one it read
-    got = sorted(
-        tuple(r) for r in spark.read.parquet(reg.mvs["slice_inc"].path).collect()
-    )
+    got = sorted(tuple(r) for r in spark.read.parquet(mv.path).collect())
     exp = sorted(
         tuple(r)
         for r in spark.read.parquet(base)
@@ -5754,7 +5751,7 @@ def test_benefit_gate_batches_probes_per_table(spark, monkeypatch):
     ndv_c = sug._key_ndv(cat, "c_mktsegment", proposal["tables"])
     ndv_o = sug._key_ndv(cat, "o_orderpriority", proposal["tables"])
 
-    catalog_mod._FILE_MEMO.clear()  # no memoized NDVs or row counts
+    catalog_mod._FILE_MEMO.clear()  # no memoized NDVs
     cat2 = Catalog(spark).register_parquet_dir(SF_DIR)
     # patch the CONCRETE DataFrame class (pyspark 4's pyspark.sql.
     # DataFrame is an ABC whose subclass overrides collect/count)

@@ -273,8 +273,9 @@ def test_merge_probe_is_one_action(spark, scratch, monkeypatch):
 
 def test_delete_where_is_one_count(spark, scratch, monkeypatch):
     """DELETE's #deleted (rows where the condition IS TRUE, the exact
-    complement of the kept set) is observed on the rewrite's input, so
-    the write job counts it: no count() or collect() besides it."""
+    complement of the kept set) is the footer row count before the
+    rewrite minus the one after, and UPDATE's is observed on the
+    rewrite's input: no count() or collect() besides the write."""
     calls = _count_actions(monkeypatch, scratch.table("nation"))
     deleted = delete_where(scratch, "nation", "n_regionkey = 0")
     assert calls == {"collect": 0, "count": 0}, calls
@@ -283,6 +284,34 @@ def test_delete_where_is_one_count(spark, scratch, monkeypatch):
     assert calls == {"collect": 0, "count": 0}, calls
     assert updated == 5
     assert scratch.table("nation").filter("n_regionkey = 0").count() == 0
+
+
+@pytest.mark.parametrize("where", [None, "TRUE", "1=1", "n_nationkey IS NOT NULL OR TRUE"])
+def test_delete_all_rows_counts_every_row(spark, scratch, tmp_path, where):
+    """A DELETE whose condition folds to TRUE (no WHERE at all reaches
+    delete_where as TRUE) makes the kept filter FALSE, and Spark prunes
+    the whole input; the count must still be every row, as
+    filter(cond).count() gives."""
+    from calcite_spark.sql.ddl import DdlExecutor
+    from calcite_spark.sql.frontend import SqlFrontend
+
+    n0 = scratch.table("nation").count()
+    ddl = DdlExecutor(SqlFrontend(scratch), str(tmp_path / "wh"))
+    sql = "DELETE FROM nation" + (f" WHERE {where}" if where else "")
+    assert ddl.execute(sql) == {"rows_modified": n0}
+    assert scratch.table("nation").count() == 0
+    assert delete_where(scratch, "nation", "TRUE") == 0
+
+
+def test_delete_count_follows_appended_files(spark, scratch):
+    """#deleted counts the rows of the files the rewrite reads, even
+    when the entry's cached row count predates an append."""
+    assert scratch.row_count("nation") == 25
+    path = scratch.tables["nation"].path
+    spark.read.parquet(f"{SF_DIR}/nation.parquet").write.mode("append").parquet(path)
+    scratch._dfs.pop("nation", None)
+    assert delete_where(scratch, "nation", "n_regionkey = 0") == 10
+    assert scratch.table("nation").count() == 40
 
 
 def test_repeated_dml_path_bounded(spark, scratch, tmp_path):
@@ -307,8 +336,9 @@ def test_repeated_dml_path_bounded(spark, scratch, tmp_path):
     # values survived all five rewrites
     got = scratch.table("nation").filter("n_regionkey = 1").select("n_name").collect()
     assert all(r.n_name == "pass 4" for r in got)
-    # MV tile refreshes swap the same way: the delta merge reads the
-    # tile, so it is written beside it (never over the files it reads)
+    # an MV tile refresh reads the tile, so the merge is written beside
+    # it and moved into place: the tile keeps its path and no copy of
+    # an older tile stays behind
     from pyspark.sql import functions as F
 
     from calcite_spark.plans.builder import RelBuilder
@@ -326,8 +356,8 @@ def test_repeated_dml_path_bounded(spark, scratch, tmp_path):
         .build()
     )
     tile = str(tmp_path / "tile")
-    reg.define_join(scratch, "tile", plan, tile, fact="fact")
-    seen = []
+    mv = reg.define_join(scratch, "tile", plan, tile, fact="fact")
+    listing = sorted(os.listdir(tmp_path))
     for i in range(5):
         (
             spark.read.parquet(f"{SF_DIR}/nation.parquet")
@@ -337,13 +367,8 @@ def test_repeated_dml_path_bounded(spark, scratch, tmp_path):
         scratch._dfs.pop("fact", None)
         stats = reg.incremental_refresh(scratch, "tile")
         assert stats["refreshed"] and stats["delta_files"] >= 1, stats
-        p = reg.mvs["tile"].path
-        assert p == scratch.tables["tile"].path
-        assert p == tile + (".cow-a" if i % 2 == 0 else ".cow-b"), p
-        other = tile + (".cow-b" if i % 2 == 0 else ".cow-a")
-        assert not os.path.exists(other)
-        seen.append(p)
-    assert len(set(seen)) == 2
+        assert reg.mvs["tile"].path == scratch.tables["tile"].path == tile
+        assert sorted(os.listdir(tmp_path)) == listing
     want = sorted(
         tuple(r)
         for r in spark.read.parquet(fact_dir)
@@ -353,5 +378,8 @@ def test_repeated_dml_path_bounded(spark, scratch, tmp_path):
         .agg(F.count("*").alias("n"), F.sum("n_nationkey").alias("s"))
         .collect()
     )
+    # the handle define_join returned reads the refreshed tile
+    fresh = spark.read.parquet(mv.path).select("r_name", "n", "s")
+    assert sorted(tuple(r) for r in fresh.collect()) == want
     got = sorted(tuple(r) for r in scratch.table("tile").select("r_name", "n", "s").collect())
     assert got == want
