@@ -18,6 +18,7 @@ from __future__ import annotations
 import re
 
 from dataclasses import dataclass, field
+from functools import lru_cache
 from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -278,6 +279,210 @@ class Aggregate(RelNode):
                 f"GROUP BY GROUPING SETS ({sets_sql})"
             )
         return ctx.spark.sql(" UNION ALL ".join(branches))
+
+
+# partial → merge function of every call a tile can store: rolling a
+# tile up to coarser keys and merging a refresh delta onto it.
+# APPROX_COUNT_DISTINCT / APPROX_PERCENTILE tiles store a DataSketches
+# HLL / KLL sketch and merge by sketch union — the two non-additive
+# measures a lattice can still roll up (≈ approximateDistinctCount and
+# Lattice's approximate measures; Spark's own HLL++ / QuantileSummaries
+# accumulators are not exposed as mergeable columns)
+_MERGE = {
+    "SUM": "SUM",
+    "COUNT": "SUM",
+    "MIN": "MIN",
+    "MAX": "MAX",
+    "APPROX_COUNT_DISTINCT": "hll_union_agg",
+    "APPROX_PERCENTILE": "kll_merge_agg_double",
+}
+# reducible to SUM / COUNT / sum-of-squares statistics
+# (≈ AggregateReduceFunctionsRule); VARIANCE and STDDEV are the sample
+# variants, as in both Calcite and Spark
+_DERIVED = ("AVG", "VAR_POP", "VAR_SAMP", "VARIANCE", "STDDEV_POP", "STDDEV_SAMP", "STDDEV")
+_GROUPING = ("GROUPING", "GROUPING_ID")
+_SPLITTABLE = ("SUM", "COUNT", "MIN", "MAX", "AVG")
+_CALL_HEAD_RE = re.compile(r"\s*([A-Za-z_]\w*)\s*\(")
+_EMBEDDED_CALL_RE = re.compile(rf"(?i)\b({'|'.join((*_MERGE, *_DERIVED))})\s*\(")
+_DISTINCT_RE = re.compile(r"(?i)DISTINCT\b\s*")
+_IDENT_RE = re.compile(r"[A-Za-z_]\w*")
+
+
+@dataclass(frozen=True)
+class AggCall:
+    """One aggregate call of `Aggregate.agg_calls` ≈
+    rel/core/AggregateCall.java: the call string read once, on the
+    lexer mask. `text` is the argument list as written (DISTINCT
+    included), whitespace collapsed outside literals; `args` its
+    top-level split after DISTINCT."""
+
+    fn: str  # upper case
+    distinct: bool
+    args: tuple
+    alias: Optional[str]
+    text: str
+
+    @staticmethod
+    @lru_cache(maxsize=4096)
+    def parse(item: str) -> Optional["AggCall"]:
+        """`FN(args) AS alias` for an aggregate or GROUPING function,
+        else None: compound expressions (MAX(a) - MIN(a) AS rng),
+        FILTER (WHERE ...), OVER, WITHIN GROUP and quoted aliases all
+        refuse."""
+        body, alias = lexer.split_alias(item)
+        if alias is None or not _IDENT_RE.fullmatch(alias) or item.rstrip().endswith("`"):
+            return None
+        m = _CALL_HEAD_RE.match(lexer.mask(body))
+        if m is None or m.group(1).upper() not in (*_MERGE, *_DERIVED, *_GROUPING):
+            return None
+        try:
+            inner, close = lexer.balanced_span(body, m.end())
+        except ValueError:
+            return None
+        if close != len(body) - 1:
+            return None
+        return AggCall._read(m.group(1), inner, alias)
+
+    @staticmethod
+    @lru_cache(maxsize=4096)
+    def find_in(expr: str) -> tuple:
+        """(start, end, call) of every aggregate call embedded in an
+        expression (SUM(a) + SUM(b), a HAVING condition), in order."""
+        out, end = [], 0
+        for m in lexer.finditer(_EMBEDDED_CALL_RE, expr):
+            if m.start() < end:
+                continue  # inside the previous call's arguments
+            try:
+                inner, close = lexer.balanced_span(expr, m.end())
+            except ValueError:
+                return ()
+            end = close + 1
+            out.append((m.start(), end, AggCall._read(m.group(1), inner, None)))
+        return tuple(out)
+
+    @staticmethod
+    def _read(fn: str, inner: str, alias) -> "AggCall":
+        text = lexer.squeeze(inner.strip())
+        d = _DISTINCT_RE.match(text)
+        args = lexer.split_top_level(text[d.end() :] if d else text)
+        return AggCall(fn.upper(), d is not None, tuple(args), alias, text)
+
+    @property
+    def mergeable(self) -> bool:
+        """A tile stores it as one column and merges that column."""
+        return self.fn in _MERGE
+
+    @property
+    def derived(self) -> bool:
+        return self.fn in _DERIVED
+
+    @property
+    def grouping(self) -> bool:
+        return self.fn in _GROUPING
+
+    @property
+    def splittable(self) -> bool:
+        """What split() pre-aggregates: FN(col) or COUNT(*), FN one of
+        SUM COUNT MIN MAX AVG — no DISTINCT, no expression argument."""
+        return (
+            self.fn in _SPLITTABLE
+            and not self.distinct
+            and len(self.args) == 1
+            and (
+                _IDENT_RE.fullmatch(self.args[0]) is not None
+                or (self.args[0] == "*" and self.fn == "COUNT")
+            )
+        )
+
+    def sql(self, alias: Optional[str] = None) -> str:
+        call = f"{self.fn}({self.text})"
+        return call if alias is None else f"{call} AS {alias}"
+
+    def percentile(self) -> Optional[tuple]:
+        """APPROX_PERCENTILE's (value, percentile text), or None unless
+        there are exactly two arguments and the percentile is a literal
+        in [0, 1] or an array(...) of such literals (one KLL sketch
+        serves many quantiles). An accuracy argument refuses: the KLL
+        tile has its own fixed accuracy."""
+        if self.distinct or len(self.args) != 2:
+            return None
+        m = re.fullmatch(r"(?is)array\s*\((.*)\)", self.args[1])
+        for lit in (lexer.split_top_level(m.group(1)) if m else [self.args[1]]) or [""]:
+            try:
+                p = float(lit)
+            except ValueError:
+                return None
+            if not 0.0 <= p <= 1.0:
+                return None
+        return self.args
+
+    def key(self) -> tuple:
+        """The identity that matches this call to a tile column: the
+        function and its normalized argument text; APPROX_PERCENTILE
+        keys on its value alone, since one KLL sketch serves every
+        percentile of it."""
+        pp = self.percentile() if self.fn == "APPROX_PERCENTILE" else None
+        return (self.fn, lexer.norm(pp[0] if pp else self.text))
+
+    def stats(self) -> tuple:
+        """The sufficient statistics of a derived call: SUM(x), COUNT(x)
+        and, past AVG, SUM(x * x) with x parenthesized unless a bare
+        identifier (VAR(a + b) needs SUM((a + b) * (a + b)))."""
+        x = self.text
+        sq = x if _IDENT_RE.fullmatch(x) else f"({x})"
+        parts = [("SUM", x), ("COUNT", x)]
+        if self.fn != "AVG":
+            parts.append(("SUM", f"{sq} * {sq}"))
+        return tuple(AggCall(fn, False, (a,), None, a) for fn, a in parts)
+
+    def tile(self) -> str:
+        """The tile's physical column for this call: the call itself,
+        or the mergeable HLL / KLL sketch of an approximate one (declaring
+        one on a tile opts in to sketch-served estimates — deterministic,
+        not bit-equal to Spark's native HLL++ / QuantileSummaries)."""
+        if self.fn == "APPROX_COUNT_DISTINCT":
+            return f"hll_sketch_agg({self.text}) AS {self.alias}"
+        if self.fn == "APPROX_PERCENTILE":
+            pp = self.percentile()
+            if pp is None:
+                raise ValueError(
+                    f"APPROX_PERCENTILE(value, percentile) expected; got ({self.text})"
+                )
+            # a sketch of the value: the declared p is only the default
+            return f"kll_sketch_agg_double(CAST({pp[0]} AS DOUBLE)) AS {self.alias}"
+        return self.sql(self.alias)
+
+    def merge(self, col: str, sum0: bool = False) -> str:
+        """The call merging partial column `col`; `sum0` merges COUNT
+        as $SUM0, COALESCE(SUM(col), 0): a global count over no rows is
+        0, not NULL."""
+        if sum0 and self.fn == "COUNT":
+            return f"COALESCE(SUM({col}), 0)"
+        return f"{_MERGE[self.fn]}({col})"
+
+    def read(self, col: str) -> str:
+        """The call's value from its tile column (or merged column)."""
+        if self.fn == "APPROX_COUNT_DISTINCT":
+            return f"hll_sketch_estimate({col})"
+        if self.fn == "APPROX_PERCENTILE":
+            return f"kll_sketch_get_quantile_double({col}, {self.percentile()[1]})"
+        return col
+
+    def split(self, name: str, scale: Optional[str] = None) -> tuple:
+        """(partial calls, merge call) of a splittable call for one
+        pre-aggregation level ≈ SqlSplittableAggFunction: the partial is
+        named `name` (AVG: a `{name}s` / `{name}c` SUM/COUNT pair, merged
+        by division — double, Spark's AVG type for non-decimal input).
+        `scale` multiplies each additive partial by the other join
+        side's row count; MIN and MAX never need it."""
+        if self.fn == "AVG":
+            s, c = f"{name}s", f"{name}c"
+            partials = tuple(stat.sql(n) for stat, n in zip(self.stats(), (s, c)))
+            if scale is not None:
+                s, c = f"{s} * {scale}", f"{c} * {scale}"
+            return partials, f"SUM({s}) / SUM({c}) AS {self.alias}"
+        col = name if scale is None or self.fn in ("MIN", "MAX") else f"{name} * {scale}"
+        return (self.sql(name),), f"{self.merge(col, sum0=True)} AS {self.alias}"
 
 
 def _grouping_sets_sql(sets) -> str:

@@ -31,99 +31,7 @@ from pyspark.sql import functions as _F
 from calcite_spark.catalog import memo_get, memo_put
 from calcite_spark.plans import ir
 from calcite_spark.sql import lexer
-
-_AGG_RE = re.compile(
-    r"^\s*(SUM|COUNT|MIN|MAX|APPROX_COUNT_DISTINCT|APPROX_PERCENTILE)"
-    r"\s*\(\s*(.*?)\s*\)\s+AS\s+(\w+)\s*$",
-    re.I,
-)
-
-# re-aggregation function when rolling a tile up to coarser keys.
-# APPROX_COUNT_DISTINCT tiles (r10) store a DataSketches HLL sketch
-# (hll_sketch_agg) and merge by sketch union — distinct counts are the
-# ONE non-additive measure a lattice can still roll up, exactly why
-# Calcite gates it behind approximateDistinctCount
-# (CalciteConnectionConfig) and Lattice's approximate measures.
-# APPROX_PERCENTILE tiles (r11, verdict item 8) store a DataSketches
-# KLL sketch (kll_sketch_agg_double) and merge by kll_merge_agg_double
-# — Spark's native approx_percentile accumulator (QuantileSummaries)
-# is not exposed as a mergeable column, but the KLL family is, which
-# makes percentiles the SECOND non-additive measure a tile can roll up.
-_REAGG = {
-    "SUM": "SUM",
-    "COUNT": "SUM",
-    "MIN": "MIN",
-    "MAX": "MAX",
-    "APPROX_COUNT_DISTINCT": "hll_union_agg",
-    "APPROX_PERCENTILE": "kll_merge_agg_double",
-}
-
-
-def _percentile_parts(arg: str):
-    """APPROX_PERCENTILE argument list → (value_expr, percentile_text)
-    or None. Exactly two arguments, the percentile a plain literal in
-    [0, 1] OR an array(...) of such literals (r12 — one KLL sketch
-    serves many quantiles; kll_sketch_get_quantile_double accepts the
-    array form directly, matching Spark's approx_percentile) — the
-    optional third (accuracy) argument refuses: the KLL tile has its
-    own fixed accuracy and silently honoring a requested one would be
-    a lie."""
-    parts = lexer.split_top_level(arg)
-    if len(parts) != 2 or parts[0].upper().startswith("DISTINCT"):
-        return None
-    m = re.fullmatch(r"(?is)array\s*\((.*)\)", parts[1])
-    lits = lexer.split_top_level(m.group(1)) if m else [parts[1]]
-    for lit in lits or [""]:
-        try:
-            p = float(lit)
-        except ValueError:
-            return None
-        if not 0.0 <= p <= 1.0:
-            return None
-    return parts[0], parts[1]
-
-
-def _tile_call_sql(fn: str, arg: str, alias: str) -> str:
-    """The PHYSICAL tile column for a declared measure: identity for
-    additive calls; APPROX_COUNT_DISTINCT stores the mergeable HLL
-    sketch and APPROX_PERCENTILE the mergeable KLL sketch (declaring
-    one on a tile is the opt-in to sketch-served estimates — the
-    estimates are DataSketches, deterministic but not bit-equal to
-    Spark's native HLL++/QuantileSummaries; both sides are approximate
-    by contract, ≈ approximateDistinctCount / Lattice's approximate
-    measures)."""
-    if fn.upper() == "APPROX_COUNT_DISTINCT":
-        return f"hll_sketch_agg({arg}) AS {alias}"
-    if fn.upper() == "APPROX_PERCENTILE":
-        pp = _percentile_parts(arg)
-        if pp is None:
-            raise ValueError(
-                f"APPROX_PERCENTILE(value, percentile) expected; got ({arg})"
-            )
-        # the sketch is over the VALUE column only — any percentile is
-        # servable from it, so the declared p is just the view default
-        return f"kll_sketch_agg_double(CAST({pp[0]} AS DOUBLE)) AS {alias}"
-    return f"{fn}({arg}) AS {alias}"
-
-# Derived aggregates decomposable onto a SUM/COUNT(/SUM-of-squares)
-# tile ≈ rel/rules/AggregateReduceFunctionsRule.java (the reference
-# reduces AVG/STDDEV/VAR to SUM and COUNT combinations, which
-# MaterializedViewAggregateRule then unifies against the view) — the
-# same sufficient-statistics identities, emitted directly in terms of
-# tile columns. VARIANCE/STDDEV are the sample variants, as in both
-# Calcite and Spark.
-_DERIVED_RE = re.compile(
-    r"^\s*(AVG|VAR_POP|VAR_SAMP|VARIANCE|STDDEV_POP|STDDEV_SAMP|STDDEV)"
-    r"\s*\(\s*(.*?)\s*\)\s+AS\s+(\w+)\s*$",
-    re.I,
-)
-
-# an aggregate call inside a larger expression (one paren-nesting level
-# — enough for FN((a+b)*c); deeper nesting refuses via no-match)
-_AGG_IN_EXPR_RE = re.compile(
-    r"(?is)\b(SUM|COUNT|MIN|MAX|AVG|VAR_POP|VAR_SAMP|VARIANCE|"
-    r"STDDEV_POP|STDDEV_SAMP|STDDEV)\s*(\((?:[^()]|\([^()]*\))*\))"
-)
+from calcite_spark.sql.lexer import norm as _norm
 
 
 @dataclass
@@ -133,7 +41,7 @@ class Materialization:
     name: str
     table: str  # base table the MV aggregates (fact table for join MVs)
     group_keys: tuple
-    agg_calls: dict  # alias -> (FN, arg_expr)
+    agg_calls: dict  # alias -> ir.AggCall
     path: str = ""
     filter_condition: str | None = None  # None = unfiltered MV
     # file snapshot of the base table at (re)build time — the change-
@@ -178,49 +86,19 @@ class Materialization:
     # append and proves nothing about the build-time join.
     build_fks: tuple = ()  # ((table, col, ref_table, ref_col), ...)
 
+    def tile_calls(self) -> tuple:
+        """The tile's physical aggregate calls (sketches for the
+        approximate measures): its build, refresh and residual form."""
+        return tuple(c.tile() for c in self.agg_calls.values())
+
 
 def _paren_balanced(text: str) -> bool:
-    """Depth never negative and zero at the end — rejects the lazy
-    _AGG_RE capture of a COMPOUND call (`MAX(a) - MIN(a) AS rng`
-    "parses" as fn=MAX, arg="a) - MIN(a"): review r9 — the mis-parse
-    let define() accept a compound call and the simple tier later
-    emitted MAX(rng) over coarser keys, max-of-ranges instead of the
-    range). Wrapped in one more pair, the text is balanced iff that
-    pair closes at its end."""
+    """Depth never negative and zero at the end. Wrapped in one more
+    pair, the text is balanced iff that pair closes at its end."""
     try:
         return lexer.balanced_span(f"({text})", 1)[1] == len(text) + 1
     except ValueError:
         return False
-
-
-def _square_arg(arg: str) -> str:
-    """The sum-of-squares argument for VAR/STDDEV decomposition —
-    parenthesized unless a bare identifier (review r9: the naked
-    f"{arg} * {arg}" turned VAR(a + b) into SUM(a + b*a + b), a wrong
-    sufficient statistic). ONE definition shared by the DDL
-    decomposer and the query-side mapper so the stored and looked-up
-    forms can never diverge."""
-    a = arg if re.fullmatch(r"[A-Za-z_]\w*", arg) else f"({arg})"
-    return f"{a} * {a}"
-
-
-def parse_agg_call(call: str):
-    m = _AGG_RE.match(call)
-    if not m or not _paren_balanced(m.group(2)):
-        return None
-    return m.group(1).upper(), re.sub(r"\s+", " ", m.group(2)), m.group(3)
-
-
-def liftable_agg_call(call: str) -> bool:
-    """Is this SELECT item a form the MV call mapper could serve —
-    a plain SUM/COUNT/MIN/MAX, a derived AVG/VAR/STDDEV, or an
-    arithmetic expression over such calls (SUM(a) + SUM(b) AS x)?
-    Used by the frontend lift's gate; the lift itself stays verbatim
-    (Spark executes the raw string whether or not substitution fires)."""
-    if parse_agg_call(call) is not None or _DERIVED_RE.match(call):
-        return True
-    body, alias = lexer.split_alias(call)
-    return alias is not None and _AGG_IN_EXPR_RE.search(body) is not None
 
 
 # ---------------------------------------------------------------------
@@ -566,22 +444,19 @@ class MaterializationRegistry:
                 )
         parsed = {}
         lowered = []
-        for call in agg_calls:
-            p = parse_agg_call(call)
-            if p is None:
-                raise ValueError(f"not a rewritable aggregate call: {call}")
-            fn, arg, alias = p
-            if alias in out_names:
+        for item in agg_calls:
+            call = ir.AggCall.parse(item)
+            if call is None or not call.mergeable:
+                raise ValueError(f"not a rewritable aggregate call: {item}")
+            if call.alias in out_names:
                 raise ValueError(
-                    f"define: aggregate alias {alias!r} collides with a "
+                    f"define: aggregate alias {call.alias!r} collides with a "
                     "group-key output name"
                 )
-            if fn == "APPROX_COUNT_DISTINCT" and arg.upper().startswith(
-                "DISTINCT"
-            ):
-                raise ValueError(f"define: DISTINCT inside {call!r}")
-            parsed[alias] = (fn, arg)
-            lowered.append(_tile_call_sql(fn, arg, alias))
+            if call.fn == "APPROX_COUNT_DISTINCT" and call.distinct:
+                raise ValueError(f"define: DISTINCT inside {item!r}")
+            parsed[call.alias] = call
+            lowered.append(call.tile())
         base: ir.RelNode = ir.Scan(table)
         if filter_condition is not None:
             base = ir.Filter(filter_condition, inputs=(base,))
@@ -775,18 +650,17 @@ class MaterializationRegistry:
             )
         parsed = {}
         lowered = []
-        for call in plan.agg_calls:
-            p = parse_agg_call(call)
-            if p is None:
-                raise ValueError(f"not a rewritable aggregate call: {call}")
-            fn, arg, alias = p
-            if alias in key_out:
+        for item in plan.agg_calls:
+            call = ir.AggCall.parse(item)
+            if call is None or not call.mergeable:
+                raise ValueError(f"not a rewritable aggregate call: {item}")
+            if call.alias in key_out:
                 raise ValueError(
-                    f"define_join: aggregate alias {alias!r} collides "
+                    f"define_join: aggregate alias {call.alias!r} collides "
                     "with a group-key output name"
                 )
-            parsed[alias] = (fn, arg)
-            lowered.append(_tile_call_sql(fn, arg, alias))
+            parsed[call.alias] = call
+            lowered.append(call.tile())
         if tuple(lowered) != tuple(plan.agg_calls):
             # APPROX_COUNT_DISTINCT measures store their mergeable
             # sketch — the DEFINING plan is rewritten so the build AND
@@ -867,10 +741,10 @@ class MaterializationRegistry:
             return self._join_incremental_refresh(catalog, mv)
         if mv.spf:
             return self._spf_incremental_refresh(catalog, mv)
-        for alias, (fn, arg) in mv.agg_calls.items():
-            if arg.upper().startswith("DISTINCT"):
+        for call in mv.agg_calls.values():
+            if call.distinct:
                 raise ValueError(
-                    f"MV {name}: {fn}(DISTINCT ...) is not incrementally "
+                    f"MV {name}: {call.fn}(DISTINCT ...) is not incrementally "
                     "maintainable — redefine with define() to rebuild"
                 )
         if not mv.base_files:
@@ -891,10 +765,7 @@ class MaterializationRegistry:
             # would re-aggregate the whole rewritten base ONTO the
             # stale tile — silent double counting (ADVICE r8). Full
             # rebuild from the current base instead.
-            calls = tuple(
-                _tile_call_sql(fn, arg, alias)
-                for alias, (fn, arg) in mv.agg_calls.items()
-            )
+            calls = mv.tile_calls()
             base: ir.RelNode = ir.Scan(mv.table)
             if mv.filter_condition is not None:
                 base = ir.Filter(mv.filter_condition, inputs=(base,))
@@ -919,10 +790,7 @@ class MaterializationRegistry:
 
         spark = catalog.spark
         delta_df = _read_delta(catalog, mv.table, delta)
-        calls = tuple(
-            _tile_call_sql(fn, arg, alias)
-            for alias, (fn, arg) in mv.agg_calls.items()
-        )
+        calls = mv.tile_calls()
         tmp = f"__mv_delta_{name}"
         catalog.register_df(tmp, delta_df)
         try:
@@ -935,8 +803,8 @@ class MaterializationRegistry:
                 mv.group_keys, calls, inputs=(delta_base,)
             ).to_df(catalog)
             merge_calls = [
-                _F.expr(f"{_REAGG[fn]}({alias})").alias(alias)
-                for alias, (fn, _) in mv.agg_calls.items()
+                _F.expr(call.merge(alias)).alias(alias)
+                for alias, call in mv.agg_calls.items()
             ]
             # the merge re-groups the tile∪delta by the tile's STORED
             # key columns — expression keys (r10) merge by their alias
@@ -995,10 +863,10 @@ class MaterializationRegistry:
                 "join refresh needs file-backed bases (rebuild with "
                 "define_join())"
             )
-        for alias, (fn, arg) in mv.agg_calls.items():
-            if arg.upper().startswith("DISTINCT"):
+        for call in mv.agg_calls.values():
+            if call.distinct:
                 raise ValueError(
-                    f"MV {name}: {fn}(DISTINCT ...) is not incrementally "
+                    f"MV {name}: {call.fn}(DISTINCT ...) is not incrementally "
                     "maintainable — redefine with define_join() to rebuild"
                 )
         snaps = dict(mv.base_files_by_table)
@@ -1156,8 +1024,8 @@ class MaterializationRegistry:
         try:
             delta_agg = swap_fact(mv.defining_plan).to_df(catalog)
             merge_calls = [
-                _F.expr(f"{_REAGG[fn]}({alias})").alias(alias)
-                for alias, (fn, _) in mv.agg_calls.items()
+                _F.expr(call.merge(alias)).alias(alias)
+                for alias, call in mv.agg_calls.items()
             ]
             merged = (
                 catalog.table(name)
@@ -1527,80 +1395,44 @@ class MaterializationRegistry:
         )
 
     @staticmethod
-    def _tile_col(mv: Materialization, fn: str, arg: str):
-        """The tile column computing FN(arg), by normalized-arg match."""
-        return next(
-            (
-                a
-                for a, (mfn, marg) in mv.agg_calls.items()
-                if mfn == fn and _norm(marg) == _norm(arg)
-            ),
-            None,
-        )
+    def slice_column(cond: str):
+        """The one column a range/point condition slices a tile by, or
+        None when `cond` is not that single-column form."""
+        parsed = _parse_interval(cond)
+        return None if parsed is None else parsed[0]
 
     @staticmethod
-    def _map_simple(fn: str, arg: str, mv: Materialization, exact: bool):
-        """SUM/COUNT/MIN/MAX call → bare tile expression (no alias), or
-        None. Exact tier = the tile column itself; rollup tier =
-        re-aggregate (SUM→SUM, COUNT→$SUM0 COALESCE, MIN/MAX
-        idempotent). DISTINCT only survives the exact tier (SUM of
-        per-group distinct counts overcounts)."""
-        if arg.upper().startswith("DISTINCT") and not exact:
+    def _tile_col(mv: Materialization, key: tuple):
+        """The tile column whose call has this AggCall.key()."""
+        return next((a for a, c in mv.agg_calls.items() if c.key() == key), None)
+
+    @staticmethod
+    def _map_simple(call: ir.AggCall, mv: Materialization, exact: bool):
+        """A mergeable call → bare tile expression (no alias), or None.
+        Exact tier = the tile column itself; rollup tier = re-aggregate
+        (SUM→SUM, COUNT→$SUM0 COALESCE, MIN/MAX idempotent). DISTINCT
+        only survives the exact tier (SUM of per-group distinct counts
+        overcounts). The HLL / KLL sketch columns of the approximate
+        calls are estimated (exact) or merged then estimated (rollup) —
+        approximate-for-approximate, the approximateDistinctCount
+        contract; the KLL sketch is over the VALUE, so any percentile
+        of it is servable, and a 3-argument call (explicit accuracy)
+        refuses."""
+        if call.distinct and not exact:
             return None
-        if fn == "APPROX_PERCENTILE":
-            # the tile column is a DataSketches KLL sketch over the
-            # VALUE expression — ANY percentile is servable from it
-            # (match on the value expression only, not the declared p):
-            # read the quantile (exact tier) or merge-then-read (rollup
-            # tier). Approximate-for-approximate by the same contract
-            # as the HLL tier; a 3-argument call (explicit accuracy)
-            # refused at parse.
-            pp = _percentile_parts(arg)
-            if pp is None:
-                return None
-            val, p = pp
-            src = next(
-                (
-                    a
-                    for a, (mfn, marg) in mv.agg_calls.items()
-                    if mfn == "APPROX_PERCENTILE"
-                    and (m2 := _percentile_parts(marg)) is not None
-                    and _norm(m2[0]) == _norm(val)
-                ),
-                None,
-            )
-            if src is None:
-                return None
-            if exact:
-                return f"kll_sketch_get_quantile_double({src}, {p})"
-            return (
-                "kll_sketch_get_quantile_double("
-                f"kll_merge_agg_double({src}), {p})"
-            )
-        src = MaterializationRegistry._tile_col(mv, fn, arg)
+        if call.fn == "APPROX_PERCENTILE" and call.percentile() is None:
+            return None
+        src = MaterializationRegistry._tile_col(mv, call.key())
         if src is None:
             return None
-        if fn == "APPROX_COUNT_DISTINCT":
-            # the tile column is a DataSketches HLL sketch: estimate it
-            # (exact tier) or union-then-estimate (rollup tier) —
-            # approximate-for-approximate, the approximateDistinctCount
-            # contract (the estimate is deterministic but not bit-equal
-            # to Spark's native HLL++ implementation)
-            if exact:
-                return f"hll_sketch_estimate({src})"
-            return f"hll_sketch_estimate(hll_union_agg({src}))"
-        if exact:
-            return src
-        if fn == "COUNT":
-            # $SUM0: a GLOBAL COUNT whose compensating filter matches
-            # no tile rows must yield 0, not SUM-over-nothing NULL
-            # (review r8 — same CountSplitter reasoning as the
-            # join/union transposes)
-            return f"COALESCE(SUM({src}), 0)"
-        return f"{_REAGG[fn]}({src})"
+        # $SUM0 on the rollup tier: a GLOBAL COUNT whose compensating
+        # filter matches no tile rows must yield 0, not SUM-over-nothing
+        # NULL (review r8 — same CountSplitter reasoning as the
+        # join/union transposes)
+        return call.read(src if exact else call.merge(src, sum0=True))
 
     @staticmethod
-    def _map_derived(fn: str, arg: str, mv: Materialization, exact: bool, catalog):
+    def _map_derived(call: ir.AggCall, mv: Materialization, exact: bool, catalog):
         """AVG/VAR/STDDEV call → bare tile expression via the
         sufficient-statistics identities (≈ AggregateReduceFunctionsRule
         reducing them to SUM/COUNT, then unifying against the tile):
@@ -1624,36 +1456,30 @@ class MaterializationRegistry:
         real arithmetic but catastrophic cancellation can produce a
         small negative double, and SQRT of that would be NaN where
         Spark's Welford implementation yields 0."""
-        fn = fn.upper()
-        if arg.upper().startswith("DISTINCT") or catalog is None:
+        fn = call.fn
+        if call.distinct or catalog is None:
             return None
         tc = MaterializationRegistry._tile_col
-        s = tc(mv, "SUM", arg)
-        c = tc(mv, "COUNT", arg)
-        if c is None and not mv.tables and re.fullmatch(r"[A-Za-z_]\w*", arg):
-            star = tc(mv, "COUNT", "*") or tc(mv, "COUNT", "1")
-            if star is not None and _column_nulls(catalog, mv.table, arg) == 0:
-                c = star
-        if s is None or c is None:
+        needed = [tc(mv, stat.key()) for stat in call.stats()]
+        if needed[1] is None and not mv.tables and _plain_key(call.text):
+            star = tc(mv, ("COUNT", "*")) or tc(mv, ("COUNT", "1"))
+            if star is not None and _column_nulls(catalog, mv.table, call.text) == 0:
+                needed[1] = star
+        if None in needed:
             return None
-        needed = [s, c]
-        q = None
-        if fn != "AVG":
-            q = tc(mv, "SUM", _square_arg(arg))
-            if q is None:
-                return None
-            needed.append(q)
         try:
             dtypes = dict(catalog.table(mv.name).dtypes)
         except Exception:
             return None
         if any(str(dtypes.get(col, "")).startswith("decimal") for col in needed):
             return None
+        s, c = needed[:2]
         S = s if exact else f"SUM({s})"
         C = c if exact else f"SUM({c})"
         SD = f"CAST({S} AS DOUBLE)"
         if fn == "AVG":
             return f"CASE WHEN {C} > 0 THEN {SD} / {C} END"
+        q = needed[2]
         Q = q if exact else f"SUM({q})"
         ss = f"(CAST({Q} AS DOUBLE) - {SD} * {SD} / {C})"
         if fn in ("VAR_POP", "STDDEV_POP"):
@@ -1664,8 +1490,17 @@ class MaterializationRegistry:
         return f"CASE WHEN {guard} THEN {body} END"
 
     @staticmethod
+    def _map_call(call: ir.AggCall, mv: Materialization, exact: bool, catalog):
+        """A mergeable or derived call → bare tile expression, or None."""
+        if call.mergeable:
+            return MaterializationRegistry._map_simple(call, mv, exact)
+        if call.derived:
+            return MaterializationRegistry._map_derived(call, mv, exact, catalog)
+        return None
+
+    @staticmethod
     def _map_expression_call(
-        call: str, mv: Materialization, exact: bool, catalog, query_keys
+        item: str, mv: Materialization, exact: bool, catalog, query_keys
     ):
         """Expression compensation (≈ SubstitutionVisitor unifying
         derived expressions): an arithmetic expression over aggregate
@@ -1675,35 +1510,24 @@ class MaterializationRegistry:
         the calls must be the query's group keys, and calls there known
         scalars (anything else could silently rebind against the
         tile)."""
-        body, alias = lexer.split_alias(call)
-        if alias is None:
+        body, alias = lexer.split_alias(item)
+        found = ir.AggCall.find_in(body)
+        if alias is None or not found:
             return None
-        out, last, found = [], 0, 0
-        # aggregate-SHAPED text inside a string literal is data, not
-        # a call (review r9: splicing it rewrote the literal)
-        for mt in lexer.finditer(_AGG_IN_EXPR_RE, body):
-            fn = mt.group(1).upper()
-            arg = re.sub(r"\s+", " ", mt.group(2)[1:-1].strip())
-            if fn in _REAGG:
-                sub = MaterializationRegistry._map_simple(fn, arg, mv, exact)
-            else:
-                sub = MaterializationRegistry._map_derived(
-                    fn, arg, mv, exact, catalog
-                )
+        out, residual, last = [], [], 0
+        for start, end, call in found:
+            sub = MaterializationRegistry._map_call(call, mv, exact, catalog)
             if sub is None:
                 return None
-            out.append(body[last : mt.start()])
-            out.append(f"({sub})")
-            last = mt.end()
-            found += 1
-        if not found:
-            return None
+            out += [body[last:start], f"({sub})"]
+            residual += [body[last:start], " "]
+            last = end
         out.append(body[last:])
+        residual = "".join(residual) + body[last:]
         # outside the calls: columns are the query's group keys or a
         # key's ALIAS (r10) — it names the tile column the key maps to —
         # and calls are known scalars (any other could be an aggregate
         # the tile answers differently, e.g. collect_list)
-        residual = lexer.sub(_AGG_IN_EXPR_RE, lambda _: " ", body)
         allowed = set(query_keys) | {lexer.item_name(k) for k in query_keys}
         calls = {
             m.group(1).upper()
@@ -1729,73 +1553,50 @@ class MaterializationRegistry:
         SubstitutionVisitor expression unification). None when any
         call has no tile derivation."""
         new_calls = []
-        for call in agg_calls:
-            # the tiers FALL THROUGH on refusal rather than failing the
-            # whole mapping: _AGG_RE's lazy arg can "match" a compound
-            # expression (SUM(a) + SUM(b) AS x parses as SUM with a
-            # garbage arg), which the expression tier then handles
+        for item in agg_calls:
+            call = ir.AggCall.parse(item)
             mapped = None
-            p = parse_agg_call(call)
-            if p is not None:
-                fn, arg, alias = p
-                sub = MaterializationRegistry._map_simple(fn, arg, mv, exact)
+            if call is not None:
+                sub = MaterializationRegistry._map_call(call, mv, exact, catalog)
                 if sub is not None:
-                    mapped = sub if sub == alias else f"{sub} AS {alias}"
-            if mapped is None:
-                dm = _DERIVED_RE.match(call)
-                if dm is not None:
-                    sub = MaterializationRegistry._map_derived(
-                        dm.group(1), re.sub(r"\s+", " ", dm.group(2)), mv,
-                        exact, catalog,
-                    )
-                    if sub is not None:
-                        mapped = f"{sub} AS {dm.group(3)}"
-            if mapped is None and not exact:
+                    mapped = sub if sub == call.alias else f"{sub} AS {call.alias}"
+            if mapped is None and not exact and call is not None and call.grouping:
                 # GROUPING/GROUPING_ID over query keys (r10, the
                 # groupSets tier): each argument must be a tile group
                 # key — re-reference it by the tile's stored column so
                 # the re-aggregate computes the indicator itself
-                gm = re.match(
-                    r"(?is)^\s*(GROUPING|GROUPING_ID)\s*\((.*)\)\s+AS\s+(\w+)\s*$",
-                    call,
-                )
-                if gm is not None:
-                    tile_by_norm = {_norm(k): k for k in mv.group_keys}
-                    # derived query keys (r14, verdict Missing #2 —
-                    # the yearly-rollup-with-subtotal-flags dashboard
-                    # rescanned the fact): GROUPING(year(d)) remaps to
-                    # GROUPING(year(m_key)), the SAME derivation the
-                    # keys themselves take in _resolve_merge_keys —
-                    # the caller passes its resolved keys positionally
-                    derived_by_norm = {}
-                    for qk, rk in zip(query_keys, resolved_keys):
-                        tgt = lexer.split_alias(rk)[0]
-                        derived_by_norm[_norm(qk)] = tgt
-                        # the call's argument writes the bare expression
-                        # (GROUPING(year(d)), no alias) — register the
-                        # alias-stripped spelling of the query key too
-                        qbody, qalias = lexer.split_alias(qk)
-                        if qalias is not None:
-                            derived_by_norm[_norm(qbody)] = tgt
-                    args, ok = [], True
-                    for a in re.split(r",(?![^()]*\))", gm.group(2)):
-                        hit = tile_by_norm.get(_norm(a.strip()))
-                        if hit is not None:
-                            args.append(lexer.item_name(hit))
-                            continue
-                        der = derived_by_norm.get(_norm(a.strip()))
-                        if der is None:
-                            ok = False
-                            break
-                        args.append(der)
-                    if ok and args:
-                        mapped = (
-                            f"{gm.group(1).upper()}({', '.join(args)}) "
-                            f"AS {gm.group(3)}"
-                        )
+                tile_by_norm = {_norm(k): k for k in mv.group_keys}
+                # derived query keys (r14, verdict Missing #2 —
+                # the yearly-rollup-with-subtotal-flags dashboard
+                # rescanned the fact): GROUPING(year(d)) remaps to
+                # GROUPING(year(m_key)), the SAME derivation the
+                # keys themselves take in _resolve_merge_keys —
+                # the caller passes its resolved keys positionally
+                derived_by_norm = {}
+                for qk, rk in zip(query_keys, resolved_keys):
+                    tgt = lexer.split_alias(rk)[0]
+                    derived_by_norm[_norm(qk)] = tgt
+                    # the call's argument writes the bare expression
+                    # (GROUPING(year(d)), no alias) — register the
+                    # alias-stripped spelling of the query key too
+                    qbody, qalias = lexer.split_alias(qk)
+                    if qalias is not None:
+                        derived_by_norm[_norm(qbody)] = tgt
+                args = []
+                for a in call.args:
+                    hit = tile_by_norm.get(_norm(a))
+                    if hit is not None:
+                        args.append(lexer.item_name(hit))
+                    elif _norm(a) in derived_by_norm:
+                        args.append(derived_by_norm[_norm(a)])
+                    else:
+                        break
+                else:
+                    if args:
+                        mapped = f"{call.fn}({', '.join(args)}) AS {call.alias}"
             if mapped is None:
                 mapped = MaterializationRegistry._map_expression_call(
-                    call, mv, exact, catalog, query_keys
+                    item, mv, exact, catalog, query_keys
                 )
             if mapped is None:
                 return None
@@ -2204,12 +2005,6 @@ class MaterializationRegistry:
             ),
         )
         residual_sql = " OR ".join(f"({_interval_sql(m_col, r)})" for r in residual)
-        # residual partials must match the TILE's physical columns
-        # (sketches for APPROX_COUNT_DISTINCT measures)
-        base_calls = tuple(
-            _tile_call_sql(fn, arg, alias)
-            for alias, (fn, arg) in mv.agg_calls.items()
-        )
         # residual base: the query's own subtree — for single-table
         # tiles this IS Scan(mv.table); for exact-join tiles it is the
         # same join the tile was defined over; for FK-PEELED queries
@@ -2223,7 +2018,7 @@ class MaterializationRegistry:
             inputs=(
                 ir.Aggregate(
                     mv.group_keys,
-                    base_calls,
+                    mv.tile_calls(),  # residual partials: the tile's columns
                     inputs=(
                         ir.Filter(residual_sql, inputs=(base_input,)),
                     ),
@@ -2381,19 +2176,13 @@ class MaterializationRegistry:
                 ir.Filter(covered_sql, inputs=(ir.Scan(mv.name),)),
             ),
         )
-        # residual partials must match the TILE's physical columns
-        # (sketches for APPROX_COUNT_DISTINCT measures)
-        base_calls = tuple(
-            _tile_call_sql(fn, arg, alias)
-            for alias, (fn, arg) in mv.agg_calls.items()
-        )
         base_input = self._rejoin_peeled(filt.inputs[0], peels or [])
         base_branch = ir.Project(
             branch_cols,
             inputs=(
                 ir.Aggregate(
                     mv.group_keys,
-                    base_calls,
+                    mv.tile_calls(),  # residual partials: the tile's columns
                     inputs=(
                         ir.Filter(residual_sql, inputs=(base_input,)),
                     ),
@@ -2508,7 +2297,7 @@ class MaterializationRegistry:
                 # case-insensitive like Spark's identifier resolution
                 # (ADVICE r12: the raw compare silently lost grain-edge
                 # serving on mixed-case columns — mirror
-                # _grain_hierarchy_key's _norm)
+                # _grain_hierarchy_key's lexer.norm)
                 if m and _norm(m.group(2)) == _norm(c):
                     grain, alias, col = m.group(1).lower(), lexer.item_name(k), c
                     break
@@ -2632,9 +2421,6 @@ class MaterializationRegistry:
             return self._merge_aggregate(
                 agg, merged_calls, tile_branch, merge_keys
             )
-        base_calls = tuple(
-            _tile_call_sql(fn, arg, a) for a, (fn, arg) in mv.agg_calls.items()
-        )
         base_input = self._rejoin_peeled(filt.inputs[0], peels or [])
         sliver_sql = "(" + " OR ".join(slivers) + ")"
         if other_sql:
@@ -2644,7 +2430,7 @@ class MaterializationRegistry:
             inputs=(
                 ir.Aggregate(
                     mv.group_keys,
-                    base_calls,
+                    mv.tile_calls(),  # residual partials: the tile's columns
                     inputs=(
                         ir.Filter(sliver_sql, inputs=(base_input,)),
                     ),
@@ -3033,19 +2819,6 @@ def _grain_slice_ok(region_entry, group_keys) -> bool:
     return iv.lo is not None or iv.hi is not None
 
 
-def _norm(expr: str) -> str:
-    """Whitespace/case-insensitive normalization OUTSIDE single-quoted
-    string literals; literal content is DATA and compares verbatim
-    (review r10: folding inside literals false-matched
-    date_format(d, 'yyyyMM') with date_format(d, 'yyyymm') — two
-    different grains — and the tile silently served the wrong one)."""
-    parts = re.split(r"('(?:[^']|'')*')", expr)
-    return "".join(
-        p if i % 2 else re.sub(r"\s+", "", p).lower()
-        for i, p in enumerate(parts)
-    )
-
-
 def _column_nulls(catalog, table: str, col: str):
     """ANALYZE-recorded NULL count for table.col, or None when no
     grounded stats exist (callers treat None as 'cannot prove')."""
@@ -3137,26 +2910,22 @@ class LatticeSuggester:
 
     @staticmethod
     def _record_calls(agg_calls) -> tuple:
-        """Normalize observed aggregate calls for recording: liftable
+        """Normalize observed aggregate calls for recording: mergeable
         calls verbatim; derived aggregates (AVG/VAR/STDDEV) as their
         SUFFICIENT STATISTICS (r9) — a corpus full of AVG queries then
-        suggests a SUM+COUNT tile the derived mapper can serve."""
+        suggests a SUM+COUNT tile the derived mapper can serve. Any
+        other call is skipped; the rest still record."""
         norm_calls = []
         for c in agg_calls:
-            if parse_agg_call(c):
+            call = ir.AggCall.parse(c)
+            if call is None:
+                continue
+            if call.mergeable:
                 norm_calls.append(c)
-                continue
-            dm = _DERIVED_RE.match(c)
-            if dm is None:
-                continue  # unrecordable call: skip it, keep the rest
-            fn = dm.group(1).upper()
-            arg = re.sub(r"\s+", " ", dm.group(2))
-            if arg.upper().startswith("DISTINCT") or not _paren_balanced(arg):
-                continue
-            norm_calls.append(f"SUM({arg}) AS s")
-            norm_calls.append(f"COUNT({arg}) AS c")
-            if fn != "AVG":
-                norm_calls.append(f"SUM({_square_arg(arg)}) AS q")
+            elif call.derived and not call.distinct:
+                norm_calls += [
+                    stat.sql(alias) for stat, alias in zip(call.stats(), "scq")
+                ]
         return tuple(sorted(set(norm_calls)))
 
     def observe(self, plan: ir.RelNode) -> None:
@@ -3297,8 +3066,8 @@ class LatticeSuggester:
         """Proposals grouped per table (single-table shapes) or per
         (table set, edge set) star (join shapes, r10), most-observed
         first. group_keys = union of observed keys; agg_calls = union of
-        observed aggregate (fn, arg) pairs with canonical aliases (the
-        rewrite matches on (fn, normalized arg), not alias)."""
+        observed aggregate calls, one per AggCall.key(), with canonical
+        aliases (the rewrite matches on the key, not the alias)."""
         grouped: dict[tuple, list[_ShapeStat]] = {}
         for st in self.shapes.values():
             g = (st.tables, st.join_edges) if st.tables else (st.table,)
@@ -3454,21 +3223,14 @@ class LatticeSuggester:
             aliases = [lexer.item_name(k) for k in keys]
             if len(set(aliases)) != len(aliases):
                 continue
+            # union on AggCall.key(): one KLL sketch serves every
+            # percentile of a value (r12: a p50+p99 corpus used to
+            # propose two identical physical sketches)
             seen_calls: dict[tuple, str] = {}
             for s in stats:
-                for call in s.agg_calls:
-                    fn, arg, _alias = parse_agg_call(call)
-                    if fn == "APPROX_PERCENTILE":
-                        # one KLL sketch serves every percentile of a
-                        # value expression — key the union on the value
-                        # alone (r12, same class as the ADVICE-r11 DDL
-                        # dedup: a p50+p99 corpus used to propose two
-                        # identical physical sketches)
-                        pp = _percentile_parts(arg)
-                        key = (fn, _norm(pp[0]) if pp else _norm(arg))
-                    else:
-                        key = (fn, _norm(arg))
-                    seen_calls.setdefault(key, f"{fn}({arg})")
+                for c in s.agg_calls:
+                    call = ir.AggCall.parse(c)
+                    seen_calls.setdefault(call.key(), call.sql())
             calls = [
                 f"{sql} AS m{i}" for i, sql in enumerate(sorted(seen_calls.values()))
             ]

@@ -1087,53 +1087,7 @@ def _eliminate_redundant_exchange(node, catalog):
     return None
 
 
-_AJT_CALL_RE = re.compile(
-    r"(?is)^\s*(SUM|COUNT|MIN|MAX|AVG)\s*\(\s*(\*|[A-Za-z_]\w*)\s*\)\s+AS\s+([A-Za-z_]\w*)\s*$"
-)
 _AJT_IDENT_RE = re.compile(r"^[A-Za-z_]\w*$")
-
-
-def _splittable_calls(agg_calls) -> list | None:
-    """(FN, arg, alias) of every call when each is strictly
-    FN(col) AS name or COUNT(*) AS name, FN one of SUM COUNT MIN MAX
-    AVG; None otherwise (DISTINCT, FILTER, expressions)."""
-    parsed = []
-    for call in agg_calls:
-        m = _AJT_CALL_RE.match(call)
-        if not m:
-            return None
-        fn, arg, alias = m.group(1).upper(), m.group(2), m.group(3)
-        if arg == "*" and fn != "COUNT":
-            return None
-        parsed.append((fn, arg, alias))
-    return parsed
-
-
-def _split_calls(parsed, prefix) -> tuple[list, list]:
-    """(partial calls, merge calls) for one pre-aggregation level ≈
-    SqlSplittableAggFunction: partial i is named {prefix}i. MIN/MAX
-    merge as themselves, SUM as SUM-of-partials, COUNT as
-    COALESCE(SUM) — ≈ $SUM0: a GLOBAL aggregate over empty input must
-    yield 0, not SUM-over-nothing NULL — and AVG as a SUM/COUNT pair
-    ({prefix}is / {prefix}ic; bigint/ or double/ division → double,
-    matching Spark's AVG result type for non-decimal inputs)."""
-    partial_calls, merge_calls = [], []
-    for i, (fn, arg, alias) in enumerate(parsed):
-        pc = f"{prefix}{i}"
-        if fn in ("MIN", "MAX"):
-            partial_calls.append(f"{fn}({arg}) AS {pc}")
-            merge_calls.append(f"{fn}({pc}) AS {alias}")
-        elif fn == "COUNT":
-            partial_calls.append(f"COUNT({arg}) AS {pc}")
-            merge_calls.append(f"COALESCE(SUM({pc}), 0) AS {alias}")
-        elif fn == "SUM":
-            partial_calls.append(f"SUM({arg}) AS {pc}")
-            merge_calls.append(f"SUM({pc}) AS {alias}")
-        else:  # AVG
-            partial_calls.append(f"SUM({arg}) AS {pc}s")
-            partial_calls.append(f"COUNT({arg}) AS {pc}c")
-            merge_calls.append(f"SUM({pc}s) / SUM({pc}c) AS {alias}")
-    return partial_calls, merge_calls
 
 
 def _output_dtypes(n, catalog) -> dict:
@@ -1259,13 +1213,13 @@ def _aggregate_join_transpose(node, catalog):
         group_sides.append((k.strip(), s))
 
     # aggregate calls: strictly FN(col|*) AS name, args all on ONE side
-    parsed = _splittable_calls(node.agg_calls)
-    if parsed is None:
+    calls = [ir.AggCall.parse(c) for c in node.agg_calls]
+    if not all(c is not None and c.splittable for c in calls):
         return None
     arg_sides = set()
-    for _, arg, _ in parsed:
-        if arg != "*":
-            s = side_of(arg)
+    for call in calls:
+        if call.args[0] != "*":
+            s = side_of(call.args[0])
             if s is None:
                 return None
             arg_sides.add(s)
@@ -1303,8 +1257,8 @@ def _aggregate_join_transpose(node, catalog):
         SUM widens decimal precision again — merged dtype would differ
         from the single-level aggregate's). Plan-time probe only."""
         args = [
-            arg for fn, arg, _ in parsed
-            if fn in ("SUM", "AVG") and arg != "*" and side_of(arg) == side
+            c.args[0] for c in calls
+            if c.fn in ("SUM", "AVG") and c.args[0] != "*" and side_of(c.args[0]) == side
         ]
         if not args:
             return False
@@ -1312,7 +1266,7 @@ def _aggregate_join_transpose(node, catalog):
         return any(dt.get(a, "").startswith("decimal") for a in args)
 
     fresh = [
-        f"__ajt{i}{suf}" for i in range(len(parsed)) for suf in ("", "s", "c")
+        f"__ajt{i}{suf}" for i in range(len(calls)) for suf in ("", "s", "c")
     ] + ["__ajtcnt0", "__ajtcnt1"]
     if any(c in (left_cols | right_cols) for c in fresh):
         return None  # fresh-name collision with a real column
@@ -1330,37 +1284,20 @@ def _aggregate_join_transpose(node, catalog):
             return None
         side_calls = {0: [], 1: []}
         merge_calls = []
-        for i, (fn, arg, alias) in enumerate(parsed):
-            pc = f"__ajt{i}"
-            if arg == "*":
+        for i, call in enumerate(calls):
+            if call.args[0] == "*":
                 # COALESCE: COUNT must be 0 (never NULL) when a GLOBAL
                 # aggregate sees an empty join — SUM over zero rows is
                 # NULL (Calcite splits COUNT with $SUM0 for the same
                 # reason, SqlSplittableAggFunction.CountSplitter)
                 merge_calls.append(
-                    f"COALESCE(SUM(__ajtcnt0 * __ajtcnt1), 0) AS {alias}"
+                    f"COALESCE(SUM(__ajtcnt0 * __ajtcnt1), 0) AS {call.alias}"
                 )
                 continue
-            s = side_of(arg)
-            other_cnt = "__ajtcnt1" if s == 0 else "__ajtcnt0"
-            if fn in ("MIN", "MAX"):
-                side_calls[s].append(f"{fn}({arg}) AS {pc}")
-                merge_calls.append(f"{fn}({pc}) AS {alias}")
-            elif fn == "SUM":
-                side_calls[s].append(f"SUM({arg}) AS {pc}")
-                merge_calls.append(f"SUM({pc} * {other_cnt}) AS {alias}")
-            elif fn == "COUNT":
-                side_calls[s].append(f"COUNT({arg}) AS {pc}")
-                merge_calls.append(
-                    f"COALESCE(SUM({pc} * {other_cnt}), 0) AS {alias}"
-                )
-            else:  # AVG
-                side_calls[s].append(f"SUM({arg}) AS {pc}s")
-                side_calls[s].append(f"COUNT({arg}) AS {pc}c")
-                merge_calls.append(
-                    f"SUM({pc}s * {other_cnt}) / SUM({pc}c * {other_cnt}) "
-                    f"AS {alias}"
-                )
+            s = side_of(call.args[0])
+            partials, merge = call.split(f"__ajt{i}", f"__ajtcnt{1 - s}")
+            side_calls[s] += partials
+            merge_calls.append(merge)
         new_inputs = [
             ir.Aggregate(
                 tuple(partial_group(s)),
@@ -1390,17 +1327,18 @@ def _aggregate_join_transpose(node, catalog):
     if not gate(p) or decimal_refused(p):
         return None
 
-    partial_calls, merge_calls = _split_calls(parsed, "__ajt")
-
+    splits = [c.split(f"__ajt{i}") for i, c in enumerate(calls)]
     partial = ir.Aggregate(
-        tuple(partial_group(p)), tuple(partial_calls), inputs=(child.inputs[p],)
+        tuple(partial_group(p)),
+        tuple(pc for partials, _ in splits for pc in partials),
+        inputs=(child.inputs[p],),
     )
     new_inputs = list(child.inputs)
     new_inputs[p] = partial
     new_join = child.with_inputs(new_inputs)
     return ir.Aggregate(
         node.group_keys,
-        tuple(merge_calls),
+        tuple(merge for _, merge in splits),
         inputs=(new_join,),
         _no_transpose=True,
     )
@@ -1502,12 +1440,12 @@ def _aggregate_union_transpose(node, catalog, gate=True):
     for k in node.group_keys:
         if not _AJT_IDENT_RE.match(k.strip()):
             return None
-    parsed = _splittable_calls(node.agg_calls)
-    if parsed is None:
+    calls = [ir.AggCall.parse(c) for c in node.agg_calls]
+    if not all(c is not None and c.splittable for c in calls):
         return None
-    fresh = [f"__aut{i}{s}" for i in range(len(parsed)) for s in ("", "s", "c")]
+    fresh = [f"__aut{i}{s}" for i in range(len(calls)) for s in ("", "s", "c")]
     sum_avg_args = {
-        arg for fn, arg, _ in parsed if fn in ("SUM", "AVG") and arg != "*"
+        c.args[0] for c in calls if c.fn in ("SUM", "AVG") and c.args[0] != "*"
     }
     from calcite_spark.plans.metadata import MetadataQuery
 
@@ -1530,14 +1468,15 @@ def _aggregate_union_transpose(node, catalog, gate=True):
                 groups *= ndv
             if min(groups, rows) > rows / 2:
                 return None
-    partial_calls, merge_calls = _split_calls(parsed, "__aut")
+    splits = [c.split(f"__aut{i}") for i, c in enumerate(calls)]
+    partial_calls = tuple(pc for partials, _ in splits for pc in partials)
     new_branches = tuple(
-        ir.Aggregate(tuple(node.group_keys), tuple(partial_calls), inputs=(b,))
+        ir.Aggregate(tuple(node.group_keys), partial_calls, inputs=(b,))
         for b in child.inputs
     )
     return ir.Aggregate(
         tuple(node.group_keys),
-        tuple(merge_calls),
+        tuple(merge for _, merge in splits),
         inputs=(child.with_inputs(new_branches),),
         _no_transpose=True,
     )

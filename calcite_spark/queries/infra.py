@@ -6,11 +6,10 @@ table functions, MERGE INTO — driver-checkable forms of the §2.2/2.9/
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
-from calcite_spark.queries.inventory import catalog_for, register
+from calcite_spark.queries.inventory import catalog_for, register, scratch_dir
 
 _MV_CACHE: dict[tuple, object] = {}
 
@@ -39,7 +38,7 @@ def q90_mv_rewrite(spark, sf_dir):
     if key not in _MV_CACHE:
         cat = Catalog(spark).register_parquet_dir(sf_dir)
         reg = MaterializationRegistry()
-        path = os.path.join(tempfile.mkdtemp(prefix="q90_mv_"), "q90_tile")
+        path = os.path.join(scratch_dir("q90_mv_"), "q90_tile")
         reg.define(
             cat,
             "q90_tile",
@@ -126,7 +125,7 @@ def q92_merge_upsert(spark, sf_dir):
     from calcite_spark.sources.modify import merge_into
 
     cat = Catalog(spark)
-    scratch = tempfile.mkdtemp(prefix="q92_")
+    scratch = scratch_dir("q92_")
     nation = spark.read.parquet(os.path.join(sf_dir, "nation.parquet"))
     nation.write.mode("overwrite").parquet(os.path.join(scratch, "nation"))
     # write-site schema registration: skip re-inferring the schema of
@@ -239,7 +238,7 @@ def qx09_lattice_suggest(spark, sf_dir):
         for keys, calls in workload:
             RelBuilder(cat).scan("orders").aggregate(keys, calls).to_df()
         reg = MaterializationRegistry()
-        warehouse = tempfile.mkdtemp(prefix="qx09_lattice_")
+        warehouse = scratch_dir("qx09_lattice_")
         built = sug.auto_build(cat, reg, warehouse, min_count=3)
         assert built, "suggester proposed nothing from the workload"
         _LATTICE_CACHE[key] = cat

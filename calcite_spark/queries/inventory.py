@@ -13,6 +13,9 @@ Conventions (driver contract):
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -40,6 +43,19 @@ def catalog_for(spark: SparkSession, sf_dir: str) -> Catalog:
     if key not in _CATALOGS:
         _CATALOGS[key] = open_catalog(spark, sf_dir)
     return _CATALOGS[key]
+
+
+_SCRATCH_ROOT: list = []
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new directory for one query's tiles or staged files, under one
+    process-wide root that is made on first use (so a TMPDIR set before
+    then applies) and removed when the interpreter exits."""
+    if not _SCRATCH_ROOT:
+        _SCRATCH_ROOT.append(tempfile.mkdtemp(prefix="calcite_spark_queries_"))
+        atexit.register(shutil.rmtree, _SCRATCH_ROOT[0], True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT[0])
 
 
 def snapshot_oracle(name: str) -> str:

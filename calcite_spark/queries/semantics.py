@@ -9,7 +9,12 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from calcite_spark.plans.builder import RelBuilder
-from calcite_spark.queries.inventory import catalog_for, register, snapshot_oracle
+from calcite_spark.queries.inventory import (
+    catalog_for,
+    register,
+    scratch_dir,
+    snapshot_oracle,
+)
 
 
 def _b(spark, sf_dir) -> RelBuilder:
@@ -723,7 +728,6 @@ def qx36_mv_join(spark, sf_dir):
     tile, and re-aggregates the rollup. The oracle is the PLAIN
     join-aggregate: values must be invariant under substitution. The
     plan is asserted to actually scan the tile, not the fact join."""
-    import tempfile
 
     from calcite_spark.catalog import open_catalog
     from calcite_spark.plans.materialize import MaterializationRegistry
@@ -746,7 +750,7 @@ def qx36_mv_join(spark, sf_dir):
     )
     mv = reg.define_join(
         cat, "qx36_tile", tile_plan,
-        tempfile.mkdtemp(prefix="qx36_mv_") + "/qx36_tile",
+        scratch_dir("qx36_mv_") + "/qx36_tile",
     )
     df = (
         RelBuilder(cat)
@@ -930,7 +934,6 @@ def qx39_mv_join_compensate(spark, sf_dir):
     tables. 100 TB: this is the drill-across shape — the fact⋈lineitem
     shuffle is paid once at tile build; every segment-level query then
     joins a tile to a broadcast-able dim."""
-    import tempfile
 
     from calcite_spark.catalog import open_catalog
     from calcite_spark.plans.materialize import MaterializationRegistry
@@ -952,7 +955,7 @@ def qx39_mv_join_compensate(spark, sf_dir):
     )
     mv = reg.define_join(
         cat, "qx39_tile", tile_plan,
-        tempfile.mkdtemp(prefix="qx39_mv_") + "/qx39_tile",
+        scratch_dir("qx39_mv_") + "/qx39_tile",
     )
     df = (
         RelBuilder(cat)
@@ -1009,7 +1012,6 @@ def qx40_mv_union_rewrite(spark, sf_dir):
     hot-slice tile answers the common recent-window query outright;
     the occasional historical query scans only the COLD residual
     range, with partition pruning bounding it."""
-    import tempfile
 
     from calcite_spark.catalog import open_catalog
     from calcite_spark.plans.materialize import MaterializationRegistry
@@ -1022,7 +1024,7 @@ def qx40_mv_union_rewrite(spark, sf_dir):
         "orders",
         ["o_orderdate", "o_orderpriority"],
         ["SUM(o_totalprice) AS sum_price", "COUNT(*) AS n_rows"],
-        tempfile.mkdtemp(prefix="qx40_mv_") + "/qx40_tile",
+        scratch_dir("qx40_mv_") + "/qx40_tile",
         filter_condition="o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'",
     )
     df = (
@@ -1082,7 +1084,6 @@ def qx41_mv_spf(spark, sf_dir):
     — last-N-days raw rows rewritten small — serving ad-hoc DISTINCT /
     window / join queries over the recent window that no aggregate
     tile can, while historical residuals stay partition-pruned."""
-    import tempfile
 
     from calcite_spark.catalog import open_catalog
     from calcite_spark.plans.materialize import MaterializationRegistry
@@ -1093,7 +1094,7 @@ def qx41_mv_spf(spark, sf_dir):
         cat,
         "qx41_slice",
         "orders",
-        tempfile.mkdtemp(prefix="qx41_mv_") + "/qx41_slice",
+        scratch_dir("qx41_mv_") + "/qx41_slice",
         predicate="o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'",
     )
     df = (
@@ -1164,7 +1165,6 @@ def qx44_mv_filtered_join(spark, sf_dir):
     value check. 100 TB: the residual range is a sliver of the fact
     table (partition-pruned), so the drill-across query reads tile +
     sliver instead of the full history join."""
-    import tempfile
 
     from calcite_spark.catalog import open_catalog
     from calcite_spark.plans.materialize import MaterializationRegistry
@@ -1184,7 +1184,7 @@ def qx44_mv_filtered_join(spark, sf_dir):
     )
     mv = reg.define_join(
         cat, "qx44_tile", tile_plan,
-        tempfile.mkdtemp(prefix="qx44_mv_") + "/qx44_tile",
+        scratch_dir("qx44_mv_") + "/qx44_tile",
         filter_condition="o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'",
     )
     df = (
@@ -1236,13 +1236,12 @@ def qx45_mv_join_refresh(spark, sf_dir):
     the delta path (a silent full rebuild would still pass values).
     100 TB: refresh reads the delta + broadcast dims and shuffles
     tile-sized data — O(new data + tile), never O(fact history)."""
-    import tempfile
 
     from calcite_spark.catalog import open_catalog
     from calcite_spark.plans.materialize import MaterializationRegistry
 
     cat = open_catalog(spark, sf_dir)
-    scratch = tempfile.mkdtemp(prefix="qx45_")
+    scratch = scratch_dir("qx45_")
     fact_dir = f"{scratch}/fact_orders"
     orders_df = cat.table("orders")
     orders_df.filter("o_orderkey % 2 = 0").write.parquet(fact_dir)
@@ -1309,7 +1308,6 @@ def qx46_mv_expr_key(spark, sf_dir):
     oracle is the plain aggregate over the fact table; the plan asserts
     the tile scan. 100 TB: the month rollup reads a tile ~5 orders of
     magnitude smaller than the order history."""
-    import tempfile
 
     from calcite_spark.catalog import open_catalog
     from calcite_spark.plans.materialize import MaterializationRegistry
@@ -1325,7 +1323,7 @@ def qx46_mv_expr_key(spark, sf_dir):
             "SUM(o_totalprice) AS s_price",
             "COUNT(o_totalprice) AS c_price",
         ],
-        path=tempfile.mkdtemp(prefix="qx46_mv_") + "/qx46_tile",
+        path=scratch_dir("qx46_mv_") + "/qx46_tile",
     )
     df = (
         RelBuilder(cat)
@@ -1388,7 +1386,6 @@ def qx47_lattice_auto_join(spark, sf_dir):
     suggested tile actually serves the final query. 100 TB: the corpus
     is observed free at plan time, and the one tile build amortizes
     across every star query that follows."""
-    import tempfile
 
     from calcite_spark.catalog import open_catalog
     from calcite_spark.plans.materialize import (
@@ -1420,7 +1417,7 @@ def qx47_lattice_auto_join(spark, sf_dir):
             .to_df()
         )
     built = sug.auto_build(
-        cat, reg, tempfile.mkdtemp(prefix="qx47_lat_"), min_count=2
+        cat, reg, scratch_dir("qx47_lat_"), min_count=2
     )
     if len(built) != 1 or built[0].tables != ("customer", "orders"):
         raise RuntimeError(f"join-shape suggestion did not build: {built}")
@@ -1471,7 +1468,6 @@ def qx48_mv_union_multicol(spark, sf_dir):
     tile scan and the base scan. 100 TB: the hot 2-D slice (recent +
     high-value) serves its box from the tile; the residual boxes are
     partition-prunable slivers of the fact table."""
-    import tempfile
 
     from calcite_spark.catalog import open_catalog
     from calcite_spark.plans.materialize import MaterializationRegistry
@@ -1484,7 +1480,7 @@ def qx48_mv_union_multicol(spark, sf_dir):
         table="orders",
         group_keys=["o_orderdate", "o_totalprice", "o_orderpriority"],
         agg_calls=["COUNT(*) AS n", "SUM(o_totalprice) AS s"],
-        path=tempfile.mkdtemp(prefix="qx48_mv_") + "/qx48_tile",
+        path=scratch_dir("qx48_mv_") + "/qx48_tile",
         filter_condition=(
             "o_orderdate >= TIMESTAMP '1997-01-01 00:00:00' "
             "AND o_totalprice >= 50000.0"
@@ -1537,7 +1533,6 @@ def qx49_mv_groupsets(spark, sf_dir):
     native ROLLUP over the fact table; the plan asserts the tile scan.
     100 TB: the drill-down family (detail + subtotals + grand total)
     reads one tile instead of three fact scans."""
-    import tempfile
 
     from calcite_spark.catalog import open_catalog
     from calcite_spark.plans import ir
@@ -1552,7 +1547,7 @@ def qx49_mv_groupsets(spark, sf_dir):
         table="lineitem",
         group_keys=["l_returnflag", "l_linestatus"],
         agg_calls=["SUM(l_quantity) AS s_qty", "COUNT(l_quantity) AS c_qty"],
-        path=tempfile.mkdtemp(prefix="qx49_mv_") + "/qx49_tile",
+        path=scratch_dir("qx49_mv_") + "/qx49_tile",
     )
     plan = ir.Aggregate(
         ("l_returnflag", "l_linestatus"),
@@ -1602,7 +1597,6 @@ def qx50_mv_dim_append(spark, sf_dir):
     plain join-aggregate over the final state; the row raises unless
     the refresh took the delta path WITH a dim append (a full rebuild
     or a refusal would not produce dim_appends=1)."""
-    import tempfile
 
     from pyspark.sql import functions as _F
 
@@ -1610,7 +1604,7 @@ def qx50_mv_dim_append(spark, sf_dir):
     from calcite_spark.plans.materialize import MaterializationRegistry
 
     full = open_catalog(spark, sf_dir)
-    scratch = tempfile.mkdtemp(prefix="qx50_")
+    scratch = scratch_dir("qx50_")
     fact_dir, dim_dir = f"{scratch}/fact_orders", f"{scratch}/dim_customer"
     # the FK must genuinely HOLD at build time (the gate trusts the
     # declaration): the initial fact half references ONLY dim-prefix
@@ -1689,7 +1683,6 @@ def qx51_mv_approx_distinct(spark, sf_dir):
     estimate is deterministic DataSketches HLL, not SQL-expressible in
     DuckDB). 100 TB: distinct-user/distinct-doc rollups read tile-sized
     sketches instead of re-shuffling the fact for every grain."""
-    import tempfile
 
     from calcite_spark.catalog import open_catalog
     from calcite_spark.plans.materialize import MaterializationRegistry
@@ -1705,7 +1698,7 @@ def qx51_mv_approx_distinct(spark, sf_dir):
             "APPROX_COUNT_DISTINCT(l_suppkey) AS nd_supp",
             "SUM(l_quantity) AS s_qty",
         ],
-        path=tempfile.mkdtemp(prefix="qx51_mv_") + "/qx51_tile",
+        path=scratch_dir("qx51_mv_") + "/qx51_tile",
     )
     df = (
         RelBuilder(cat)
@@ -1765,7 +1758,6 @@ def qx52_lattice_expr_suggest(spark, sf_dir):
     DIFFERENT alias in a second corpus must not bind the tile. 100 TB:
     the month-grain star tile is ~5 orders of magnitude smaller than
     the order history and serves the entire monthly-report family."""
-    import tempfile
 
     from calcite_spark.catalog import open_catalog
     from calcite_spark.plans.materialize import (
@@ -1798,7 +1790,7 @@ def qx52_lattice_expr_suggest(spark, sf_dir):
             .to_df()
         )
     built = sug.auto_build(
-        cat, reg, tempfile.mkdtemp(prefix="qx52_lat_"), min_count=2
+        cat, reg, scratch_dir("qx52_lat_"), min_count=2
     )
     if len(built) != 1 or not any(
         not k.strip().isidentifier() for k in built[0].group_keys
@@ -1866,7 +1858,6 @@ def qx53_mv_union_join_tile(spark, sf_dir):
     column the peeled query cannot constrain must refuse. 100 TB: the
     residual is a partition-prunable sliver plus a broadcast dim join,
     never a second full fact pass."""
-    import tempfile
 
     from calcite_spark.catalog import open_catalog
     from calcite_spark.plans.materialize import MaterializationRegistry
@@ -1889,7 +1880,7 @@ def qx53_mv_union_join_tile(spark, sf_dir):
     )
     mv = reg.define_join(
         cat, "qx53_tile", tile_plan,
-        tempfile.mkdtemp(prefix="qx53_mv_") + "/qx53_tile",
+        scratch_dir("qx53_mv_") + "/qx53_tile",
         filter_condition="o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'",
         fact="orders",
     )
@@ -1923,7 +1914,7 @@ def qx53_mv_union_join_tile(spark, sf_dir):
             ["c_acctbal", "o_orderpriority"], ["SUM(o_totalprice) AS s"]
         )
         .build(),
-        tempfile.mkdtemp(prefix="qx53_mv_") + "/qx53_tile_neg",
+        scratch_dir("qx53_mv_") + "/qx53_tile_neg",
         filter_condition="c_acctbal >= 0.0",
         fact="orders",
     )
@@ -1964,11 +1955,10 @@ def qx54_model_lattice(spark, sf_dir):
     the plain star aggregate; the plan asserts the tile scan."""
     import json
     import os
-    import tempfile
 
     from calcite_spark.catalog import Catalog
 
-    tmp = tempfile.mkdtemp(prefix="qx54_model_")
+    tmp = scratch_dir("qx54_model_")
     model = {
         "tables": [
             {"name": "orders", "path": os.path.join(sf_dir, "orders.parquet")},
@@ -2044,7 +2034,6 @@ def qx55_having_groupsets_tile(spark, sf_dir):
     DuckDB's native ROLLUP+HAVING; the plan asserts the tile scan.
     100 TB: the full drill-down report reads one tile, never the
     fact."""
-    import tempfile
 
     from calcite_spark.catalog import open_catalog
     from calcite_spark.plans.materialize import MaterializationRegistry
@@ -2058,7 +2047,7 @@ def qx55_having_groupsets_tile(spark, sf_dir):
         table="lineitem",
         group_keys=["l_returnflag", "l_linestatus"],
         agg_calls=["SUM(l_quantity) AS s_qty", "COUNT(*) AS c_rows"],
-        path=tempfile.mkdtemp(prefix="qx55_mv_") + "/qx55_tile",
+        path=scratch_dir("qx55_mv_") + "/qx55_tile",
     )
     fe = SqlFrontend(cat)
     df = fe.sql(
@@ -2109,7 +2098,6 @@ def qx56_mv_percentile_sketch(spark, sf_dir):
     plan asserts the tile scan. 100 TB: p50/p99 latency-style rollups
     read tile-sized sketches instead of re-shuffling the fact per
     grain."""
-    import tempfile
 
     from calcite_spark.catalog import open_catalog
     from calcite_spark.plans.materialize import MaterializationRegistry
@@ -2125,7 +2113,7 @@ def qx56_mv_percentile_sketch(spark, sf_dir):
             "APPROX_PERCENTILE(l_quantity, 0.5) AS p50_qty",
             "SUM(l_quantity) AS s_qty",
         ],
-        path=tempfile.mkdtemp(prefix="qx56_mv_") + "/qx56_tile",
+        path=scratch_dir("qx56_mv_") + "/qx56_tile",
     )
     df = (
         RelBuilder(cat)
@@ -2194,7 +2182,6 @@ def qx58_mv_grain_edge(spark, sf_dir):
     filtered aggregate. 100 TB: the dominant date-range dashboard costs
     a ~100-row tile read plus two day-sliver scans (partition-prunable)
     instead of a multi-year fact rescan."""
-    import tempfile
 
     from calcite_spark.catalog import open_catalog
     from calcite_spark.plans.materialize import MaterializationRegistry
@@ -2211,7 +2198,7 @@ def qx58_mv_grain_edge(spark, sf_dir):
             "COUNT(*) AS n",
             "MIN(o_totalprice) AS mn",
         ],
-        path=tempfile.mkdtemp(prefix="qx58_mv_") + "/qx58_tile",
+        path=scratch_dir("qx58_mv_") + "/qx58_tile",
     )
     df = (
         RelBuilder(cat)
@@ -2283,11 +2270,10 @@ def qx59_model_composite_lattice(spark, sf_dir):
     the tile collapses the same fact shuffle as any star tile."""
     import json
     import os
-    import tempfile
 
     from calcite_spark.catalog import Catalog
 
-    tmp = tempfile.mkdtemp(prefix="qx59_model_")
+    tmp = scratch_dir("qx59_model_")
     dim_path = os.path.join(tmp, "prio_status.parquet")
     (
         spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
@@ -2379,12 +2365,11 @@ def qx60_mv_grain_between(spark, sf_dir):
     rescanning the fact the day the tile exists — no query rewrite
     asked of the user."""
     import os
-    import tempfile
 
     from calcite_spark.catalog import Catalog, open_catalog
     from calcite_spark.plans.materialize import MaterializationRegistry
 
-    tmp = tempfile.mkdtemp(prefix="qx60_mv_")
+    tmp = scratch_dir("qx60_mv_")
     d_path = os.path.join(tmp, "orders_d.parquet")
     orders_d_df = spark.read.parquet(
         os.path.join(sf_dir, "orders.parquet")
@@ -2481,7 +2466,6 @@ def qx61_hot_slice_suggest(spark, sf_dir):
     workload → sliced month tile → arbitrary-range dashboard. 100 TB:
     the tile covers the months users actually query, not the decade of
     history."""
-    import tempfile
 
     from calcite_spark.catalog import open_catalog
     from calcite_spark.plans.materialize import (
@@ -2510,7 +2494,7 @@ def qx61_hot_slice_suggest(spark, sf_dir):
             .to_df()
         )
     built = sug.auto_build(
-        cat, reg, tempfile.mkdtemp(prefix="qx61_lat_"), min_count=2
+        cat, reg, scratch_dir("qx61_lat_"), min_count=2
     )
     if len(built) != 1 or built[0].filter_condition != (
         "o_orderdate >= TIMESTAMP '1995-03-01 00:00:00'"
@@ -2572,7 +2556,6 @@ def qx66_week_grain_suggest(spark, sf_dir):
     scale (at sf0.001 a week×priority tile nears the toy fact's grain
     — the same documented inversion as the day-grain pytest; at 100 TB
     the ratio is ~1e-5). 100 TB: weeks × priorities rows, fixed."""
-    import tempfile
 
     from calcite_spark.catalog import open_catalog
     from calcite_spark.plans.materialize import (
@@ -2602,7 +2585,7 @@ def qx66_week_grain_suggest(spark, sf_dir):
             .to_df()
         )
     built = sug.auto_build(
-        cat, reg, tempfile.mkdtemp(prefix="qx66_lat_"),
+        cat, reg, scratch_dir("qx66_lat_"),
         min_count=2, benefit_threshold=0.95,
     )
     if len(built) != 1 or not any(
@@ -2665,7 +2648,6 @@ def qx62_mv_percentile_array(spark, sf_dir):
     the DuckDB oracle can replay it. 100 TB: one mergeable sketch
     column serves p25/p50/p99 alike — no per-percentile fact
     shuffles."""
-    import tempfile
 
     from calcite_spark.catalog import open_catalog
     from calcite_spark.plans.materialize import MaterializationRegistry
@@ -2681,7 +2663,7 @@ def qx62_mv_percentile_array(spark, sf_dir):
             "APPROX_PERCENTILE(l_quantity, 0.5) AS p50_qty",
             "SUM(l_quantity) AS s_qty",
         ],
-        path=tempfile.mkdtemp(prefix="qx62_mv_") + "/qx62_tile",
+        path=scratch_dir("qx62_mv_") + "/qx62_tile",
     )
     df = (
         RelBuilder(cat)
@@ -2751,14 +2733,13 @@ def qx63_mv_grain_hierarchy(spark, sf_dir):
     asserts the day-tile scan. 100 TB: the day tile is days ×
     dimensions rows — fixed, not fact-sized — and one build serves
     every grain above it."""
-    import tempfile
 
     from calcite_spark.catalog import open_catalog
     from calcite_spark.plans.materialize import MaterializationRegistry
 
     cat = open_catalog(spark, sf_dir)
     reg = MaterializationRegistry()
-    tmp = tempfile.mkdtemp(prefix="qx63_mv_")
+    tmp = scratch_dir("qx63_mv_")
     mv = reg.define(
         cat,
         name="qx63_day_tile",
@@ -2847,14 +2828,13 @@ def qx64_mv_extract_grouping(spark, sf_dir):
     silent serve would misassign boundary days). 100 TB: the day tile
     is days × priorities rows regardless of fact size; the yearly
     report never rescans the fact."""
-    import tempfile
 
     from calcite_spark.catalog import open_catalog
     from calcite_spark.plans.materialize import MaterializationRegistry
 
     cat = open_catalog(spark, sf_dir)
     reg = MaterializationRegistry()
-    tmp = tempfile.mkdtemp(prefix="qx64_mv_")
+    tmp = scratch_dir("qx64_mv_")
     mv = reg.define(
         cat,
         name="qx64_day_tile",
@@ -2933,14 +2913,13 @@ def qx65_mv_sarg_tile(spark, sf_dir):
     NON-aligned extra raw bound must still produce exact values (the
     sliver path). 100 TB: a year-of-months report reads ~12 × dims
     tile rows; the fact is untouched."""
-    import tempfile
 
     from calcite_spark.catalog import open_catalog
     from calcite_spark.plans.materialize import MaterializationRegistry
 
     cat = open_catalog(spark, sf_dir)
     reg = MaterializationRegistry()
-    tmp = tempfile.mkdtemp(prefix="qx65_mv_")
+    tmp = scratch_dir("qx65_mv_")
     mv = reg.define(
         cat,
         name="qx65_month_tile",
@@ -3030,14 +3009,13 @@ def qx67_mv_grouping_derived(spark, sf_dir):
     (its UNION-ALL branch lowering is not re-derived) and stays exact
     from base. 100 TB: the whole subtotal dashboard reads
     months × priorities tile rows; the fact is untouched."""
-    import tempfile
 
     from calcite_spark.catalog import open_catalog
     from calcite_spark.plans.materialize import MaterializationRegistry
 
     cat = open_catalog(spark, sf_dir)
     reg = MaterializationRegistry()
-    tmp = tempfile.mkdtemp(prefix="qx67_mv_")
+    tmp = scratch_dir("qx67_mv_")
     mv = reg.define(
         cat,
         name="qx67_month_tile",

@@ -153,8 +153,10 @@ def update_set(
     post-update row — the generated-column recompute hook (applied to
     every row; generator expressions are deterministic, so recomputing
     unchanged rows is a no-op). The #updated count is observed on the
-    rewrite's input and rides the write job."""
-    cond = F.expr(condition)
+    rewrite's input and rides the write job. A NULL condition updates
+    no row: coalesce types a bare NULL as BOOLEAN, which CASE WHEN
+    requires, and still rejects a non-boolean one such as `1`."""
+    cond = F.expr(f"coalesce(({condition}), false)")
     obs = Observation()
     df = catalog.table(table).observe(obs, F.count(F.when(cond, 1)).alias("n"))
     out = df.select(

@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 import re
 
+from calcite_spark.plans import ir
 from calcite_spark.plans.materialize import MaterializationRegistry
 from calcite_spark.sql import lexer
 
@@ -899,7 +900,7 @@ class DdlExecutor:
             & {a.lower() for a in assignments}
         ]
         if checked or gen_checked:
-            affected = df.filter(cond).selectExpr(
+            affected = df.filter(f"coalesce(({cond}), false)").selectExpr(
                 *[
                     f"({assignments[c]}) AS {c}" if c in assignments else c
                     for c in df.columns
@@ -1167,10 +1168,6 @@ class DdlExecutor:
         substitutable path) for shapes decomposition cannot serve."""
         from dataclasses import replace
 
-        from calcite_spark.plans.materialize import (
-            MaterializationRegistry,
-        )
-
         deco = _find_decomposition(calls)
         if deco is None:
             return None
@@ -1187,18 +1184,13 @@ class DdlExecutor:
             filter_condition=where,
         )
         exprs = list(keys)
-        for alias, fn, arg in outputs:
-            if fn is None:
+        for alias, call in outputs:
+            if call is None:
                 exprs.append(alias)
                 continue
-            if fn in ("APPROX_COUNT_DISTINCT", "APPROX_PERCENTILE"):
-                # exact tier over the sketch column: estimate it (HLL)
-                # or read the declared quantile (KLL, r11)
-                body = MaterializationRegistry._map_simple(fn, arg, mv, True)
-            else:
-                body = MaterializationRegistry._map_derived(
-                    fn, arg, mv, True, self.catalog
-                )
+            # exact tier over the stats tile: the derived identity, or
+            # the sketch's estimate (HLL) / declared quantile (KLL, r11)
+            body = MaterializationRegistry._map_call(call, mv, True, self.catalog)
             if body is None:
                 # e.g. decimal stats columns: tear the tile down and
                 # fall back to the generic path rather than serve a
@@ -1219,7 +1211,7 @@ class DdlExecutor:
             "keys": keys,
             "decomposed": True,
             "stats_tile": stats_name,
-            "aggs": [a for a, _, _ in outputs],
+            "aggs": [a for a, _ in outputs],
         }
 
     def _create_mv(self, if_not_exists, name, aliases, select_list, table, where, group_by):
@@ -1231,14 +1223,13 @@ class DdlExecutor:
         range); no GROUP BY → an SPF raw-row slice / projection index
         with IF-NOT-EXISTS and alias-list arity semantics mirroring the
         reference corpus."""
-        from calcite_spark.plans.materialize import _parse_interval, parse_agg_call
-
         if name in self.catalog.tables:
             if if_not_exists:
                 return {"materialized_view": name, "existed": True}
             raise ValueError(f"Table '{name}' already exists")
         where = where.strip() if where else None
-        if where is not None and _parse_interval(where) is None:
+        slice_col = MaterializationRegistry.slice_column(where) if where else None
+        if where is not None and slice_col is None:
             # a WHERE outside the containment prover's form is still a
             # valid defining query — fall through to the generic
             # (non-substitutable) materialization path
@@ -1251,8 +1242,6 @@ class DdlExecutor:
                 # toDF(*aliases); it just isn't substitutable (review
                 # r8: raising here refused a DDL the reference accepts)
                 return None
-            from calcite_spark.plans.materialize import _norm as _expr_norm
-
             sel_items = [i.strip() for i in _split_top_level(select_list)]
             keys = []
             for k in _split_top_level(group_by):
@@ -1268,14 +1257,14 @@ class DdlExecutor:
                 # date_trunc('month', d)` feeds the whole tile stack
                 # (rollup, grain hierarchy, grain edge, EXTRACT
                 # derivation) instead of the generic path
-                knorm = _expr_norm(k)
+                knorm = lexer.norm(k)
                 hit = next(
                     (
                         s
                         for s, (body, alias) in zip(
                             sel_items, map(lexer.split_alias, sel_items)
                         )
-                        if alias and _expr_norm(body) == knorm
+                        if alias and lexer.norm(body) == knorm
                     ),
                     None,
                 )
@@ -1292,16 +1281,12 @@ class DdlExecutor:
                 # valid DDL, materialize via the generic path rather
                 # than crash in define() (review r8)
                 return None
-            if where is not None and _parse_interval(where)[0] not in keys:
+            if where is not None and slice_col not in keys:
                 return None  # slice column aggregated away: generic path
-            def _is_approx(c):
-                p = parse_agg_call(c)
-                return p is not None and p[0] in (
-                    "APPROX_COUNT_DISTINCT", "APPROX_PERCENTILE"
-                )
-
-            if any(parse_agg_call(c) is None for c in calls) or any(
-                _is_approx(c) for c in calls
+            parsed = [ir.AggCall.parse(c) for c in calls]
+            if not all(
+                p is not None and p.fn in ("SUM", "COUNT", "MIN", "MAX")
+                for p in parsed
             ):
                 # derived aggregates (AVG/VAR/STDDEV): decompose into a
                 # substitutable stats tile + a user-shaped view (r9) —
@@ -1346,83 +1331,40 @@ class DdlExecutor:
 
 def _find_decomposition(calls):
     """Split a defining SELECT's aggregate calls into the stats calls a
-    tile should STORE and the user-shaped output expressions, or None
-    when any call is neither a plain SUM/COUNT/MIN/MAX nor a derived
-    AVG/VAR/STDDEV (≈ AggregateReduceFunctionsRule applied to the VIEW
-    side: the reference's MaterializedViewAggregateRule unifies derived
-    calls in the view definition the same way as in the query).
-    Returns (stats_calls, output_specs) where output_specs is a list of
-    (alias, fn, arg) with fn None for plain calls."""
-    from calcite_spark.plans.materialize import _DERIVED_RE, parse_agg_call
-
-    stats_calls, have, outputs = [], {}, []
-
-    def norm(a):
-        return re.sub(r"\s+", "", a).lower()
-
-    def ensure(fn, arg):
-        if fn == "APPROX_PERCENTILE":
-            # the physical tile column is a KLL sketch over the VALUE
-            # expression alone — any percentile reads from it, and the
-            # per-call p stays in the companion-view read (_map_simple)
-            # — so key on the value expression (ADVICE r11: keying on
-            # the full argument text stored one identical sketch per
-            # distinct percentile literal)
-            from calcite_spark.plans.materialize import _percentile_parts
-
-            pp = _percentile_parts(arg)
-            key = (fn, norm(pp[0]) if pp else norm(arg))
-        else:
-            key = (fn, norm(arg))
-        if key not in have:
-            alias = f"__{fn[:1].lower()}{len(have)}"
-            have[key] = alias
-            stats_calls.append(f"{fn}({arg}) AS {alias}")
-        return have[key]
-
-    derived = []
+    tile should STORE and the user-shaped outputs, or None when any
+    call is neither a plain SUM/COUNT/MIN/MAX nor a derived AVG/VAR/
+    STDDEV or approximate one (≈ AggregateReduceFunctionsRule applied
+    to the VIEW side: the reference's MaterializedViewAggregateRule
+    unifies derived calls in the view definition the same way as in
+    the query). Returns (stats_calls, outputs): outputs pairs each
+    alias with its AggCall, None for plain calls. Stats calls dedup on
+    AggCall.key(), so one KLL sketch serves every percentile of a
+    value (ADVICE r11)."""
+    stats_calls, have, outputs, derived = [], {}, [], []
     for c in calls:
-        p = parse_agg_call(c)
-        if p is not None:
-            fn, arg, alias = p
-            if fn in ("APPROX_COUNT_DISTINCT", "APPROX_PERCENTILE"):
-                # stored as a mergeable HLL/KLL sketch under an INTERNAL
-                # alias; the companion view estimates it (ADVICE r10 —
-                # the user column is the declared count/quantile, never
-                # sketch bytes)
-                derived.append((alias, fn, arg))
-                outputs.append(derived[-1])
-                continue
-            have[(fn, norm(arg))] = alias
-            stats_calls.append(c)
-            outputs.append((alias, None, None))
-            continue
-        m = _DERIVED_RE.match(c)
-        if m is None:
+        call = ir.AggCall.parse(c)
+        if call is None or call.grouping:
             return None
-        derived.append((m.group(3), m.group(1).upper(), re.sub(r"\s+", " ", m.group(2))))
-        outputs.append(derived[-1])
+        if call.fn in ("SUM", "COUNT", "MIN", "MAX"):
+            have[call.key()] = call.alias
+            stats_calls.append(c)
+            outputs.append((call.alias, None))
+            continue
+        # derived and approximate calls: the tile stores their stats or
+        # mergeable HLL/KLL sketch under INTERNAL aliases; the companion
+        # view derives or estimates the declared value (ADVICE r10 —
+        # never sketch bytes)
+        if call.distinct:
+            return None  # AVG(DISTINCT ...) is not decomposable
+        derived.append(call)
+        outputs.append((call.alias, call))
     if not derived:
         return None  # nothing to decompose: the plain path handles it
-    from calcite_spark.plans.materialize import _paren_balanced, _square_arg
-
-    for alias, fn, arg in derived:
-        if arg.upper().startswith("DISTINCT"):
-            return None  # AVG(DISTINCT ...) is not decomposable
-        if not _paren_balanced(arg):
-            return None  # lazy-regex mis-capture (AVG(a) + AVG(b)):
-            # generic path, never a garbage stat
-        if fn in ("APPROX_COUNT_DISTINCT", "APPROX_PERCENTILE"):
-            ensure(fn, arg)
-            continue
-        ensure("SUM", arg)
-        ensure("COUNT", arg)
-        if fn != "AVG":
-            # parenthesized square (review r9: the naked arg * arg
-            # turned VAR(a + b) into SUM(a + b*a + b) — a silently
-            # wrong sufficient statistic); shared helper keeps the
-            # stored and looked-up forms identical
-            ensure("SUM", _square_arg(arg))
+    for call in derived:
+        for stat in call.stats() if call.derived else (call,):
+            if stat.key() not in have:
+                have[stat.key()] = alias = f"__{stat.fn[:1].lower()}{len(have)}"
+                stats_calls.append(stat.sql(alias))
     return stats_calls, outputs
 
 

@@ -3249,7 +3249,6 @@ class SqlFrontend:
             return None  # HAVING without GROUP BY: verbatim path
         from calcite_spark.plans import ir
         from calcite_spark.plans.builder import RelBuilder
-        from calcite_spark.plans.materialize import liftable_agg_call
         from calcite_spark.plans.rewrite import default_program
 
         sel = lexer.split_top_level(sel_txt)
@@ -3321,14 +3320,12 @@ class SqlFrontend:
                 # case inside quoted literals would bind GROUP BY
                 # date_format(d,'yyyymm') to a SELECT 'yyyyMM' item —
                 # a silently different grouping
-                from calcite_spark.plans.materialize import _norm as _expr_norm
-
-                knorm = _expr_norm(k)
+                knorm = lexer.norm(k)
                 hit = next(
                     (
                         s
                         for s, (body, alias) in zip(sel, map(lexer.split_alias, sel))
-                        if alias and _expr_norm(body) == knorm
+                        if alias and lexer.norm(body) == knorm
                     ),
                     None,
                 )
@@ -3341,15 +3338,16 @@ class SqlFrontend:
                 # Aggregate can't lower an empty call list (review r8)
                 return None
             def _call_ok(c):
-                if liftable_agg_call(c):
-                    return True
-                # GROUPING/GROUPING_ID indicators lift with groupSets
-                # queries — the substitution tier re-references them
-                # against the tile's key columns
-                return group_type != "SIMPLE" and re.match(
-                    r"(?is)^\s*(GROUPING|GROUPING_ID)\s*\(.*\)\s+AS\s+\w+\s*$",
-                    c,
-                ) is not None
+                """A call the MV call mapper could serve: an aggregate
+                call, or an aliased expression over such calls (SUM(a) +
+                SUM(b) AS x); GROUPING/GROUPING_ID indicators only with
+                groupSets, whose tier re-references them against the
+                tile's key columns. The lift itself stays verbatim."""
+                call = ir.AggCall.parse(c)
+                if call is not None:
+                    return not call.grouping or group_type != "SIMPLE"
+                body, alias = lexer.split_alias(c)
+                return alias is not None and bool(ir.AggCall.find_in(body))
 
             if [s for s in sel if s in keys] != keys or not all(
                 _call_ok(c) for c in calls
@@ -3364,8 +3362,6 @@ class SqlFrontend:
             # statement rescanning the fact verbatim (≈ the reference
             # planner seeing HAVING as Filter-over-Aggregate, which
             # MaterializedViewAggregateRule unifies below)
-            from calcite_spark.plans.materialize import _AGG_IN_EXPR_RE
-
             # HAVING over groupSets lifts too (r11, verdict item 6):
             # SQL HAVING filters each output group row — subtotal and
             # grand-total rows included — which is exactly Filter above
@@ -3380,14 +3376,11 @@ class SqlFrontend:
             if hv is not None:
                 hv_expr = hv.strip()
                 spliced, last = [], 0
-                for mt in lexer.finditer(_AGG_IN_EXPR_RE, hv_expr):
-                    call = f"{mt.group(1)}{mt.group(2)} AS __h{len(hidden)}"
-                    if not liftable_agg_call(call):
-                        return None  # unliftable HAVING call: verbatim
-                    hidden.append(call)
-                    spliced.append(hv_expr[last : mt.start()])
+                for start, end, _ in ir.AggCall.find_in(hv_expr):
+                    hidden.append(f"{hv_expr[start:end]} AS __h{len(hidden)}")
+                    spliced.append(hv_expr[last:start])
                     spliced.append(f"__h{len(hidden) - 1}")
-                    last = mt.end()
+                    last = end
                 spliced.append(hv_expr[last:])
                 hv_expr = "".join(spliced)
             b.aggregate(
@@ -3503,12 +3496,10 @@ class SqlFrontend:
 
     def _run_agg_join_transpose(self, text: str) -> DataFrame:
         from calcite_spark.plans.builder import RelBuilder
-        from calcite_spark.plans.rewrite import (
-            _split_conjuncts,
-            default_program,
-        )
+        from calcite_spark.plans.rewrite import _split_conjuncts
 
-        m = self._AJT_STMT_RE.match(text)
+        # on the mask: a GROUP BY inside a literal is not the clause
+        m = lexer.search(self._AJT_STMT_RE, text)
         if not m:
             raise ValueError(
                 "AGGREGATE_JOIN_TRANSPOSE hint: statement must be "
@@ -3553,34 +3544,37 @@ class SqlFrontend:
             b._push(left)
             b._push(right)
         b.join(m.group("on"))
+        return self._run_hinted_aggregate(b, m, "AGGREGATE_JOIN_TRANSPOSE")
+
+    def _run_hinted_aggregate(self, b, m, hint: str) -> DataFrame:
+        """Aggregate the builder's input by the statement's GROUP BY,
+        project its SELECT order, sort by its ORDER BY and run the Hep
+        program. Select items are GROUP BY keys or AggCall.splittable
+        calls (FN(col) AS alias)."""
+        from calcite_spark.plans import ir
+        from calcite_spark.plans.rewrite import default_program
+
         gb = lexer.split_top_level(m.group("gb"))
         agg_calls, out_names = [], []
         for item in lexer.split_top_level(m.group("sel")):
-            item = item.strip()
             if re.match(r"^[A-Za-z_]\w*$", item):
                 if item not in gb:
                     raise ValueError(
-                        f"AGGREGATE_JOIN_TRANSPOSE hint: select item "
-                        f"{item!r} is neither a GROUP BY key nor an "
-                        "aggregate with an alias"
+                        f"{hint} hint: select item {item!r} is neither a "
+                        "GROUP BY key nor an aggregate with an alias"
                     )
                 out_names.append(item)
                 continue
-            am = re.match(
-                r"(?is)^([A-Za-z_]\w*)\s*\(\s*(\*|[A-Za-z_]\w*)\s*\)\s+AS\s+"
-                r"([A-Za-z_]\w*)$",
-                item,
-            )
-            if not am:
+            call = ir.AggCall.parse(item)
+            if call is None or not call.splittable:
                 raise ValueError(
-                    "AGGREGATE_JOIN_TRANSPOSE hint: aggregate items must "
-                    f"be FN(col) AS alias, got {item!r}"
+                    f"{hint} hint: aggregate items must be FN(col) AS "
+                    f"alias, got {item!r}"
                 )
             agg_calls.append(item)
-            out_names.append(am.group(3))
+            out_names.append(call.alias)
         b.aggregate(gb, agg_calls)
-        agg_aliases = [lexer.split_alias(c)[1] for c in agg_calls]
-        if out_names != gb + agg_aliases:
+        if out_names != gb + [lexer.split_alias(c)[1] for c in agg_calls]:
             b.project(*out_names)
         if m.group("ob"):
             b.sort(*lexer.split_top_level(m.group("ob")))
@@ -3610,16 +3604,20 @@ class SqlFrontend:
 
     def _run_agg_union_transpose(self, text: str) -> DataFrame:
         from calcite_spark.plans.builder import RelBuilder
-        from calcite_spark.plans.rewrite import default_program
 
-        m = self._AUT_STMT_RE.match(text)
+        m = lexer.search(self._AUT_STMT_RE, text)
         if not m:
             raise ValueError(
                 "AGGREGATE_UNION_TRANSPOSE hint: statement must be "
                 "SELECT ... FROM (SELECT ... UNION ALL SELECT ...) "
                 "GROUP BY ... [ORDER BY ...]"
             )
-        branches = re.split(r"(?i)\bUNION\s+ALL\b", m.group("branches"))
+        union = m.group("branches")
+        cuts = [(u.start(), u.end()) for u in lexer.finditer(r"(?i)\bUNION\s+ALL\b", union)]
+        branches = [
+            union[lo:hi]
+            for lo, hi in zip([0] + [e for _, e in cuts], [s for s, _ in cuts] + [len(union)])
+        ]
         if len(branches) < 2:
             raise ValueError(
                 "AGGREGATE_UNION_TRANSPOSE hint: the FROM subquery must "
@@ -3627,7 +3625,7 @@ class SqlFrontend:
             )
         b = RelBuilder(self.catalog)
         for br in branches:
-            bm = self._AUT_BRANCH_RE.match(br)
+            bm = lexer.search(self._AUT_BRANCH_RE, br)
             if not bm:
                 raise ValueError(
                     "AGGREGATE_UNION_TRANSPOSE hint: each branch must be "
@@ -3642,39 +3640,7 @@ class SqlFrontend:
                     *lexer.split_top_level(cols)
                 )
         b.union(all=True, n=len(branches))
-        gb = lexer.split_top_level(m.group("gb"))
-        agg_calls, out_names = [], []
-        for item in lexer.split_top_level(m.group("sel")):
-            item = item.strip()
-            if re.match(r"^[A-Za-z_]\w*$", item):
-                if item not in gb:
-                    raise ValueError(
-                        f"AGGREGATE_UNION_TRANSPOSE hint: select item "
-                        f"{item!r} is neither a GROUP BY key nor an "
-                        "aggregate with an alias"
-                    )
-                out_names.append(item)
-                continue
-            am = re.match(
-                r"(?is)^([A-Za-z_]\w*)\s*\(\s*(\*|[A-Za-z_]\w*)\s*\)\s+AS\s+"
-                r"([A-Za-z_]\w*)$",
-                item,
-            )
-            if not am:
-                raise ValueError(
-                    "AGGREGATE_UNION_TRANSPOSE hint: aggregate items "
-                    f"must be FN(col) AS alias, got {item!r}"
-                )
-            agg_calls.append(item)
-            out_names.append(am.group(3))
-        b.aggregate(gb, agg_calls)
-        agg_aliases = [lexer.split_alias(c)[1] for c in agg_calls]
-        if out_names != gb + agg_aliases:
-            b.project(*out_names)
-        if m.group("ob"):
-            b.sort(*lexer.split_top_level(m.group("ob")))
-        plan = default_program(self.catalog).run(b.build())
-        return plan.to_df(self.catalog)
+        return self._run_hinted_aggregate(b, m, "AGGREGATE_UNION_TRANSPOSE")
 
     # -- sequences (sequence.iq) --------------------------------------
 

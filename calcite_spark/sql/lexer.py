@@ -29,6 +29,7 @@ _BLOCK_EDGE = re.compile(r"/\*|\*/")
 _TOP_COMMA = re.compile(r"[(),]")
 _BRACKETS = {")": re.compile(r"[()]"), "]": re.compile(r"[\[\]]")}
 _NOT_NEWLINE = re.compile(r"[^\n]")
+_SPACE_RE = re.compile(r"\s+")
 
 
 @lru_cache(maxsize=256)
@@ -187,6 +188,36 @@ def balanced_span(text: str, start: int, close: str = ")") -> tuple[str, int]:
         if depth == 0:
             return text[start : m.start()], m.start()
     raise ValueError(f"unbalanced brackets in {text!r}")
+
+
+def _outside(text: str, fn) -> str:
+    """`text` with `fn` applied to every stretch between its opaque
+    regions; literals, quoted names, hints and comments stay verbatim."""
+    out, i = [], 0
+    for start, _, _, end in regions(text):
+        out.append(fn(text[i:start]))
+        out.append(text[start:end])
+        i = end
+    out.append(fn(text[i:]))
+    return "".join(out)
+
+
+@lru_cache(maxsize=4096)
+def squeeze(text: str) -> str:
+    """`text` with each whitespace run outside the opaque regions
+    collapsed to one space: literal contents are data ('a  b' is not
+    'a b')."""
+    return _outside(text, lambda s: _SPACE_RE.sub(" ", s))
+
+
+@lru_cache(maxsize=4096)
+def norm(expr: str) -> str:
+    """The form two expressions share when they differ only in
+    whitespace or letter case outside the opaque regions — the text
+    identity tile keys and aggregate calls unify on. Literal contents
+    compare verbatim: date_format(d, 'yyyyMM') and
+    date_format(d, 'yyyymm') are two different grains."""
+    return _outside(expr, lambda s: _SPACE_RE.sub("", s).lower())
 
 
 def split_top_level(text: str) -> list[str]:

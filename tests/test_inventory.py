@@ -5,6 +5,11 @@ Quidem .iq scripts with DuckDB as the expected side.
 
 from __future__ import annotations
 
+import os
+import pathlib
+import subprocess
+import sys
+
 import pytest
 
 from calcite_spark.queries.inventory import QUERIES, queries
@@ -53,3 +58,30 @@ def test_readme_suite_count_matches_registry():
         f"README says {m.group(1)} queries; registry holds {len(QUERIES)} "
         "— update README.md's driver-contract paragraph"
     )
+
+
+def test_query_scratch_dirs_go_at_exit(tmp_path):
+    """A registry query's scratch warehouse lives under one root that is
+    removed when the interpreter exits: a child process that builds
+    qx45_mv_join_refresh leaves no qx45_* directory under its TMPDIR."""
+    child = (
+        "import os\n"
+        "from calcite_spark.queries import inventory\n"
+        "from calcite_spark.session import get_spark\n"
+        "inventory.queries()\n"
+        "spark = get_spark('scratch_dir_child')\n"
+        f"inventory.QUERIES['qx45_mv_join_refresh'].fn(spark, {SF_DIR!r}).collect()\n"
+        "root = inventory._SCRATCH_ROOT[0]\n"
+        "assert any(n.startswith('qx45_') for n in os.listdir(root)), root\n"
+    )
+    env = dict(
+        os.environ, TMPDIR=str(tmp_path), SPARK_GRAFT_DRIVER_MEM="1g", SPARK_GRAFT_CPUS="1"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", child],
+        cwd=pathlib.Path(__file__).resolve().parent.parent,
+        env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    left = [d for d, _, _ in os.walk(tmp_path) if os.path.basename(d).startswith("qx45_")]
+    assert not left

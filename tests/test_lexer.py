@@ -336,14 +336,10 @@ _ALIAS_CAPTURE_RE = re.compile(
     r"AS\\s\+\((?:\?P<\w+>)?(?:\\w[+*]|\[A-Za-z_\]\\w\*)\)[^\"'\n]*?(?:\\s\*)?\$"
 )
 _IDENT_SCAN_RE = re.compile(r"findall\(\s*r?[\"']\[A-Za-z_\]\\w\*[\"']")
-# shape patterns of other grammars that end in an alias: aggregate
-# calls FN(arg) AS name, a GROUPING call, an ORDER item
+# shape patterns of other grammars that end in an alias: an EXTRACT
+# group key, an ORDER item
 _ALLOWED_SHAPES = {
-    ("plans/materialize.py", "_AGG_RE"),
-    ("plans/materialize.py", "_DERIVED_RE"),
     ("plans/materialize.py", "_EXTRACT_KEY_RE"),
-    ("plans/materialize.py", "_map_rollup_calls"),
-    ("plans/rewrite.py", "_AJT_CALL_RE"),
     ("sql/frontend.py", "_expand_select_by"),
 }
 

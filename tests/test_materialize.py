@@ -2181,10 +2181,10 @@ def test_review_compound_call_not_misparsed(spark, tmp_path):
     single MAX call — define() refuses it and the query-side mapping
     serves it through the EXPRESSION tier (range of the group, never
     max-of-subgroup-ranges)."""
-    from calcite_spark.plans.materialize import parse_agg_call
+    from calcite_spark.plans.ir import AggCall
 
-    assert parse_agg_call("MAX(a) - MIN(a) AS rng") is None
-    assert parse_agg_call("SUM((a+b)*(a+b)) AS q") is not None
+    assert AggCall.parse("MAX(a) - MIN(a) AS rng") is None
+    assert AggCall.parse("SUM((a+b)*(a+b)) AS q") is not None
     cat = Catalog(spark).register_parquet_dir(SF_DIR)
     reg = MaterializationRegistry()
     with pytest.raises(ValueError, match="not a rewritable"):
@@ -7116,7 +7116,7 @@ def test_suggester_avg_loop_no_analyze_needed(spark, tmp_path):
     built = sug.auto_build(cat, reg, str(tmp_path / "wh"), min_count=2)
     assert len(built) == 1, sug.decisions
     # the corpus's AVG was recorded as its sufficient statistics
-    calls = {fn for fn, _ in built[0].agg_calls.values()}
+    calls = {c.fn for c in built[0].agg_calls.values()}
     assert {"SUM", "COUNT"} <= calls, built[0].agg_calls
     # NO analyze() ran — the AVG range query still serves from the tile
     assert not cat.tables["orders"].stats
@@ -8019,3 +8019,31 @@ def test_rollup_grouping_three_spellings_tile_served(spark, tmp_path):
         got = sorted(((r.yr, r.o_orderpriority, r.sp, r.gp)
                       for r in df.collect()), key=str)
         assert got == want, spelling
+
+
+def test_literal_whitespace_in_tile_calls_is_data(spark, tmp_path):
+    """A string literal inside an aggregate call is data: the tile for
+    SUM(CASE WHEN s = 'a  b' ...) filters on 'a  b' (two spaces), not
+    on a whitespace-collapsed 'a b', and the queries it serves — the
+    call itself and an AVG derived from its SUM/COUNT columns — answer
+    like Spark on the base table."""
+    path = str(tmp_path / "t")
+    spark.createDataFrame(
+        [(1, "a b", 10), (1, "a  b", 100), (2, "a  b", 1000)],
+        "k int, s string, x bigint",
+    ).write.parquet(path)
+    cat = Catalog(spark)
+    cat.register("t", path)
+    when = "CASE WHEN s = 'a  b' THEN x END"
+    reg = MaterializationRegistry()
+    reg.define(
+        cat, "mv_ws", "t", ["k"],
+        [f"SUM({when}) AS m", f"COUNT({when}) AS c"],
+        str(tmp_path / "mv_ws"),
+    )
+    assert _rows(cat.table("mv_ws")) == [(1, 100, 1), (2, 1000, 1)]
+    for call in (f"SUM({when}) AS m", f"AVG({when}) AS a"):
+        want = _rows(cat.table("t").groupBy("k").agg(F.expr(call)))
+        df = RelBuilder(cat).scan("t").aggregate(["k"], [call]).to_df()
+        assert all("mv_ws" in f for f in df.inputFiles()), call
+        assert _rows(df) == want, call

@@ -383,3 +383,27 @@ def test_repeated_dml_path_bounded(spark, scratch, tmp_path):
     assert sorted(tuple(r) for r in fresh.collect()) == want
     got = sorted(tuple(r) for r in scratch.table("tile").select("r_name", "n", "s").collect())
     assert got == want
+
+
+def test_update_where_null_updates_no_row(spark, scratch, tmp_path):
+    """`WHERE NULL` selects no row: the UPDATE reports 0 and leaves the
+    rows as they were, also where an assigned NOT NULL column makes
+    the executor pre-check the affected rows first. A non-boolean
+    condition such as `1` still raises."""
+    from calcite_spark.sql.ddl import DdlExecutor
+    from calcite_spark.sql.frontend import SqlFrontend
+
+    before = sorted(tuple(r) for r in scratch.table("nation").collect())
+    ddl = DdlExecutor(SqlFrontend(scratch), str(tmp_path / "wh"))
+    assert ddl.execute("UPDATE nation SET n_name = 'x' WHERE NULL") == {
+        "rows_modified": 0
+    }
+    assert sorted(tuple(r) for r in scratch.table("nation").collect()) == before
+    ddl.execute("create table nn (a int not null, b int)")
+    ddl.execute("insert into nn (a, b) values (1, 2), (3, 4)")
+    assert ddl.execute("update nn set a = 0 where NULL") == {"rows_modified": 0}
+    assert sorted(tuple(r) for r in ddl.catalog.table("nn").collect()) == [
+        (1, 2), (3, 4)
+    ]
+    with pytest.raises(Exception, match="DATATYPE_MISMATCH"):
+        ddl.execute("UPDATE nation SET n_name = 'x' WHERE 1")

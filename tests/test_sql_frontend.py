@@ -974,6 +974,37 @@ def test_r8_advice_ajt_hint_literal_strip(spark):
     assert df.count() > 0
 
 
+@pytest.mark.parametrize(
+    "hint, sql",
+    [
+        (
+            "AGGREGATE_JOIN_TRANSPOSE",
+            "SELECT o_orderpriority, COUNT(*) AS n FROM orders "
+            "JOIN lineitem ON o_orderkey = l_orderkey "
+            "WHERE o_orderpriority <> 'x GROUP BY y' "
+            "GROUP BY o_orderpriority",
+        ),
+        (
+            "AGGREGATE_UNION_TRANSPOSE",
+            "SELECT o_orderpriority, COUNT(*) AS n FROM ("
+            "SELECT * FROM orders WHERE o_orderpriority <> 'a UNION ALL b' "
+            "UNION ALL SELECT * FROM orders WHERE o_orderstatus = 'F') "
+            "GROUP BY o_orderpriority",
+        ),
+    ],
+)
+def test_transpose_hint_clauses_read_past_literals(spark, hint, sql):
+    """The hinted statement is split into clauses on the lexer mask: a
+    GROUP BY or UNION ALL inside a string literal is data, so the
+    hinted statement answers like the unhinted one."""
+    from calcite_spark.catalog import Catalog
+
+    fe2 = SqlFrontend(Catalog(spark).register_parquet_dir(SF_DIR))
+    want = sorted(tuple(r) for r in fe2.sql(sql).collect())
+    got = sorted(tuple(r) for r in fe2.sql(f"/*+ {hint} */ {sql}").collect())
+    assert want and got == want
+
+
 # -- star EXCLUDE / REPLACE (babel select.iq sweep, r8 batch 4) --------
 
 
