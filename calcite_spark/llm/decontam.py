@@ -26,11 +26,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from calcite_spark.llm.textstats import ngrams, words
+
 
 def _gram_expr(text_col: str, n: int, digest: str = "md5") -> str:
     """Word n-gram digests of `text_col` as an array expression.
-    Tokenization (lower, trim, whitespace-split, drop empties) matches
-    textstats; a doc with fewer than n words yields an empty array.
+    Tokenization is textstats.words; a doc with fewer than n words
+    yields an empty array.
     digest="md5" (default) is replayable in DuckDB for the oracle path;
     digest="xxhash64" is the production path — a JVM 64-bit hash that
     skips hex-string materialization and shuffles 8-byte longs instead
@@ -41,12 +43,7 @@ def _gram_expr(text_col: str, n: int, digest: str = "md5") -> str:
     (network-bound there, CPU-bound here)."""
     if digest not in ("md5", "xxhash64"):
         raise ValueError(f"unknown digest {digest!r}")
-    words = f"filter(split(lower(trim({text_col})), '\\\\s+'), w -> w != '')"
-    return (
-        f"CASE WHEN size({words}) < {n} THEN array() "
-        f"ELSE transform(sequence(0, size({words}) - {n}), "
-        f"i -> {digest}(concat_ws(' ', slice({words}, i + 1, {n})))) END"
-    )
+    return ngrams(words(text_col), n, whole_if_short=False, digest=digest)
 
 
 def ngram_decontaminate(

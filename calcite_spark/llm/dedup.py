@@ -24,22 +24,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from calcite_spark.exec import parallelize_input
+from calcite_spark.llm.textstats import ngrams
+
 # Fixed salts make the K hash functions h_i(x) = md5(i || x) deterministic
 # and reproducible in any engine with md5 (DuckDB oracle included).
 DEFAULT_NUM_HASHES = 16
 DEFAULT_BANDS = 4
-
-
-def _parallelize(df: DataFrame) -> DataFrame:
-    """Round-robin repartition to the cluster's parallelism before a
-    CPU-heavy narrow stage; guarded so it only fires when the input
-    reads fewer FILES than cores. Shared with the IR Exchange
-    ROUND_ROBIN lowering since r14 — logic lives in
-    exec.parallelize_input (this alias keeps the historical call sites
-    and tests stable)."""
-    from calcite_spark.exec import parallelize_input
-
-    return parallelize_input(df)
 
 
 def normalize_text(col: str = "text"):
@@ -83,14 +74,9 @@ def exact_dedup(
 
 
 def shingles(text_expr: str, n: int = 5) -> str:
-    """Word n-gram shingle array (SQL expression, JVM-side):
-    sliding window of n tokens joined by space."""
-    toks = f"split({text_expr}, ' ')"
-    return (
-        f"CASE WHEN size({toks}) < {n} THEN array(concat_ws(' ', {toks})) "
-        f"ELSE transform(sequence(0, size({toks}) - {n}), "
-        f"i -> concat_ws(' ', slice({toks}, i + 1, {n}))) END"
-    )
+    """Word n-gram shingle array (SQL expression, JVM-side) over the
+    space-split `text_expr`; a shorter text is one shingle."""
+    return ngrams(f"split({text_expr}, ' ')", n, whole_if_short=True)
 
 
 def minhash_signature(shingle_array_expr: str, num_hashes: int = DEFAULT_NUM_HASHES) -> str:
@@ -129,7 +115,7 @@ def minhash_lsh_dups(
     """
     rows_per_band = num_hashes // bands
     norm = normalize_text(text_col)
-    staged = _parallelize(docs).selectExpr(
+    staged = parallelize_input(docs).selectExpr(
         f"{id_col} AS __id",
         f"{minhash_signature(shingles(norm, shingle_n), num_hashes)} AS __sig",
     )
@@ -175,17 +161,17 @@ def simhash64(text_expr: str, ngram: int = 3) -> str:
     """64-bit SimHash over word n-grams, pure SQL: per bit, sum +1/-1
     votes of each shingle's xxhash64 bit, take sign. Single fold over the
     shingles (the shingle expr appears once — see minhash_signature note
-    on CollapseProject), accumulating 64 vote counters via zip_with, then
-    one final pass folds the sign bits into a long."""
+    on CollapseProject), accumulating 64 vote counters indexed by bit,
+    then one final pass folds the sign bits into a long."""
     sh = shingles(text_expr, ngram)
     votes = (
         f"aggregate(transform({sh}, s -> xxhash64(s)), "
         "array_repeat(CAST(0 AS BIGINT), 64), "
-        "(acc, h) -> zip_with(acc, sequence(0, 63), "
+        "(acc, h) -> transform(acc, "
         "(v, b) -> v + CASE WHEN (shiftright(h, b) & 1) = 1 THEN 1 ELSE -1 END))"
     )
     return (
-        f"aggregate(zip_with({votes}, sequence(0, 63), "
+        f"aggregate(transform({votes}, "
         "(v, b) -> CASE WHEN v > 0 THEN shiftleft(CAST(1 AS BIGINT), b) "
         "ELSE CAST(0 AS BIGINT) END), CAST(0 AS BIGINT), (acc, x) -> acc + x)"
     )
@@ -195,7 +181,7 @@ def simhash_dups(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     """Documents sharing an identical 64-bit SimHash (strong near-dup
     signal for short docs). GroupBy on the hash — one shuffle."""
     return (
-        _parallelize(docs)
+        parallelize_input(docs)
         .selectExpr(f"{simhash64(normalize_text(text_col))} AS simhash", id_col)
         .groupBy("simhash")
         .agg(
@@ -224,7 +210,7 @@ def simhash_near_dups(
     """
     n_bands = k + 1
     width = 64 // n_bands
-    sigs = _parallelize(docs).selectExpr(
+    sigs = parallelize_input(docs).selectExpr(
         f"{id_col} AS __id",
         f"{simhash64(normalize_text(text_col))} AS __sim",
     )
@@ -317,10 +303,10 @@ def embedding_cosine_dups(
     )
     # coalesce(-1): same argument as simhash_near_dups' band_val — the
     # non-null key removes the pushed isnotnull(bucket) filter that
-    # re-evaluated the whole hyperplane fold per row; null-vector rows
-    # meeting at bucket -1 produce a NULL cosine, which the
-    # `cosine_sim >= threshold` rerank drops — output identical.
-    bucketed = _parallelize(vectors).selectExpr(
+    # re-evaluated the whole hyperplane fold per row. A null vector
+    # buckets to 0, not NULL (its NULL plane sums fail `> 0`); its pairs
+    # have a NULL cosine, which the `cosine_sim >= threshold` rerank drops.
+    bucketed = parallelize_input(vectors).selectExpr(
         f"{id_col} AS __id",
         f"{vec_col} AS __vec",
         f"{_norm(vec_col)} AS __nrm",

@@ -66,15 +66,11 @@ def _norm(a: str) -> str:
     )
 
 
-def _cos(a: str, b: str) -> str:
-    return f"({_dot(a, b)} / ({_norm(a)} * {_norm(b)}))"
-
-
 def _cos_pre(a: str, b: str, a_norm: str, b_norm: str) -> str:
     """Cosine with PRE-COMPUTED norms (r14): the higher-order-function
-    folds are interpreted per element, and _cos paid both norm folds per
-    PAIR — ~2/3 of the per-pair work for values that depend on one side
-    only. Hoisting them to a per-row projection before the join keeps
+    folds are interpreted per element, and a plain cosine pays both norm
+    folds per PAIR — ~2/3 of the per-pair work for values that depend on
+    one side only. Hoisting them to a per-row projection before the join keeps
     the arithmetic bit-identical (same folds, same multiply/divide
     order — snapshot oracles unaffected) and leaves only the dot per
     pair."""
@@ -117,14 +113,12 @@ def lsh_bucketed_topk(
     equi-join on bucket, exact cosine rerank within bucket."""
     bexpr = hyperplane_bucket_expr("embedding", n_planes, dim)
     qexpr = hyperplane_bucket_expr("q_vec", n_planes, dim)
-    # DISTINCT per-side null sentinels (-1 corpus, -2 query): a NULL
-    # bucket (null/short vector) used to be dropped by the inner join's
-    # null semantics; a sentinel that exists on only ONE side matches
-    # nothing, so the result is identical for every input — and the
-    # now provably non-null key stops the optimizer pushing an
-    # isnotnull(bucket) filter below the projection, which re-evaluated
+    # DISTINCT per-side null sentinels (-1 corpus, -2 query) match
+    # nothing, and the provably non-null key stops the optimizer pushing
+    # an isnotnull(bucket) filter below the projection, which re-evaluated
     # the whole 8-plane bucket fold per row on BOTH sides (r15 plan
-    # check: q80 had the duplicated fold in both scan-side Filters).
+    # check). A NULL vector is not a NULL bucket: its NULL plane sums
+    # fail `> 0`, so it joins bucket 0 with a NULL cosine, dropped below.
     c = corpus.selectExpr(
         "vec_id",
         "embedding",
@@ -150,7 +144,10 @@ def lsh_bucketed_topk(
             "cosine_sim",
             "row_number() OVER (PARTITION BY q_id ORDER BY cosine_sim DESC, vec_id) AS rk",
         )
-        .filter(f"rk <= {k}")
+        # NULLs rank last under DESC, so dropping them after the window
+        # keeps every other rank; a filter below it is pushed into the
+        # join condition and runs the cosine fold twice per pair
+        .filter(f"rk <= {k} AND cosine_sim IS NOT NULL")
     )
 
 

@@ -10,10 +10,36 @@ from pyspark.sql import DataFrame, functions as F
 
 from calcite_spark.exec import parallelize_input
 
+
+def let(value: str, var: str, body: str) -> str:
+    """`body` reading `value` as lambda variable `var`, evaluated once per
+    row (≈ a RexProgram local ref); written inside a lambda body, `value`
+    would run again on every call of that lambda."""
+    return f"element_at(transform(array({value}), {var} -> {body}), 1)"
+
+
+def words(col: str = "text") -> str:
+    """Lower-cased whitespace tokens of `col`, empties dropped."""
+    return f"filter(split(lower(trim({col})), '\\\\s+'), w -> w != '')"
+
+
+def ngrams(tokens: str, n: int, whole_if_short: bool, digest: str = "") -> str:
+    """The sliding window of `n` tokens joined by a space (each hashed by
+    `digest` if given), tokenizing once. Fewer than `n` tokens yield them
+    joined (`whole_if_short`) or an empty array."""
+    short = "array(concat_ws(' ', __t))" if whole_if_short else "array()"
+    return let(
+        tokens,
+        "__t",
+        f"CASE WHEN size(__t) < {n} THEN {short} ELSE "
+        f"transform(sequence(0, size(__t) - {n}), "
+        f"i -> {digest}(concat_ws(' ', slice(__t, i + 1, {n})))) END",
+    )
+
+
 # Whitespace tokens + a BPE-ish heuristic: ~chars/4 is the common rule of
 # thumb for subword token counts over English-like text.
 TOKENS = "size(split(trim(text), '\\\\s+'))"
-WORDS_PER_DOC = TOKENS
 
 
 def text_stats(docs: DataFrame) -> DataFrame:
@@ -98,17 +124,14 @@ def lang_id(docs: DataFrame) -> DataFrame:
 
 def fingerprint(docs: DataFrame, window: int = 8) -> DataFrame:
     """Winnowing-style document fingerprint: min rolling-hash over word
-    windows (public winnowing scheme, SQL-only via higher-order fns)."""
-    toks = "split(lower(trim(text)), '\\\\s+')"
-    grams = (
-        f"CASE WHEN size({toks}) < {window} THEN array(concat_ws(' ', {toks})) "
-        f"ELSE transform(sequence(0, size({toks}) - {window}), "
-        f"i -> concat_ws(' ', slice({toks}, i + 1, {window}))) END"
-    )
-    return parallelize_input(docs).selectExpr(
-        "doc_id",
-        f"array_min(transform({grams}, g -> xxhash64(g))) AS fp_min",
-        f"array_max(transform({grams}, g -> xxhash64(g))) AS fp_max",
+    windows (public winnowing scheme, SQL-only via higher-order fns).
+    The window hashes are one column read by both ends: two reads of a
+    non-trivial column keep Catalyst from inlining it twice."""
+    grams = ngrams("split(lower(trim(text)), '\\\\s+')", window, whole_if_short=True)
+    return (
+        parallelize_input(docs)
+        .selectExpr("doc_id", f"transform({grams}, g -> xxhash64(g)) AS __h")
+        .selectExpr("doc_id", "array_min(__h) AS fp_min", "array_max(__h) AS fp_max")
     )
 
 
@@ -142,50 +165,44 @@ def repetition_stats(docs: DataFrame, ngram: int = 2) -> DataFrame:
       * dup_ngram_frac      — fraction of n-gram occurrences that are
                               repeats of an earlier n-gram.
 
-    Pure SQL higher-order functions (whole-stage codegen, zero Python,
-    zero shuffle — a narrow map at scan speed on 100 TB). The
-    per-distinct-value counting is O(k²) in the per-DOC line/n-gram
-    count — bounded by document length, never by corpus size, so it
-    does not change the scale story. Delimiters are chr(10)-literal
+    Pure SQL higher-order functions (zero Python, zero shuffle — a
+    narrow map at scan speed on 100 TB). The line and n-gram arrays are
+    columns built once per document, so counting each distinct value is
+    O(k²) comparisons over one DOC's k lines or n-grams — bounded by
+    document length, never by corpus size. Delimiters are chr(10)-literal
     (not regex) so the DuckDB oracle's string_split matches exactly."""
     lines = "filter(split(text, chr(10)), x -> length(trim(x)) > 0)"
-    words = "filter(split(lower(trim(text)), '\\\\s+'), w -> w != '')"
-    grams = (
-        f"CASE WHEN size({words}) < {ngram} THEN array() "
-        f"ELSE transform(sequence(0, size({words}) - {ngram}), "
-        f"i -> concat_ws(' ', slice({words}, i + 1, {ngram}))) END"
+    grams = ngrams(words(), ngram, whole_if_short=False)
+
+    def frac(num: str, den: str) -> str:
+        return f"ROUND(({num}) / CAST(GREATEST({den}, 1) AS DOUBLE), 6)"
+
+    # sum over distinct lines of (occurrences - 1) * length
+    dup_line_chars = (
+        "aggregate(transform(array_distinct(__l), "
+        "d -> (size(filter(__l, x -> x = d)) - 1) * length(d)), "
+        "CAST(0 AS BIGINT), (a, x) -> a + x)"
     )
-
-    def _dup_char_sum(arr: str) -> str:
-        # sum over distinct values of (occurrences - 1) * length
-        return (
-            f"aggregate(transform(array_distinct({arr}), "
-            f"d -> (size(filter({arr}, x -> x = d)) - 1) * length(d)), "
-            f"CAST(0 AS BIGINT), (a, x) -> a + x)"
-        )
-
-    def _char_sum(arr: str) -> str:
-        return (
-            f"aggregate(transform({arr}, l -> CAST(length(l) AS BIGINT)), "
-            f"CAST(0 AS BIGINT), (a, x) -> a + x)"
-        )
-
+    line_chars = (
+        "aggregate(transform(__l, l -> CAST(length(l) AS BIGINT)), "
+        "CAST(0 AS BIGINT), (a, x) -> a + x)"
+    )
     top_gram_chars = (
-        f"CASE WHEN size({grams}) = 0 THEN CAST(0 AS BIGINT) ELSE "
-        f"array_max(transform(array_distinct({grams}), "
-        f"d -> CAST(size(filter({grams}, x -> x = d)) * length(d) AS BIGINT))) END"
+        "CASE WHEN size(__g) = 0 THEN CAST(0 AS BIGINT) ELSE "
+        "array_max(transform(array_distinct(__g), "
+        "d -> CAST(size(filter(__g, x -> x = d)) * length(d) AS BIGINT))) END"
     )
-    return parallelize_input(docs).selectExpr(
-        "doc_id",
-        f"CAST(size({lines}) AS INT) AS n_lines",
-        f"ROUND((size({lines}) - size(array_distinct({lines}))) / "
-        f"CAST(GREATEST(size({lines}), 1) AS DOUBLE), 6) AS dup_line_frac",
-        f"ROUND({_dup_char_sum(lines)} / "
-        f"CAST(GREATEST({_char_sum(lines)}, 1) AS DOUBLE), 6) AS dup_line_char_frac",
-        f"ROUND({top_gram_chars} / "
-        f"CAST(GREATEST(length(text), 1) AS DOUBLE), 6) AS top_ngram_char_frac",
-        f"ROUND((size({grams}) - size(array_distinct({grams}))) / "
-        f"CAST(GREATEST(size({grams}), 1) AS DOUBLE), 6) AS dup_ngram_frac",
+    return (
+        parallelize_input(docs)
+        .selectExpr("doc_id", "text", f"{lines} AS __l", f"{grams} AS __g")
+        .selectExpr(
+            "doc_id",
+            "CAST(size(__l) AS INT) AS n_lines",
+            f"{frac('size(__l) - size(array_distinct(__l))', 'size(__l)')} AS dup_line_frac",
+            f"{frac(dup_line_chars, line_chars)} AS dup_line_char_frac",
+            f"{frac(top_gram_chars, 'length(text)')} AS top_ngram_char_frac",
+            f"{frac('size(__g) - size(array_distinct(__g))', 'size(__g)')} AS dup_ngram_frac",
+        )
     )
 
 

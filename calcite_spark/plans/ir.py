@@ -441,6 +441,12 @@ class AggCall:
         one on a tile opts in to sketch-served estimates — deterministic,
         not bit-equal to Spark's native HLL++ / QuantileSummaries)."""
         if self.fn == "APPROX_COUNT_DISTINCT":
+            if len(self.args) != 1:
+                # Spark's second argument is relativeSD; the sketch's
+                # second argument is lgConfigK, an INT
+                raise ValueError(
+                    f"APPROX_COUNT_DISTINCT(value) expected; got ({self.text})"
+                )
             return f"hll_sketch_agg({self.text}) AS {self.alias}"
         if self.fn == "APPROX_PERCENTILE":
             pp = self.percentile()

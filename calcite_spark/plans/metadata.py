@@ -428,7 +428,7 @@ class MetadataQuery:
         def uniq(seq):
             seen, out = set(), []
             for p in seq:
-                k = re.sub(r"\s+", " ", p.strip())
+                k = lexer.squeeze(p.strip())
                 if k not in seen:
                     seen.add(k)
                     out.append(p.strip())

@@ -502,9 +502,10 @@ def qx22_repetition_filter(spark, sf_dir):
     """Intra-document repetition filters (llm/textstats.repetition_stats
     — Gopher Table-A1 rules): duplicate-line fractions and top/duplicate
     word-n-gram character fractions, all SQL higher-order functions in
-    one narrow codegen map (zero shuffle, zero Python — scan speed at
-    100 TB; the per-distinct counting is O(k²) only in per-DOC n-gram
-    count). The oracle replays every formula in DuckDB list functions."""
+    one narrow map (zero shuffle, zero Python). The line and n-gram
+    arrays are built once per document, so the per-distinct counting is
+    O(k²) comparisons in the per-DOC line or n-gram count. The oracle replays
+    every formula in DuckDB list functions."""
     from calcite_spark.llm.textstats import repetition_stats
 
     cat = catalog_for(spark, sf_dir)

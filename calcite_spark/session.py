@@ -16,7 +16,6 @@ import os
 from pyspark.sql import SparkSession
 
 _DEFAULTS = {
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -86,13 +85,17 @@ def _cgroup_limits():
 def get_spark(app_name: str = "calcite_spark", extra_conf: dict | None = None) -> SparkSession:
     """Create or reuse the process-wide SparkSession.
 
-    ``local[$SPARK_GRAFT_CPUS]`` by default; on a real cluster the caller
-    passes master via spark-submit and this builder only applies SQL conf.
+    ``local[$SPARK_GRAFT_CPUS]`` by default, else one slot per core this
+    process may run on, read when the session is built; the shuffle
+    partition count follows the same number. On a real cluster the caller
+    passes master via spark-submit and this builder only applies SQL conf
+    (the shuffle partition count is then the Catalog's defaultParallelism).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = SparkSession.builder.appName(app_name)
     if not os.environ.get("SPARK_MASTER_SET"):
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
         builder = builder.master(f"local[{cpus}]")
+        builder = builder.config("spark.sql.shuffle.partitions", cpus)
         builder = builder.config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_heap(),

@@ -18,10 +18,10 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 from pyspark.sql import functions as F
 
 from calcite_spark.catalog import open_catalog
+from calcite_spark.exec import parallelize_input
 from calcite_spark.llm.dedup import (
     DEFAULT_BANDS,
     DEFAULT_NUM_HASHES,
-    _parallelize,
     minhash_lsh_dups,
     minhash_signature,
     normalize_text,
@@ -38,7 +38,7 @@ R = K // B
 def sig_a(docs):
     """Current form: one HOF fold, K-array accumulator."""
     norm = normalize_text("text")
-    return _parallelize(docs).selectExpr(
+    return parallelize_input(docs).selectExpr(
         "doc_id AS __id",
         f"{minhash_signature(shingles(norm, 5), K)} AS __sig",
     )
@@ -47,7 +47,7 @@ def sig_a(docs):
 def sig_c(docs):
     """Explode form: shingle hashes as rows, K codegen'd MIN aggregates."""
     norm = normalize_text("text")
-    ex = _parallelize(docs).selectExpr(
+    ex = parallelize_input(docs).selectExpr(
         "doc_id AS __id",
         f"explode(transform({shingles(norm, 5)}, s -> xxhash64(s))) AS __h",
     )

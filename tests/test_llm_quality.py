@@ -5,6 +5,8 @@ on the driver testdata (deterministic hash families → stable numbers).
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from calcite_spark.llm.dedup import jaccard_ngram_sim, minhash_lsh_dups
@@ -373,3 +375,121 @@ def test_exact_dedup_xxhash64_digest_matches_md5(spark):
         for r in exact_dedup(docs, digest="xxhash64").collect()
     )
     assert a == b
+
+
+# NULL, empty, whitespace-only, fewer-than-n, exactly-n (n = 2, 3, 5, 8)
+# and whitespace-run texts; \s is ASCII in both Java and re.ASCII
+_GRAM_TEXTS = [
+    None, "", " ", "   ", "\t", " \t\n ", "solo", "Alpha beta", "x y z",
+    "one two three four", "one two three four five", "a b c d e f g h",
+    "one  two\tthree\n\nfour five six", "  Lead  and  TRAIL  ",
+    "w w w w w w w w w", "a b a b a b a b a b a b",
+]
+
+
+def _split(s, regex):
+    # Spark's split(s, regex) is Java's String.split(regex, -1)
+    return re.split(regex, s, flags=re.ASCII)
+
+
+def _windows(toks, n, whole_if_short):
+    if len(toks) < n:
+        return [" ".join(toks)] if whole_if_short else []
+    return [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+
+
+def test_ngram_builder_matches_a_python_sliding_window(spark):
+    """Each call site of the one n-gram builder, with its own tokenizer
+    and short-document branch, yields exactly the sliding window a plain
+    Python loop yields: dedup.shingles (normalize, split on ' ', short
+    text = one shingle), decontam's digests (words, short = empty),
+    fingerprint (split on \\s+, short = one gram) and repetition_stats
+    (words, short = empty)."""
+    import hashlib
+
+    from calcite_spark.llm.decontam import _gram_expr
+    from calcite_spark.llm.dedup import normalize_text, shingles
+    from calcite_spark.llm.textstats import fingerprint, repetition_stats
+
+    docs = spark.createDataFrame(list(enumerate(_GRAM_TEXTS)), "doc_id long, text string")
+    texts = dict(enumerate(_GRAM_TEXTS))
+    # size(NULL) is NULL under ANSI (a NULL document then has NULL
+    # grams) and -1 otherwise (the short branch over no tokens)
+    null_is_short = spark.sql("SELECT size(CAST(NULL AS ARRAY<STRING>))").first()[0] is not None
+
+    def trim(s):
+        return s.strip(" ")  # Spark's trim strips spaces only
+
+    def shingle_toks(s):
+        return _split(re.sub(r"\s+", " ", trim(s).lower(), flags=re.ASCII), " ")
+
+    def words(s):
+        return [w for w in _split(trim(s).lower(), r"\s+") if w != ""]
+
+    def fp_toks(s):
+        return _split(trim(s).lower(), r"\s+")
+
+    def expect(tokenize, n, whole_if_short):
+        return {
+            i: None if t is None and not null_is_short
+            else _windows([] if t is None else tokenize(t), n, whole_if_short)
+            for i, t in texts.items()
+        }
+
+    def column(expr):
+        return {r[0]: r[1] for r in docs.selectExpr("doc_id", f"{expr} AS g").collect()}
+
+    def xxhash(grams):
+        df = spark.createDataFrame(list(grams.items()), "doc_id long, g array<string>")
+        return {r[0]: r[1] for r in df.selectExpr("doc_id", "transform(g, w -> xxhash64(w))").collect()}
+
+    for n in (3, 5):
+        assert column(shingles(normalize_text("text"), n)) == expect(shingle_toks, n, True), n
+    for n in (2, 5):
+        want = expect(words, n, False)
+        assert column(_gram_expr("text", n, "md5")) == {
+            i: None if g is None else [hashlib.md5(w.encode()).hexdigest() for w in g]
+            for i, g in want.items()
+        }, n
+        assert column(_gram_expr("text", n, "xxhash64")) == xxhash(want), n
+    for window in (3, 8):
+        hashes = xxhash(expect(fp_toks, window, True))
+        got = {r.doc_id: (r.fp_min, r.fp_max) for r in fingerprint(docs, window).collect()}
+        assert got == {
+            i: (None, None) if h is None else (min(h), max(h)) for i, h in hashes.items()
+        }, window
+    for n in (2, 3):
+        got = {
+            r.doc_id: (r.top_ngram_char_frac, r.dup_ngram_frac)
+            for r in repetition_stats(docs, ngram=n).collect()
+        }
+        for i, g in expect(words, n, False).items():
+            if g is None:
+                assert got[i] == (None, None), i
+                continue
+            top = max((g.count(d) * len(d) for d in set(g)), default=0)
+            assert got[i] == (
+                pytest.approx(top / max(len(texts[i] or ""), 1), abs=1e-6),
+                pytest.approx((len(g) - len(set(g))) / max(len(g), 1), abs=1e-6),
+            ), (i, n)
+
+
+def test_lsh_topk_drops_null_vectors(spark):
+    """A NULL vector lands in hyperplane bucket 0 with a NULL cosine; it
+    must not take a top-k slot when its bucket is thin."""
+    import itertools
+
+    from calcite_spark.llm.similarity import hyperplane_bucket_expr
+
+    planes, dim = 2, 4
+    candidates = spark.createDataFrame(
+        [([float(x) for x in v],) for v in itertools.product((-1, 1, 2), repeat=dim)],
+        "v array<double>",
+    )
+    v = candidates.filter(f"{hyperplane_bucket_expr('v', planes, dim)} = 0").first().v
+    corpus = spark.createDataFrame(
+        [(1, None), (2, v)], "vec_id int, embedding array<double>"
+    )
+    queries = spark.createDataFrame([(0, v)], "q_id int, q_vec array<double>")
+    got = lsh_bucketed_topk(corpus, queries, k=5, n_planes=planes, dim=dim)
+    assert [tuple(r) for r in got.collect()] == [(0, 2, 1.0, 1)]

@@ -3873,6 +3873,32 @@ def test_approx_distinct_tile(spark, tmp_path):
     assert reg.substitute(plan, cat) is None
 
 
+def test_approx_distinct_relative_sd_refuses(spark, tmp_path):
+    """Spark's APPROX_COUNT_DISTINCT(x, relativeSD) has no HLL-sketch
+    counterpart (the sketch's second argument is lgConfigK): it refuses
+    at define, and a tile of APPROX_COUNT_DISTINCT(x) does not serve it."""
+    cat = Catalog(spark).register_parquet_dir(SF_DIR)
+    reg = MaterializationRegistry()
+    with pytest.raises(ValueError, match="APPROX_COUNT_DISTINCT"):
+        reg.define(
+            cat, "acd_sd", "orders", ["o_orderstatus"],
+            ["APPROX_COUNT_DISTINCT(o_custkey, 0.05) AS nd"],
+            str(tmp_path / "acd_sd"),
+        )
+    reg.define(
+        cat, "acd_one", "orders", ["o_orderstatus"],
+        ["APPROX_COUNT_DISTINCT(o_custkey) AS nd"],
+        str(tmp_path / "acd_one"),
+    )
+    plan = (
+        RelBuilder(cat)
+        .scan("orders")
+        .aggregate(["o_orderstatus"], ["APPROX_COUNT_DISTINCT(o_custkey, 0.05) AS nd"])
+        .build()
+    )
+    assert reg.substitute(plan, cat) is None
+
+
 def test_smallest_matching_tile_wins(spark, tmp_path):
     """Cost-based tile choice (r10 ≈ the reference planner costing
     competing materializations): when both the finest lattice tile and

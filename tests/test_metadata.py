@@ -270,6 +270,18 @@ def test_pulled_up_predicates(cat, mq):
     assert "o_orderstatus = 'F'" in mq.pulled_up_predicates(ag)
 
 
+def test_pulled_up_predicates_keep_literal_whitespace(cat, mq):
+    """Two predicates that differ only inside a string literal are two
+    predicates; whitespace outside literals still dedups."""
+    plan = (
+        _b(cat)
+        .scan("orders")
+        .filter("o_comment = 'a b' AND o_comment = 'a  b' AND o_comment  =  'a b'")
+        .build()
+    )
+    assert mq.pulled_up_predicates(plan) == ["o_comment = 'a b'", "o_comment = 'a  b'"]
+
+
 def test_collation(cat, mq):
     plan = (
         _b(cat)

@@ -1311,3 +1311,52 @@ def test_derived_join_keys_do_not_duplicate_folds_into_filters(spark):
                     f"{name}: a Filter re-evaluates {n_folds} fold(s) — a "
                     f"derived join key went nullable again?\n{line.strip()[:200]}"
                 )
+
+
+def _lambda_bodies(plan: str):
+    """The text of every `lambdafunction(...)` in a plan string."""
+    for m in re.finditer(r"\blambdafunction\(", plan):
+        depth, i = 1, m.end()
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        yield plan[m.end() : i - 1]
+
+
+def test_text_folds_tokenize_outside_lambda_bodies(spark):
+    """Every n-gram builder of the text operators evaluates its token
+    array once per document and binds it to a lambda variable; a
+    tokenizer written inside a lambda body re-tokenizes the document
+    once per window (and, in repetition_stats, once per distinct value
+    per window). Pins it in the optimized plans: no lambda body splits
+    or regex-rewrites text."""
+    from calcite_spark.catalog import open_catalog
+    from calcite_spark.llm.decontam import ngram_decontaminate
+    from calcite_spark.llm.dedup import (
+        jaccard_ngram_sim,
+        minhash_lsh_dups,
+        simhash_dups,
+        simhash_near_dups,
+    )
+    from calcite_spark.llm.textstats import fingerprint, repetition_stats
+
+    docs = open_catalog(spark, SF_DIR).table("documents")
+    cases = {
+        "minhash_lsh_dups": minhash_lsh_dups(docs),
+        "simhash_dups": simhash_dups(docs),
+        "simhash_near_dups": simhash_near_dups(docs, k=3),
+        "ngram_decontaminate": ngram_decontaminate(docs, docs.filter("doc_id < 5")),
+        "jaccard_ngram_sim": jaccard_ngram_sim(docs, minhash_lsh_dups(docs)),
+        "fingerprint": fingerprint(docs),
+        "repetition_stats": repetition_stats(docs),
+    }
+    for name, df in cases.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        bodies = list(_lambda_bodies(plan))
+        assert bodies, name
+        for body in bodies:
+            for fn in ("split(", "regexp_replace("):
+                assert fn not in body, (
+                    f"{name}: a lambda body calls {fn[:-1]}, re-tokenizing "
+                    f"per call of the lambda\n{body[:300]}"
+                )
