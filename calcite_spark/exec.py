@@ -46,6 +46,23 @@ def parallelize_input(df: DataFrame) -> DataFrame:
     return df
 
 
+def sort_result(df: DataFrame, *cols) -> DataFrame:
+    """ORDER BY of a small final result, sorted in the one task that
+    already holds it ≈ Calcite's Sort over a SINGLETON input, which
+    needs no Exchange: `coalesce(1)` reports a single partition, so the
+    sort asks for no range exchange, and Spark runs no range-sampling
+    job and no extra stage. The rows and their order are those of
+    `df.orderBy(*cols)`.
+
+    Precondition: the sort comes after the query's last exchange, over
+    an aggregate, window or join output. Such a result is small (it is
+    collected whole) and AQE has already coalesced it to one partition,
+    so the coalesce moves no work. Over a per-row map output
+    (repetition stats, chunking, sampling) `coalesce(1)` would pull
+    that map into one task: keep `orderBy` there."""
+    return df.coalesce(1).sortWithinPartitions(*cols)
+
+
 def parallelize_grouped_input(df: DataFrame, keys: list) -> DataFrame:
     """Keyed sibling of parallelize_input for Python-heavy GROUPED stages
     (window + applyInPandas): hash-repartition on the grouping keys to the

@@ -347,6 +347,10 @@ def convex_hull_one(kind, pts):
 
 
 def register_spatial_udfs(spark) -> None:
+    """Idempotent per-session registration of the cs_geom_from_text /
+    cs_convex_hull Pandas UDFs (a new session registers its own)."""
+    if getattr(spark, "_cs_spatial_udfs_registered", False):
+        return
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf(GEOM_TYPE)
@@ -374,6 +378,7 @@ def register_spatial_udfs(spark) -> None:
         )
 
     spark.udf.register("cs_convex_hull", cs_convex_hull)
+    spark._cs_spatial_udfs_registered = True
 
 
 def _transform_pts(g: str, fx: str, fy: str) -> str:

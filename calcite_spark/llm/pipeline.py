@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from calcite_spark.exec import sort_result
 from calcite_spark.llm.dedup import normalize_text
 from calcite_spark.llm.textstats import lang_votes_expr
 
@@ -77,7 +78,7 @@ def training_pipeline(
         "*",
         "row_number() OVER (PARTITION BY content_hash ORDER BY doc_id) AS __rn",
     )
-    return (
+    report = (
         deduped.groupBy("lang_pred")
         .agg(
             # survivors vs duplicates from the SAME pass — the report
@@ -96,5 +97,5 @@ def training_pipeline(
                 "ROUND(AVG(CASE WHEN __rn = 1 THEN quality END), 6)"
             ).alias("mean_quality"),
         )
-        .orderBy("lang_pred")
     )
+    return sort_result(report, "lang_pred")

@@ -72,6 +72,7 @@ def quality_score(docs: DataFrame) -> DataFrame:
     return docs.selectExpr(
         "doc_id",
         "lang",
+        "length(text) AS n_len",
         f"CAST(size({toks}) AS INT) AS n_words",
         f"ROUND(length(text) / CAST(GREATEST(size({toks}), 1) AS DOUBLE), 4) AS mean_word_len",
         "ROUND(LEAST(1.0, length(text) / 500.0) * "

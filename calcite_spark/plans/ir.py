@@ -373,6 +373,18 @@ class AggCall:
         return self.fn in _MERGE
 
     @property
+    def tileable(self) -> bool:
+        """A tile can store it: a mergeable call, and an approximate one
+        only in the form its sketch takes — APPROX_COUNT_DISTINCT(value)
+        (Spark's relativeSD argument is not the sketch's lgConfigK) and
+        APPROX_PERCENTILE(value, percentile) (see percentile())."""
+        if self.fn == "APPROX_COUNT_DISTINCT":
+            return not self.distinct and len(self.args) == 1
+        if self.fn == "APPROX_PERCENTILE":
+            return self.percentile() is not None
+        return self.mergeable
+
+    @property
     def derived(self) -> bool:
         return self.fn in _DERIVED
 
@@ -440,22 +452,13 @@ class AggCall:
         or the mergeable HLL / KLL sketch of an approximate one (declaring
         one on a tile opts in to sketch-served estimates — deterministic,
         not bit-equal to Spark's native HLL++ / QuantileSummaries)."""
+        if not self.tileable:
+            raise ValueError(f"a tile cannot store {self.sql()}")
         if self.fn == "APPROX_COUNT_DISTINCT":
-            if len(self.args) != 1:
-                # Spark's second argument is relativeSD; the sketch's
-                # second argument is lgConfigK, an INT
-                raise ValueError(
-                    f"APPROX_COUNT_DISTINCT(value) expected; got ({self.text})"
-                )
             return f"hll_sketch_agg({self.text}) AS {self.alias}"
         if self.fn == "APPROX_PERCENTILE":
-            pp = self.percentile()
-            if pp is None:
-                raise ValueError(
-                    f"APPROX_PERCENTILE(value, percentile) expected; got ({self.text})"
-                )
             # a sketch of the value: the declared p is only the default
-            return f"kll_sketch_agg_double(CAST({pp[0]} AS DOUBLE)) AS {self.alias}"
+            return f"kll_sketch_agg_double(CAST({self.args[0]} AS DOUBLE)) AS {self.alias}"
         return self.sql(self.alias)
 
     def merge(self, col: str, sum0: bool = False) -> str:

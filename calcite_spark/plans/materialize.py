@@ -1420,7 +1420,7 @@ class MaterializationRegistry:
         refuses."""
         if call.distinct and not exact:
             return None
-        if call.fn == "APPROX_PERCENTILE" and call.percentile() is None:
+        if not call.tileable:
             return None
         src = MaterializationRegistry._tile_col(mv, call.key())
         if src is None:
@@ -2910,8 +2910,8 @@ class LatticeSuggester:
 
     @staticmethod
     def _record_calls(agg_calls) -> tuple:
-        """Normalize observed aggregate calls for recording: mergeable
-        calls verbatim; derived aggregates (AVG/VAR/STDDEV) as their
+        """Normalize observed aggregate calls for recording: calls a
+        tile can store verbatim; derived aggregates (AVG/VAR/STDDEV) as their
         SUFFICIENT STATISTICS (r9) — a corpus full of AVG queries then
         suggests a SUM+COUNT tile the derived mapper can serve. Any
         other call is skipped; the rest still record."""
@@ -2920,7 +2920,7 @@ class LatticeSuggester:
             call = ir.AggCall.parse(c)
             if call is None:
                 continue
-            if call.mergeable:
+            if call.tileable:
                 norm_calls.append(c)
             elif call.derived and not call.distinct:
                 norm_calls += [

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from calcite_spark.exec import sort_result
 from calcite_spark.llm.dedup import (
     embedding_cosine_dups,
     exact_dedup,
@@ -39,7 +40,7 @@ from calcite_spark.queries.inventory import catalog_for, register, snapshot_orac
 def z50_exact_dedup(spark, sf_dir):
     """Exact dedup: md5(normalized text) groupBy — llm/dedup.py."""
     cat = catalog_for(spark, sf_dir)
-    return exact_dedup(cat.table("documents")).orderBy("content_hash")
+    return sort_result(exact_dedup(cat.table("documents")), "content_hash")
 
 
 @register(
@@ -61,16 +62,13 @@ def z51_text_stats(spark, sf_dir):
     """Token counting + char stats rollup per language — llm/textstats.py."""
     cat = catalog_for(spark, sf_dir)
     stats = text_stats(cat.table("documents"))
-    return (
-        stats.groupBy("lang")
-        .agg(
-            F.expr("COUNT(*)").alias("n_docs"),
-            F.expr("ROUND(AVG(n_chars_actual), 4)").alias("avg_chars"),
-            F.expr("CAST(SUM(n_tokens_ws) AS BIGINT)").alias("total_tokens_ws"),
-            F.expr("ROUND(AVG(non_alpha_ratio), 6)").alias("avg_non_alpha_ratio"),
-        )
-        .orderBy("lang")
+    rollup = stats.groupBy("lang").agg(
+        F.expr("COUNT(*)").alias("n_docs"),
+        F.expr("ROUND(AVG(n_chars_actual), 4)").alias("avg_chars"),
+        F.expr("CAST(SUM(n_tokens_ws) AS BIGINT)").alias("total_tokens_ws"),
+        F.expr("ROUND(AVG(non_alpha_ratio), 6)").alias("avg_non_alpha_ratio"),
     )
+    return sort_result(rollup, "lang")
 
 
 @register(
@@ -90,16 +88,11 @@ def z51_text_stats(spark, sf_dir):
 def z52_quality_score(spark, sf_dir):
     """Rule-based quality scoring rollup — llm/textstats.quality_score."""
     cat = catalog_for(spark, sf_dir)
-    docs = cat.table("documents")
-    q = quality_score(docs).join(docs.select("doc_id", F.length("text").alias("n_len")), "doc_id")
-    return (
-        q.groupBy("lang")
-        .agg(
-            F.expr("ROUND(AVG(quality), 6)").alias("avg_quality"),
-            F.expr("COUNT(*) FILTER (WHERE n_len < 100)").alias("n_short"),
-        )
-        .orderBy("lang")
+    rollup = quality_score(cat.table("documents")).groupBy("lang").agg(
+        F.expr("ROUND(AVG(quality), 6)").alias("avg_quality"),
+        F.expr("COUNT(*) FILTER (WHERE n_len < 100)").alias("n_short"),
     )
+    return sort_result(rollup, "lang")
 
 
 def _lang_id_oracle() -> str:
@@ -158,11 +151,8 @@ def z53_lang_id(spark, sf_dir):
     'und'), so the DuckDB oracle replays the identical vote logic."""
     cat = catalog_for(spark, sf_dir)
     pred = lang_id(cat.table("documents"))
-    return (
-        pred.groupBy("lang_true", "lang_pred")
-        .agg(F.expr("COUNT(*)").alias("n"))
-        .orderBy("lang_true", "lang_pred")
-    )
+    rollup = pred.groupBy("lang_true", "lang_pred").agg(F.expr("COUNT(*)").alias("n"))
+    return sort_result(rollup, "lang_true", "lang_pred")
 
 
 @register(
@@ -193,9 +183,8 @@ def z54_knn_bruteforce(spark, sf_dir):
     emb = cat.table("embeddings")
     queries = emb.filter("vec_id < 5").selectExpr("vec_id AS q_id", "embedding AS q_vec")
     out = brute_force_topk(emb.select("vec_id", "embedding"), queries, k=5)
-    return out.selectExpr("q_id", "vec_id", "cosine_sim", "CAST(rk AS INT) AS rk").orderBy(
-        "q_id", "rk"
-    )
+    out = out.selectExpr("q_id", "vec_id", "cosine_sim", "CAST(rk AS INT) AS rk")
+    return sort_result(out, "q_id", "rk")
 
 
 @register(
@@ -215,9 +204,8 @@ def qx17_ivf_ann(spark, sf_dir):
     queries = emb.filter("vec_id < 5").selectExpr("vec_id AS q_id", "embedding AS q_vec")
     assigned, centroids = ivf_build_deterministic(emb, n_clusters=16)
     out = ivf_topk(assigned, centroids, queries, k=5, n_probe=4)
-    return out.selectExpr("q_id", "vec_id", "cosine_sim", "CAST(rk AS INT) AS rk").orderBy(
-        "q_id", "rk"
-    )
+    out = out.selectExpr("q_id", "vec_id", "cosine_sim", "CAST(rk AS INT) AS rk")
+    return sort_result(out, "q_id", "rk")
 
 
 @register(
@@ -229,7 +217,7 @@ def z55_minhash_lsh(spark, sf_dir):
     """MinHash+LSH near-dup candidate pairs — llm/dedup.minhash_lsh_dups
     (shingle → 16 xxhash64 minhashes → 4 bands → band-bucket self-join)."""
     cat = catalog_for(spark, sf_dir)
-    return minhash_lsh_dups(cat.table("documents")).orderBy("a_id", "b_id")
+    return sort_result(minhash_lsh_dups(cat.table("documents")), "a_id", "b_id")
 
 
 # qx07_simhash_neardup retired from the registry in r14 (rotation
@@ -288,14 +276,11 @@ def z56_fingerprint(spark, sf_dir):
 
     cat = catalog_for(spark, sf_dir)
     fp = fingerprint(cat.table("documents"))
-    return (
-        fp.groupBy("fp_min")
-        .agg(
-            F.expr("COUNT(*)").alias("n_docs"),
-            F.expr("MIN(doc_id)").alias("first_doc"),
-        )
-        .orderBy("fp_min")
+    rollup = fp.groupBy("fp_min").agg(
+        F.expr("COUNT(*)").alias("n_docs"),
+        F.expr("MIN(doc_id)").alias("first_doc"),
     )
+    return sort_result(rollup, "fp_min")
 
 
 @register(
@@ -357,11 +342,8 @@ def qx18_dedup_clusters(spark, sf_dir):
         .selectExpr("a.doc_id AS a", "b.doc_id AS b")
     )
     clusters = dedup_clusters(e1.union(e2).distinct())
-    return (
-        clusters.groupBy("cluster_id")
-        .agg(F.expr("COUNT(*)").alias("n_members"))
-        .orderBy("cluster_id")
-    )
+    sizes = clusters.groupBy("cluster_id").agg(F.expr("COUNT(*)").alias("n_members"))
+    return sort_result(sizes, "cluster_id")
 
 
 @register(
@@ -408,9 +390,8 @@ def qx19_quantized_knn(spark, sf_dir):
         "vec_id AS q_id", "embedding AS q_vec"
     )
     out = quantized_topk(emb, queries, k=5)
-    return out.selectExpr(
-        "q_id", "vec_id", "cosine_sim", "CAST(rk AS INT) AS rk"
-    ).orderBy("q_id", "rk")
+    out = out.selectExpr("q_id", "vec_id", "cosine_sim", "CAST(rk AS INT) AS rk")
+    return sort_result(out, "q_id", "rk")
 
 
 @register(
@@ -448,17 +429,14 @@ def qx20_pii_scrub(spark, sf_dir):
 
     cat = catalog_for(spark, sf_dir)
     s = scrub_pii(cat.table("documents"))
-    return (
-        s.groupBy("source")
-        .agg(
-            F.expr("COUNT(*)").alias("n_docs"),
-            F.expr("SUM(CASE WHEN has_url THEN 1 ELSE 0 END)").alias("n_url"),
-            F.expr("SUM(CASE WHEN has_email THEN 1 ELSE 0 END)").alias("n_email"),
-            F.expr("SUM(CASE WHEN has_phone THEN 1 ELSE 0 END)").alias("n_phone"),
-            F.expr("SUM(length(text) - length(scrubbed))").alias("chars_delta"),
-        )
-        .orderBy("source")
+    rollup = s.groupBy("source").agg(
+        F.expr("COUNT(*)").alias("n_docs"),
+        F.expr("SUM(CASE WHEN has_url THEN 1 ELSE 0 END)").alias("n_url"),
+        F.expr("SUM(CASE WHEN has_email THEN 1 ELSE 0 END)").alias("n_email"),
+        F.expr("SUM(CASE WHEN has_phone THEN 1 ELSE 0 END)").alias("n_phone"),
+        F.expr("SUM(length(text) - length(scrubbed))").alias("chars_delta"),
     )
+    return sort_result(rollup, "source")
 
 
 @register(
@@ -558,12 +536,13 @@ def qx23_decontaminate(spark, sf_dir):
 
     cat = catalog_for(spark, sf_dir)
     d = cat.table("documents")
-    return ngram_decontaminate(
+    flagged = ngram_decontaminate(
         d.filter("doc_id % 20 != 0"),
         d.filter("doc_id % 20 = 0"),
         n=5,
         min_overlap=3,
-    ).orderBy("doc_id")
+    )
+    return sort_result(flagged, "doc_id")
 
 
 @register(

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from calcite_spark.exec import sort_result
 from calcite_spark.plans.builder import RelBuilder
 from calcite_spark.queries.inventory import (
     catalog_for,
@@ -235,7 +236,7 @@ def q79_simhash_dedup(spark, sf_dir):
     from calcite_spark.llm.dedup import simhash_dups
 
     cat = catalog_for(spark, sf_dir)
-    return simhash_dups(cat.table("documents")).orderBy("simhash")
+    return sort_result(simhash_dups(cat.table("documents")), "simhash")
 
 
 @register(
@@ -254,9 +255,8 @@ def q80_lsh_knn(spark, sf_dir):
     emb = cat.table("embeddings")
     queries = emb.filter("vec_id < 5").selectExpr("vec_id AS q_id", "embedding AS q_vec")
     dim = len(emb.select("embedding").first()[0])
-    return lsh_bucketed_topk(emb.select("vec_id", "embedding"), queries, k=5, dim=dim).orderBy(
-        "q_id", "rk"
-    )
+    out = lsh_bucketed_topk(emb.select("vec_id", "embedding"), queries, k=5, dim=dim)
+    return sort_result(out, "q_id", "rk")
 
 
 @register(

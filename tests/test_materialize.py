@@ -3899,6 +3899,36 @@ def test_approx_distinct_relative_sd_refuses(spark, tmp_path):
     assert reg.substitute(plan, cat) is None
 
 
+def test_lattice_suggester_skips_calls_a_tile_refuses(spark, tmp_path):
+    """A mergeable call a tile cannot store (APPROX_COUNT_DISTINCT with
+    Spark's relativeSD argument, APPROX_PERCENTILE with an accuracy) is
+    not recorded: auto_build builds the rest of the proposal instead of
+    raising out of define."""
+    from calcite_spark.plans.materialize import LatticeSuggester
+
+    refused = [
+        "APPROX_COUNT_DISTINCT(o_custkey, 0.05) AS nd",
+        "APPROX_PERCENTILE(o_totalprice, 0.5, 100) AS p",
+    ]
+    cat = Catalog(spark).register_parquet_dir(SF_DIR)
+    sug = LatticeSuggester()
+    for _ in range(3):
+        sug.observe(
+            RelBuilder(cat)
+            .scan("orders")
+            .aggregate(["o_orderstatus"], ["COUNT(*) AS n", *refused])
+            .build()
+        )
+    built = sug.auto_build(
+        cat, MaterializationRegistry(), str(tmp_path), min_count=3,
+        benefit_threshold=None,
+    )
+    assert len(built) == 1
+    assert [c.fn for c in built[0].agg_calls.values()] == ["COUNT"]
+    assert not any(ir.AggCall.parse(c).tileable for c in refused)
+    assert ir.AggCall.parse("APPROX_COUNT_DISTINCT(o_custkey) AS nd").tileable
+
+
 def test_smallest_matching_tile_wins(spark, tmp_path):
     """Cost-based tile choice (r10 ≈ the reference planner costing
     competing materializations): when both the finest lattice tile and

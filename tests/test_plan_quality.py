@@ -1360,3 +1360,90 @@ def test_text_folds_tokenize_outside_lambda_bodies(spark):
                     f"{name}: a lambda body calls {fn[:-1]}, re-tokenizing "
                     f"per call of the lambda\n{body[:300]}"
                 )
+
+
+# every registry query whose final ORDER BY is exec.sort_result: each
+# sorts an aggregate, window or join output after its last exchange
+SORTED_SMALL_RESULTS = (
+    "q79_simhash_dedup",
+    "q80_lsh_knn",
+    "qx17_ivf_ann",
+    "qx18_dedup_clusters",
+    "qx19_quantized_knn",
+    "qx20_pii_scrub",
+    "qx23_decontaminate",
+    "qx57_llm_pipeline",
+    "z50_exact_dedup",
+    "z51_text_stats",
+    "z52_quality_score",
+    "z53_lang_id",
+    "z54_knn_bruteforce",
+    "z55_minhash_lsh",
+    "z56_fingerprint",
+)
+
+
+def _with_order_by(monkeypatch):
+    """Build the registry queries with `orderBy` in place of sort_result."""
+    import calcite_spark.llm.pipeline
+    import calcite_spark.queries.llm
+    import calcite_spark.queries.semantics
+
+    for mod in (
+        calcite_spark.llm.pipeline,
+        calcite_spark.queries.llm,
+        calcite_spark.queries.semantics,
+    ):
+        monkeypatch.setattr(mod, "sort_result", lambda df, *cols: df.orderBy(*cols))
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("name", SORTED_SMALL_RESULTS)
+def test_small_result_sorts_without_range_exchange(spark, monkeypatch, name):
+    """The final ORDER BY of a small aggregate, window or join result
+    sorts in the one task that holds it: the executed plan has no range
+    exchange (so no range-sampling job), and the rows come back in the
+    order `orderBy` gives them."""
+    df = QS[name](spark, SF_DIR)
+    got = df.collect()
+    assert "rangepartitioning" not in _executed_plan(df), _executed_plan(df)
+    _with_order_by(monkeypatch)
+    ref = QS[name](spark, SF_DIR)
+    assert got == ref.collect()
+    assert "rangepartitioning" in _executed_plan(ref)
+
+
+def _busiest_stage_tasks(spark, df, group: str) -> int:
+    """Collect `df` under a job group; the most tasks any of its stages
+    ran (skipped stages run none)."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    sc.setJobGroup(group, group)
+    try:
+        df.collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    bus.waitUntilEmpty()
+    tracker = sc.statusTracker()
+    tasks = [0]
+    for jid in tracker.getJobIdsForGroup(group):
+        for sid in tracker.getJobInfo(jid).stageIds:
+            info = tracker.getStageInfo(sid)
+            if info is not None:
+                tasks.append(info.numCompletedTasks)
+    return max(tasks)
+
+
+@pytest.mark.parametrize("name", ["z55_minhash_lsh", "q79_simhash_dedup", "qx23_decontaminate"])
+def test_sort_result_keeps_fold_parallelism(spark, monkeypatch, name):
+    """sort_result's coalesce(1) sits after the last exchange, so it
+    cannot pull the fold into one task: the stage that evaluates the
+    fold (the busiest one) runs as many tasks as under `orderBy`, which
+    is one per core after parallelize_input's round-robin."""
+    tasks = _busiest_stage_tasks(spark, QS[name](spark, SF_DIR), f"fold_{name}")
+    _with_order_by(monkeypatch)
+    ref = _busiest_stage_tasks(spark, QS[name](spark, SF_DIR), f"fold_{name}_ref")
+    assert tasks == ref == spark.sparkContext.defaultParallelism

@@ -603,6 +603,31 @@ def test_is_convex(spark):
     assert _one(spark, T("ST_ISCONVEX", cw)) is True
 
 
+def test_spatial_udfs_register_once_per_session(spark, monkeypatch):
+    """A second catalog on the same session registers no UDF; a new
+    session gets both spatial UDFs when its first catalog opens."""
+    from pyspark.sql.udf import UDFRegistration
+
+    from calcite_spark.catalog import Catalog
+
+    Catalog(spark)
+    registered = []
+    real = UDFRegistration.register
+
+    def register(self, name, *args, **kwargs):
+        registered.append(name)
+        return real(self, name, *args, **kwargs)
+
+    monkeypatch.setattr(UDFRegistration, "register", register)
+    Catalog(spark)
+    assert registered == []
+    other = spark.newSession()
+    Catalog(other)
+    spatial = {"cs_geom_from_text", "cs_convex_hull"}
+    assert spatial <= set(registered)
+    assert all(other.catalog.functionExists(f) for f in spatial)
+
+
 def test_convex_hull(spark):
     from calcite_spark.functions.spatial import register_spatial_udfs
 
